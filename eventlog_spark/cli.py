@@ -60,23 +60,6 @@ def inmem_server(
     )
 
 
-def _add_arbiter_flag(p: argparse.ArgumentParser) -> None:
-    """Every subcommand that OPENS a log path takes --arbiter (round-9
-    advice: a flock-mode open of a CAS-operated log runs orphan
-    truncation against a possibly-lagging pointer and can destroy
-    another host's committed fragment). Default None = adopt the
-    arbiter recorded in the log's meta file at create time; an explicit
-    mismatch is refused by EventLog.open."""
-    p.add_argument(
-        "--arbiter",
-        choices=("flock", "cas"),
-        default=None,
-        help="commit arbiter override: flock (single-host) or cas "
-        "(shared-store multi-host writers — SCALE.md); default: the "
-        "arbiter recorded when the log was created",
-    )
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="eventlog-spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -99,14 +82,6 @@ def main(argv: list[str] | None = None) -> int:
     p_create = sub.add_parser("create", help="create a new log (O22)")
     p_create.add_argument("path")
     p_create.add_argument("-m", action="append", default=[], help="metadata key:value")
-    p_create.add_argument(
-        "--arbiter",
-        choices=("flock", "cas"),
-        default="flock",
-        help="commit arbiter recorded in the log's meta file; every "
-        "subsequent open adopts it (flock = single-host, cas = "
-        "shared-store multi-host — SCALE.md)",
-    )
 
     p_run = sub.add_parser("run", help="serve the HTTP API (O26)")
     p_run.add_argument("path", nargs="?")
@@ -114,21 +89,17 @@ def main(argv: list[str] | None = None) -> int:
     p_run.add_argument("--host", default="127.0.0.1")
     p_run.add_argument("--port", type=int, default=8080)
     p_run.add_argument("-m", action="append", default=[], help="metadata (with --inmem)")
-    _add_arbiter_flag(p_run)
 
     p_check = sub.add_parser("check", help="integrity audit (O20)")
     p_check.add_argument("path")
-    _add_arbiter_flag(p_check)
 
     p_version = sub.add_parser("version", help="print head/initial version")
     p_version.add_argument("path")
-    _add_arbiter_flag(p_version)
 
     p_append = sub.add_parser("append", help="append one event")
     p_append.add_argument("path")
     p_append.add_argument("label")
     p_append.add_argument("payload")
-    _add_arbiter_flag(p_append)
 
     p_scan = sub.add_parser("scan", help="scan events as JSON lines")
     p_scan.add_argument("path")
@@ -139,7 +110,6 @@ def main(argv: list[str] | None = None) -> int:
         "--label", default=None,
         help="only events with this label (manifest data skipping)",
     )
-    _add_arbiter_flag(p_scan)
 
     p_compact = sub.add_parser(
         "compact", help="rewrite commit fragments into few large files"
@@ -154,7 +124,6 @@ def main(argv: list[str] | None = None) -> int:
         "(label scans prune to matching files; version pages then "
         "lean on row-group stats)",
     )
-    _add_arbiter_flag(p_compact)
 
     p_stats = sub.add_parser(
         "stats",
@@ -170,7 +139,6 @@ def main(argv: list[str] | None = None) -> int:
         help="probe this label (repeatable); default: a sample drawn "
         "from the manifest's own label bounds",
     )
-    _add_arbiter_flag(p_stats)
 
     p_maintain = sub.add_parser(
         "maintain",
@@ -187,7 +155,6 @@ def main(argv: list[str] | None = None) -> int:
         help="probe this label (repeatable); default: a sample drawn "
         "from the manifest's own label bounds",
     )
-    _add_arbiter_flag(p_maintain)
 
     p_vacuum = sub.add_parser(
         "vacuum", help="delete compaction-retired files past the grace window"
@@ -198,7 +165,6 @@ def main(argv: list[str] | None = None) -> int:
         help="seconds retired files must age before deletion "
         "(default: SPARK_GRAFT_LOG_GC_GRACE or 900; 0 = reap now)",
     )
-    _add_arbiter_flag(p_vacuum)
 
     args = ap.parse_args(argv)
 
@@ -236,10 +202,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "create":
-        EventLog.create(
-            spark, args.path, metadata=_parse_metadata(args.m),
-            arbiter=args.arbiter,
-        )
+        EventLog.create(spark, args.path, metadata=_parse_metadata(args.m))
         print(f"created {args.path}")
         return 0
 
@@ -249,7 +212,7 @@ def main(argv: list[str] | None = None) -> int:
 
             log = InMemEventLog.create(spark, metadata=_parse_metadata(args.m))
         elif args.path:
-            log = EventLog.open(spark, args.path, arbiter=args.arbiter)
+            log = EventLog.open(spark, args.path)
         else:
             raise SystemExit("run requires a path or --inmem")
         # Foreground path: ONE accept loop on the main thread. (serve()
@@ -265,7 +228,7 @@ def main(argv: list[str] | None = None) -> int:
             srv.shutdown()
         return 0
 
-    log = EventLog.open(spark, args.path, arbiter=args.arbiter)
+    log = EventLog.open(spark, args.path)
 
     if args.cmd == "check":
         row = log.check_integrity().collect()[0]

@@ -27,7 +27,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .log import EVENT_SCHEMA, EventLog, _Hub
+from .log import EVENT_SCHEMA, EventLog, _check_bulk_range, _Hub
 from .sources.binformat import spark_checksum as _spark_checksum  # noqa: F401 — shared fast-path checksum
 from .validation import DEFAULT_MAX_PAYLOAD_LEN
 
@@ -58,10 +58,8 @@ class InMemEventLog(EventLog):
         self._rows: list[tuple] = []
         # manifest plumbing (unused: nothing on disk to track)
         self._manifest = None
-        self._legacy_files = None
         self._pending_add: list[dict] = []
         self._pending_remove: list[str] = []
-        self._arbiter = "flock"  # moot with path=None (thread lock only)
 
     @classmethod
     def create(
@@ -88,7 +86,9 @@ class InMemEventLog(EventLog):
             for (v, vp, ts, label, payload) in rows
         )
 
-    def _write_out(self, out: DataFrame, post_write_check=None) -> None:
+    def _write_out(
+        self, out: DataFrame, expect: tuple[int, int], post_write_check=None
+    ) -> None:
         # an inmem log is driver-bound by definition (inmem.go holds a
         # slice); collect() here is the engine's storage, not a data path
         collected = [tuple(r) for r in out.collect()]
@@ -97,6 +97,10 @@ class InMemEventLog(EventLog):
             # the observed validity tally is available; a raise here
             # keeps the rows out of the engine (all-or-nothing)
             post_write_check()
+        versions = [r[0] for r in collected]
+        _check_bulk_range(
+            (min(versions), max(versions)) if versions else None, expect
+        )
         self._rows.extend(collected)
 
     def _read_raw(self) -> DataFrame | None:
@@ -135,9 +139,6 @@ class InMemEventLog(EventLog):
         pass
 
     def _write_state(self) -> None:
-        pass
-
-    def _truncate_orphans(self) -> None:
         pass
 
     def compact(self, target_partitions: int | None = None) -> None:

@@ -19,20 +19,24 @@ Design (Spark-first, not a port):
   makes chain links *arithmetic*: ``version_prev = version - 1`` and
   ``version_next = version + 1 (0 at head)`` — scans need no window
   function, no shuffle, and no sort beyond the parquet column order.
-* Appends serialize through a driver-side commit section (a lock), the
-  Spark rendition of the reference's writer mutex (file.go:57,396).
-  Throughput comes from batch size, not concurrent commits — identical
-  to the reference, where every append holds the lock for an fsync.
-  OCC (O3/O4) is a compare inside that section.
-* Each commit writes one parquet fragment, appends ONE immutable delta
-  record to the log-structured manifest (manifest.py — per-commit O(1),
-  paged checkpoints every K commits), and then publishes the new head +
-  manifest seq in ``_state.json`` (atomic rename). Readers never take
-  the lock: committed fragments and manifest records are immutable
-  (snapshot isolation), and the pointer names a complete chain.
-  A crash between fragment-write and state-publish leaves orphan rows
-  above the committed head; ``open()`` truncates them logically by
-  trusting the recovered state, and ``check_integrity`` flags them.
+* Appends serialize through ONE commit protocol: each commit claims the
+  next manifest delta seq with an atomic create-if-absent (manifest.py
+  ``ManifestLog.commit``). A loser discards its staged fragment and
+  retries on the winner's state, so writers in other processes or on
+  other hosts over a shared store get exactly one winner per version
+  with no lock to leak. Inside one process a thread lock orders
+  commits, the Spark rendition of the reference's writer mutex
+  (file.go:57,396). OCC (O3/O4) is a compare inside that section.
+* Each commit writes one parquet fragment, claims ONE immutable delta
+  record carrying the new head fields (manifest.py — per-commit O(1),
+  paged checkpoints every K commits), and then publishes the head +
+  manifest seq in ``_state.json`` (atomic rename). The delta chain is
+  the commit truth; the pointer is a cache that readers roll forward
+  past. Readers never take a lock: committed fragments and manifest
+  records are immutable (snapshot isolation).
+  A crash between fragment write and delta claim leaves a fragment no
+  manifest names: no reader lists the directory, so it is invisible,
+  and ``vacuum`` reaps it once it is older than the grace window.
 * The integrity checksum is Spark's builtin ``xxhash64`` (same 64-bit
   xxHash family as the reference's cespare/xxhash, file.go:18) over
   ``(timestamp, label, payload, version_prev)`` — computed JVM-side at
@@ -87,13 +91,6 @@ EVENT_SCHEMA = StructType(
 
 _STATE_FILE = "_state.json"  # leading underscore → invisible to parquet readers
 _META_FILE = "_eventlog_meta.json"
-# Exclusive-create sidecar arbitrating WHICH arbiter a legacy log (created
-# before the meta field existed) is adopted under: first creator wins, a
-# racing explicit open with a conflicting choice is refused. Underscore
-# prefix keeps it out of _data_files' listing.
-_ARBITER_CLAIM_FILE = _META_FILE + ".arbiter"
-_COMMIT_LOCK_FILE = "_commit.lock"  # cross-process commit mutex (flock)
-_INTENT_FILE = "_intent.json"  # commit-intent record → O(1) orphan check on open
 
 
 def _version_group_stats(md) -> list[tuple[int, int]] | None:
@@ -222,6 +219,21 @@ def _label_group_range(md) -> tuple[str, str] | None:
     return min(mins), max(maxs)
 
 
+def _check_bulk_range(
+    got: tuple[int, int] | None, expect: tuple[int, int]
+) -> None:
+    """Abort a bulk commit whose written version range is not the one
+    its count pass assigned (``expect``, empty when lo > hi) — the
+    post-write head check, run before anything becomes visible."""
+    if got != (expect if expect[0] <= expect[1] else None):
+        raise RuntimeError(
+            f"bulk append aborted: written versions {got} != assigned "
+            f"{expect}; the source changed between the versioning count "
+            "and the write (nondeterministic upstream) — checkpoint it "
+            "and re-run the batch"
+        )
+
+
 @dataclass(frozen=True)
 class AppendResult:
     version_previous: int  # head before this commit
@@ -308,88 +320,26 @@ class _Hub:
 class EventLog:
     """A versioned append-only event log over a parquet directory.
 
-    ``arbiter`` picks the cross-writer commit protocol (SCALE.md
-    "Multi-writer commits"): ``"flock"`` (default) serializes writers
-    with an advisory lock on ``_commit.lock`` — exact and crash-safe,
-    but only within ONE host's kernel; ``"cas"`` serializes through the
-    storage itself — each commit CLAIMS its manifest delta seq with an
-    atomic create-if-absent (put-if-absent, the primitive Delta-style
-    log stores require), losers discard their staged fragment and
-    retry on the winner's state — so writers on different hosts over a
-    shared store (NFS, FUSE-mounted object store with atomic link)
-    stay exactly-one-winner-per-version with no lock to leak. Under
-    CAS the manifest chain is the SOLE read truth (the pointer is a
-    cache healed by roll-forward; the directory listing is never
-    consulted) and open-time orphan truncation is disabled — an
-    unpublished crash fragment is invisible garbage for vacuum, never
-    a correctness hazard, because no reader lists the directory."""
+    Writers serialize through the storage itself (SCALE.md "Multi-writer
+    commits"): each commit CLAIMS its manifest delta seq with an atomic
+    create-if-absent (put-if-absent, the primitive Delta-style log
+    stores require). Losers discard their staged fragment and retry on
+    the winner's state, so writers in different processes or on
+    different hosts over a shared store (NFS, an object store with
+    conditional PUT through ``claim_store``) stay
+    exactly-one-winner-per-version with no lock to leak. The manifest
+    chain is the SOLE read truth: the pointer is a cache healed by
+    roll-forward, and the directory listing is never consulted. An
+    unpublished crash fragment is therefore invisible, never a
+    correctness hazard, and ``vacuum`` reaps it after the grace
+    window."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        arbiter: str | None = None,
-        claim_store=None,
-        *,
-        _bootstrap: bool = False,
-    ):
-        if arbiter not in (None, "flock", "cas"):
-            raise ValueError(f"unknown commit arbiter {arbiter!r}")
-        # The arbiter is a property of the LOG, not of one open: a
-        # flock-mode open of a CAS-operated log bypasses the claim
-        # protocol and its orphan truncation would eat another host's
-        # claimed-but-not-yet-pointed fragment (round-9 advice). The
-        # choice persists in _eventlog_meta.json at create time;
-        # arbiter=None adopts it, an explicit mismatch is refused, and
-        # an explicit choice on a legacy log (no recorded arbiter) is
-        # recorded — arbitrated by an exclusive-create claim sidecar so
-        # two racing explicit opens with DIFFERENT choices can never
-        # both proceed (round-10 advice).
-        if _bootstrap:
-            # create()'s bootstrap open: the meta file already records
-            # the target arbiter (written before any open exists, so a
-            # crash mid-create can never leave a log whose later
-            # default opens silently adopt flock — round-10 advice),
-            # but the empty log has no state file yet and a CAS open
-            # refuses the directory-listing recovery that bootstrapping
-            # needs. So bootstrap runs flock-mode regardless. Safe:
-            # makedirs(exist_ok=False) arbitrates create races, no
-            # other writer can exist before create() returns. The flag
-            # is a keyword-only private parameter, NOT an arbiter value
-            # (round-11 advice: the old "_bootstrap" sentinel string
-            # was reachable through the documented arbiter argument,
-            # letting any caller skip the persisted-arbiter check and
-            # run flock-mode on a cas-operated log), and it refuses a
-            # path that already has a state file — bootstrap is only
-            # ever the first open of a just-created empty log.
-            if path is not None and os.path.exists(
-                os.path.join(path, _STATE_FILE)
-            ):
-                raise ValueError(
-                    f"bootstrap open of {path}, which already has a "
-                    "state file — bootstrap is reserved for create()"
-                )
-            arbiter = "flock"
-        else:
-            persisted = self._persisted_arbiter(path)
-            if arbiter is None:
-                arbiter = persisted or "flock"
-            elif persisted is not None and arbiter != persisted:
-                raise ValueError(
-                    f"log at {path} is operated under the {persisted!r} commit "
-                    f"arbiter; refusing to open it as {arbiter!r} — a flock-mode "
-                    "open of a cas-operated log truncates other hosts' in-flight "
-                    "commits as orphans. Edit the 'arbiter' field in "
-                    f"{_META_FILE} only when no writer anywhere is live."
-                )
-            elif persisted is None and path is not None:
-                self._persist_arbiter(path, arbiter)
-        self._arbiter = arbiter
+    def __init__(self, spark: SparkSession, path: str, claim_store=None):
         # Manifest I/O seam (manifest.py ClaimStore contract): None =
         # the POSIX directory store under <path>/_manifest. A shared
         # deployment passes the store matching its substrate (object
         # store conditional PUT); the fencing tests pass
-        # MemoryClaimStore to prove the CAS arbiter needs nothing
+        # MemoryClaimStore to prove the claim protocol needs nothing
         # beyond the 5-method contract.
         self._claim_store = claim_store
         self.spark = spark
@@ -415,192 +365,17 @@ class EventLog:
         # _state.json holds only a pointer (head fields + manifest_seq),
         # so a commit never rewrites the file list and a page read
         # loads only the manifest pages its version range overlaps.
-        # None until adoption = legacy/recovering log → directory listing.
         self._manifest: ManifestLog | None = None
-        self._legacy_files: list[str] | None = None  # pre-manifest state file
         self._pending_add: list[dict] = []  # entries staged for the next publish
         self._pending_remove: list[str] = []
         self._load_meta()
         self._load_state()
-        # Orphan truncation deletes fragment rows above the committed
-        # head — inside the cross-process commit section, so opening a
-        # log while another process is MID-COMMIT (fragment written,
-        # state not yet published) blocks until that commit publishes
-        # instead of eating its fragment. Single-process opens pay one
-        # uncontended flock.
-        with self._commit_section():
-            if self._arbiter != "cas":
-                self._truncate_orphans()
-            elif self._manifest is not None:
-                # CAS open: no physical truncation (another HOST may be
-                # mid-commit right now and no lock protects its
-                # in-flight fragment); instead roll the mirror forward
-                # past a possibly-lagging pointer — the delta chain is
-                # the commit truth (manifest.roll_forward)
-                self._adopt_cas_head(self._manifest.roll_forward())
-            if self.path is not None and self._manifest is None:
-                # Legacy log (file list embedded in its state file) or
-                # recovery (pointer lost): adopt the legacy list / the
-                # post-truncation directory listing. The first commit
-                # publishes a full checkpoint (adopted entries exist in
-                # no delta); until then readers fall back to the same
-                # listing. Seq resumes past anything on disk so a stale
-                # pointer can never name the rebuilt chain.
-                if self._arbiter == "cas" and self._legacy_files is None:
-                    # unreachable after _recover_state_cas, kept as a
-                    # fence: listing adoption is never safe under CAS
-                    raise RuntimeError(
-                        "cas open refuses directory-listing adoption"
-                    )
-                m = ManifestLog(self.path, store=self._claim_store)
-                names = (
-                    self._legacy_files
-                    if self._legacy_files is not None
-                    else self._data_files()
-                )
-                m.adopt(
-                    [{"n": f} for f in names],
-                    max(
-                        m.max_seq_on_disk(),
-                        getattr(self, "_stale_manifest_seq", 0),
-                    ),
-                )
-                self._manifest = m
-                self._legacy_files = None
+        # roll the mirror forward past a possibly-lagging pointer — the
+        # delta chain is the commit truth (manifest.roll_forward)
+        with self._lock:
+            self._adopt_cas_head(self._manifest.roll_forward())
 
     # -- lifecycle (O21/O22) ------------------------------------------------
-
-    @staticmethod
-    def _persisted_arbiter(path: str | None) -> str | None:
-        """The commit arbiter this log is operated under: the
-        exclusive-create claim sidecar when present (the arbitration
-        point for legacy-log adoption — it exists the instant a choice
-        is won, even in the crash window before the meta patch), else
-        the meta file's field (written at create() since round 11),
-        else None for a legacy log nobody has claimed."""
-        if path is None:
-            return None
-        try:
-            with open(os.path.join(path, _ARBITER_CLAIM_FILE)) as f:
-                a = f.read().strip()
-            if a in ("flock", "cas"):
-                return a
-        except OSError:
-            pass
-        try:
-            with open(os.path.join(path, _META_FILE)) as f:
-                a = json.load(f).get("arbiter")
-        except (FileNotFoundError, ValueError):
-            return None
-        return a if a in ("flock", "cas") else None
-
-    @staticmethod
-    def _persist_arbiter(path: str, arbiter: str) -> None:
-        """Record an explicitly chosen arbiter on a LEGACY log (created
-        before the meta field existed). Round-10 advice: two racing
-        explicit opens with DIFFERENT arbiters must not both proceed —
-        a last-replace-wins meta patch would let conflicting commit
-        protocols run concurrently on one log. Arbitration is an
-        exclusive whole-file create (O_CREAT|O_EXCL — put_if_absent
-        semantics, the same primitive the CAS manifest claim uses):
-        the first creator wins; a loser whose choice matches adopts
-        silently; a loser with a conflicting choice is refused. The
-        meta field is then patched best-effort for humans and legacy
-        readers — _persisted_arbiter consults the claim first, so a
-        crash between claim and patch loses nothing.
-
-        The claim publishes by hard-linking a FULLY-WRITTEN temp file
-        (round-11 advice): the earlier O_CREAT|O_EXCL-then-write shape
-        had a torn window — a crash between the exclusive open and the
-        write left an empty claim forever, and every later explicit
-        open read won='' and fell through to a last-replace-wins meta
-        patch, silently reinstating the conflicting-choice race the
-        sidecar exists to close. os.link is put_if_absent with whole-
-        file content: the name and the bytes become visible together
-        or not at all. A pre-existing torn claim (from the old shape)
-        is REPAIRED: under an auxiliary exclusive flock the claim is
-        re-read and, if still invalid, atomically replaced — racing
-        repairers serialize on the flock, so the second re-reads the
-        first's now-valid claim and adopts or refuses normally."""
-        claim_path = os.path.join(path, _ARBITER_CLAIM_FILE)
-        tmp = claim_path + f".tmp.{uuid.uuid4().hex}"
-        try:
-            with open(tmp, "w") as f:
-                f.write(arbiter)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, claim_path)  # atomic create-if-absent
-            finally:
-                os.unlink(tmp)
-        except FileExistsError:
-            won = EventLog._read_or_repair_arbiter_claim(
-                claim_path, arbiter
-            )
-            if won != arbiter:
-                raise ValueError(
-                    f"log at {path} was concurrently claimed under the "
-                    f"{won!r} commit arbiter; refusing to open it as "
-                    f"{arbiter!r} — two commit protocols must never run "
-                    "concurrently on one log."
-                )
-            # same choice: idempotent, fall through to the meta patch
-        except OSError:
-            return  # read-only mount: the log just stays legacy
-        meta_path = os.path.join(path, _META_FILE)
-        try:
-            with open(meta_path) as f:
-                meta = json.load(f)
-        except (FileNotFoundError, ValueError):
-            return
-        meta["arbiter"] = arbiter
-        tmp = meta_path + f".tmp.{uuid.uuid4().hex}"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, meta_path)
-        except OSError:
-            pass
-
-    @staticmethod
-    def _read_or_repair_arbiter_claim(claim_path: str, arbiter: str) -> str:
-        """Read the claim sidecar's winning choice; REPAIR a torn one.
-        A torn claim (empty/invalid bytes — only producible by the
-        pre-round-12 exclusive-create shape crashing between open and
-        write) carries no choice, so the first explicit open to find
-        it may adopt its own: the replacement happens under an
-        auxiliary exclusive flock so two racing repairers with
-        different choices serialize — the loser re-reads the winner's
-        now-valid claim and is refused by the caller like any other
-        conflicting open."""
-        try:
-            with open(claim_path) as f:
-                won = f.read().strip()
-        except OSError:
-            won = ""
-        if won in ("flock", "cas"):
-            return won
-        import fcntl
-
-        with open(claim_path + ".repairlock", "a") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                try:
-                    with open(claim_path) as f:
-                        won = f.read().strip()
-                except OSError:
-                    won = ""
-                if won in ("flock", "cas"):
-                    return won  # a racing repairer beat us to it
-                tmp = claim_path + f".repair.{uuid.uuid4().hex}"
-                with open(tmp, "w") as f:
-                    f.write(arbiter)
-                    f.flush()
-                    os.fsync(f.fileno())
-                os.replace(tmp, claim_path)
-                return arbiter
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
 
     @classmethod
     def create(
@@ -608,61 +383,46 @@ class EventLog:
         spark: SparkSession,
         path: str,
         metadata: dict[str, str] | None = None,
-        arbiter: str = "flock",
         claim_store=None,
     ) -> "EventLog":
         """O22: create a new empty log with immutable metadata
         (reference: file.go:127-161 + metadata pseudo-event header).
-        ``arbiter`` is recorded in the meta file — every subsequent
-        default open adopts it and mismatched explicit opens are
-        refused (the two protocols must never run concurrently on one
-        log)."""
-        if arbiter not in ("flock", "cas"):
-            raise ValueError(f"unknown commit arbiter {arbiter!r}")
+        The empty log's pointer names seq 0, the empty chain, so the
+        first commit claims delta 1. ``makedirs(exist_ok=False)``
+        arbitrates create races."""
         os.makedirs(path, exist_ok=False)
-        # The arbiter rides in the INITIAL meta write (round-10 advice):
-        # recording it only after the bootstrap open left a crash
-        # window in which a cas log's later default opens would
-        # silently adopt flock — the exact mixed-protocol hazard the
-        # field exists to prevent.
         with open(os.path.join(path, _META_FILE), "w") as f:
+            json.dump({"metadata": metadata or {}, "format_version": 1}, f)
+        with open(os.path.join(path, _STATE_FILE), "w") as f:
             json.dump(
-                {"metadata": metadata or {}, "format_version": 1,
-                 "arbiter": arbiter},
+                {
+                    "latest_version": 0,
+                    "version_initial": 0,
+                    "last_timestamp": 0,
+                    "stream_commits": {},
+                    "manifest_seq": 0,
+                    "manifest_ckpt": 0,
+                },
                 f,
             )
-        # Bootstrap open runs flock-mode regardless of the target
-        # arbiter (the private _bootstrap keyword — not reachable via
-        # the documented arbiter argument): the empty log has no state
-        # file yet, and a CAS open refuses the directory-listing
-        # recovery that bootstrapping needs. Safe — makedirs(
-        # exist_ok=False) arbitrates create races, so no other writer
-        # can exist before this returns.
-        log = cls(spark, path, claim_store=claim_store, _bootstrap=True)
-        log._write_state()
-        log._arbiter = arbiter
-        return log
+        return cls(spark, path, claim_store=claim_store)
 
     @classmethod
     def open(
         cls,
         spark: SparkSession,
         path: str,
-        arbiter: str | None = None,
         claim_store=None,
     ) -> "EventLog":
-        """O21: open an existing log; if the state file is missing or
-        stale (crash between fragment write and publish), recover the
-        head from the data (reference recovers by scanning to the last
-        entry, file.go:67-125). ``arbiter=None`` (default) adopts the
-        arbiter recorded at create time; ``"cas"`` opens for
-        shared-store multi-host writing (class docstring / SCALE.md) —
-        an explicit value that contradicts the recorded one raises.
-        ``claim_store`` overrides the manifest I/O substrate (default:
-        POSIX directory store; see manifest.py ClaimStore contract)."""
+        """O21: open an existing log; if the pointer is missing, stale
+        or corrupt, recover the head from the delta chain (the
+        reference recovers by scanning to the last entry,
+        file.go:67-125). ``claim_store`` overrides the manifest I/O
+        substrate (default: POSIX directory store; see manifest.py
+        ClaimStore contract)."""
         if not os.path.isdir(path):
             raise FileNotFoundError(path)
-        return cls(spark, path, arbiter, claim_store=claim_store)
+        return cls(spark, path, claim_store=claim_store)
 
     def _load_meta(self) -> None:
         meta_path = os.path.join(self.path, _META_FILE)
@@ -677,56 +437,40 @@ class EventLog:
         try:
             with open(self._state_path()) as f:
                 st = json.load(f)
+            if "files" in st:
+                raise RuntimeError(
+                    f"{self._state_path()} is a pre-manifest state file (it "
+                    "carries a 'files' list); this format is no longer "
+                    "opened. Re-open the log once with a release that adopts "
+                    "legacy state files, which rewrites it as a manifest "
+                    "pointer."
+                )
             self._latest = int(st["latest_version"])
             self._initial = int(st["version_initial"])
             self._last_ts = int(st["last_timestamp"])
             self._stream_commits = {
                 str(k): int(v) for k, v in st.get("stream_commits", {}).items()
             }
-            files = st.get("files")
-            if files is not None:
-                # legacy format: full list in the state file — adopted
-                # into a manifest chain by __init__
-                self._legacy_files = list(files)
-            elif "manifest_seq" in st:
-                m = ManifestLog(self.path, store=self._claim_store)
-                try:
-                    m.load(int(st["manifest_seq"]), st.get("manifest_ckpt"))
-                    self._manifest = m
-                except ManifestChainBroken:
-                    if self._arbiter == "cas":
-                        # under CAS the listing re-adoption below is
-                        # forbidden; re-position on the chain itself
-                        self._recover_state_cas()
-                        return
-                    # pointer names a vacuumed chain (crash between a
-                    # roll-up and its pointer publish, then a vacuum):
-                    # head fields are still good; re-adopt the listing.
-                    # The rebuilt chain must resume PAST this seq or the
-                    # stale pointer would outrank the re-adoption.
-                    self._stale_manifest_seq = int(st["manifest_seq"])
-                    self._manifest = None
-        except (FileNotFoundError, KeyError, ValueError):
-            if self._arbiter == "cas":
-                self._recover_state_cas()
-            else:
-                self._recover_state()
+            m = ManifestLog(self.path, store=self._claim_store)
+            m.load(int(st["manifest_seq"]), st.get("manifest_ckpt"))
+            self._manifest = m
+        except (FileNotFoundError, KeyError, ValueError, ManifestChainBroken):
+            self._recover_state_cas()
 
     def _recover_state_cas(self) -> None:
-        """O21 recovery for the CAS arbiter when the POINTER is lost,
-        corrupt, or names a vacuumed chain — the crash windows the
-        flock engine answers with a directory scan, which CAS refuses
-        (an unpublished loser's fragment may alias committed versions,
-        so only the manifest names a consistent snapshot). The delta
-        chain is the commit truth: cold-position at the newest
-        checkpoint in the claim store, roll forward to the newest
-        complete delta, and adopt its head fields (every CAS commit
-        rides them in its delta). Recovery — unlike the hot path — may
-        consult the store's LISTING to find that checkpoint; eventual
-        list visibility only costs recovery freshness, and roll_forward
-        walks GET probes past whatever the listing knew. A non-empty
-        log whose chain is gone entirely is unrecoverable by design:
-        raising beats silently serving an empty or doubled log."""
+        """O21 recovery when the POINTER is lost, corrupt, or names a
+        vacuumed chain. No directory scan: an unpublished loser's
+        fragment may alias committed versions, so only the manifest
+        names a consistent snapshot. The delta chain is the commit
+        truth: cold-position at the newest checkpoint in the claim
+        store, roll forward to the newest complete delta, and adopt its
+        head fields (every commit rides them in its delta). Recovery —
+        unlike the hot path — may consult the store's LISTING to find
+        that checkpoint; eventual list visibility only costs recovery
+        freshness, and roll_forward walks GET probes past whatever the
+        listing knew. A non-empty log whose chain is gone entirely is
+        unrecoverable by design: raising beats silently serving an
+        empty or doubled log."""
         m = ManifestLog(self.path, store=self._claim_store)
         ck = m._latest_checkpoint_at(m.max_seq_on_disk()) or 0
         try:
@@ -734,29 +478,30 @@ class EventLog:
         except ManifestChainBroken:
             m = None
         if m is not None:
-            head = m.roll_forward()
+            # a chain written before deltas carried heads recovers its
+            # head from the manifest-listed data below
+            head = m.roll_forward(require_head=False)
             self._manifest = m
             if head is not None:
                 self._adopt_cas_head(head)
             if self._latest == 0 and m.count() > 0:
-                # chain exists but no head-carrying delta survived
-                # (adoption checkpoint only): recover the head from the
-                # manifest-listed data — needs a session
+                # chain exists but no head-carrying delta survived:
+                # recover the head from the manifest-listed data —
+                # needs a session
                 if self.spark is None:
                     raise RuntimeError(
-                        "cas pointer recovery needs a spark session to "
+                        "pointer recovery needs a spark session to "
                         "re-derive the head from the manifest-listed data"
                     )
                 self._recover_state()
-            if self._latest > 0 or m.count() > 0 or not any(
+            if m.count() > 0 or not any(
                 f.endswith(".parquet") for f in self._data_files()
             ):
                 return
         raise RuntimeError(
-            "cas log unrecoverable: pointer lost and no usable manifest "
-            "chain; the directory-listing fallback is refused under the "
-            "cas arbiter (an unpublished loser's fragment may alias "
-            "committed versions)"
+            "log unrecoverable: pointer lost and no usable manifest chain; "
+            "the directory-listing fallback is refused (an unpublished "
+            "loser's fragment may alias committed versions)"
         )
 
     def _recover_state(self) -> None:
@@ -773,243 +518,78 @@ class EventLog:
         self._initial = row["mn"] or 0
         self._last_ts = row["ts"] or 0
 
-    def _write_intent(self, files: list[str] | None, hi: int) -> None:
-        """Publish the commit-intent record (atomic rename): the files
-        the IN-FLIGHT commit is adding and the head it will publish.
-        Written inside the commit section BEFORE any new fragment
-        becomes visible, so on open the orphan check is O(1): a
-        published head ≥ ``hi`` proves the last write completed (no
-        orphan can exist — every earlier commit's intent was checked by
-        the open that preceded it, and the flock means at most one
-        in-flight commit ever exists); a head below ``hi`` names the
-        only possible orphans directly. ``files=None`` marks a bulk
-        (Spark-written) commit whose file names aren't known up front —
-        the one crash window that still pays a directory listing.
-        Replaces the r8 shape where EVERY open listed the directory
-        (2.6→169 ms at 1k→100k fragments, O(dir) at 10^6)."""
-        if self.path is None:
-            return  # in-memory engine: nothing persists, nothing orphans
-        if self._arbiter == "cas":
-            # concurrent writers would clobber each other's intents (no
-            # lock orders them) and CAS opens never truncate anyway —
-            # the manifest is the sole read truth there
-            return
-        tmp = os.path.join(self.path, f"._intent.tmp.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"files": files, "hi": hi}, f)
-        os.replace(tmp, os.path.join(self.path, _INTENT_FILE))
-
-    def _read_intent(self) -> dict | None:
-        try:
-            with open(os.path.join(self.path, _INTENT_FILE)) as f:
-                d = json.load(f)
-            return d if isinstance(d.get("hi"), int) else None
-        except (FileNotFoundError, ValueError):
-            return None
-
-    def _truncate_orphans(self) -> None:
-        """Physically drop rows above the committed head on open.
-
-        A crash between fragment write and ``_state.json`` publish leaves
-        orphan rows above the head; logical filtering alone only holds
-        until the next append re-assigns those version numbers (the log
-        would then hold two rows per version). The reference's file
-        engine physically truncates on open (file.go:67-125); we mirror
-        that: fragment files wholly above the head are deleted, a file
-        straddling the boundary (cannot occur with our commit protocol,
-        handled defensively) is rewritten filtered.
-
-        Fast path: the commit-intent record (``_write_intent``) proves
-        the no-orphan case from ONE tiny read — no directory listing —
-        and on an interactive-commit crash names the only possible
-        orphans, so the check is O(orphans named). The full listing
-        survives for legacy logs (no intent yet) and the bulk-crash
-        window (Spark-assigned names unknown up front); those opens end
-        by writing a clean intent so every later open is O(1)."""
-        latest = self._latest
-        if self.path is None:
-            return
-        intent = self._read_intent()
-        if intent is not None:
-            if latest >= intent["hi"]:
-                return  # last write published → no orphan can exist
-            named = intent.get("files")
-            if named is not None:
-                for fname in named:
-                    if fname.endswith(".parquet") and os.path.exists(
-                        os.path.join(self.path, fname)
-                    ):
-                        self._drop_or_trim_orphan(fname, latest)
-                self._write_intent([], latest)
-                return
-            # bulk-crash window: fall through to the listing
-        files = self._data_files()
-        if not files:
-            if intent is not None or os.path.isdir(self.path):
-                self._write_intent([], latest)
-            return
-        if self._manifest is not None:
-            # Only UNPUBLISHED files can be orphans: a manifest-listed
-            # fragment was published atomically with a head ≥ its max
-            # version. A crash orphan strictly ADDS a file beyond the
-            # manifest, so listing-count == manifest-count (a metadata-
-            # only probe) proves no orphans without loading a single
-            # page; on mismatch, the name diff restricts footer checks
-            # to the suspects — O(orphans), not O(all fragments).
-            if len(files) <= self._manifest.count():
-                self._write_intent([], latest)
-                return
-            published = set(self._manifest.names())
-            files = [f for f in files if f not in published]
-            if not files:
-                self._write_intent([], latest)
-                return
-        for fname in files:
-            if fname.endswith(".parquet"):
-                self._drop_or_trim_orphan(fname, latest)
-        self._write_intent([], latest)
-
-    def _drop_or_trim_orphan(self, fname: str, latest: int) -> None:
-        """Delete ``fname`` if its rows sit wholly above the committed
-        head; rewrite it filtered if it straddles (cannot occur with
-        our commit protocol, handled defensively); leave it alone if it
-        holds no row above the head. Footer stats only on the common
-        paths — no data read unless stats are missing."""
-        import pyarrow.parquet as pq
-
-        full = os.path.join(self.path, fname)
-        try:
-            md = pq.ParquetFile(full).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}["version"]
-            mn, mx = None, None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or not st.has_min_max:
-                    mn, mx = None, None
-                    break
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-        except Exception:
-            mn = mx = None
-        if mn is None or mx is None:
-            tbl = pq.read_table(full, columns=["version"])
-            col = tbl.column("version")
-            if len(col) == 0:
-                return
-            import pyarrow.compute as pc
-
-            mn, mx = pc.min(col).as_py(), pc.max(col).as_py()
-        if mx <= latest:
-            return
-        if mn > latest:
-            os.remove(full)
-            # orphans are unpublished by definition, so they can
-            # only appear in the pre-adoption legacy list
-            if self._legacy_files is not None and fname in self._legacy_files:
-                self._legacy_files.remove(fname)
-        else:
-            import pyarrow.compute as pc
-
-            tbl = pq.read_table(full)
-            kept = tbl.filter(pc.field("version") <= latest)
-            tmp = os.path.join(self.path, f"_trunc.{uuid.uuid4().hex}.parquet")
-            pq.write_table(kept, tmp)
-            os.replace(tmp, full)
-
     @contextlib.contextmanager
     def _commit_section(self):
-        """The commit critical section, linearizable ACROSS OS PROCESSES.
+        """The commit critical section.
 
         The reference engine assumes a single process (its commit mutex
-        is an in-process ``sync.RWMutex``, eventlog/file/file.go:57) —
-        a second writer process would corrupt the log. We go one step
-        further (SURVEY §7 names multi-driver OCC as the known edge):
+        is an in-process ``sync.RWMutex``, eventlog/file/file.go:57).
+        Here the thread RLock orders this process's commits, and the
+        section opens by re-syncing to the published state
+        (``_refresh_published_state``), so version assignment continues
+        from the true head and an OCC ``assumed_version`` is validated
+        against the real latest. Order ACROSS processes and hosts is
+        decided where the commit publishes: the exclusive delta claim
+        in ``_write_state``. A loser resyncs and retries, so two
+        processes racing on one log see exactly one winner per
+        version, same as two threads.
 
-        1. the thread RLock serializes commits within this process;
-        2. an ``flock`` on ``_commit.lock`` serializes commits across
-           processes (advisory, kernel-released on crash — no stale
-           locks);
-        3. inside the flock, the PUBLISHED ``_state.json`` is re-read:
-           if another writer advanced the head since we last looked,
-           the in-memory head/timestamp re-sync to it, so version
-           assignment continues from the true head and an OCC
-           ``assumed_version`` is validated against the real latest —
-           two processes CAS-racing on one log see exactly-one-winner
-           per version, same as two threads.
-
-        At scale this is the commit protocol of a table format: an
-        atomic publish step that orders writers (the lock file plays
-        the role of the metastore's/log store's atomic append).
         Readers stay lock-free: scans read the last PUBLISHED state.
         In-memory engines (path=None) keep the thread lock only."""
         with self._lock:
-            if self.path is None:
-                yield
-                return
-            if self._arbiter == "cas":
-                # no lock to take: serialization happens at the delta
-                # claim (manifest.commit exclusive=True) — the thread
-                # RLock above still orders THIS process's threads, and
-                # cross-process/host order is decided by put-if-absent
+            if self.path is not None:
                 self._refresh_published_state()
-                yield
-                return
-            with open(os.path.join(self.path, _COMMIT_LOCK_FILE), "a") as fh:
-                import fcntl  # POSIX-only; fine for the lock's purpose
+            yield
 
-                fcntl.flock(fh, fcntl.LOCK_EX)
-                try:
-                    self._refresh_published_state()
-                    yield
-                finally:
-                    fcntl.flock(fh, fcntl.LOCK_UN)
+    def _refresh_published_state(self) -> bool:
+        """Advance the manifest mirror and the head to the freshest
+        published state: replay the pointer's delta records (O(their
+        commits), never a full reparse), adopt the pointer's head
+        fields, then roll past the pointer along the delta chain. The
+        pointer is only a CACHE — racing pointer renames can land out
+        of order, and a writer may die after its claimed delta — so
+        the roll-forward runs REGARDLESS of the pointer's condition:
+        the stateful model test (tests/test_cas_model.py) found that
+        an early return on a deleted pointer froze a stale writer's
+        mirror, and its commit retry loop then lost the same
+        already-claimed seq forever.
 
-    def _refresh_published_state(self) -> None:
-        """Adopt the published state if another process advanced it.
-        No fallback scan on a missing/corrupt state file — under flock
-        that just means nobody published since we loaded. Under CAS the
-        pointer is only a CACHE, so the delta-chain roll-forward at the
-        bottom runs REGARDLESS of the pointer's condition: the stateful
-        model test (tests/test_cas_model.py) found that an early return
-        on a deleted pointer froze a stale writer's mirror, and its
-        commit retry loop — whose resync is exactly this method — then
-        lost the same already-claimed seq forever."""
-        st = None
+        The mirror never advances past the head (round-10 advice): a
+        sync that absorbed another writer's fragment into names()
+        while self._latest still lagged would hand compact's snapshot
+        an inconsistent (files, head) pair, and its ``version <=
+        snap_latest`` filter would drop the absorbed commit's rows
+        while its fragment is retired. Both adoption steps are
+        monotonic (never move the head backwards), so pure readers
+        only gain freshness. Returns False when the chain below the
+        pointer is broken and the mirror cannot serve."""
         try:
             with open(self._state_path()) as f:
                 st = json.load(f)
-            latest = int(st["latest_version"])
-        except (FileNotFoundError, KeyError, ValueError):
+        except (FileNotFoundError, ValueError):
             st = None
-        if st is not None:
-            seq = st.get("manifest_seq")
-            if seq is not None and self._manifest is not None:
-                # replay the other writer's delta records — O(their
-                # commits), covers compactions (a delta carries removes)
-                # without moving the head
+        ok = True
+        with self._lock:
+            if isinstance(st, dict):
                 try:
-                    self._manifest.replay_to(int(seq))
+                    self._manifest.replay_to(int(st["manifest_seq"]))
                 except ManifestChainBroken:
-                    pass  # readers fall back to the listing until re-adopted
-            if latest != self._latest and not (
-                self._arbiter == "cas" and latest < self._latest
-            ):
-                # (the guard: under CAS the pointer is a lagging CACHE —
-                # a writer that already rolled forward past it must
-                # never move its head backwards to a stale rename)
-                self._latest = latest
-                self._initial = int(st["version_initial"])
-                self._last_ts = int(st["last_timestamp"])
-                self._stream_commits = {
-                    str(k): int(v)
-                    for k, v in st.get("stream_commits", {}).items()
-                }
-        if self._arbiter == "cas" and self._manifest is not None:
-            # the pointer is only a cache under CAS (racing pointer
-            # renames can land out of order, and a writer may die after
-            # its claimed delta): the delta chain is the truth — roll
-            # past the pointer and adopt the newest delta's head
+                    ok = False
+                except (KeyError, TypeError, ValueError):
+                    pass  # torn pointer: roll-forward still runs
+                try:
+                    self._adopt_cas_head(
+                        {
+                            "latest": int(st["latest_version"]),
+                            "initial": int(st["version_initial"]),
+                            "ts": int(st["last_timestamp"]),
+                            "sc": st.get("stream_commits", {}),
+                        }
+                    )
+                except (KeyError, TypeError, ValueError):
+                    pass
             self._adopt_cas_head(self._manifest.roll_forward())
+        return ok
 
     def _adopt_cas_head(self, head: dict | None) -> None:
         """Adopt a rolled-forward CAS delta's head fields: the version
@@ -1036,49 +616,41 @@ class EventLog:
         into the vacuum ledger only AFTER the pointer is out
         (publish-before-delete, same as data fragments)."""
         superseded: list[str] = []
-        if self._manifest is not None and (
-            self._pending_add or self._pending_remove
-        ):
+        if self._pending_add or self._pending_remove:
             add, rm = self._pending_add, self._pending_remove
             self._pending_add, self._pending_remove = [], []
-            if self._arbiter == "cas":
-                # the delta claim IS the commit point; head fields ride
-                # in the record so readers can roll past the pointer —
-                # including the stream-sink idempotence markers, or a
-                # roll-forward would lose them and a replayed
-                # foreachBatch could double-commit (exactly-once must
-                # not depend on the pointer cache)
-                head = {
-                    "latest": self._latest,
-                    "initial": self._initial,
-                    "ts": self._last_ts,
-                }
-                if self._stream_commits:
-                    head["sc"] = dict(self._stream_commits)
-                try:
-                    _, superseded = self._manifest.commit(
-                        add, rm, exclusive=True, head=head
-                    )
-                except ManifestSeqClaimed:
-                    # lost the race BEFORE anything published: re-stage
-                    # so the caller can undo its fragment and retry
-                    self._pending_add, self._pending_remove = add, rm
-                    raise
-            else:
-                _, superseded = self._manifest.commit(add, rm)
+            # the delta claim IS the commit point; head fields ride in
+            # the record so readers can roll past the pointer —
+            # including the stream-sink idempotence markers, or a
+            # roll-forward would lose them and a replayed foreachBatch
+            # could double-commit (exactly-once must not depend on the
+            # pointer cache)
+            head = {
+                "latest": self._latest,
+                "initial": self._initial,
+                "ts": self._last_ts,
+            }
+            if self._stream_commits:
+                head["sc"] = dict(self._stream_commits)
+            try:
+                _, superseded = self._manifest.commit(add, rm, head=head)
+            except ManifestSeqClaimed:
+                # lost the race BEFORE anything published: re-stage so
+                # the caller can undo its fragment and retry
+                self._pending_add, self._pending_remove = add, rm
+                raise
         tmp = self._state_path() + f".tmp.{uuid.uuid4().hex}"
         st = {
             "latest_version": self._latest,
             "version_initial": self._initial,
             "last_timestamp": self._last_ts,
             "stream_commits": self._stream_commits,
-        }
-        if self._manifest is not None:
-            st["manifest_seq"] = self._manifest.seq
+            "manifest_seq": self._manifest.seq,
             # base-checkpoint hint: lets a cold open jump straight to
             # its checkpoint file instead of LISTING _manifest/ (which
             # holds every delta still inside the vacuum grace window)
-            st["manifest_ckpt"] = self._manifest._ckpt_seq
+            "manifest_ckpt": self._manifest._ckpt_seq,
+        }
         with open(tmp, "w") as f:
             json.dump(st, f)
         os.replace(tmp, self._state_path())  # atomic publish
@@ -1110,7 +682,7 @@ class EventLog:
         None when no manifest chain is usable (caller reads the full
         snapshot). This is the data-skipping probe ``scan(label=...)``
         prunes with and tests assert on."""
-        if self.path is None or not self._sync_manifest_to_pointer():
+        if self.path is None or not self._refresh_published_state():
             return None
         positions = list(_label_bloom_positions(label))
         with self._lock:
@@ -1150,7 +722,7 @@ class EventLog:
         "label")`` — the OPTIMIZE-ZORDER-style repair — surfaced by the
         CLI ``stats`` subcommand so operators see the signal before
         label scans regress at scale."""
-        if self.path is None or not self._sync_manifest_to_pointer():
+        if self.path is None or not self._refresh_published_state():
             return {"usable": False, "recommend_cluster_by_label": False}
         with self._lock:
             metas = list(self._manifest._page_metas)
@@ -1240,78 +812,19 @@ class EventLog:
             *[os.path.join(self.path, f) for f in files]
         )
 
-    def _sync_manifest_to_pointer(self) -> bool:
-        """Advance the manifest mirror to the freshest PUBLISHED pointer
-        — one tiny JSON read; when another process committed, replay of
-        its delta records (O(their commits), never a full reparse).
-        Returns False when the mirror can't serve (no manifest / broken
-        chain) and the caller should use the directory listing."""
-        if self._manifest is None:
-            return False
-        try:
-            with open(self._state_path()) as f:
-                st = json.load(f)
-            seq = st.get("manifest_seq")
-        except (FileNotFoundError, ValueError):
-            st, seq = None, None
-        if seq is None:
-            # pre-publish window of an adoption: the in-memory mirror IS
-            # the current view (same as the old in-memory list fallback)
-            return True
-        with self._lock:
-            try:
-                self._manifest.replay_to(int(seq))
-            except ManifestChainBroken:
-                return False
-            if self._arbiter == "cas":
-                # Under CAS the mirror must never advance past the head
-                # (round-10 advice): a sync that absorbs another
-                # writer's fragment into names() while self._latest
-                # still lags leaves any caller pairing the two
-                # (compact's snapshot) with an inconsistent
-                # (files, head) pair — compact's `version <=
-                # snap_latest` filter would drop the absorbed commit's
-                # rows while its fragment is swept into the rewrite set
-                # and retired: committed events permanently lost. Two
-                # adoption steps, matching the two ways the mirror just
-                # advanced: (1) the pointer's own head fields cover the
-                # deltas replay_to consumed (replay applies file
-                # changes but discards per-delta heads); (2) the
-                # rolled-forward delta head covers
-                # claimed-but-not-yet-pointed commits past the
-                # pointer. Both monotonic (never move the head
-                # backwards), so pure readers only gain freshness.
-                try:
-                    self._adopt_cas_head(
-                        {
-                            "latest": int(st["latest_version"]),
-                            "initial": int(st["version_initial"]),
-                            "ts": int(st["last_timestamp"]),
-                            "sc": st.get("stream_commits", {}),
-                        }
-                    )
-                except (KeyError, TypeError, ValueError):
-                    pass  # torn/legacy pointer: roll-forward still runs
-                self._adopt_cas_head(self._manifest.roll_forward())
-        return True
-
     def _manifest_files(self) -> list[str]:
-        """The committed data-file set at the freshest published
-        pointer; directory listing (retirement-aware) when no manifest
-        chain is usable (legacy log mid-adoption, vacuumed chain).
-        Under the CAS arbiter the listing fallback is REFUSED: with no
-        lock ordering writers, a directory may hold a crashed loser's
-        fragment whose versions a winner re-assigned — only the
-        manifest names a consistent snapshot."""
-        if self._sync_manifest_to_pointer():
-            with self._lock:
-                return self._manifest.names()
-        if self._arbiter == "cas":
+        """The committed data-file set at the freshest published state.
+        There is no directory-listing fallback: with no lock ordering
+        writers, a directory may hold a crashed loser's fragment whose
+        versions a winner re-assigned — only the manifest names a
+        consistent snapshot."""
+        if not self._refresh_published_state():
             raise RuntimeError(
-                "manifest chain unusable; the cas arbiter has no safe "
+                "manifest chain unusable; there is no safe "
                 "directory-listing fallback"
             )
-        return self._data_files()
+        with self._lock:
+            return self._manifest.names()
 
     def _data_files(self) -> list[str]:
         """Directory listing minus files the deferred-deletion ledger has
@@ -1502,15 +1015,14 @@ class EventLog:
                         try:
                             self._write_state()
                         except ManifestSeqClaimed:
-                            # CAS arbiter only: another writer took this
-                            # seq. Nothing published — drop our fragment
-                            # (it squats on versions the winner owns),
-                            # roll back the in-memory head, resync,
-                            # retry. Every op's OCC assumed_version is
-                            # re-validated against the WINNER's head at
-                            # the top of the loop, so two hosts
-                            # CAS-racing see exactly-one-winner, same
-                            # as two threads under the flock.
+                            # another writer took this seq. Nothing
+                            # published — drop our fragment (it squats
+                            # on versions the winner owns), roll back
+                            # the in-memory head, resync, retry. Every
+                            # op's OCC assumed_version is re-validated
+                            # against the WINNER's head at the top of
+                            # the loop, so two hosts racing see
+                            # exactly-one-winner, same as two threads.
                             self._discard_staged_fragments()
                             self._latest, self._initial = (
                                 base,
@@ -1635,10 +1147,6 @@ class EventLog:
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, "." + name + ".tmp")
         pq.write_table(tbl, tmp)
-        # intent BEFORE the fragment becomes visible: if we crash
-        # between the rename and the pointer publish, the next open
-        # reads the intent and checks exactly this file — no listing
-        self._write_intent([name], rows[-1][0])
         os.rename(tmp, os.path.join(self.path, name))
         # counts interactive fragments since the last fold — the
         # minor-compaction trigger (amortized-O(1) append maintenance)
@@ -1651,31 +1159,34 @@ class EventLog:
         entry.update(_label_stats_entry({r[3] for r in rows}))
         self._pending_add.append(entry)
 
-    def _write_out(self, out: DataFrame, post_write_check=None) -> None:
+    def _write_out(
+        self,
+        out: DataFrame,
+        expect: tuple[int, int],
+        post_write_check=None,
+    ) -> None:
         """Bulk-commit seam: persist an already-versioned, checksummed
-        frame. The storage engines differ only here and in ``_read_raw``
-        + the state/lifecycle hooks (the reference's engine seam,
-        eventlog/eventlog.go EventLogger interface).
+        frame whose versions the count pass assigned as the closed range
+        ``expect``. The storage engines differ only here and in
+        ``_read_raw`` + the state/lifecycle hooks (the reference's
+        engine seam, eventlog/eventlog.go EventLogger interface).
 
         Spark writes into a PRIVATE sibling staging dir; the driver then
         renames the part files into the log dir under a fresh uuid tag
         (same filesystem — pure renames). The commit's file set is
-        therefore known EXACTLY and owned solely by this writer. The
-        previous shape — write straight into the log dir and discover
-        names by directory diff — was only safe under the flock: with
-        the CAS arbiter nothing orders writers, so a concurrent commit's
-        fragment landing inside the diff window would be swept into THIS
-        writer's delta (doubled rows if we win, and ``
-        _discard_staged_fragments`` would DELETE the other writer's
-        committed file if we lose). Version ranges come from the staged
-        footers — one metadata read per file, so scan_rows/page pruning
-        works on bulk fragments too. ``part-<tag>-…`` names keep the
+        therefore known EXACTLY and owned solely by this writer: nothing
+        orders writers across processes, so a directory diff could sweep
+        a concurrent commit's fragment into THIS writer's delta (doubled
+        rows if we win, and ``_discard_staged_fragments`` would DELETE
+        the other writer's committed file if we lose). Version ranges
+        come from the staged footers — one metadata read per file, so
+        scan_rows/page pruning works on bulk fragments too, and BEFORE
+        any rename they must span exactly ``expect`` (the count and the
+        write are separate jobs; a nondeterministic upstream can make
+        them disagree, which would otherwise publish a head that
+        misnames the written rows). ``part-<tag>-…`` names keep the
         tail stream's ``part-*`` glob (streaming/streams.py) and
-        minor-compact eligibility. When every staged footer carries
-        version stats the commit-intent record is refreshed with the
-        exact names BEFORE anything becomes visible, closing the
-        bulk-crash window that used to pay a full directory listing on
-        the next open."""
+        minor-compact eligibility."""
         tmp = self.path + f".bulk.{uuid.uuid4().hex}"
         try:
             out.write.mode("overwrite").parquet(tmp)
@@ -1700,11 +1211,13 @@ class EventLog:
                 if lrng is not None:
                     entry["lmin"], entry["lmax"] = lrng
                 staged.append((src, name, entry))
-            if staged and all("hi" in e for _, _, e in staged):
-                self._write_intent(
-                    [name for _, name, _ in staged],
-                    max(e["hi"] for _, _, e in staged),
-                )
+            ranged = [e for _, _, e in staged if "lo" in e]
+            _check_bulk_range(
+                (min(e["lo"] for e in ranged), max(e["hi"] for e in ranged))
+                if ranged
+                else None,
+                expect,
+            )
             for src, name, entry in staged:
                 os.rename(src, os.path.join(self.path, name))
                 self._pending_add.append(entry)
@@ -1905,26 +1418,17 @@ class EventLog:
                     "label",
                     "payload",
                 ).withColumn("checksum", checksum_expr())
-                # bulk intent: conservative head-bound-only record that
-                # covers a crash DURING the Spark job; _write_out
-                # refreshes it with the exact staged names before any
-                # file becomes visible, so only a crash mid-job (nothing
-                # visible yet) ever pays the listing on the next open
-                self._write_intent(None, base + total)
-                self._write_out(out, post_write_check=post_write_check)
+                self._write_out(
+                    out, (base + 1, base + total), post_write_check=post_write_check
+                )
             finally:
                 unpersist()
             # Head is known exactly from the versioning count pass — no
-            # re-scan of the log to publish state. Caveat (documented
-            # trade): the count pass and the write must see the same
-            # rows — the persisted flow trusts its cache, the streamed
-            # flow trusts source determinism (fixed bucket literals +
-            # a stable source; both jobs recompute the same scan). On a
-            # cluster, a NONdeterministic upstream could diverge
-            # between the two jobs; callers with such sources should
-            # checkpoint upstream or verify post-write (max(version) ==
-            # head). The reference's analog is its mid-batch rollback
-            # (file.go:343-360).
+            # re-scan of the log to publish state. The count pass and
+            # the write must see the same rows; _write_out checked that
+            # the written version range is exactly the counted one
+            # before anything became visible. The reference's analog is
+            # its mid-batch rollback (file.go:343-360).
             prev_initial, prev_last_ts = self._initial, self._last_ts
             prev_marker = (
                 self._stream_commits.get(txn[0], None) if txn is not None else None
@@ -1939,14 +1443,13 @@ class EventLog:
             try:
                 self._write_state()
             except ManifestSeqClaimed:
-                # CAS arbiter: versions are baked into the Spark-written
-                # files, so a lost bulk race cannot be re-stamped in
-                # place — drop the staged files and surface the retry to
-                # the caller. EVERY in-memory mutation above must unwind,
-                # the txn marker most of all: _refresh_published_state
-                # only heals _stream_commits when the winner's pointer
-                # already moved the head, so a stale marker would make
-                # the advertised re-run hit the replay check and silently
+                # versions are baked into the Spark-written files, so a
+                # lost bulk race cannot be re-stamped in place — drop the
+                # staged files and surface the retry to the caller.
+                # EVERY in-memory mutation above must unwind, the txn
+                # marker most of all: _refresh_published_state never
+                # lowers a marker, so a stale one would make the
+                # advertised re-run hit the replay check and silently
                 # drop the acked batch.
                 self._discard_staged_fragments()
                 self._latest = base
@@ -2188,29 +1691,18 @@ class EventLog:
         positions = (
             list(_label_bloom_positions(label)) if label is not None else None
         )
-        if self._sync_manifest_to_pointer():
-            with self._lock:
-                if label is None:
-                    cand = self._manifest.overlapping(lo, hi)
-                else:
-                    cand = self._manifest.candidates(
-                        lo,
-                        hi,
-                        page_ok=lambda m: _page_may_contain_label(
-                            m, label, positions
-                        ),
-                        entry_ok=lambda e: _entry_may_contain_label(
-                            e, label, positions
-                        ),
-                    )
-        else:
-            cand = [{"n": f} for f in self._data_files()]
-            if label is not None:
-                cand = [
-                    e
-                    for e in cand
-                    if _entry_may_contain_label(e, label, positions)
-                ]
+        if not self._refresh_published_state():
+            return None  # chain unusable: the Spark path raises loudly
+        with self._lock:
+            if label is None:
+                cand = self._manifest.overlapping(lo, hi)
+            else:
+                cand = self._manifest.candidates(
+                    lo,
+                    hi,
+                    page_ok=lambda m: _page_may_contain_label(m, label, positions),
+                    entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
+                )
         if label is not None:
             if limit is not None:
                 # bounded label page: entries without a recorded range
@@ -2474,13 +1966,6 @@ class EventLog:
         that matches the dominant read, exactly as a table format's
         OPTIMIZE ZORDER does.
 
-        Takes the CROSS-PROCESS commit section, not just the thread
-        lock: compaction deletes and rewrites fragment files, so a
-        commit landing in another process mid-rewrite would have its
-        fragment silently dropped. Inside the flock it also re-syncs to
-        the published head first, so the rewrite includes every
-        committed row.
-
         PUBLISH-BEFORE-DELETE (round-6 advice): the compacted files are
         moved into the log dir under ``compact-…`` names, the manifest
         swaps to them in ONE atomic ``_state.json`` publish, and only
@@ -2499,9 +1984,9 @@ class EventLog:
             self.vacuum()  # reap files retired by PREVIOUS compactions
             # SNAPSHOT FIRST (round-9 advice): capture the file set, the
             # manifest mirror seq, and the head in ONE sync BEFORE the
-            # long Spark rewrite — and never re-sync afterwards. Under
-            # the CAS arbiter _commit_section holds no cross-process
-            # lock, so commits can land DURING the rewrite; a
+            # long Spark rewrite — and never re-sync afterwards.
+            # _commit_section holds no cross-process lock, so commits
+            # from other processes can land DURING the rewrite; a
             # post-rewrite _manifest_files() would roll the mirror
             # forward past them, the exclusive seq claim in
             # _write_state would then succeed at the ADVANCED seq (the
@@ -2640,8 +2125,7 @@ class EventLog:
         manifest, i.e. a concurrent compaction/fold owns part of the
         snapshot — two rewrites of the same fragment cannot both win.
         Returns True when published; False after an abort (staged
-        outputs discarded, inputs intact). Flock mode never loses a
-        claim, so the loop body is CAS-only."""
+        outputs discarded, inputs intact)."""
         for attempt in range(1, self.COMPACT_CLAIM_RETRIES + 1):
             try:
                 self._write_state()  # atomic manifest swap — the publish point
@@ -2754,7 +2238,7 @@ class EventLog:
         read-modify-rewrite JSON list, O(ledger) per retirement, which
         showed up as the commit p99 once manifest roll-ups started
         retiring their superseded records). Caller holds the commit
-        flock; vacuum compacts the ledger when it reaps."""
+        section; vacuum compacts the ledger when it reaps."""
         if not files:
             return
         with open(self._retired_path(), "a") as f:
@@ -2779,15 +2263,53 @@ class EventLog:
             pass
         return out
 
+    def published_files(self) -> set[str]:
+        """Every data file a commit published that vacuum has not yet
+        reaped: the live manifest plus the retirement ledger. A data
+        file outside this set was never claimed — a crashed or losing
+        writer's fragment."""
+        names = set(self._manifest_files())
+        names.update(
+            f for batch in self._read_retired() for f in batch.get("files", [])
+        )
+        return names
+
     def vacuum(self, grace_seconds: float | None = None) -> int:
-        """Delete retired data files older than the grace window; returns
-        the number of files removed. Run by ``compact`` itself (so the
-        ledger never grows past one compaction cycle) or manually with
-        ``grace_seconds=0`` when no readers can be live. The analog at
-        scale is a table format's VACUUM with a retention check."""
+        """Delete files older than the grace window; returns the number
+        of files removed. Two kinds go: retired files (the ledger's
+        timestamp is past the window) and unpublished crash leftovers —
+        data fragments and dot-prefixed staging temps that
+        ``published_files`` does not name, whose last write or rename
+        (mtime/ctime) is past the window, so a live writer's fragment
+        between its rename and its delta claim is never touched. Run by
+        ``compact`` itself (so the ledger never grows past one
+        compaction cycle) or manually with ``grace_seconds=0`` when no
+        reader or writer anywhere can be live. The analog at scale is a
+        table format's VACUUM with a retention check."""
         grace = self.VACUUM_GRACE_SECONDS if grace_seconds is None else grace_seconds
-        ledger, kept, removed = self._read_retired(), [], 0
+        removed = 0
         now = time.time()
+        with self._lock:
+            published = self.published_files()
+            for f in os.listdir(self.path):
+                if f in published or not (
+                    (f.endswith(".parquet") and not f.startswith(("_", ".")))
+                    or (f.startswith(".") and f.endswith(".tmp"))
+                ):
+                    continue
+                full = os.path.join(self.path, f)
+                try:
+                    st = os.stat(full)
+                    if now - max(st.st_mtime, st.st_ctime) >= grace:
+                        os.remove(full)
+                        removed += 1
+                except FileNotFoundError:
+                    pass
+            removed += self._reap_retired(now, grace)
+        return removed
+
+    def _reap_retired(self, now: float, grace: float) -> int:
+        ledger, kept, removed = self._read_retired(), [], 0
         for batch in ledger:
             if now - float(batch.get("ts", 0)) < grace:
                 kept.append(batch)

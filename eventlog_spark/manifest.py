@@ -26,13 +26,16 @@ table format uses instead:
   loads only the pages whose range overlaps — O(pages overlapped),
   not O(files). This is what keeps the serving layer's ``scan_rows``
   fast path flat as fragments accumulate.
+* **The delta claim is the commit point**: a delta is published with
+  an atomic create-if-absent (``put_if_absent``), so of two writers
+  racing for one seq exactly one wins and the other retries at the
+  next seq. Each delta carries the head fields of its commit.
 * **The pointer stays in ``_state.json``**: the head fields plus
-  ``manifest_seq``. Write order is fragment → delta → pointer, all
-  atomic renames, so a reader's (pointer seq → checkpoint+deltas ≤ seq)
-  walk always sees a complete, immutable prefix. A crash between delta
-  and pointer leaves an orphan delta at seq+1 that the next writer's
-  ``os.replace`` overwrites — readers can never reach it because they
-  replay only up to the published pointer.
+  ``manifest_seq``. Write order is fragment → delta → pointer, so a
+  reader's (pointer seq → checkpoint+deltas ≤ seq) walk always sees a
+  complete, immutable prefix. The pointer is a cache: a crash (or a
+  lost pointer-rename race) between delta and pointer leaves a claimed
+  delta past it, which ``roll_forward`` adopts.
 * **Superseded manifest files retire, never die in place**: a
   checkpoint hands the files it replaced (old deltas, the previous
   checkpoint, dissolved pages) to the log's deferred-deletion ledger
@@ -40,12 +43,12 @@ table format uses instead:
   that protects data fragments from straggler readers.
 
 Consistency model (mirrors log.py's snapshot isolation): writers are
-already serialized by the commit flock, so sequence numbers are
-assigned uncontended; readers are lock-free — one atomic pointer read
-names an immutable set of manifest files. A reader that finds the
-chain broken (a delta vacuumed from under a very stale pointer after
-a crash) signals the caller to fall back to the directory listing,
-which the retirement ledger keeps correct.
+ordered by the delta claim, so no sequence number is ever assigned
+twice; readers are lock-free — one atomic pointer read names an
+immutable set of manifest files. A reader that finds the chain broken
+(a delta vacuumed from under a very stale pointer after a crash)
+raises ManifestChainBroken; the log then re-positions on the newest
+checkpoint in the store, never on a directory listing.
 """
 
 from __future__ import annotations
@@ -121,7 +124,7 @@ class MemoryClaimStore:
     (``If-None-Match: *``), strong read-after-write, and list-after-
     write — with NO rename, NO hard link, NO flock anywhere. Shared
     between EventLog instances, it stands in for the bucket in the
-    multi-writer fencing tests, proving the commit arbiter depends on
+    multi-writer fencing tests, proving the commit protocol depends on
     nothing beyond the 5-method ClaimStore contract. In-process only
     (a dict under one lock); the cross-process storms keep exercising
     the POSIX store."""
@@ -157,20 +160,19 @@ class MemoryClaimStore:
 class ManifestChainBroken(Exception):
     """The checkpoint/delta chain below a pointer seq is incomplete
     (e.g. vacuumed after a crash left an unreferenced checkpoint).
-    Callers fall back to the retirement-aware directory listing."""
+    Callers re-position on the newest checkpoint in the store."""
 
 
 class ManifestSeqClaimed(Exception):
-    """Another writer already claimed this delta sequence number (CAS
-    commit arbiter: the exclusive hard-link create of
-    ``delta-<seq>.json`` found the name taken). The caller lost the
+    """Another writer already claimed this delta sequence number (the
+    exclusive create of ``delta-<seq>.json`` found the name taken). The caller lost the
     commit race — it must discard its staged fragment, resync to the
     winner's state, and retry at the next seq."""
 
 
 def _entry_overlaps(e: dict, lo: int, hi: int) -> bool:
     """Whether an entry MAY hold versions in [lo, hi]. Entries without
-    a recorded range (legacy adoption) always may."""
+    a recorded range (a footer without stats) always may."""
     elo = e.get("lo")
     if elo is None:
         return True
@@ -205,8 +207,8 @@ class ManifestLog:
     """In-process mirror of one log's manifest chain.
 
     Owned by an EventLog; all mutation happens inside the log's commit
-    section (thread RLock + cross-process flock), reads under the
-    thread lock. The mirror advances by replaying delta records —
+    section (thread RLock; other writers are fenced by the delta
+    claim), reads under the thread lock. The mirror advances by replaying delta records —
     O(new commits) — and only cold-positions (checkpoint + tail replay)
     on open or when incremental replay finds a gap.
     """
@@ -220,9 +222,10 @@ class ManifestLog:
         # the 5-method seam (put / put_if_absent / get / delete / names) a
         # shared store must offer. Default: the POSIX directory store;
         # MemoryClaimStore models an object store for the fencing
-        # tests. The put_if_absent of the delta seq IS the CAS commit
-        # point, so swapping the store swaps the whole commit arbiter's
-        # substrate (SCALE.md §1: S3 If-None-Match PUT slots in here).
+        # tests. The put_if_absent of the delta seq IS the commit
+        # point, so swapping the store swaps the whole commit
+        # protocol's substrate (SCALE.md §1: S3 If-None-Match PUT
+        # slots in here).
         self._store = store if store is not None else PosixClaimStore(self._dir)
         self.seq = 0  # the snapshot this mirror currently reflects
         self._ckpt_seq = 0  # seq of the checkpoint the mirror is based on
@@ -234,14 +237,12 @@ class ManifestLog:
         # names removed whose entry lives in a page (tail removals are
         # applied eagerly); resolved at the next checkpoint
         self._tombstones: set[str] = set()
-        self._force_checkpoint = False
 
     # -- discovery ---------------------------------------------------------------
 
     def max_seq_on_disk(self) -> int:
         """Highest sequence number any manifest file in the store claims
-        — the recovery floor for re-adoption, so a rebuilt chain never
-        reuses a seq an old pointer might still name."""
+        — where pointer-loss recovery looks for the newest checkpoint."""
         best = 0
         for f in self._store.names():
             for prefix in ("delta-", "checkpoint-"):
@@ -271,8 +272,7 @@ class ManifestLog:
         (page METAS only — pages load lazily on first touch) + replay of
         the delta records (checkpoint, seq]. Raises ManifestChainBroken
         if any link is missing — ATOMICALLY: the mirror keeps its prior
-        state on failure (a re-adopted mirror must not be wiped by a
-        stale pointer naming a vacuumed chain).
+        state on failure.
 
         ``ckpt_hint`` (the pointer's ``manifest_ckpt`` field) names the
         base checkpoint directly so the healthy path never LISTS
@@ -287,7 +287,6 @@ class ManifestLog:
         fresh.seq = fresh._ckpt_seq = 0
         fresh._page_metas, fresh._page_cache, fresh._tail = [], {}, []
         fresh._tombstones = set()
-        fresh._force_checkpoint = False
         ck, raw = None, None
         if ckpt_hint:
             ckpt_hint = int(ckpt_hint)
@@ -317,7 +316,6 @@ class ManifestLog:
         self.seq, self._ckpt_seq = fresh.seq, fresh._ckpt_seq
         self._page_metas, self._page_cache = fresh._page_metas, fresh._page_cache
         self._tail, self._tombstones = fresh._tail, fresh._tombstones
-        self._force_checkpoint = False
 
     def replay_to(self, seq: int) -> None:
         """Advance to published ``seq`` by applying the delta records
@@ -352,18 +350,6 @@ class ManifestLog:
         if add:
             self._tail.extend(add)
 
-    def adopt(self, entries: list[dict], seq: int) -> None:
-        """Recovery/legacy migration: install ``entries`` as the whole
-        snapshot at ``seq`` (past any seq an old pointer could name).
-        The first subsequent commit writes a full checkpoint — adopted
-        entries exist in no delta, so a chain without that checkpoint
-        could not reproduce them."""
-        self._page_metas, self._page_cache = [], {}
-        self._tombstones = set()
-        self._tail = list(entries)
-        self.seq = self._ckpt_seq = seq
-        self._force_checkpoint = bool(entries)
-
     # -- queries -------------------------------------------------------------
 
     def _load_page(self, meta: dict) -> list[dict]:
@@ -380,8 +366,7 @@ class ManifestLog:
     def count(self) -> int:
         """Committed file count WITHOUT loading any page: page metas
         carry counts, tombstones are page-resident by construction, and
-        the tail is in memory. Lets the orphan check on open stay
-        metadata-only in the healthy case."""
+        the tail is in memory."""
         return (
             sum(m["count"] for m in self._page_metas)
             - len(self._tombstones)
@@ -472,53 +457,55 @@ class ManifestLog:
         self,
         add: list[dict],
         remove: list[str],
-        exclusive: bool = False,
         head: dict | None = None,
     ) -> tuple[int, list[str]]:
         """Publish one commit's manifest change: ONE immutable delta
         record (O(1) — nothing is rewritten), then a paged checkpoint
-        roll-up every CHECKPOINT_EVERY commits. Under the flock arbiter
-        the caller holds the commit lock and publishes the pointer
-        AFTER this returns; ``os.replace`` also disposes of an orphan
-        delta left at this seq by a crash between a previous writer's
-        delta and pointer. Under the CAS arbiter (``exclusive=True``)
-        the delta write itself IS the commit point: an exclusive
-        hard-link create that raises ManifestSeqClaimed — atomically,
-        before the mirror mutates — when another writer took the seq;
-        ``head`` (the head fields this commit publishes) rides in the
-        record so a reader can roll past a lagging pointer. Returns
-        (new seq, manifest files superseded by a roll-up) — the caller
-        retires the latter into the vacuum ledger once the pointer is
-        out (publish-before-delete, same as data fragments)."""
+        roll-up every CHECKPOINT_EVERY commits. The delta write itself
+        IS the commit point: an exclusive create that raises
+        ManifestSeqClaimed — atomically, before the mirror mutates —
+        when another writer took the seq. ``head`` (the head fields
+        this commit publishes) rides in the record so a reader can roll
+        past a lagging pointer. Returns (new seq, manifest files
+        superseded by a roll-up) — the caller retires the latter into
+        the vacuum ledger once the pointer is out (publish-before-
+        delete, same as data fragments)."""
         s = self.seq + 1
         rec: dict = {"seq": s, "add": add, "remove": remove}
         if head is not None:
             rec["head"] = head
-        if exclusive:
-            self._write_json_exclusive(_DELTA.format(s), rec)
-        else:
-            self._write_json(_DELTA.format(s), rec)
+        self._write_json_exclusive(_DELTA.format(s), rec)
         self._apply(add, remove)
         self.seq = s
         superseded: list[str] = []
-        if self._force_checkpoint or s - self._ckpt_seq >= self.CHECKPOINT_EVERY:
+        if s - self._ckpt_seq >= self.CHECKPOINT_EVERY:
             superseded = self._checkpoint()
         return s, superseded
 
-    def roll_forward(self) -> dict | None:
-        """CAS-arbiter read path: under CAS the delta CHAIN, not the
-        pointer, is the commit truth (a writer may die — or merely lose
-        the pointer-publish race — between its claimed delta and its
-        pointer write, and pointer renames from racing writers can land
-        out of order). Advance the mirror past the published pointer to
-        the newest complete delta on disk — O(gap), sequential probes,
-        no directory listing — and return the last ``head`` fields
-        seen, which the caller adopts as the true head."""
+    def roll_forward(self, require_head: bool = True) -> dict | None:
+        """The delta CHAIN, not the pointer, is the commit truth (a
+        writer may die — or merely lose the pointer-publish race —
+        between its claimed delta and its pointer write, and pointer
+        renames from racing writers can land out of order). Advance the
+        mirror past the published pointer to the newest complete delta
+        in the store — O(gap), sequential probes, no listing — and
+        return the last ``head`` fields seen, which the caller adopts
+        as the true head.
+
+        Every claimed delta carries a head. One without it was written
+        by the retired flock protocol, whose crash between delta and
+        pointer left an UNPUBLISHED delta there; adopting it would
+        serve a never-acknowledged commit and re-assign its versions.
+        So a head-less delta past the mirror is refused, naming the
+        file, unless ``require_head=False`` (pointer-loss recovery of a
+        chain older than delta heads, which re-derives the head from
+        the data)."""
         head: dict | None = None
         sc: dict = {}  # stream markers merge across ALL rolled deltas —
         # the newest head may predate an older delta's marker
         while True:
-            raw = self._store.get(_DELTA.format(self.seq + 1))
+            name = _DELTA.format(self.seq + 1)
+            raw = self._store.get(name)
             try:
                 if raw is None:
                     raise FileNotFoundError
@@ -528,6 +515,14 @@ class ManifestLog:
                     head = dict(head)
                     head["sc"] = sc
                 return head
+            if require_head and not d.get("head"):
+                raise RuntimeError(
+                    f"manifest delta {name} lies past the published pointer "
+                    f"(seq {self.seq}) and carries no head record: an "
+                    "unpublished commit of the retired flock protocol. Its "
+                    "commit was never acknowledged — delete the file and "
+                    "re-open the log."
+                )
             self._apply(d.get("add", []), d.get("remove", []))
             self.seq += 1
             if d.get("head"):
@@ -686,5 +681,4 @@ class ManifestLog:
         self._tail = []
         self._tombstones = set()
         self._ckpt_seq = self.seq
-        self._force_checkpoint = False
         return superseded

@@ -40,16 +40,18 @@ def log_tail_stream(
     """Streaming view of the log: every committed fragment becomes part
     of a micro-batch exactly once.
 
-    ``committed_only`` (default): each micro-batch is filtered to
-    versions ≤ the committed head read from ``_state.json`` AT TASK
-    EXECUTION TIME, so post-crash orphan rows (fragment written, head
-    never published) are not delivered as if committed — the same
-    snapshot-isolation contract the batch readers enforce. Rows above
-    the head get a bounded wait (``commit_wait`` seconds) before being
-    dropped: a live writer publishes the head milliseconds after the
-    fragment lands, so in-flight commits pass; a crashed writer's
-    orphans never commit and are dropped. The state file lives next to
-    the data, so executors can read it wherever the log directory is
+    ``committed_only`` (default): each micro-batch keeps only rows whose
+    fragment a commit PUBLISHED (``EventLog.published_files``, read AT
+    TASK EXECUTION TIME), so a crashed writer's fragment and a losing
+    writer's fragment — which holds a ``part-*`` name, with versions the
+    winner owns, until its writer discards it — are never delivered as
+    if committed; the same snapshot-isolation contract the batch readers
+    enforce. A fragment not yet published gets a bounded wait
+    (``commit_wait`` seconds): a live writer claims its delta
+    milliseconds after the rename, so in-flight commits pass; a crash
+    fragment never commits and is dropped, and a discarded loser's file
+    is gone, which drops it at once. The manifest lives next to the
+    data, so executors can read it wherever the log directory is
     reachable (local FS here, shared storage on a cluster)."""
     # pathGlobFilter pins the stream to append fragments (``part-*``):
     # a compaction rewrites history into ``compact-*`` files, and without
@@ -59,40 +61,45 @@ def log_tail_stream(
     # the vacuum grace window, log.py:compact, so an in-flight batch
     # still reads them). A tail started AFTER a compaction begins at the
     # surviving fragments — it is a tail, not a replay; use scan() for
-    # history.
+    # history. ignoreMissingFiles: a loser's fragment may be listed and
+    # then discarded before its task reads it.
     raw = (
         log.spark.readStream.schema(EVENT_SCHEMA)
         .option("pathGlobFilter", "part-*")
+        .option("ignoreMissingFiles", "true")
         .parquet(log.path)
     )
     if not committed_only:
         return raw
-    state_path = os.path.join(log.path, "_state.json")
+    log_path = log.path
+    cols = [f.name for f in EVENT_SCHEMA.fields]
 
-    def _filter_committed(batches):
-        import json as _json
+    def _filter_published(batches):
         import time as _time
 
-        def head() -> int:
-            try:
-                with open(state_path) as f:
-                    return int(_json.load(f)["latest_version"])
-            except Exception:
-                return 0
-
-        h = head()
+        reader = None
+        published: set[str] = set()
         for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf
-                continue
-            mx = int(pdf["version"].max())
+            names = set(pdf["_file"].unique())
+            pending = names - published
             deadline = _time.monotonic() + commit_wait
-            while mx > h and _time.monotonic() < deadline:
+            while pending:
+                if reader is None:
+                    reader = EventLog.open(None, log_path)
+                published = reader.published_files()
+                pending = {
+                    n
+                    for n in pending - published
+                    if os.path.exists(os.path.join(log_path, n))
+                }
+                if not pending or _time.monotonic() >= deadline:
+                    break
                 _time.sleep(0.05)
-                h = head()
-            yield pdf[pdf["version"] <= h]
+            yield pdf[pdf["_file"].isin(published)][cols]
 
-    return raw.mapInPandas(_filter_committed, EVENT_SCHEMA)
+    return raw.select("*", F.col("_metadata.file_name").alias("_file")).mapInPandas(
+        _filter_published, EVENT_SCHEMA
+    )
 
 
 def subscribe_stream(

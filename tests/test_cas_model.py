@@ -35,7 +35,7 @@ from eventlog_spark.manifest import MemoryClaimStore
 
 
 def _boom(*a, **k):  # pragma: no cover - trips only on a protocol bug
-    raise AssertionError("flock must not be taken under the cas arbiter")
+    raise AssertionError("the commit protocol must never take a flock")
 
 
 class CasProtocol(RuleBasedStateMachine):
@@ -51,9 +51,7 @@ class CasProtocol(RuleBasedStateMachine):
         self._root = tempfile.mkdtemp(prefix="cas_model_")
         self.path = os.path.join(self._root, "log")
         self.store = self._make_store()
-        # create() bootstraps flock-mode by design (empty dir, no racers
-        # can exist); the flock ban starts at the first CAS open
-        EventLog.create(None, self.path, arbiter="cas", claim_store=self.store)
+        EventLog.create(None, self.path, claim_store=self.store)
         self._fcntl_patch.setattr(fcntl, "flock", _boom)
         self.writers = [self._open(), self._open()]
         self.model: list[tuple[str, str]] = []  # (label, payload) by version
@@ -69,7 +67,7 @@ class CasProtocol(RuleBasedStateMachine):
 
     def _open(self) -> EventLog:
         return EventLog.open(
-            None, self.path, arbiter="cas", claim_store=self._open_store()
+            None, self.path, claim_store=self._open_store()
         )
 
     # -- operations ------------------------------------------------------------
@@ -222,7 +220,7 @@ class CasProtocolWithSpark(RuleBasedStateMachine):
         self._root = tempfile.mkdtemp(prefix="cas_model_spark_")
         self.path = os.path.join(self._root, "log")
         self.store = MemoryClaimStore()
-        EventLog.create(None, self.path, arbiter="cas", claim_store=self.store)
+        EventLog.create(None, self.path, claim_store=self.store)
         self._fcntl_patch.setattr(fcntl, "flock", _boom)
         self.writers = [self._open(), self._open()]
         self.model: list[tuple[str, str]] = []
@@ -230,7 +228,7 @@ class CasProtocolWithSpark(RuleBasedStateMachine):
 
     def _open(self) -> EventLog:
         return EventLog.open(
-            self.spark, self.path, arbiter="cas", claim_store=self.store
+            self.spark, self.path, claim_store=self.store
         )
 
     def _batch(self, w: int, n: int, base: int):

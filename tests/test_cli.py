@@ -79,61 +79,23 @@ def test_cli_compact_and_vacuum(spark, tmp_path, capsys):
     assert [e["version"] for e in lines] == ["1", "2", "3", "4", "5"]
 
 
-def test_cli_run_arbiter_flag(spark, tmp_path, capsys, monkeypatch):
-    """`run --arbiter cas` opens the log with the CAS commit arbiter
-    (the shared-store multi-host mode) — wiring test; the arbiter's
-    semantics are proven in tests/test_fencing.py."""
-    from eventlog_spark import serving
-    from eventlog_spark.log import EventLog
-
-    path = str(tmp_path / "log")
-    run(capsys, "create", path, "--arbiter", "cas")
-
-    opened = {}
-    real_open = EventLog.open.__func__
-
-    def spy(cls, spark_, p, arbiter=None):
-        opened["arbiter"] = arbiter
-        return real_open(cls, spark_, p, arbiter)
-
-    monkeypatch.setattr(EventLog, "open", classmethod(spy))
-
-    class FakeSrv:
-        def __init__(self, addr, log):
-            pass
-
-        def serve_forever(self):
-            raise KeyboardInterrupt  # the CLI's clean-exit path
-
-        def shutdown(self):
-            pass
-
-    monkeypatch.setattr(serving, "EventLogHTTPServer", FakeSrv)
-    code, _ = run(capsys, "run", path, "--arbiter", "cas", "--port", "0")
-    assert code == 0 and opened["arbiter"] == "cas"
-
-
-def test_cli_persisted_arbiter_adopted_by_all_subcommands(
+def test_cli_path_subcommands_commit_without_flock(
     spark, tmp_path, capsys, monkeypatch
 ):
-    """Path-taking subcommands WITHOUT --arbiter adopt the arbiter
-    recorded at create time (round-9 advice: a default flock-mode open
-    of a CAS-operated log would run orphan truncation against a
-    possibly-lagging pointer and destroy committed fragments). With
-    flock exploded, these opens succeed only if the cas record was
-    honored."""
+    """Every path-taking subcommand runs the one commit protocol (the
+    delta claim): with flock exploded, create/append/version/scan/
+    check/vacuum all succeed and agree on the log."""
     import fcntl
 
-    path = str(tmp_path / "caslog")
-    code, _ = run(capsys, "create", path, "--arbiter", "cas")
+    def boom(*a, **k):
+        raise AssertionError("the commit protocol must never take a flock")
+
+    monkeypatch.setattr(fcntl, "flock", boom)
+    path = str(tmp_path / "log")
+    code, _ = run(capsys, "create", path)
     assert code == 0
     code, _ = run(capsys, "append", path, "e", '{"i":1}')
     assert code == 0
-
-    def boom(*a, **k):
-        raise AssertionError("flock taken despite the persisted cas arbiter")
-
-    monkeypatch.setattr(fcntl, "flock", boom)
     code, out = run(capsys, "version", path)
     assert code == 0 and json.loads(out)["version"] == "1"
     code, out = run(capsys, "scan", path)
@@ -142,9 +104,6 @@ def test_cli_persisted_arbiter_adopted_by_all_subcommands(
     assert code == 0
     code, out = run(capsys, "vacuum", path, "--grace", "0")
     assert code == 0
-    # an explicit mismatch is refused end-to-end
-    with pytest.raises(ValueError, match="refusing"):
-        run(capsys, "version", path, "--arbiter", "flock")
 
 
 def test_cli_stats_layout_report(spark, tmp_path, capsys):

@@ -1,17 +1,15 @@
 """Multi-HOST commit fencing (round-9 verdict item 5; SURVEY §7
 "OCC under concurrent drivers").
 
-The default flock arbiter serializes writers through ONE host's
-kernel; a 100 TB deployment has writers on different hosts sharing a
-store, where flock does not reach. The CAS arbiter
-(``EventLog.open(..., arbiter="cas")``) serializes through the storage
-itself: each commit CLAIMS its manifest delta seq with an atomic
-create-if-absent (hard link), losers discard their staged fragment and
-retry on the winner's state. These tests prove the fencing with the
-flock DELIBERATELY BYPASSED — in-process with flock monkeypatched to
-explode (so any accidental lock take fails loudly), and across OS
-processes that never coordinate except through the shared directory
-(the two-"host" simulation: nothing but the store orders them).
+A 100 TB deployment has writers on different hosts sharing a store,
+where no host-local lock reaches. The engine's one commit protocol
+serializes through the storage itself: each commit CLAIMS its manifest
+delta seq with an atomic create-if-absent (hard link, conditional
+PUT), losers discard their staged fragment and retry on the winner's
+state. These tests prove the fencing with flock monkeypatched to
+explode (so any accidental lock take fails loudly), in-process and
+across OS processes that never coordinate except through the shared
+store (the two-"host" simulation: nothing but the store orders them).
 """
 
 from __future__ import annotations
@@ -28,8 +26,21 @@ from eventlog_spark.errors import MismatchingVersions
 from eventlog_spark.log import EventLog
 
 
-def _boom(*a, **k):  # a flock take under CAS is a test failure
-    raise AssertionError("flock must not be taken under the cas arbiter")
+def _boom(*a, **k):  # a flock take is a test failure
+    raise AssertionError("the commit protocol must never take a flock")
+
+
+def _strip_delta_heads(path: str) -> None:
+    """Rewrite every delta without its ``head`` record — the shape the
+    retired flock protocol wrote."""
+    mdir = os.path.join(path, "_manifest")
+    for name in os.listdir(mdir):
+        if name.startswith("delta-"):
+            with open(os.path.join(mdir, name)) as f:
+                rec = json.load(f)
+            rec.pop("head", None)
+            with open(os.path.join(mdir, name), "w") as f:
+                json.dump(rec, f)
 
 
 @pytest.fixture(params=["posix", "memory", "socket"])
@@ -45,8 +56,8 @@ def cas_env(request):
     substrate the cross-OS-process storms run over (xproc_store)."""
     if request.param == "posix":
         yield (
-            lambda path: EventLog.create(None, path, arbiter="cas"),
-            lambda path, spark=None: EventLog.open(spark, path, arbiter="cas"),
+            lambda path: EventLog.create(None, path),
+            lambda path, spark=None: EventLog.open(spark, path),
         )
     elif request.param == "memory":
         from eventlog_spark.manifest import MemoryClaimStore
@@ -54,10 +65,10 @@ def cas_env(request):
         shared = MemoryClaimStore()
         yield (
             lambda path: EventLog.create(
-                None, path, arbiter="cas", claim_store=shared
+                None, path, claim_store=shared
             ),
             lambda path, spark=None: EventLog.open(
-                spark, path, arbiter="cas", claim_store=shared
+                spark, path, claim_store=shared
             ),
         )
     else:
@@ -71,11 +82,11 @@ def cas_env(request):
         try:
             yield (
                 lambda path: EventLog.create(
-                    None, path, arbiter="cas",
+                    None, path,
                     claim_store=SocketClaimStore(sock),
                 ),
                 lambda path, spark=None: EventLog.open(
-                    spark, path, arbiter="cas",
+                    spark, path,
                     claim_store=SocketClaimStore(sock),
                 ),
             )
@@ -174,7 +185,7 @@ sock = os.environ.get("SPARK_GRAFT_CLAIM_SOCK")
 if sock:
     from eventlog_spark.claimsvc import SocketClaimStore
     store = SocketClaimStore(sock)
-log = EventLog.open(None, path, arbiter="cas", claim_store=store)
+log = EventLog.open(None, path, claim_store=store)
 wins = []
 for i in range(n):
     r = log.append(f"writer{wid}", json.dumps({"writer": wid, "seq": i}))
@@ -222,7 +233,7 @@ def xproc_store(request):
 def test_cas_cross_process_storm_two_hosts(tmp_path, xproc_store):
     """Four OS processes (the multi-host stand-in: independent kernels'
     worth of isolation minus the shared filesystem) hammer one log
-    through the CAS arbiter with NO flock taken anywhere — over BOTH
+    through the delta claim with NO flock taken anywhere — over BOTH
     cross-process substrates: the POSIX link store and the served
     object-store contract. Must hold: the union of acked versions is a
     permutation of 1..N (exactly one winner per version — the fencing
@@ -231,7 +242,7 @@ def test_cas_cross_process_storm_two_hosts(tmp_path, xproc_store):
     gaps or duplicates."""
     store, child_env, names_fn = xproc_store
     path = str(tmp_path / "storm")
-    EventLog.create(None, path, arbiter="cas", claim_store=store)
+    EventLog.create(None, path, claim_store=store)
     n_writers, n_each = 4, 12
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, SPARK_GRAFT_MANIFEST_CHECKPOINT="8", **child_env)
@@ -254,7 +265,7 @@ def test_cas_cross_process_storm_two_hosts(tmp_path, xproc_store):
     total = n_writers * n_each
     assert sorted(wins) == list(range(1, total + 1))
 
-    fresh = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    fresh = EventLog.open(None, path, claim_store=store)
     assert fresh.version() == total
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, total + 1))
@@ -334,7 +345,7 @@ def test_cas_storm_survives_sigkill(tmp_path, xproc_store):
 
     store, child_env, _names = xproc_store
     path = str(tmp_path / "kill")
-    EventLog.create(None, path, arbiter="cas", claim_store=store)
+    EventLog.create(None, path, claim_store=store)
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, **child_env)
 
@@ -363,7 +374,7 @@ def test_cas_storm_survives_sigkill(tmp_path, xproc_store):
         wins.extend(int(v) for v in line[5:].split(","))
     assert len(wins) == 80 and len(set(wins)) == 80
 
-    fresh = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    fresh = EventLog.open(None, path, claim_store=store)
     head = fresh.version()
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, head + 1))  # dense
@@ -390,7 +401,7 @@ def fresh():
     # published truth is reachable again
     while True:
         try:
-            return EventLog.open(None, path, arbiter="cas",
+            return EventLog.open(None, path,
                                  claim_store=SocketClaimStore(sock))
         except Exception:
             time.sleep(0.1)
@@ -481,7 +492,7 @@ def test_cas_storm_survives_claim_server_sigkill(tmp_path, roll_bytes):
     path = str(tmp_path / "svkill")
     try:
         EventLog.create(
-            None, path, arbiter="cas", claim_store=SocketClaimStore(sock)
+            None, path, claim_store=SocketClaimStore(sock)
         )
         env = dict(os.environ, SPARK_GRAFT_CLAIM_SOCK=sock)
         n_writers, n_each = 3, 20
@@ -521,7 +532,7 @@ def test_cas_storm_survives_claim_server_sigkill(tmp_path, roll_bytes):
         # every event acked exactly once, versions a permutation of 1..N
         assert sorted(wins) == list(range(1, total + 1))
         fresh = EventLog.open(
-            None, path, arbiter="cas", claim_store=SocketClaimStore(sock)
+            None, path, claim_store=SocketClaimStore(sock)
         )
         assert fresh.version() == total
         rows = fresh.scan_rows()
@@ -537,31 +548,6 @@ def test_cas_storm_survives_claim_server_sigkill(tmp_path, roll_bytes):
             server.kill()
             server.wait(timeout=30)
         shutil.rmtree(d, ignore_errors=True)
-
-
-def test_arbiter_persisted_at_create_and_mismatch_refused(tmp_path):
-    """The arbiter is a property of the LOG (round-9 advice): create
-    records it in the meta file, a default open adopts it, and an
-    explicit mismatched open is refused — a flock-mode open of a
-    CAS-operated log would run orphan truncation against a possibly
-    lagging pointer and destroy another host's committed fragment."""
-    path = str(tmp_path / "plog")
-    EventLog.create(None, path, arbiter="cas")
-    meta_path = os.path.join(path, "_eventlog_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    assert meta["arbiter"] == "cas"
-    assert EventLog.open(None, path)._arbiter == "cas"  # default adopts
-    with pytest.raises(ValueError, match="refusing"):
-        EventLog.open(None, path, arbiter="flock")
-    # legacy log (no recorded arbiter): an explicit choice is recorded
-    # so every later default open agrees with it
-    del meta["arbiter"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    EventLog.open(None, path, arbiter="cas")
-    assert EventLog._persisted_arbiter(path) == "cas"
-    assert EventLog.open(None, path)._arbiter == "cas"
 
 
 def test_cas_bulk_loser_restores_txn_marker_and_interloper_survives(
@@ -593,11 +579,11 @@ def test_cas_bulk_loser_restores_txn_marker_and_interloper_survives(
 
     orig = EventLog._write_out
 
-    def sabotaged(out, post_write_check=None):
+    def sabotaged(out, *args, **kw):
         # lands a whole commit inside w's write window: claims the seq
         # w's _write_state is about to take
         b.append("interloper", '{"landed":"mid-bulk"}')
-        return orig(w, out, post_write_check=post_write_check)
+        return orig(w, out, *args, **kw)
 
     w._write_out = sabotaged
     with pytest.raises(MismatchingVersions):
@@ -765,114 +751,40 @@ def test_cas_sync_pairs_names_with_adopted_head(tmp_path, monkeypatch, cas_env):
     assert latest == 3
 
 
-def test_racing_explicit_arbiter_claims_one_winner(tmp_path):
-    """Round-10 advice (low): two racing explicit opens of a LEGACY
-    log with different arbiters must not both proceed — last-replace-
-    wins on the meta patch would run conflicting commit protocols
-    concurrently on one log. The exclusive-create claim sidecar
-    arbitrates: first creator wins, a same-choice racer adopts, a
-    conflicting racer is refused."""
-    path = str(tmp_path / "leg")
-    EventLog.create(None, path, arbiter="flock")
-    # strip back to a legacy log (no recorded arbiter, no claim)
+def test_flock_era_log_opens_under_the_claim_protocol(tmp_path, monkeypatch):
+    """A log the retired flock protocol wrote opens and commits through
+    the delta claim: its meta file's ``arbiter`` field, the ``.arbiter``
+    claim sidecar, ``_commit.lock`` and ``_intent.json`` are ignored
+    leftovers, and no flock is taken. Its deltas carry no head records;
+    those at or below the pointer replay like any other."""
+    import fcntl
+
+    path = str(tmp_path / "flocklog")
+    w = EventLog.create(None, path)
+    for i in range(3):
+        w.append("old", json.dumps({"i": i}))
+    _strip_delta_heads(path)
     meta_path = os.path.join(path, "_eventlog_meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
-    del meta["arbiter"]
+    meta["arbiter"] = "flock"
     with open(meta_path, "w") as f:
         json.dump(meta, f)
-    # both racers read persisted=None; the claim decides the winner
-    EventLog._persist_arbiter(path, "cas")
-    with pytest.raises(ValueError, match="concurrently claimed"):
-        EventLog._persist_arbiter(path, "flock")
-    EventLog._persist_arbiter(path, "cas")  # same-choice racer adopts
-    assert EventLog._persisted_arbiter(path) == "cas"
-    # the loser's subsequent open is refused through the normal gate
-    with pytest.raises(ValueError, match="refusing"):
-        EventLog.open(None, path, arbiter="flock")
-
-
-def test_arbiter_claim_survives_meta_patch_crash(tmp_path):
-    """A crash between winning the claim and patching the meta file
-    loses nothing: _persisted_arbiter consults the claim sidecar
-    first, so every later open still adopts the winner's choice."""
-    path = str(tmp_path / "legcrash")
-    EventLog.create(None, path, arbiter="flock")
-    meta_path = os.path.join(path, "_eventlog_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["arbiter"]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    with open(meta_path + ".arbiter", "w") as f:  # claim won, patch lost
-        f.write("cas")
-    assert EventLog._persisted_arbiter(path) == "cas"
-    assert EventLog.open(None, path)._arbiter == "cas"
-
-
-def test_torn_arbiter_claim_is_repaired_not_adopted_blank(tmp_path):
-    """Round-11 advice (low): a crash in the OLD exclusive-create shape
-    (between open and write) left an EMPTY claim forever; explicit
-    opens then read won='' and patched the meta last-replace-wins —
-    silently reinstating the conflicting-choice race. Now the claim
-    publishes via hard link (no torn window), and a pre-existing torn
-    claim is repaired under an auxiliary exclusive lock: the first
-    explicit open adopts its choice ATOMICALLY, and a conflicting
-    explicit open after it is refused like any other loser."""
-    path = str(tmp_path / "torn")
-    EventLog.create(None, path, arbiter="flock")
-    meta_path = os.path.join(path, "_eventlog_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["arbiter"]  # make it a legacy log
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    open(meta_path + ".arbiter", "w").close()  # the torn (empty) claim
-    assert EventLog._persisted_arbiter(path) is None  # torn ≠ a choice
-
-    assert EventLog.open(None, path, arbiter="cas")._arbiter == "cas"
-    with open(meta_path + ".arbiter") as f:
-        assert f.read().strip() == "cas"  # repaired, whole-file content
-    # the repaired claim now arbitrates: a conflicting explicit open
-    # is refused, a default open adopts
-    with pytest.raises(ValueError, match="refusing to open"):
-        EventLog.open(None, path, arbiter="flock")
-    assert EventLog.open(None, path)._arbiter == "cas"
-
-
-def test_bootstrap_not_reachable_via_arbiter_argument(tmp_path):
-    """Round-11 advice (low): the old '_bootstrap' sentinel STRING was
-    accepted through the documented arbiter argument, letting any
-    caller skip the persisted-arbiter check and run flock-mode on a
-    cas-operated log. Now bootstrap is a keyword-only private flag:
-    the sentinel value is rejected as an unknown arbiter, and even the
-    private flag refuses a path that already has a state file."""
-    path = str(tmp_path / "boot")
-    EventLog.create(None, path, arbiter="cas")
-    with pytest.raises(ValueError, match="unknown commit arbiter"):
-        EventLog(None, path, arbiter="_bootstrap")
-    with pytest.raises(ValueError, match="bootstrap"):
-        EventLog(None, path, _bootstrap=True)
-    # and the check it was skipping still refuses a mismatched open
-    with pytest.raises(ValueError, match="refusing to open"):
-        EventLog.open(None, path, arbiter="flock")
-
-
-def test_arbiter_recorded_before_bootstrap_open(tmp_path, monkeypatch):
-    """Round-10 advice (low): the arbiter rides in the INITIAL meta
-    write — a crash anywhere in create()'s bootstrap window must not
-    leave a log whose later default opens silently adopt flock (the
-    mixed-protocol hazard the meta field exists to prevent)."""
-    path = str(tmp_path / "crashlog")
-
-    def crash(self_):
-        raise RuntimeError("crash mid-create")
-
-    monkeypatch.setattr(EventLog, "_write_state", crash)
-    with pytest.raises(RuntimeError, match="crash mid-create"):
-        EventLog.create(None, path, arbiter="cas")
-    monkeypatch.undo()
-    assert EventLog._persisted_arbiter(path) == "cas"
+    for leftover, body in (
+        ("_eventlog_meta.json.arbiter", "flock"),
+        ("_commit.lock", ""),
+        ("_intent.json", json.dumps({"files": [], "hi": 3})),
+    ):
+        with open(os.path.join(path, leftover), "w") as f:
+            f.write(body)
+    monkeypatch.setattr(fcntl, "flock", _boom)
+    a = EventLog.open(None, path)
+    b = EventLog.open(None, path)
+    assert a.version() == 3
+    assert a.append("new", '{"by":"a"}').version == 4
+    assert b.append("new", '{"by":"b"}').version == 5
+    fresh = EventLog.open(None, path)
+    assert [r.version for r in fresh.scan_rows()] == [1, 2, 3, 4, 5]
 
 
 def test_memory_store_thread_storm_exactly_one_winner(tmp_path, monkeypatch):
@@ -889,10 +801,10 @@ def test_memory_store_thread_storm_exactly_one_winner(tmp_path, monkeypatch):
 
     path = str(tmp_path / "memstorm")
     shared = MemoryClaimStore()
-    EventLog.create(None, path, arbiter="cas", claim_store=shared)
+    EventLog.create(None, path, claim_store=shared)
     monkeypatch.setattr(fcntl, "flock", _boom)
     writers = [
-        EventLog.open(None, path, arbiter="cas", claim_store=shared)
+        EventLog.open(None, path, claim_store=shared)
         for _ in range(4)
     ]
     n_threads, n_each = 8, 12
@@ -919,7 +831,7 @@ def test_memory_store_thread_storm_exactly_one_winner(tmp_path, monkeypatch):
     assert sorted(wins) == list(range(1, total + 1))
     for per in acked:  # per-thread program order preserved
         assert per == sorted(per)
-    fresh = EventLog.open(None, path, arbiter="cas", claim_store=shared)
+    fresh = EventLog.open(None, path, claim_store=shared)
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, total + 1))
     pay = [json.loads(r.payload) for r in rows]
@@ -939,10 +851,10 @@ def test_cas_maintenance_lands_under_writer_storm(spark, tmp_path, monkeypatch):
     import threading
 
     path = str(tmp_path / "maint")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    a = EventLog.open(spark, path, arbiter="cas")
-    b = EventLog.open(None, path, arbiter="cas")
+    a = EventLog.open(spark, path)
+    b = EventLog.open(None, path)
     for i in range(8):
         a.append("pre", json.dumps({"i": i}))
 
@@ -961,7 +873,7 @@ def test_cas_maintenance_lands_under_writer_storm(spark, tmp_path, monkeypatch):
         stop.set()
         t.join(timeout=60)
 
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     head = fresh.version()
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, head + 1))  # dense
@@ -1018,16 +930,16 @@ def test_cas_claim_survives_ambiguous_put_failure(tmp_path, monkeypatch, mode):
     shared = MemoryClaimStore()
     flaky = _AmbiguousStore(shared)
     path = str(tmp_path / f"ambig-{mode}")
-    EventLog.create(None, path, arbiter="cas", claim_store=shared)
+    EventLog.create(None, path, claim_store=shared)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    w = EventLog.open(None, path, arbiter="cas", claim_store=flaky)
+    w = EventLog.open(None, path, claim_store=flaky)
     w.append("pre", '{"i":0}')
 
     flaky.arm(mode)
     r = w.append("through-the-failure", '{"i":1}')  # must not raise
     assert r.version == 2
 
-    reader = EventLog.open(None, path, arbiter="cas", claim_store=shared)
+    reader = EventLog.open(None, path, claim_store=shared)
     rows = reader.scan_rows()
     assert [(x.version, x.label) for x in rows] == [
         (1, "pre"),
@@ -1054,7 +966,7 @@ def test_cas_ambiguous_retry_loss_to_own_late_put_is_a_win(
 
     shared = MemoryClaimStore()
     path = str(tmp_path / "ambig-late")
-    EventLog.create(None, path, arbiter="cas", claim_store=shared)
+    EventLog.create(None, path, claim_store=shared)
     monkeypatch.setattr(fcntl, "flock", _boom)
 
     class _LateLandingStore(_AmbiguousStore):
@@ -1072,13 +984,13 @@ def test_cas_ambiguous_retry_loss_to_own_late_put_is_a_win(
             return super().put_if_absent(name, data)
 
     flaky = _LateLandingStore(shared)
-    w = EventLog.open(None, path, arbiter="cas", claim_store=flaky)
+    w = EventLog.open(None, path, claim_store=flaky)
     w.append("pre", '{"i":0}')
     flaky.arm("late")
     r = w.append("through-late-landing", '{"i":1}')  # must not raise
     assert r.version == 2
 
-    reader = EventLog.open(None, path, arbiter="cas", claim_store=shared)
+    reader = EventLog.open(None, path, claim_store=shared)
     assert [(x.version, x.label) for x in reader.scan_rows()] == [
         (1, "pre"),
         (2, "through-late-landing"),
@@ -1100,9 +1012,9 @@ def test_cas_ambiguous_failure_with_interloper_is_true_loss(
 
     shared = MemoryClaimStore()
     path = str(tmp_path / "ambig-race")
-    EventLog.create(None, path, arbiter="cas", claim_store=shared)
+    EventLog.create(None, path, claim_store=shared)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    b = EventLog.open(None, path, arbiter="cas", claim_store=shared)
+    b = EventLog.open(None, path, claim_store=shared)
 
     class _RaceStore(_AmbiguousStore):
         def put_if_absent(self, name, data):
@@ -1113,12 +1025,12 @@ def test_cas_ambiguous_failure_with_interloper_is_true_loss(
             return super().put_if_absent(name, data)
 
     flaky = _RaceStore(shared)
-    w = EventLog.open(None, path, arbiter="cas", claim_store=flaky)
+    w = EventLog.open(None, path, claim_store=flaky)
     flaky.arm("race")
     r = w.append("retried-loser", '{"i":1}')  # loser path → next seq
     assert r.version == 2
 
-    reader = EventLog.open(None, path, arbiter="cas", claim_store=shared)
+    reader = EventLog.open(None, path, claim_store=shared)
     assert [(x.version, x.label) for x in reader.scan_rows()] == [
         (1, "interloper"),
         (2, "retried-loser"),
@@ -1143,10 +1055,10 @@ def test_layout_autopilot_repairs_under_writer_storm(
     monkeypatch.setattr(ManifestLog, "PAGE_ENTRIES", 8)
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 8)
     path = str(tmp_path / "autopilot")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    a = EventLog.open(spark, path, arbiter="cas")
-    b = EventLog.open(None, path, arbiter="cas")
+    a = EventLog.open(spark, path)
+    b = EventLog.open(None, path)
     labels = ["alpha", "beta", "gamma", "delta"]
     for i in range(32):  # round-robin: the worst layout for label scans
         a.append(labels[i % 4], json.dumps({"i": i}))
@@ -1182,7 +1094,7 @@ def test_layout_autopilot_repairs_under_writer_storm(
     assert final["after"]["mean_degraded_page_rate"] <= 0.5
     assert final["after"] is final["before"]  # the no-op shape
 
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     head = fresh.version()
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, head + 1))  # dense
@@ -1218,12 +1130,12 @@ def test_vacuum_grace_protects_lagging_reader_plan(spark, tmp_path, monkeypatch)
     import fcntl
 
     path = str(tmp_path / "grace")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    w = EventLog.open(spark, path, arbiter="cas")
+    w = EventLog.open(spark, path)
     for i in range(6):
         w.append("e", json.dumps({"i": i}))
-    reader = EventLog.open(spark, path, arbiter="cas")
+    reader = EventLog.open(spark, path)
     pinned = reader.dataframe()  # plan pinned to the pre-compaction files
     pre_files = [f for f in reader._manifest_files() if f.endswith(".parquet")]
     assert pre_files
@@ -1236,7 +1148,7 @@ def test_vacuum_grace_protects_lagging_reader_plan(spark, tmp_path, monkeypatch)
     # window expired: the retirees (pre files + superseded manifest
     # records) are reaped and the current snapshot is unaffected
     assert w.vacuum(grace_seconds=0) >= len(pre_files)
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 8))
 
 
@@ -1252,10 +1164,10 @@ def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     from eventlog_spark.manifest import ManifestChainBroken, ManifestLog
 
     path = str(tmp_path / "pin")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
-    w = EventLog.open(None, path, arbiter="cas")
+    w = EventLog.open(None, path)
     for i in range(6):
         w.append("e", json.dumps({"i": i}))
     with open(os.path.join(path, "_state.json")) as f:
@@ -1271,7 +1183,7 @@ def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     # snapshot's checkpoint, pages, and deltas
     from eventlog_spark.session import get_spark
 
-    w2 = EventLog.open(get_spark(), path, arbiter="cas")
+    w2 = EventLog.open(get_spark(), path)
     w2.compact(target_partitions=1)
     for i in range(6, 12):
         w2.append("e", json.dumps({"i": i}))
@@ -1288,7 +1200,7 @@ def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     with pytest.raises(ManifestChainBroken):
         stale.load(pinned_seq, pinned_ckpt)  # the old chain is gone
     # the CURRENT snapshot is intact
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 13))
 
 
@@ -1331,17 +1243,17 @@ def test_cas_correct_under_eventual_list_visibility(tmp_path, monkeypatch):
 
     path = str(tmp_path / "eventual")
     store = EventualListStore()
-    EventLog.create(None, path, arbiter="cas", claim_store=store)
+    EventLog.create(None, path, claim_store=store)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    a = EventLog.open(None, path, arbiter="cas", claim_store=store)
-    b = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    a = EventLog.open(None, path, claim_store=store)
+    b = EventLog.open(None, path, claim_store=store)
     for i in range(10):
         a.append("a", json.dumps({"i": i}))
         b.append("b", json.dumps({"i": i}))
     # the listing is genuinely stale right now — and nothing cared
     assert len(store.names()) < len(MemoryClaimStore.names(store))
 
-    fresh = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    fresh = EventLog.open(None, path, claim_store=store)
     assert fresh.version() == 20
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 21))
 
@@ -1352,7 +1264,7 @@ def test_cas_correct_under_eventual_list_visibility(tmp_path, monkeypatch):
     shutil.copy(state, saved)
     fresh.append("claimed-not-pointed", '{"n":21}')
     shutil.copy(saved, state)
-    again = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    again = EventLog.open(None, path, claim_store=store)
     assert again.version() == 21
     assert again.append("next", '{"n":22}').version == 22
 
@@ -1400,15 +1312,15 @@ def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch):
     from eventlog_spark.manifest import ManifestLog
 
     path = str(tmp_path / "ptrckpt")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
-    w = EventLog.open(None, path, arbiter="cas")
+    w = EventLog.open(None, path)
     for i in range(11):
         w.append("e", json.dumps({"i": i}))
     os.remove(os.path.join(path, "_state.json"))
 
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     assert fresh.version() == 11
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 12))
     assert fresh.append("tail", '{"ok":1}').version == 12
@@ -1417,24 +1329,18 @@ def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch):
 def test_cas_pointer_loss_flock_era_chain_recovers_via_scan(
     spark, tmp_path, monkeypatch
 ):
-    """Migration edge: a log written under FLOCK (its deltas carry no
-    head fields) is later operated under CAS and loses its pointer.
+    """Migration edge: a log written under the retired flock protocol
+    (its deltas carry no head fields) loses its pointer.
     Roll-forward finds no head to adopt, so recovery re-derives the
     head by scanning the manifest-listed data — which requires a
     session, and never the directory listing."""
     import fcntl
 
     path = str(tmp_path / "flockera")
-    log = EventLog.create(spark, path)  # flock-mode history
+    log = EventLog.create(spark, path)
     for i in range(5):
         log.append("e", json.dumps({"i": i}))
-    # migrate the log to cas, then lose the pointer
-    meta_path = os.path.join(path, "_eventlog_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    meta["arbiter"] = "cas"
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
+    _strip_delta_heads(path)  # flock-era history: no delta heads
     os.remove(os.path.join(path, "_state.json"))
     monkeypatch.setattr(fcntl, "flock", _boom)
 
@@ -1442,7 +1348,6 @@ def test_cas_pointer_loss_flock_era_chain_recovers_via_scan(
         EventLog.open(None, path)  # head scan needs a session
 
     fresh = EventLog.open(spark, path)
-    assert fresh._arbiter == "cas"
     assert fresh.version() == 5
     assert [r.version for r in fresh.scan_rows()] == [1, 2, 3, 4, 5]
     assert fresh.append("after", '{"ok":1}').version == 6
@@ -1459,15 +1364,15 @@ def test_cas_pointer_and_chain_loss_refuses_silent_truncation(
     import fcntl
 
     path = str(tmp_path / "gone")
-    EventLog.create(None, path, arbiter="cas")
+    EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    w = EventLog.open(None, path, arbiter="cas")
+    w = EventLog.open(None, path)
     for i in range(3):
         w.append("e", json.dumps({"i": i}))
     os.remove(os.path.join(path, "_state.json"))
     shutil.rmtree(os.path.join(path, "_manifest"))
     with pytest.raises(RuntimeError, match="unrecoverable"):
-        EventLog.open(None, path, arbiter="cas")
+        EventLog.open(None, path)
 
 
 def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
@@ -1485,7 +1390,7 @@ def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
 
     store, child_env, _names = xproc_store
     path = str(tmp_path / "chaos")
-    EventLog.create(None, path, arbiter="cas", claim_store=store)
+    EventLog.create(None, path, claim_store=store)
     n_writers, n_each = 4, 15
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ, **child_env)
@@ -1528,7 +1433,7 @@ def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
     total = n_writers * n_each
     assert sorted(wins) == list(range(1, total + 1))  # exactly-one-winner held
 
-    fresh = EventLog.open(None, path, arbiter="cas", claim_store=store)
+    fresh = EventLog.open(None, path, claim_store=store)
     assert fresh.version() == total  # roll-forward past whatever chaos left
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, total + 1))

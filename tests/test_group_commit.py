@@ -186,12 +186,12 @@ def test_followers_batch_while_leader_commits(tmp_path, monkeypatch):
 
 
 def test_group_commit_under_cas_arbiter_cross_thread(tmp_path):
-    """The group path composes with the CAS arbiter: an in-process
-    storm through the claim protocol stays exactly-one-winner with
+    """The group path composes with the delta claim: an in-process
+    storm through it stays exactly-one-winner with
     dense versions (the CAS retry loop re-validates every op in the
     group against the winner's head)."""
     path = str(tmp_path / "gcas")
-    log = EventLog.create(None, path, arbiter="cas")
+    log = EventLog.create(None, path)
     errs: list[Exception] = []
 
     def work(t: int) -> None:
@@ -208,7 +208,7 @@ def test_group_commit_under_cas_arbiter_cross_thread(tmp_path):
         th.join()
     assert not errs
     assert log.version() == 60
-    fresh = EventLog.open(None, path, arbiter="cas")
+    fresh = EventLog.open(None, path)
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 61))
 
 

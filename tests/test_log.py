@@ -488,22 +488,38 @@ def test_hex_version_codec():
         assert py_hex_to_version(py_version_to_hex(v)) == v
 
 
-def test_open_truncates_crash_orphans(spark, tmp_path):
-    """file.go:67-125 — a crash between fragment write and state publish
-    must not leave rows that a later append would duplicate. open()
-    physically drops rows above the committed head."""
-    import shutil
+def _crash_before_claim(log):
+    """Make the next commit die after its fragments land in the log dir
+    but before its delta claim — the crash window the claim protocol
+    leaves to vacuum. Returns the exception class the crash raises."""
 
+    class Crash(RuntimeError):
+        pass
+
+    def die():
+        raise Crash("simulated crash before the delta claim")
+
+    log._write_state = die
+    return Crash
+
+
+def test_open_truncates_crash_orphans(spark, tmp_path):
+    """file.go:67-125 — a crash between fragment write and commit must
+    not leave rows that a later append would duplicate. No manifest
+    names the crashed fragment, so the reopened log never serves it; its
+    versions are assigned exactly once by the next append; and
+    ``vacuum`` physically drops it."""
     path = str(tmp_path / "orphan")
     log = EventLog.create(spark, path)
     log.append_multi([(f"l{i}", f'{{"i":{i}}}') for i in range(3)])
-    state = os.path.join(path, "_state.json")
-    saved = os.path.join(str(tmp_path), "state_at_3.json")
-    shutil.copy(state, saved)
+    before = set(os.listdir(path))
 
-    # simulate: fragment for versions 4-5 written, crash before publish
-    log.append_multi([("l3", '{"i":3}'), ("l4", '{"i":4}')])
-    shutil.copy(saved, state)
+    # fragment for versions 4-5 written, crash before the delta claim
+    crash = _crash_before_claim(log)
+    with pytest.raises(crash):
+        log.append_multi([("l3", '{"i":3}'), ("l4", '{"i":4}')])
+    orphans = set(os.listdir(path)) - before
+    assert orphans, "the crashed fragment should be on disk"
 
     reopened = EventLog.open(spark, path)
     assert reopened.version() == 3
@@ -517,6 +533,85 @@ def test_open_truncates_crash_orphans(spark, tmp_path):
     assert [row.label for row in rows] == ["l0", "l1", "l2", "n4", "n5"]
     audit = reopened.check_integrity().collect()[0]
     assert audit.density_violation == 0 and audit.chain_violations == 0
+
+    assert reopened.vacuum(grace_seconds=0) == len(orphans)
+    assert not orphans & set(os.listdir(path))
+    assert [r.version for r in reopened.scan_rows()] == [1, 2, 3, 4, 5]
+
+
+def test_crash_fragments_invisible_then_reaped_by_vacuum(spark, tmp_path):
+    """``vacuum`` takes over crash cleanup: fragments no manifest names
+    (an interactive crash, a bulk crash) and staging temps go once older
+    than the grace window, while a younger orphan — possibly a live
+    writer's fragment before its claim — survives."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "orphan")
+    log = EventLog.create(spark, path)
+    log.append_multi([(f"l{i}", f'{{"i":{i}}}') for i in range(3)])
+    before = set(os.listdir(path))
+    crash = _crash_before_claim(log)
+    with pytest.raises(crash):  # interactive crash: versions 4-5
+        log.append_multi([("l3", '{"i":3}'), ("l4", '{"i":4}')])
+    log = EventLog.open(spark, path)
+    crash = _crash_before_claim(log)
+    batch = spark.range(4).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    with pytest.raises(crash):  # bulk crash: staged files renamed in
+        log.append_dataframe(batch, order_cols=["id"])
+    with open(os.path.join(path, ".part-crashed.parquet.tmp"), "w") as f:
+        f.write("torn")  # a staging temp the crash left behind
+    old = set(os.listdir(path)) - before
+    assert len(old) >= 3
+
+    reopened = EventLog.open(spark, path)
+    assert [r.version for r in reopened.scan().collect()] == [1, 2, 3]
+    assert reopened.vacuum() == 0  # inside the default grace window
+    time.sleep(1.2)
+    young = str(tmp_path / "orphan" / "part-young.parquet")
+    with open(young, "w") as f:
+        f.write("unclaimed")
+    assert reopened.vacuum(grace_seconds=1.0) == len(old)
+    assert not old & set(os.listdir(path))
+    assert os.path.exists(young)  # younger than the window: kept
+    assert [r.version for r in reopened.scan_rows()] == [1, 2, 3]
+
+
+def test_bulk_append_aborts_when_count_and_write_disagree(
+    spark, log, monkeypatch
+):
+    """ADVICE (medium): the versioning count job and the write job are
+    separate passes, so a nondeterministic upstream can make them see
+    different rows. The written version range must be exactly the
+    counted one, checked before anything becomes visible; on a mismatch
+    the commit aborts and the head does not move."""
+    from pyspark.sql import functions as F
+
+    from eventlog_spark.functions import versioning
+
+    log.append("pre", '{"i":0}')
+    real = versioning.with_dense_versions_streamed
+
+    def miscounted(*a, **kw):
+        b = real(*a, **kw)
+        b.total += 1  # the count pass saw one row the write will not
+        return b
+
+    monkeypatch.setattr(versioning, "with_dense_versions_streamed", miscounted)
+    batch = spark.range(3).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    with pytest.raises(RuntimeError, match="written versions"):
+        log.append_dataframe(batch, order_cols=["id"])
+    assert log.version() == 1
+    assert [r.version for r in log.scan_rows()] == [1]
+    monkeypatch.undo()
+    assert log.append_dataframe(batch, order_cols=["id"]).version == 4
 
 
 # -- concurrent-writer OCC stress (the reference's -race suite has no
@@ -633,8 +728,8 @@ spark.stop()
 
 def test_two_process_occ_commit_protocol(spark, tmp_path):
     """SURVEY §7's known edge, closed: TWO OS PROCESSES append to one
-    log path through the OCC path concurrently. The flock'd commit
-    section + published-state refresh must produce exactly-one-winner
+    log path through the OCC path concurrently. The delta claim +
+    published-state refresh must produce exactly-one-winner
     per version — dense versions 1..2N with no duplicates — and a
     clean integrity audit afterward. (The reference engine would
     corrupt here: its commit mutex is in-process only, file.go:57.)"""
@@ -861,22 +956,16 @@ def test_label_pruning_binds_and_survives_compaction(spark, tmp_path):
 
 
 def test_open_is_metadata_only_after_clean_commit(tmp_path, monkeypatch):
-    """Cold open must not pay a directory listing when the last commit
-    published cleanly: the commit-intent record proves the no-orphan
-    case from one tiny read (r9 — at 10^6 fragments the r8 listing was
-    the one O(dir) cost left on open). On a crash the intent NAMES the
-    only possible orphans, so the check stays O(orphans), still no
-    listing."""
-    import shutil
-
+    """Cold open must not pay a directory listing: the pointer names
+    the manifest chain, and a crash fragment no delta names is not
+    looked for at all (r9 — at 10^6 fragments the r8 listing was the
+    one O(dir) cost left on open). The crash fragment stays on disk,
+    invisible, until vacuum reaps it."""
     path = str(tmp_path / "cl")
     log = EventLog.create(None, path)
     log.MINOR_COMPACT_FRAGMENTS = 0
     for i in range(5):
         log.append("a", json.dumps({"i": i}))
-    state = os.path.join(path, "_state.json")
-    saved = str(tmp_path / "state_at_5.json")
-    shutil.copy(state, saved)
 
     calls: list[int] = []
     orig = EventLog._data_files
@@ -888,20 +977,18 @@ def test_open_is_metadata_only_after_clean_commit(tmp_path, monkeypatch):
     assert [r.version for r in reopened.scan_rows(limit=3)] == [1, 2, 3]
     assert not calls
 
-    # crash between fragment write and publish: the intent names the
-    # orphan — it is truncated without listing the directory
-    log.append("orphan", '{"crash":true}')
-    shutil.copy(saved, state)
-    frags_before = {
-        f for f in os.listdir(path) if f.endswith(".parquet")
-    }
+    # crash between fragment write and the delta claim
+    crash = _crash_before_claim(log)
+    with pytest.raises(crash):
+        log.append("orphan", '{"crash":true}')
+    frags = {f for f in os.listdir(path) if f.endswith(".parquet")}
     calls.clear()
     recovered = EventLog.open(None, path)
     assert recovered.version() == 5 and not calls
-    frags_after = {f for f in os.listdir(path) if f.endswith(".parquet")}
-    assert len(frags_before - frags_after) == 1  # exactly the orphan died
     r = recovered.append("next", '{"ok":true}')
     assert r.version == 6
+    assert [row.label for row in recovered.scan_rows()][-1] == "next"
+    assert frags <= set(os.listdir(path))  # the orphan awaits vacuum
 
 
 def test_scan_rows_label_page_stops_early(tmp_path):
@@ -1120,14 +1207,11 @@ def test_label_layout_report_detects_interleave_and_repair(
 def test_bulk_crash_truncates_named_orphans_without_listing(
     spark, tmp_path, monkeypatch
 ):
-    """Round-10 _write_out upgrade: bulk commits stage in a private dir
-    and refresh the commit-intent with their EXACT file names before
-    anything becomes visible. A crash between staging and the state
-    publish therefore leaves orphans the next open truncates by NAME —
-    the directory-listing recovery (previously the one remaining
-    bulk-crash cost) must not run at all."""
-    import pytest as _p
-
+    """Bulk commits stage in a private dir and rename their files in
+    before the delta claim. A crash between the rename and the claim
+    leaves fragments no manifest names: the next open must not list the
+    directory to find them, must not serve them, must not burn their
+    versions, and ``vacuum`` drops them by name."""
     from pyspark.sql import functions as F
 
     path = str(tmp_path / "bulkcrash")
@@ -1139,29 +1223,21 @@ def test_bulk_crash_truncates_named_orphans_without_listing(
         F.format_string('{"i":%d}', F.col("id")).alias("payload"),
         "id",
     )
-
-    class Crash(RuntimeError):
-        pass
-
-    def die():
-        raise Crash("simulated crash before the state publish")
-
-    log._write_state = die  # instance hook: files staged, never published
-    with _p.raises(Crash):
+    crash = _crash_before_claim(log)  # files staged, never claimed
+    with pytest.raises(crash):
         log.append_dataframe(batch, order_cols=["id"])
-    del log.__dict__["_write_state"]
     orphans = [
         f for f in os.listdir(path)
         if f.endswith(".parquet") and "-part-" in f
     ]
     assert orphans, "the staged bulk fragments should be on disk"
 
-    # the reopen must take the NAMED fast path: a listing would explode
+    # the reopen reads only the manifest: a listing would explode
     real_listdir = os.listdir
 
     def no_data_listing(p=None):
         if p is not None and os.path.abspath(str(p)) == os.path.abspath(path):
-            raise AssertionError("bulk-crash recovery listed the log dir")
+            raise AssertionError("open after a bulk crash listed the log dir")
         return real_listdir(p) if p is not None else real_listdir()
 
     monkeypatch.setattr(os, "listdir", no_data_listing)
@@ -1169,10 +1245,12 @@ def test_bulk_crash_truncates_named_orphans_without_listing(
     monkeypatch.undo()
 
     assert fresh.version() == 1  # the crashed bulk never published
-    for f in orphans:
-        assert not os.path.exists(os.path.join(path, f))  # truncated by name
     r = fresh.append_dataframe(batch, order_cols=["id"])
     assert r is not None and r.version == 5  # versions were never burned
+    assert [x.version for x in fresh.scan_rows()] == [1, 2, 3, 4, 5]
+    assert fresh.vacuum(grace_seconds=0) == len(orphans)
+    for f in orphans:
+        assert not os.path.exists(os.path.join(path, f))
     assert [x.version for x in fresh.scan_rows()] == [1, 2, 3, 4, 5]
 
 

@@ -4,8 +4,8 @@ The round-7 design embedded the full data-file list in ``_state.json``
 — O(total files) per commit and per snapshot read. These tests pin the
 replacement's contract: O(1) per-commit delta records, paged
 checkpoints that reuse clean pages, version-range page pruning for the
-scan_rows fast path, legacy adoption, recovery, and the crash windows
-(orphan delta overwrite, vacuumed chain fallback).
+scan_rows fast path, recovery, and the refusals (pre-manifest state
+file, head-less delta past the pointer, chain gone).
 """
 
 from __future__ import annotations
@@ -190,39 +190,30 @@ def test_cross_instance_visibility_by_delta_replay(spark, tmp_path):
     assert all(f.startswith("compact-") for f in b._manifest_files())
 
 
-def test_legacy_state_file_adoption(spark, tmp_path):
-    """A round-7 log (file list embedded in _state.json) opens cleanly:
-    the list is adopted, the next commit publishes a checkpoint and a
-    format-2 pointer."""
+def test_legacy_state_file_refused(spark, tmp_path):
+    """A round-7 log (file list embedded in _state.json) is refused on
+    open with an error naming the format, never adopted from a list
+    nothing else vouches for."""
     log = _mk(spark, tmp_path)
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
-    # rewrite the pointer in the legacy shape
     st = _state(log)
-    frag_names = log._manifest_files()
     legacy = {
         "latest_version": st["latest_version"],
         "version_initial": st["version_initial"],
         "last_timestamp": st["last_timestamp"],
         "stream_commits": {},
-        "files": frag_names,
+        "files": log._manifest_files(),
     }
     with open(os.path.join(log.path, "_state.json"), "w") as f:
         json.dump(legacy, f)
-
-    reopened = EventLog.open(spark, log.path)
-    assert [r.version for r in reopened.scan_rows()] == [1, 2]
-    reopened.append("c", '{"k":0}')
-    st2 = _state(reopened)
-    assert "files" not in st2 and "manifest_seq" in st2
-    # adoption forces a full checkpoint: a cold reader needs no legacy list
-    cold = EventLog.open(spark, reopened.path)
-    assert [r.version for r in cold.scan_rows()] == [1, 2, 3]
+    with pytest.raises(RuntimeError, match="pre-manifest state file"):
+        EventLog.open(spark, log.path)
 
 
 def test_recovery_after_pointer_loss_rebuilds_chain(spark, tmp_path):
-    """Pointer lost entirely: head recovers from data, re-adoption
-    resumes seqs PAST everything on disk so a stale pointer can never
-    name the rebuilt chain."""
+    """Pointer lost entirely: head recovers from the delta chain and
+    the next commit claims the seq PAST everything on disk, so a stale
+    pointer can never name it."""
     log = _mk(spark, tmp_path)
     for i in range(3):
         log.append(f"l{i}", '{"k":0}')
@@ -237,10 +228,13 @@ def test_recovery_after_pointer_loss_rebuilds_chain(spark, tmp_path):
     assert audit.density_violation == 0 and audit.chain_violations == 0
 
 
-def test_orphan_delta_is_overwritten_not_replayed(spark, tmp_path):
-    """Crash window: fragment + delta written, pointer never published.
-    Readers (pinned to the pointer) never see the orphan delta; the next
-    writer's commit atomically replaces it."""
+def test_headless_delta_past_pointer_refused(spark, tmp_path):
+    """A crash of the retired flock protocol between its delta write and
+    its pointer publish left a delta past the pointer with no head
+    record — a commit that was never acknowledged. Adopting it would
+    serve it and hand its versions out a second time, so open refuses,
+    naming the file; once the operator deletes it, the log opens and
+    the next append takes the version the crashed commit never got."""
     import shutil
 
     log = _mk(spark, tmp_path)
@@ -250,33 +244,34 @@ def test_orphan_delta_is_overwritten_not_replayed(spark, tmp_path):
     shutil.copy(state, saved)
     log.append("orphan", '{"crash":1}')  # delta 2 + pointer 2
     shutil.copy(saved, state)  # "crash": pointer rolls back to seq 1
+    orphan = os.path.join(log.path, "_manifest", f"delta-{2:020d}.json")
+    with open(orphan) as f:
+        rec = json.load(f)
+    del rec["head"]  # the flock protocol's delta shape
+    with open(orphan, "w") as f:
+        json.dump(rec, f)
 
+    with pytest.raises(RuntimeError, match=f"delta-{2:020d}.json"):
+        EventLog.open(spark, log.path)
+    os.remove(orphan)
     reopened = EventLog.open(spark, log.path)
     assert [r.label for r in reopened.scan_rows()] == ["committed"]
-    r = reopened.append("next", '{"ok":2}')
-    assert r.version == 2
-    with open(os.path.join(log.path, "_manifest", f"delta-{2:020d}.json")) as f:
-        d = json.load(f)
-    assert len(d["add"]) == 1  # the orphan record is gone, replaced
+    assert reopened.append("next", '{"ok":2}').version == 2
     assert [row.label for row in reopened.scan_rows()] == ["committed", "next"]
 
 
-def test_broken_chain_falls_back_to_listing(spark, tmp_path):
-    """A vacuumed/mangled chain must degrade to the retirement-aware
-    directory listing, never to a wrong answer."""
+def test_broken_chain_refuses_listing_fallback(spark, tmp_path):
+    """A pointer whose manifest chain is gone from the store is
+    refused loudly: the directory listing may hold an unpublished
+    loser's fragment aliasing committed versions, so it is never a
+    fallback — raising beats serving an empty or doubled log."""
     log = _mk(spark, tmp_path)
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
     mdir = os.path.join(log.path, "_manifest")
     for f in os.listdir(mdir):
         os.remove(os.path.join(mdir, f))
-    # the live instance replays nothing (pointer seq == mirror seq) —
-    # a COLD open must take the fallback path
-    reopened = EventLog.open(spark, log.path)
-    assert [r.version for r in reopened.scan_rows()] == [1, 2]
-    # and the next commit re-publishes a usable chain
-    reopened.append("c", '{"k":0}')
-    cold = EventLog.open(spark, reopened.path)
-    assert [r.version for r in cold.scan_rows()] == [1, 2, 3]
+    with pytest.raises(RuntimeError, match="unrecoverable"):
+        EventLog.open(spark, log.path)
 
 
 def test_minor_compact_folds_show_as_one_delta(spark, tmp_path):
@@ -354,7 +349,7 @@ def test_eight_process_occ_manifest_storm(spark, tmp_path):
     """EIGHT OS processes hammer one log through the OCC path while the
     log-structured manifest checkpoints every 8 commits — so ~8 paged
     roll-ups (page rewrites + delta retirement + pointer swaps) race
-    64 interleaved commits from 8 independent flock contenders. This is
+    64 interleaved commits from 8 independent claim contenders. This is
     the multi-writer shape a shared object-store prefix sees: every
     writer advances its mirror by replaying the OTHERS' delta records.
     Must hold: exactly-one-winner per version (union of acked versions

@@ -5,6 +5,7 @@ oracle-checked in batch via operators/streamlike.py — same expressions.)"""
 from __future__ import annotations
 
 import time
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -294,33 +295,48 @@ def test_conversion_join_streaming_matches_batch(spark, tmp_path, sf_dir):
     assert len(got) > 0
 
 
-def test_tail_stream_skips_uncommitted_orphans(spark, tmp_path):
-    """Post-crash orphan rows (fragment written, head never published)
-    must NOT be delivered to subscribers as if committed — the stream
-    enforces the same snapshot-isolation contract as the batch readers."""
-    import shutil
-    import os as _os
-
-    log = EventLog.create(spark, str(tmp_path / "log"))
-    log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}')])
-    state = _os.path.join(log.path, "_state.json")
-    saved = str(tmp_path / "state_at_2.json")
-    shutil.copy(state, saved)
-    # versions 3-4 written, then "crash" before the head publish
-    log.append_multi([("c", '{"x":3}'), ("d", '{"x":4}')])
-    shutil.copy(saved, state)
-    log._latest = 2  # in-process view matches the rolled-back state file
-
+def _tail_versions(log, ckpt: str) -> list[int]:
     got: list[int] = []
     q = (
         streams.log_tail_stream(log, commit_wait=0.3)
         .writeStream.foreachBatch(lambda b, _: got.extend(r.version for r in b.collect()))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     _await(q, timeout=120)
-    assert sorted(got) == [1, 2]  # orphans 3-4 withheld
+    return sorted(got)
+
+
+def test_tail_stream_skips_uncommitted_orphans(spark, tmp_path):
+    """Post-crash orphan rows (fragment written, delta never claimed)
+    must NOT be delivered to subscribers as if committed — the stream
+    enforces the same snapshot-isolation contract as the batch readers."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}')])
+
+    def crash():
+        raise RuntimeError("simulated crash before the delta claim")
+
+    log._write_state = crash  # versions 3-4 written, never claimed
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        log.append_multi([("c", '{"x":3}'), ("d", '{"x":4}')])
+    del log.__dict__["_write_state"]
+    assert _tail_versions(log, str(tmp_path / "ckpt")) == [1, 2]  # 3-4 withheld
+
+
+def test_tail_stream_skips_unclaimed_loser_fragment(spark, tmp_path):
+    """A losing writer's fragment holds a ``part-*`` name, with versions
+    the winner owns (≤ the head), until its writer discards it. The
+    tail must deliver only fragments the manifest published, so the
+    loser's rows never show up as a second copy of committed versions."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}')])
+    log._write_fragment([(1, 0, 1, "loser", '{"x":9}'), (2, 1, 1, "loser", '{"x":9}')])
+    log._pending_add.clear()  # its delta claim never happened
+    log._interactive_frags = 0
+    assert log.version() == 2
+    assert _tail_versions(log, str(tmp_path / "ckpt")) == [1, 2]
 
 
 def test_stream_real_availablenow_matches_batch_twin(spark, sf_dir):
@@ -520,7 +536,7 @@ def test_append_stream_kill9_mid_batch_recovers_exactly_once(spark, tmp_path):
     """r7 verdict item 5: the 560k events/s streaming-ingest rehearsal's
     last untested claim. A WRITER PROCESS is SIGKILLed mid-run (between
     micro-batch commits — every crash window is fair game: fragment
-    written/pointer unpublished → orphan truncation; log committed/
+    written/delta unclaimed → invisible orphan; log committed/
     checkpoint offset unwritten → batch replay deduped by the
     (stream_id, batch_id) marker). A fresh process restarts from the
     same checkpoint and must land every event EXACTLY ONCE: dense

@@ -1,13 +1,11 @@
-"""Commit-arbiter contention probe (round 9): what does the CAS
-arbiter COST relative to the flock under real multi-process contention?
+"""Commit-protocol contention probe: what does the delta claim COST
+under real multi-process contention?
 
-The flock serializes writers through the kernel (losers sleep, zero
-wasted work); CAS losers pay a written-then-discarded fragment plus a
-resync per lost claim. This probe races N writer processes × M commits
-each through BOTH arbiters on otherwise identical logs and reports
-wall-clock commit throughput, then verifies the fencing property on the
-result (dense versions, no duplicates). The uncontended single-writer
-row isolates the protocol's fixed overhead.
+Claim losers pay a written-then-discarded fragment plus a resync per
+lost claim. This probe races N writer processes × M commits each on
+one log and reports wall-clock commit throughput, then verifies the
+fencing property on the result (dense versions, no duplicates). The
+uncontended single-writer row isolates the protocol's fixed overhead.
 
 Usage: python tools/fencing_probe.py [--procs 4] [--each 50]
 """
@@ -29,7 +27,7 @@ from eventlog_spark.log import EventLog  # noqa: E402
 
 _WRITER = r"""
 import json, os, sys
-repo, path, wid, n, arb = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4]), sys.argv[5]
+repo, path, wid, n = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 sys.path.insert(0, repo)
 from eventlog_spark.log import EventLog
 store = None
@@ -37,7 +35,7 @@ sock = os.environ.get("SPARK_GRAFT_CLAIM_SOCK")
 if sock:
     from eventlog_spark.claimsvc import SocketClaimStore
     store = SocketClaimStore(sock)
-log = EventLog.open(None, path, arbiter=arb, claim_store=store)
+log = EventLog.open(None, path, claim_store=store)
 wins = []
 for i in range(n):
     r = log.append(f"w{wid}", json.dumps({"w": wid, "i": i}))
@@ -46,16 +44,16 @@ print("WINS:" + ",".join(map(str, wins)))
 """
 
 
-def run(arbiter: str, n_procs: int, n_each: int) -> dict:
-    root = tempfile.mkdtemp(prefix=f"fencing_probe_{arbiter}_")
+def run(n_procs: int, n_each: int) -> dict:
+    root = tempfile.mkdtemp(prefix="fencing_probe_")
     path = os.path.join(root, "log")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     try:
-        EventLog.create(None, path, arbiter=arbiter)
+        EventLog.create(None, path)
         t0 = time.perf_counter()
         procs = [
             subprocess.Popen(
-                [sys.executable, "-c", _WRITER, repo, path, str(w), str(n_each), arbiter],
+                [sys.executable, "-c", _WRITER, repo, path, str(w), str(n_each)],
                 stdout=subprocess.PIPE,
                 stderr=subprocess.PIPE,
                 text=True,
@@ -71,11 +69,10 @@ def run(arbiter: str, n_procs: int, n_each: int) -> dict:
         wall = time.perf_counter() - t0
         total = n_procs * n_each
         assert sorted(wins) == list(range(1, total + 1)), "fencing violated"
-        check = EventLog.open(None, path, arbiter=arbiter)
+        check = EventLog.open(None, path)
         assert check.version() == total
         assert [r.version for r in check.scan_rows()] == list(range(1, total + 1))
         return {
-            "arbiter": arbiter,
             "procs": n_procs,
             "commits": total,
             "wall_s": round(wall, 2),
@@ -86,7 +83,7 @@ def run(arbiter: str, n_procs: int, n_each: int) -> dict:
 
 
 def run_maintenance(n_procs: int, n_each: int, store: str = "posix") -> dict:
-    """Starvation-freedom probe (round-10): N full-speed CAS writer
+    """Starvation-freedom probe (round-10): N full-speed writer
     processes storm the log while THIS process runs minor compactions
     in a loop. Every fold publish that loses its seq claim re-bases
     (O(1), no re-rewrite) and retries; the probe reports how many folds
@@ -114,14 +111,14 @@ def run_maintenance(n_procs: int, n_each: int, store: str = "posix") -> dict:
             server = ClaimServer(sock, os.path.join(svc_dir, "j")).start()
             claim_store = SocketClaimStore(sock)
             child_env["SPARK_GRAFT_CLAIM_SOCK"] = sock
-        EventLog.create(None, path, arbiter="cas", claim_store=claim_store)
-        log = EventLog.open(None, path, arbiter="cas", claim_store=claim_store)
+        EventLog.create(None, path, claim_store=claim_store)
+        log = EventLog.open(None, path, claim_store=claim_store)
         for i in range(64):  # seed fragments so folds have work
             log.append("seed", json.dumps({"i": i}))
         t0 = time.perf_counter()
         procs = [
             subprocess.Popen(
-                [sys.executable, "-c", _WRITER, repo, path, str(w), str(n_each), "cas"],
+                [sys.executable, "-c", _WRITER, repo, path, str(w), str(n_each)],
                 stdout=subprocess.PIPE,
                 stderr=subprocess.PIPE,
                 text=True,
@@ -145,7 +142,7 @@ def run_maintenance(n_procs: int, n_each: int, store: str = "posix") -> dict:
             wins.extend(int(v) for v in line[5:].split(","))
         total = 64 + n_procs * n_each
         assert sorted(wins) == list(range(65, total + 1)), "fencing violated"
-        check = EventLog.open(None, path, arbiter="cas", claim_store=claim_store)
+        check = EventLog.open(None, path, claim_store=claim_store)
         assert check.version() == total
         assert [r.version for r in check.scan_rows()] == list(range(1, total + 1))
         return {
@@ -187,9 +184,7 @@ if __name__ == "__main__":
         print(json.dumps(run_maintenance(args.procs, args.each, args.store)))
         raise SystemExit(0)
     rows = []
-    for arb in ("flock", "cas"):
-        rows.append(run(arb, 1, args.each))  # uncontended: protocol overhead
-        print(json.dumps(rows[-1]), flush=True)
-        rows.append(run(arb, args.procs, args.each))  # contended
+    for procs in (1, args.procs):  # uncontended (protocol overhead), contended
+        rows.append(run(procs, args.each))
         print(json.dumps(rows[-1]), flush=True)
     print(json.dumps({"probe": "fencing_contention", "rows": rows}))

@@ -196,8 +196,7 @@ def _build_label_chain(root, total_entries: int, n_labels: int, interleave: bool
             batch = []
     if batch:
         m.commit(batch, [])
-    m._force_checkpoint = True
-    m.commit([], [])  # roll the tail up so probes see pages only
+    m._checkpoint()  # roll the tail up so probes see pages only
     return m, m.seq, per
 
 
@@ -399,11 +398,9 @@ def probe_open(total_frags: int) -> dict:
                 batch = []
         if batch:
             m.commit(batch, [])
-        m._force_checkpoint = True
-        m.commit([], [])
+        m._checkpoint()
         log._latest, log._initial, log._last_ts = total_frags, 1, 1
         log._write_state()
-        log._write_intent([], total_frags)
 
         t0 = time.perf_counter()
         cold = EventLog.open(None, path)

@@ -230,10 +230,11 @@ def _order_key(order_cols: list[str]) -> Column:
 def _bucket_expr(order_cols: list[str], boundaries: list[tuple]) -> Column:
     """Bucket index via a balanced CASE tree (binary search over the
     sorted boundary tuples — log2(n) struct comparisons per row instead
-    of n). Rows equal to a boundary go LEFT (<=); rows whose comparison
-    is NULL (null order keys) fall through every WHEN into the last
-    bucket — consistent across the count and write jobs, which is all
-    versioning needs."""
+    of n). Rows equal to a boundary go LEFT (<=). NULL keys go to bucket
+    0, matching the ascending sort's nulls-first order: a NULL
+    single-column key is routed there explicitly (its comparison is
+    NULL), and a struct key with NULL fields already compares below
+    every NULL-free boundary."""
     key = _order_key(order_cols)
 
     def lit_tuple(b: tuple) -> Column:
@@ -251,6 +252,8 @@ def _bucket_expr(order_cols: list[str], boundaries: list[tuple]) -> Column:
             build(mid + 1, hi)
         )
 
+    if len(order_cols) == 1:
+        return F.when(key.isNull(), F.lit(0)).otherwise(build(0, len(boundaries)))
     return build(0, len(boundaries))
 
 
@@ -261,7 +264,10 @@ def _sample_boundaries(
     ``repartitionByRange`` runs internally, but column-pruned and with
     the result kept so the count job can share the buckets). The sample
     fraction comes from the optimizer's size estimate; a wild
-    under-estimate only costs balance, never correctness."""
+    under-estimate only costs balance, never correctness, and the
+    collect is capped at twice the target. Keys holding a NULL are left
+    out of the sample (Python cannot order None against values, and
+    ``_bucket_expr`` routes them to bucket 0 anyway)."""
     keys = src.select(*order_cols)
     try:
         est_bytes = int(
@@ -272,7 +278,10 @@ def _sample_boundaries(
     est_rows = max(1, est_bytes // 32)
     target = min(100 * n_target, 1_000_000)
     frac = min(1.0, target / est_rows)
-    sample = [tuple(r) for r in keys.where(F.rand(42) < frac).collect()]
+    sample = [
+        tuple(r)
+        for r in keys.where(F.rand(42) < frac).dropna().limit(2 * target).collect()
+    ]
     if len(sample) < 2:
         return []
     sample.sort()

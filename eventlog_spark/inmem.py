@@ -108,6 +108,10 @@ class InMemEventLog(EventLog):
             return None
         return self.spark.createDataFrame(self._rows, EVENT_SCHEMA)
 
+    def _read_label_pruned(self, label: str, lo: int, hi: int) -> DataFrame | None:
+        # no manifest to prune with: the exact filters in scan() select
+        return self._read_raw()
+
     def _rows_in_range(
         self,
         lo: int,

@@ -57,6 +57,7 @@ import threading
 import time
 import uuid
 import warnings
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Callable, Iterable, NamedTuple
 
@@ -95,8 +96,9 @@ _META_FILE = "_eventlog_meta.json"
 
 def _version_group_stats(md) -> list[tuple[int, int]] | None:
     """Per-row-group (min, max) of the ``version`` column from a parquet
-    footer, or None when any group lacks min/max stats (legacy writers)
-    — the shared probe behind ``scan_rows``'s fragment pruning."""
+    footer, or None when any group lacks min/max stats — the probe
+    behind a staged file's manifest range and ``scan_rows``' row-group
+    pruning."""
     names = [md.schema.column(i).name for i in range(md.num_columns)]
     ci = names.index("version")
     out = []
@@ -106,6 +108,19 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
             return None
         out.append((s.min, s.max))
     return out if out else None
+
+
+def _newest_change(full: str) -> float:
+    """Newest mtime/ctime of ``full`` and, for a directory, of everything
+    under it — when a crash leftover was last touched."""
+    st = os.stat(full)
+    newest = max(st.st_mtime, st.st_ctime)
+    for root, dirs, files in os.walk(full):
+        for n in dirs + files:
+            with contextlib.suppress(FileNotFoundError):
+                st = os.stat(os.path.join(root, n))
+                newest = max(newest, st.st_mtime, st.st_ctime)
+    return newest
 
 
 def checksum_expr() -> Column:
@@ -368,6 +383,10 @@ class EventLog:
         self._manifest: ManifestLog | None = None
         self._pending_add: list[dict] = []  # entries staged for the next publish
         self._pending_remove: list[str] = []
+        # scan_rows' hot-tail cache: fragment name -> rows, for small
+        # fragments only, bounded by _frag_rows_total (evicted oldest first)
+        self._frag_row_cache: OrderedDict[str, list[tuple]] = OrderedDict()
+        self._frag_rows_total = 0
         self._load_meta()
         self._load_state()
         # roll the mirror forward past a possibly-lagging pointer — the
@@ -679,11 +698,12 @@ class EventLog:
         """Fragments that MAY contain ``label`` (and overlap versions
         [lo, hi] when given) per the manifest's per-column stats —
         bounds always, bloom where the writer knew the exact label set.
-        None when no manifest chain is usable (caller reads the full
-        snapshot). This is the data-skipping probe ``scan(label=...)``
-        prunes with and tests assert on."""
-        if self.path is None or not self._refresh_published_state():
+        None on the in-memory engine, which has no manifest; raises when
+        the chain is unusable. This is the data-skipping probe
+        ``scan(label=...)`` prunes with and tests assert on."""
+        if self.path is None:
             return None
+        self._require_published_state()
         positions = list(_label_bloom_positions(label))
         with self._lock:
             # page summaries refute whole pages before any page load —
@@ -799,12 +819,9 @@ class EventLog:
     def _read_label_pruned(self, label: str, lo: int, hi: int) -> DataFrame | None:
         """Snapshot read restricted to the fragments whose manifest
         stats may hold ``label`` in [lo, hi] — Iceberg-style column
-        data skipping. Falls back to the full snapshot when the
-        manifest can't serve; the exact filters downstream make the
-        pruning purely an optimization."""
+        data skipping; the exact filters downstream make the pruning
+        purely an optimization."""
         names = self.label_candidate_files(label, lo, hi)
-        if names is None:
-            return self._read_raw()
         files = [f for f in names if f.endswith(".parquet")]
         if not files:
             return None
@@ -818,13 +835,17 @@ class EventLog:
         writers, a directory may hold a crashed loser's fragment whose
         versions a winner re-assigned — only the manifest names a
         consistent snapshot."""
+        self._require_published_state()
+        with self._lock:
+            return self._manifest.names()
+
+    def _require_published_state(self) -> None:
+        """``_refresh_published_state``, raising on a broken chain."""
         if not self._refresh_published_state():
             raise RuntimeError(
                 "manifest chain unusable; there is no safe "
                 "directory-listing fallback"
             )
-        with self._lock:
-            return self._manifest.names()
 
     def _data_files(self) -> list[str]:
         """Directory listing minus files the deferred-deletion ledger has
@@ -1171,23 +1192,24 @@ class EventLog:
         ``_read_raw`` + the state/lifecycle hooks (the reference's
         engine seam, eventlog/eventlog.go EventLogger interface).
 
-        Spark writes into a PRIVATE sibling staging dir; the driver then
-        renames the part files into the log dir under a fresh uuid tag
-        (same filesystem — pure renames). The commit's file set is
-        therefore known EXACTLY and owned solely by this writer: nothing
-        orders writers across processes, so a directory diff could sweep
-        a concurrent commit's fragment into THIS writer's delta (doubled
-        rows if we win, and ``_discard_staged_fragments`` would DELETE
-        the other writer's committed file if we lose). Version ranges
-        come from the staged footers — one metadata read per file, so
-        scan_rows/page pruning works on bulk fragments too, and BEFORE
-        any rename they must span exactly ``expect`` (the count and the
-        write are separate jobs; a nondeterministic upstream can make
-        them disagree, which would otherwise publish a head that
-        misnames the written rows). ``part-<tag>-…`` names keep the
-        tail stream's ``part-*`` glob (streaming/streams.py) and
+        Spark writes into a PRIVATE staging dir inside the log
+        (``.bulk-<uuid>.tmp``: dot-prefixed, so no reader lists it and
+        ``vacuum`` reaps it after a crash); the driver then renames the
+        part files into the log dir under a fresh uuid tag (pure
+        renames). The commit's file set is therefore known EXACTLY and
+        owned solely by this writer: nothing orders writers across
+        processes, so a directory diff could sweep a concurrent
+        commit's fragment into THIS writer's delta (doubled rows if we
+        win, and ``_discard_staged_fragments`` would DELETE the other
+        writer's committed file if we lose). Version ranges come from
+        the staged footers (``_staged_entries``), and BEFORE any rename
+        they must span exactly ``expect`` (the count and the write are
+        separate jobs; a nondeterministic upstream can make them
+        disagree, which would otherwise publish a head that misnames
+        the written rows). ``part-<tag>-…`` names keep the tail
+        stream's ``part-*`` glob (streaming/streams.py) and
         minor-compact eligibility."""
-        tmp = self.path + f".bulk.{uuid.uuid4().hex}"
+        tmp = os.path.join(self.path, f".bulk-{uuid.uuid4().hex}.tmp")
         try:
             out.write.mode("overwrite").parquet(tmp)
             if post_write_check is not None:
@@ -1196,61 +1218,60 @@ class EventLog:
                 # discards the private staging dir before ANY file
                 # becomes visible, preserving all-or-nothing semantics
                 post_write_check()
-            tag = uuid.uuid4().hex[:8]
-            staged: list[tuple[str, str, dict]] = []
-            for f in sorted(os.listdir(tmp)):
-                if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                    continue
-                name = f"part-{tag}-{f}"
-                src = os.path.join(tmp, f)
-                entry: dict = {"n": name}
-                rng = self._parquet_version_range(src)
-                if rng is not None:
-                    entry["lo"], entry["hi"] = rng
-                lrng = self._parquet_label_range(src)
-                if lrng is not None:
-                    entry["lmin"], entry["lmax"] = lrng
-                staged.append((src, name, entry))
-            ranged = [e for _, _, e in staged if "lo" in e]
+            staged = self._staged_entries(tmp, "part")
             _check_bulk_range(
-                (min(e["lo"] for e in ranged), max(e["hi"] for e in ranged))
-                if ranged
+                (min(e["lo"] for _, e in staged), max(e["hi"] for _, e in staged))
+                if staged
                 else None,
                 expect,
             )
-            for src, name, entry in staged:
-                os.rename(src, os.path.join(self.path, name))
+            for src, entry in staged:
+                os.rename(src, os.path.join(self.path, entry["n"]))
                 self._pending_add.append(entry)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
+
+    def _staged_entries(self, tmp: str, prefix: str) -> list[tuple[str, dict]]:
+        """(staged path, manifest entry) for each Spark-written file in
+        ``tmp`` that holds rows, named ``<prefix>-<tag>-<file>`` with its
+        version range and label bounds from the footer. Raises when a
+        footer gives no version range: every published entry carries
+        one."""
+        import pyarrow.parquet as pq
+
+        tag = uuid.uuid4().hex[:8]
+        staged = []
+        for f in sorted(os.listdir(tmp)):
+            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
+                continue
+            src = os.path.join(tmp, f)
+            md = pq.ParquetFile(src).metadata
+            if md.num_rows == 0:
+                continue
+            rng = self._parquet_version_range(src)
+            if rng is None:
+                raise RuntimeError(
+                    f"commit aborted: staged file {src} has no version "
+                    "statistics in its footer, so its manifest entry would "
+                    "carry no version range"
+                )
+            entry: dict = {"n": f"{prefix}-{tag}-{f}", "lo": rng[0], "hi": rng[1]}
+            lrng = _label_group_range(md)
+            if lrng is not None:
+                entry["lmin"], entry["lmax"] = lrng
+            staged.append((src, entry))
+        return staged
 
     @staticmethod
     def _parquet_version_range(full: str) -> tuple[int, int] | None:
         """(min, max) of the version column from a fragment's footer
         stats — a metadata-only read; None when stats are unavailable."""
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
-            stats = _version_group_stats(pq.ParquetFile(full).metadata)
-        except Exception:
-            return None
+        stats = _version_group_stats(pq.ParquetFile(full).metadata)
         if not stats:
             return None
         return min(s[0] for s in stats), max(s[1] for s in stats)
-
-    @staticmethod
-    def _parquet_label_range(full: str) -> tuple[str, str] | None:
-        """(min, max) of the label column from a fragment's footer stats
-        — the Iceberg-style per-column bounds for Spark-written
-        fragments (bulk ingest, major compaction), where the exact
-        label set is not driver-side. Metadata-only; None without
-        string stats (entries then stay conservatively unprunable)."""
-        try:
-            import pyarrow.parquet as pq
-
-            return _label_group_range(pq.ParquetFile(full).metadata)
-        except Exception:
-            return None
 
     def append_dataframe(
         self,
@@ -1482,8 +1503,8 @@ class EventLog:
         skip_first: bool,
     ) -> tuple[int, int, int]:
         """The ONE encoding of O5-O8 paging semantics, shared by
-        ``scan()`` and ``scan_rows()`` so the fast path and its
-        fallback cannot drift: under dense versions a scan request is
+        ``scan()`` and ``scan_rows()`` so the DataFrame and the
+        driver-side page cannot drift: under dense versions a scan request is
         exactly the closed interval [lo, hi] (possibly empty, hi < lo)
         read toward the head (or tail when ``reverse``). Returns
         (lo, hi, latest); raises InvalidVersion exactly like the
@@ -1571,7 +1592,7 @@ class EventLog:
         skip_first: bool = False,
         label: str | None = None,
     ) -> list[ScanRow]:
-        """O5-O8 as a DRIVER-SIDE page read — the serving fast path.
+        """O5-O8 as a DRIVER-SIDE page read — the serving path.
 
         ``scan()`` returns a DataFrame (the analytics entry point), but
         an HTTP page request for ≤1000 events must not schedule a Spark
@@ -1579,28 +1600,23 @@ class EventLog:
         sequential read (read_event.go:37), and at 100 TB a serving
         layer reads only the fragments containing the page, never the
         log. Dense versions make that exact here: the page is a closed
-        version interval [lo, hi], fragment version ranges come from
-        parquet FOOTER STATS (metadata-only read, cached per immutable
-        file), and only overlapping fragments are read — pyarrow,
-        in-process, no job. Cost: one ≤1 KB manifest read + O(#frags)
-        cached stat lookups + the page's fragment reads; latency is
-        ms where the Spark path is seconds.
+        version interval [lo, hi], the manifest's version ranges select
+        the overlapping fragments, and only those are read — pyarrow,
+        in-process, no job. Cost: the manifest pages the interval
+        overlaps + the page's fragment reads; latency is ms where a
+        Spark job is seconds. There is no second path: paging
+        semantics come from the same ``_page_interval`` ``scan()``
+        uses, and a page the manifest cannot serve raises.
 
-        Falls back to ``scan(...).collect()`` (the manifest-snapshot
-        Spark path) if the pyarrow read cannot prove completeness —
-        e.g. a legacy fragment without stats whose listed file vanished
-        mid-read. Dense versions give the completeness check: a page of
-        [lo, hi] must yield exactly hi-lo+1 rows. Paging semantics come
-        from the same ``_page_interval`` the Spark path uses, so the
-        two paths cannot drift.
+        Dense versions give the invariant check: a page of [lo, hi]
+        yields exactly hi-lo+1 rows, or RuntimeError.
 
         ``label`` (extension, mirrors ``scan(label=...)``): serve a
         label-filtered page driver-side — the manifest's per-column
         stats skip fragments that cannot hold the label, matching rows
         filter exactly, and ``limit`` counts MATCHING rows (so the
-        density completeness check does not apply; any read failure
-        falls back to the Spark path, and pruning itself is sound by
-        construction — entries without stats are always read)."""
+        density check does not apply; pruning is sound by construction
+        — entries without label stats are always read)."""
         if label is not None:
             lo, hi, latest = self._page_interval(version, reverse, None, skip_first)
         else:
@@ -1610,15 +1626,12 @@ class EventLog:
         rows = self._rows_in_range(
             lo, hi, label=label, limit=limit, reverse=reverse
         )
-        if rows is None or (label is None and len(rows) != hi - lo + 1):
-            collected = self.scan(
-                version=version,
-                reverse=reverse,
-                limit=limit,
-                skip_first=skip_first,
-                label=label,
-            ).collect()
-            return [ScanRow(*r) for r in collected]
+        if label is None and len(rows) != hi - lo + 1:
+            raise RuntimeError(
+                f"page [{lo}, {hi}] read {len(rows)} rows, expected "
+                f"{hi - lo + 1}: the manifest's fragments do not cover "
+                "the interval"
+            )
         rows.sort(key=lambda r: r[0])
         out = [
             ScanRow(
@@ -1639,18 +1652,18 @@ class EventLog:
         label: str | None = None,
         limit: int | None = None,
         reverse: bool = False,
-    ) -> list[tuple[int, int, int, str, str, int]] | None:
+    ) -> list[tuple[int, int, int, str, str, int]]:
         """Storage seam for ``scan_rows``: every committed event with
         lo <= version <= hi, as (version, version_prev, timestamp,
-        label, payload, checksum) tuples in any order — or None if the
-        engine cannot serve the range driver-side. File engine: parquet
-        footer stats select the overlapping manifest fragments (range
-        cache keyed by (name, mtime, size) — fragments are immutable
-        once published, truncation rewrites change the key), pyarrow
-        reads just those. With ``label``, the manifest's per-column
-        label stats additionally drop fragments that cannot hold the
-        label (bounds + bloom — the same data skipping scan(label=...)
-        applies) and rows are filtered exactly.
+        label, payload, checksum) tuples in any order. File engine: the
+        manifest's version-range index selects the overlapping
+        fragments — O(manifest pages overlapped + matches), so a
+        1000-event page over a 100k-fragment log touches a handful of
+        entries — and pyarrow reads just those. With ``label``, page
+        summaries and entry stats additionally drop fragments that
+        cannot hold the label (bounds + bloom — the same data skipping
+        scan(label=...) applies) and rows are filtered exactly. A
+        broken chain or a missing fragment raises.
 
         With ``label`` AND ``limit``, fragments are read in version
         order (``reverse`` flips it) and the read STOPS once no unread
@@ -1659,40 +1672,10 @@ class EventLog:
         O(all remaining matches to the head) per page (the r8 shape:
         filter the full interval, then slice). May return more than
         ``limit`` matching rows; the caller slices after sorting."""
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:  # pragma: no cover - pyarrow ships in Spark
-            return None
-        # cache setup and every mutation happen under the engine RLock:
-        # the serving layer calls scan_rows from ThreadingHTTPServer
-        # threads, and unsynchronized evictions race (popitem on an
-        # emptied OrderedDict, lost _frag_rows_total updates). File
-        # reads stay OUTSIDE the lock — only dict ops are serialized.
-        with self._lock:
-            cache = getattr(self, "_frag_range_cache", None)
-            if cache is None:
-                cache = self._frag_range_cache = {}
-            if getattr(self, "_frag_row_cache", None) is None:
-                from collections import OrderedDict
-
-                self._frag_row_cache: OrderedDict = OrderedDict()
-                self._frag_rows_total = 0
-        # Candidate set: the manifest's version-range index selects only
-        # the fragments whose range MAY overlap the page — O(manifest
-        # pages overlapped + matches), so a 1000-event page over a
-        # 100k-fragment log touches a handful of entries, not 100k
-        # stat/footer probes. Entries without a recorded range (legacy
-        # adoption) fall through to the footer-stats probe below.
-        # per-column data skipping when a label is given: page-level
-        # summaries refute whole manifest pages before they load, entry
-        # stats refute single fragments; stat-less pages/entries are
-        # conservatively kept, so pruning can only drop fragments that
-        # provably lack the label
         positions = (
             list(_label_bloom_positions(label)) if label is not None else None
         )
-        if not self._refresh_published_state():
-            return None  # chain unusable: the Spark path raises loudly
+        self._require_published_state()
         with self._lock:
             if label is None:
                 cand = self._manifest.overlapping(lo, hi)
@@ -1703,144 +1686,87 @@ class EventLog:
                     page_ok=lambda m: _page_may_contain_label(m, label, positions),
                     entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
                 )
-        if label is not None:
-            if limit is not None:
-                # bounded label page: entries without a recorded range
-                # (legacy adoption) must always be read, so they go
-                # first; ranged entries follow in version order so the
-                # early-stop bar below is sound
-                unranged = [e for e in cand if e.get("lo") is None]
-                ranged = sorted(
-                    (e for e in cand if e.get("lo") is not None),
-                    key=(lambda e: -e["hi"]) if reverse else (lambda e: e["lo"]),
-                )
-                cand = unranged + ranged
         early_stop = label is not None and limit is not None
+        if early_stop:
+            # version order, so the early-stop bar below is sound
+            cand.sort(key=(lambda e: -e["hi"]) if reverse else (lambda e: e["lo"]))
         out: list[tuple] = []
-        try:
-            for entry in cand:
-                if early_stop and len(out) >= limit and entry.get("lo") is not None:
-                    # the page is full once the limit-th best match
-                    # outranks everything this (and every later, by the
-                    # sort) fragment could hold
-                    if reverse:
-                        bar = heapq.nlargest(limit, (r[0] for r in out))[-1]
-                        if entry["hi"] < bar:
-                            break
-                    else:
-                        bar = heapq.nsmallest(limit, (r[0] for r in out))[-1]
-                        if entry["lo"] > bar:
-                            break
-                fname = entry["n"]
-                if not fname.endswith(".parquet"):
-                    continue
-                full = os.path.join(self.path, fname)
-                st = os.stat(full)
-                key = (fname, st.st_mtime_ns, st.st_size)
-                with self._lock:
-                    rng = cache.get(key)
-                pf = None  # opened at most ONCE per fragment per page
-                if rng is None and entry.get("lo") is not None:
-                    # manifest range is authoritative for the file-level
-                    # prune; per-group stats load lazily if the read
-                    # path needs them
-                    rng = (entry["lo"], entry["hi"], None)
-                if rng is None:
-                    pf = pq.ParquetFile(full)
-                    stats = _version_group_stats(pf.metadata)
-                    if stats is None:
-                        return None  # stats unavailable: let Spark serve it
-                    # cache the per-group stats too (only when there IS
-                    # more than one group — single-group files never
-                    # need them), so repeated pages over a big compacted
-                    # fragment don't re-walk its footer every time
-                    rng = (
-                        min(s[0] for s in stats),
-                        max(s[1] for s in stats),
-                        stats if len(stats) > 1 else None,
-                    )
-                    with self._lock:
-                        cache[key] = rng
-                        if len(cache) > 4096:  # bound: evict arbitrary half
-                            for k in list(cache)[:2048]:
-                                cache.pop(k, None)
-                if rng[1] < lo or rng[0] > hi:
-                    continue
-                with self._lock:
-                    rows = self._frag_row_cache.get(key)
-                if rows is None:
-                    if pf is None:
-                        pf = pq.ParquetFile(full)
-                    md = pf.metadata
-                    n_rows = md.num_rows
-                    if n_rows > 16384 and (rng[0] < lo or rng[1] > hi):
-                        # big fragment, partial overlap: read ONLY the
-                        # row groups whose version stats overlap the
-                        # page (compact() writes 8 MiB row groups for
-                        # exactly this pruning unit); a direct
-                        # read_row_groups beats the dataset-filter
-                        # machinery ~2-4x
-                        stats = rng[2] if len(rng) > 2 else None
-                        if stats is None:
-                            stats = _version_group_stats(md)
-                            if stats is not None:
-                                # manifest-seeded range had no per-group
-                                # stats: cache them for the next page
-                                with self._lock:
-                                    cache[key] = (rng[0], rng[1], stats)
-                        groups = [
-                            g
-                            for g in range(md.num_row_groups)
-                            if stats is None
-                            or (stats[g][0] <= hi and stats[g][1] >= lo)
-                        ]
-                        tbl = pf.read_row_groups(groups)
-                        # trim Arrow-side BEFORE the Python conversion:
-                        # a row group holds up to ~10^6 rows and
-                        # to_pylist of the untrimmed group would dwarf
-                        # the read itself
-                        import pyarrow.compute as pc
-
-                        col = tbl.column("version")
-                        tbl = tbl.filter(
-                            pc.and_(
-                                pc.greater_equal(col, lo),
-                                pc.less_equal(col, hi),
-                            )
-                        )
-                    else:
-                        # small or fully-covered fragment: plain footer+
-                        # column read is ~4x cheaper than the dataset path
-                        tbl = pf.read()
-                    rows = list(zip(*[
-                        tbl.column(c).to_pylist()
-                        for c in (
-                            "version", "version_prev", "timestamp",
-                            "label", "payload", "checksum",
-                        )
-                    ]))
-                    if n_rows <= 1024 and n_rows == len(rows):
-                        # hot-tail cache: single-append fragments are
-                        # immutable and tiny — repeated pages over an
-                        # uncompacted tail must not re-open 1000 files
-                        with self._lock:
-                            if key not in self._frag_row_cache:
-                                self._frag_rows_total += n_rows
-                                self._frag_row_cache[key] = rows
-                            while (
-                                self._frag_rows_total > 200_000
-                                and self._frag_row_cache
-                            ):
-                                _, old = self._frag_row_cache.popitem(last=False)
-                                self._frag_rows_total -= len(old)
-                out.extend(
-                    r
-                    for r in rows
-                    if lo <= r[0] <= hi and (label is None or r[3] == label)
-                )
-        except (FileNotFoundError, OSError, ValueError):
-            return None  # manifest/fragment race: Spark path re-snapshots
+        for entry in cand:
+            if early_stop and len(out) >= limit:
+                # the page is full once the limit-th best match
+                # outranks everything this (and every later, by the
+                # sort) fragment could hold
+                if reverse:
+                    bar = heapq.nlargest(limit, (r[0] for r in out))[-1]
+                    if entry["hi"] < bar:
+                        break
+                else:
+                    bar = heapq.nsmallest(limit, (r[0] for r in out))[-1]
+                    if entry["lo"] > bar:
+                        break
+            with self._lock:  # fragments are immutable under uuid names
+                rows = self._frag_row_cache.get(entry["n"])
+            if rows is None:
+                rows = self._read_fragment_rows(entry, lo, hi)
+            out.extend(
+                r
+                for r in rows
+                if lo <= r[0] <= hi and (label is None or r[3] == label)
+            )
         return out
+
+    def _read_fragment_rows(self, entry: dict, lo: int, hi: int) -> list[tuple]:
+        """One fragment's rows that may fall in [lo, hi]. The hot-tail
+        cache mutates under the engine RLock (serving threads share
+        it); the file read stays outside it."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
+        md = pf.metadata
+        if md.num_rows > 16384 and (entry["lo"] < lo or entry["hi"] > hi):
+            # big fragment, partial overlap: read ONLY the row groups
+            # whose version stats (from the footer this read already
+            # opened) overlap the page — compact() writes 8 MiB row
+            # groups for exactly this pruning unit; a direct
+            # read_row_groups beats the dataset-filter machinery ~2-4x
+            stats = _version_group_stats(md)
+            groups = [
+                g
+                for g in range(md.num_row_groups)
+                if stats is None or (stats[g][0] <= hi and stats[g][1] >= lo)
+            ]
+            tbl = pf.read_row_groups(groups)
+            # trim Arrow-side BEFORE the Python conversion: a row group
+            # holds up to ~10^6 rows and to_pylist of the untrimmed
+            # group would dwarf the read itself
+            col = tbl.column("version")
+            tbl = tbl.filter(
+                pc.and_(pc.greater_equal(col, lo), pc.less_equal(col, hi))
+            )
+        else:
+            # small or fully-covered fragment: plain footer+column read
+            # is ~4x cheaper than the dataset path
+            tbl = pf.read()
+        rows = list(zip(*[
+            tbl.column(c).to_pylist()
+            for c in (
+                "version", "version_prev", "timestamp",
+                "label", "payload", "checksum",
+            )
+        ]))
+        if md.num_rows <= 1024:
+            # hot-tail cache: single-append fragments are immutable and
+            # tiny — repeated pages over an uncompacted tail must not
+            # re-open 1000 files
+            with self._lock:
+                if entry["n"] not in self._frag_row_cache:
+                    self._frag_rows_total += len(rows)
+                    self._frag_row_cache[entry["n"]] = rows
+                while self._frag_rows_total > 200_000 and self._frag_row_cache:
+                    _, old = self._frag_row_cache.popitem(last=False)
+                    self._frag_rows_total -= len(old)
+        return rows
 
     def dataframe(self) -> DataFrame:
         """The whole committed log as a DataFrame (analysis entry point)."""
@@ -2023,7 +1949,9 @@ class EventLog:
             if df.isEmpty():
                 return
             n = target_partitions or max(1, self.spark.sparkContext.defaultParallelism // 4)
-            tmp = self.path + f".compact.{uuid.uuid4().hex}"
+            # staged inside the log as a dot-prefixed dir: no reader
+            # lists it, and vacuum reaps it if this process dies
+            tmp = os.path.join(self.path, f".compact-{uuid.uuid4().hex}.tmp")
             # 8 MiB row groups (vs the 128 MiB default): row groups are
             # the pruning unit of the scan_rows page path — a page read
             # inside a compacted fragment costs one row group, and at
@@ -2031,47 +1959,35 @@ class EventLog:
             if cluster_by not in (None, "label"):
                 raise ValueError(f"unknown cluster_by {cluster_by!r}")
             cols = ["label", "version"] if cluster_by == "label" else ["version"]
-            (
-                df.repartitionByRange(n, *cols)
-                .sortWithinPartitions(*cols)
-                .write.option("parquet.block.size", 8 * 1024 * 1024)
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            tag = uuid.uuid4().hex[:8]
-            for f in sorted(os.listdir(tmp)):
-                if f.startswith(("_", ".")):
-                    continue
-                name = f"compact-{tag}-{f}"
-                # dot-prefixed landing + rename: never a torn footer
-                landing = os.path.join(self.path, "." + name + ".tmp")
-                shutil.move(os.path.join(tmp, f), landing)
-                os.rename(landing, os.path.join(self.path, name))
-                full = os.path.join(self.path, name)
-                entry: dict = {"n": name}
-                rng = self._parquet_version_range(full)
-                if rng is not None:
-                    entry["lo"], entry["hi"] = rng
-                # exact label stats (bounds + bloom): compaction just
-                # rewrote every byte of this file, so one read-back of
-                # the dictionary-encoded label column is a rounding
-                # error on the OPTIMIZE job — and it keeps label scans
-                # prunable on compacted logs, where range-partitioned
-                # files mix labels and footer bounds alone would span
-                try:
-                    import pyarrow.compute as pc
-                    import pyarrow.parquet as pqt
+            try:
+                (
+                    df.repartitionByRange(n, *cols)
+                    .sortWithinPartitions(*cols)
+                    .write.option("parquet.block.size", 8 * 1024 * 1024)
+                    .mode("overwrite")
+                    .parquet(tmp)
+                )
+                import pyarrow.compute as pc
+                import pyarrow.parquet as pq
 
+                staged = self._staged_entries(tmp, "compact")
+                for src, entry in staged:
+                    # exact label stats (bounds + bloom): compaction just
+                    # rewrote every byte of this file, so one read-back
+                    # of the dictionary-encoded label column is a
+                    # rounding error on the OPTIMIZE job — and it keeps
+                    # label scans prunable on compacted logs, where
+                    # range-partitioned files mix labels and footer
+                    # bounds alone would span
                     labs = pc.unique(
-                        pqt.read_table(full, columns=["label"]).column("label")
+                        pq.read_table(src, columns=["label"]).column("label")
                     ).to_pylist()
                     entry.update(_label_stats_entry(labs))
-                except Exception:
-                    lrng = self._parquet_label_range(full)
-                    if lrng is not None:
-                        entry["lmin"], entry["lmax"] = lrng
-                self._pending_add.append(entry)
-            shutil.rmtree(tmp, ignore_errors=True)
+                for src, entry in staged:
+                    os.rename(src, os.path.join(self.path, entry["n"]))
+                    self._pending_add.append(entry)
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
             self._pending_remove.extend(old)
             self._interactive_frags = 0
             if not self._publish_rebase_on_claim_loss(old):
@@ -2278,10 +2194,13 @@ class EventLog:
         """Delete files older than the grace window; returns the number
         of files removed. Two kinds go: retired files (the ledger's
         timestamp is past the window) and unpublished crash leftovers —
-        data fragments and dot-prefixed staging temps that
+        data fragments and dot-prefixed staging temps (files, and the
+        ``.bulk-*.tmp``/``.compact-*.tmp`` dirs Spark writes into) that
         ``published_files`` does not name, whose last write or rename
-        (mtime/ctime) is past the window, so a live writer's fragment
-        between its rename and its delta claim is never touched. Run by
+        (mtime/ctime, the newest of anything under a staging dir) is
+        past the window, so a live writer's fragment between its
+        rename and its delta claim, or a running job's staging dir, is
+        never touched. Run by
         ``compact`` itself (so the ledger never grows past one
         compaction cycle) or manually with ``grace_seconds=0`` when no
         reader or writer anywhere can be live. The analog at scale is a
@@ -2299,10 +2218,13 @@ class EventLog:
                     continue
                 full = os.path.join(self.path, f)
                 try:
-                    st = os.stat(full)
-                    if now - max(st.st_mtime, st.st_ctime) >= grace:
+                    if now - _newest_change(full) < grace:
+                        continue
+                    if os.path.isdir(full):
+                        shutil.rmtree(full)
+                    else:
                         os.remove(full)
-                        removed += 1
+                    removed += 1
                 except FileNotFoundError:
                     pass
             removed += self._reap_retired(now, grace)

@@ -441,7 +441,7 @@ def log_scan_label_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch — ``append_dataframe(order_cols=["label","event_id"])``
     range-partitions the batch, so every written fragment holds a
     contiguous label range and carries tight label bounds from its
-    footer (``_parquet_label_range``) — then ``scan(label='purchase')``
+    footer (``_staged_entries``) — then ``scan(label='purchase')``
     consults the manifest stats and opens ONLY the fragments whose
     bounds may hold the label (correctness never depends on the
     pruning — the exact label filter stays in the plan).

@@ -25,7 +25,11 @@ table format uses instead:
 * **Version-range keyed pages**: a page read for versions [lo, hi]
   loads only the pages whose range overlaps — O(pages overlapped),
   not O(files). This is what keeps the serving layer's ``scan_rows``
-  fast path flat as fragments accumulate.
+  flat as fragments accumulate, and it is the ONLY index a page read
+  uses: every entry carries its fragment's ``lo``/``hi``. ``commit``
+  refuses an entry without a range before claiming anything, and
+  loading a chain that holds one (written by an earlier release)
+  refuses to open, naming the file.
 * **The delta claim is the commit point**: a delta is published with
   an atomic create-if-absent (``put_if_absent``), so of two writers
   racing for one seq exactly one wins and the other retries at the
@@ -171,12 +175,31 @@ class ManifestSeqClaimed(Exception):
 
 
 def _entry_overlaps(e: dict, lo: int, hi: int) -> bool:
-    """Whether an entry MAY hold versions in [lo, hi]. Entries without
-    a recorded range (a footer without stats) always may."""
-    elo = e.get("lo")
-    if elo is None:
-        return True
-    return not (e["hi"] < lo or elo > hi)
+    """Whether an entry's version range meets [lo, hi]."""
+    return not (e["hi"] < lo or e["lo"] > hi)
+
+
+def _rangeless(entries: list[dict]) -> list:
+    """Names of the entries that carry no version range."""
+    return [
+        e.get("n") or e.get("f")  # a data-file entry, or a page meta
+        for e in entries
+        if None in (e.get("lo"), e.get("hi"))
+    ]
+
+
+def _refuse_rangeless(name: str, entries: list[dict]) -> None:
+    """Refuse to load a manifest file holding range-less entries: page
+    reads select fragments by range alone, so such an entry could never
+    be served."""
+    missing = _rangeless(entries)
+    if missing:
+        raise RuntimeError(
+            f"manifest file {name} holds entries without a version range "
+            f"({missing[:3]}), a format this release no longer opens. Run "
+            "compact with the release that wrote it (compaction records "
+            "every fragment's range), then reopen; see MIGRATION.md."
+        )
 
 
 def _page_label_meta(chunk: list[dict]) -> dict:
@@ -230,7 +253,6 @@ class ManifestLog:
         self.seq = 0  # the snapshot this mirror currently reflects
         self._ckpt_seq = 0  # seq of the checkpoint the mirror is based on
         # page metas from the base checkpoint: {"f", "lo", "hi", "count"}
-        # (lo/hi None = page holds entries without recorded ranges)
         self._page_metas: list[dict] = []
         self._page_cache: dict[str, list[dict]] = {}  # page file -> raw entries
         self._tail: list[dict] = []  # adds since the base checkpoint
@@ -306,6 +328,7 @@ class ManifestLog:
                 fresh._page_metas = list(data["pages"])
             except (FileNotFoundError, ValueError, KeyError) as e:
                 raise ManifestChainBroken(f"checkpoint {ck} unreadable") from e
+            _refuse_rangeless(_CKPT.format(ck), fresh._page_metas)
             fresh._ckpt_seq = fresh.seq = ck
         try:
             for s in range(fresh.seq + 1, seq + 1):
@@ -335,6 +358,7 @@ class ManifestLog:
         if raw is None:
             raise FileNotFoundError(_DELTA.format(s))
         d = json.loads(raw)
+        _refuse_rangeless(_DELTA.format(s), d.get("add", []))
         self._apply(d.get("add", []), d.get("remove", []))
 
     def _apply(self, add: list[dict], remove: list[str]) -> None:
@@ -382,10 +406,10 @@ class ManifestLog:
         return [e["n"] for e in self.entries()]
 
     def overlapping(self, lo: int, hi: int) -> list[dict]:
-        """Entries that MAY hold versions in [lo, hi]: loads only the
-        pages whose page-level range overlaps (plus range-less pages
-        and the in-memory tail) — O(pages overlapped), the property
-        that keeps a 1000-event page read flat at any fragment count."""
+        """Entries whose version range meets [lo, hi]: loads only the
+        pages whose page-level range overlaps, plus the in-memory tail
+        — O(pages overlapped), the property that keeps a 1000-event
+        page read flat at any fragment count."""
         return self.candidates(lo, hi)
 
     def candidates(
@@ -395,22 +419,18 @@ class ManifestLog:
         page_ok=None,
         entry_ok=None,
     ) -> list[dict]:
-        """Entries passing the version-range overlap ([lo, hi] when
-        given) plus the caller's predicates — with ``page_ok(meta)``
-        consulted BEFORE a page is loaded, so a predicate that can
-        refute a whole page from its rolled-up summaries (label bounds
-        / bloom union, ``_page_label_meta``) skips the page file and
-        every entry in it. Both predicates must be conservative (True
-        when the page/entry lacks the stats to refute); the tail is
-        in-memory and gets only the entry predicate."""
+        """Entries whose version range meets [lo, hi] (every entry
+        when no range is given) and that pass the caller's predicates
+        — with ``page_ok(meta)`` consulted BEFORE a page is loaded, so
+        a predicate that can refute a whole page from its rolled-up
+        summaries (label bounds / bloom union, ``_page_label_meta``)
+        skips the page file and every entry in it. Both predicates
+        must be conservative (True when the page/entry lacks the stats
+        to refute); the tail is in-memory and gets only the entry
+        predicate."""
         out: list[dict] = []
         for m in self._page_metas:
-            mlo = m.get("lo")
-            if (
-                lo is not None
-                and mlo is not None
-                and (m["hi"] < lo or mlo > hi)
-            ):
+            if lo is not None and (m["hi"] < lo or m["lo"] > hi):
                 continue
             if page_ok is not None and not page_ok(m):
                 continue
@@ -469,7 +489,15 @@ class ManifestLog:
         past a lagging pointer. Returns (new seq, manifest files
         superseded by a roll-up) — the caller retires the latter into
         the vacuum ledger once the pointer is out (publish-before-
-        delete, same as data fragments)."""
+        delete, same as data fragments). An add entry without a
+        version range is refused with ValueError before anything is
+        claimed: page reads select fragments by range alone."""
+        missing = _rangeless(add)
+        if missing:
+            raise ValueError(
+                f"manifest entries {missing} carry no version range (lo/hi); "
+                "every published entry must"
+            )
         s = self.seq + 1
         rec: dict = {"seq": s, "add": add, "remove": remove}
         if head is not None:
@@ -515,6 +543,7 @@ class ManifestLog:
                     head = dict(head)
                     head["sc"] = sc
                 return head
+            _refuse_rangeless(name, d.get("add", []))
             if require_head and not d.get("head"):
                 raise RuntimeError(
                     f"manifest delta {name} lies past the published pointer "
@@ -635,13 +664,10 @@ class ManifestLog:
         old_pages = {m["f"] for m in self._page_metas}
         old_ckpt_seq, had_ckpt = self._ckpt_seq, self._ckpt_seq > 0
 
-        ranged = sorted(
-            (e for e in repack if e.get("lo") is not None), key=lambda e: e["lo"]
-        )
-        unranged = [e for e in repack if e.get("lo") is None]
+        repack.sort(key=lambda e: e["lo"])
         new_metas: list[dict] = []
-        for i in range(0, len(ranged), self.PAGE_ENTRIES):
-            chunk = ranged[i : i + self.PAGE_ENTRIES]
+        for i in range(0, len(repack), self.PAGE_ENTRIES):
+            chunk = repack[i : i + self.PAGE_ENTRIES]
             pf = f"page-{uuid.uuid4().hex}.json"
             self._write_json(pf, chunk)
             meta = {
@@ -653,13 +679,6 @@ class ManifestLog:
             meta.update(_page_label_meta(chunk))
             new_metas.append(meta)
             self._page_cache[pf] = chunk
-        if unranged:
-            pf = f"page-{uuid.uuid4().hex}.json"
-            self._write_json(pf, unranged)
-            meta = {"f": pf, "lo": None, "hi": None, "count": len(unranged)}
-            meta.update(_page_label_meta(unranged))
-            new_metas.append(meta)
-            self._page_cache[pf] = unranged
 
         metas = kept_metas + new_metas
         self._write_json(_CKPT.format(self.seq), {"seq": self.seq, "pages": metas})

@@ -1059,6 +1059,7 @@ def _sq_l2(a, b, n: int):
     # round-trips per term
     if isinstance(a, str) and isinstance(b, str):
         return _sq_l2_sql(a, b, n)
+    a, b = _as_col(a), _as_col(b)
     acc = F.lit(0.0)
     for i in range(n):
         d = a.getItem(i) - b.getItem(i)
@@ -1072,10 +1073,17 @@ def _dot(a, b, n: int = 64):
         for i in range(n):
             e = f"({e} + {a}[{i}] * {b}[{i}])"
         return F.expr(e)
+    a, b = _as_col(a), _as_col(b)
     acc = F.lit(0.0)
     for i in range(n):
         acc = acc + a.getItem(i) * b.getItem(i)
     return acc
+
+
+def _as_col(c):
+    """A column name or a Column, as a Column (the kernels above accept
+    either, mixed)."""
+    return F.col(c) if isinstance(c, str) else c
 
 
 def _emb_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:

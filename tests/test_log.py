@@ -4,6 +4,7 @@ Each test cites the reference case it ports."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -291,8 +292,6 @@ def test_streamed_ordered_append_contract(spark, tmp_path):
     replaced), fragment footer ranges stay DISJOINT and contiguous (the
     steering trick — pruning depends on it), integrity holds, and an
     invalid row aborts with nothing staged or visible."""
-    import glob
-
     from pyspark.sql import functions as F
 
     path = str(tmp_path / "streamed")
@@ -342,11 +341,40 @@ def test_streamed_ordered_append_contract(spark, tmp_path):
         log.append_dataframe(bad, on_invalid="error", order_cols=["k"])
     assert log.version() == 2000
     assert len(os.listdir(path)) == n_files
-    assert not glob.glob(path + ".bulk.*")
+    assert not glob.glob(path + ".bulk*")
+    assert not glob.glob(os.path.join(path, ".bulk-*"))
     # tiny ordered batches (1 row, empty-ish) keep working
     one = spark.createDataFrame([("z", '{"y":2}', 9)],
                                 "label string, payload string, k long")
     assert log.append_dataframe(one, order_cols=["k"]).version == 2001
+
+
+@pytest.mark.parametrize("order_cols", [["k"], ["k", "j"]])
+def test_streamed_ordered_append_null_keys_first(spark, tmp_path, order_cols):
+    """ADVICE (medium): NULL order keys in streamed ingest. Versions
+    follow ``orderBy(*order_cols)`` — nulls first — over a parquet
+    source holding NULL keys, for one and for two order columns; the
+    boundary sample must not try to order None against values."""
+    rows = [
+        (
+            f"l{i}",
+            json.dumps({"i": i}),
+            None if i % 4 == 0 else (i * 7) % 11,
+            None if i % 3 == 0 else i % 5,
+        )
+        for i in range(60)
+    ]
+    src_path = str(tmp_path / "src")
+    spark.createDataFrame(
+        rows, "label string, payload string, k long, j long"
+    ).write.parquet(src_path)
+    src = spark.read.parquet(src_path)
+    log = EventLog.create(spark, str(tmp_path / "nulls"))
+    assert log.append_dataframe(src, order_cols=order_cols).version == 60
+    key = {r[1]: r[2:] for r in rows}
+    got = [key[r.payload][: len(order_cols)] for r in log.scan_rows()]
+    want = [tuple(r) for r in src.orderBy(*order_cols).select(*order_cols).collect()]
+    assert got == want
 
 
 def test_streamed_versioning_internals(spark):
@@ -799,9 +827,9 @@ def test_scan_rows_matches_scan_dataframe(log):
 
 
 def test_scan_rows_multi_fragment_and_compaction(spark, tmp_path):
-    """The pyarrow path prunes by fragment footer stats: verify against
-    a multi-fragment log, then across a compaction (fragment set and
-    stat-cache keys change) and more appends on top."""
+    """The pyarrow path prunes by the manifest's fragment ranges: verify
+    against a multi-fragment log, then across a compaction (the
+    fragment set changes) and more appends on top."""
     log = EventLog.create(spark, str(tmp_path / "sr"))
     for i in range(1, 13):
         log.append(f"e{i}", json.dumps({"ix": i}))  # one fragment each
@@ -818,18 +846,99 @@ def test_scan_rows_multi_fragment_and_compaction(spark, tmp_path):
     ]
 
 
-def test_scan_rows_falls_back_when_stats_unserveable(spark, tmp_path, monkeypatch):
-    """If the fragment range probe cannot prove completeness the page
-    must come from the Spark snapshot path, not a short read."""
-    log = EventLog.create(spark, str(tmp_path / "fb"))
+def test_scan_rows_raises_when_manifest_misses_rows(spark, tmp_path):
+    """``scan_rows`` has one read path: the manifest's fragments. A dense
+    page they do not fill raises, naming the interval and the count it
+    got, instead of a short page or a second read of the same
+    fragments through Spark. Both engines share the check."""
+    from eventlog_spark.inmem import InMemEventLog
+
+    log = EventLog.create(spark, str(tmp_path / "gap"))
     for i in range(1, 5):
         log.append(f"e{i}", json.dumps({"ix": i}))
-    monkeypatch.setattr(
-        type(log), "_rows_in_range", lambda self, lo, hi, **kw: None
+    (v3,) = [e["n"] for e in log._manifest.overlapping(3, 3)]
+    with log._lock:  # a delta that drops v3's fragment, head unchanged
+        log._pending_remove.append(v3)
+        log._write_state()
+    assert [r.version for r in log.scan_rows(version=1, limit=2)] == [1, 2]
+    with pytest.raises(RuntimeError, match=r"page \[2, 4\] read 2 rows, expected 3"):
+        log.scan_rows(version=2, limit=3)
+    mem = InMemEventLog.create(None)
+    for i in range(1, 5):
+        mem.append(f"e{i}", json.dumps({"ix": i}))
+    del mem._rows[2]
+    with pytest.raises(RuntimeError, match=r"page \[1, 4\] read 3 rows"):
+        mem.scan_rows()
+
+
+def test_compact_aborts_when_footer_has_no_version_range(
+    spark, tmp_path, monkeypatch
+):
+    """Every published entry carries its version range. A rewritten file
+    whose footer gives none aborts the compaction before any rename:
+    the manifest, the directory and the pages served stay as they
+    were, and no staging dir is left behind."""
+    from eventlog_spark import log as log_mod
+
+    log = EventLog.create(spark, str(tmp_path / "norange"))
+    for i in range(1, 4):
+        log.append(f"e{i}", json.dumps({"ix": i}))
+    names, listing = log._manifest_files(), sorted(os.listdir(log.path))
+    monkeypatch.setattr(log_mod, "_version_group_stats", lambda md: None)
+    with pytest.raises(RuntimeError, match="no version statistics"):
+        log.compact(target_partitions=1)
+    monkeypatch.undo()
+    assert log._manifest_files() == names
+    assert sorted(os.listdir(log.path)) == listing
+    assert [r.version for r in log.scan_rows()] == [1, 2, 3]
+
+
+def test_vacuum_reaps_crashed_staging_dirs(tmp_path):
+    """A crashed bulk append or compaction leaves its dot-prefixed
+    staging dir inside the log. ``vacuum`` removes the whole dir once
+    the newest change anywhere under it is past the grace window, and
+    keeps one that a running job still writes into."""
+    log = EventLog.create(None, str(tmp_path / "stage"))
+    log.append("a", '{"i":1}')
+    old = os.path.join(log.path, ".bulk-0123abcd.tmp")
+    live = os.path.join(log.path, ".compact-4567cdef.tmp")
+    for d in (old, live):
+        os.makedirs(os.path.join(d, "_temporary", "0"))
+        with open(os.path.join(d, "_temporary", "0", "part-0.parquet"), "w") as f:
+            f.write("partial")
+    time.sleep(1.2)
+    deep = os.path.join(live, "_temporary", "0", "_temporary", "attempt_1")
+    os.makedirs(deep)
+    with open(os.path.join(deep, "part-1.parquet"), "w") as f:
+        f.write("being written")
+    assert log.vacuum(grace_seconds=1.0) == 1
+    assert not os.path.exists(old)
+    assert os.path.exists(os.path.join(deep, "part-1.parquet"))
+    assert [r.version for r in log.scan_rows()] == [1]
+
+
+def test_crashed_bulk_append_stages_inside_log_dir(spark, tmp_path, monkeypatch):
+    """A bulk append stages inside the log dir, never beside it, so a
+    crash before its cleanup leaves nothing ``vacuum`` cannot see."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    root = tmp_path / "logs"
+    log = EventLog.create(spark, str(root / "l"))
+    batch = spark.range(3).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
     )
-    rows = log.scan_rows(version=2, limit=2)
-    assert [r.version for r in rows] == [2, 3]
-    assert [r.version_next for r in rows] == [3, 4]
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **kw: None)  # "crash"
+    assert log.append_dataframe(batch, order_cols=["id"]).version == 3
+    monkeypatch.undo()
+    assert os.listdir(root) == ["l"]
+    assert glob.glob(os.path.join(log.path, ".bulk-*.tmp"))
+    assert log.vacuum(grace_seconds=0) == 1
+    assert not glob.glob(os.path.join(log.path, ".bulk-*"))
+    assert [r.version for r in log.scan_rows()] == [1, 2, 3]
 
 
 def test_minor_compact_folds_small_fragments(spark, tmp_path, monkeypatch):

@@ -4,8 +4,9 @@ The round-7 design embedded the full data-file list in ``_state.json``
 — O(total files) per commit and per snapshot read. These tests pin the
 replacement's contract: O(1) per-commit delta records, paged
 checkpoints that reuse clean pages, version-range page pruning for the
-scan_rows fast path, recovery, and the refusals (pre-manifest state
-file, head-less delta past the pointer, chain gone).
+scan_rows page path, recovery, and the refusals (pre-manifest state
+file, head-less delta past the pointer, range-less entries, chain
+gone).
 """
 
 from __future__ import annotations
@@ -313,6 +314,53 @@ def test_manifest_unit_overlapping_and_tombstones(tmp_path):
     os.remove(os.path.join(str(tmp_path), "_manifest", f"delta-{1:020d}.json"))
     with pytest.raises(ManifestChainBroken):
         ManifestLog(str(tmp_path)).load(3)
+
+
+def test_commit_refuses_rangeless_entry(tmp_path):
+    """Every published entry carries its version range — the only index
+    a page read uses — so ``commit`` refuses an add without one before
+    claiming anything: no delta lands and the mirror does not move."""
+    m = ManifestLog(str(tmp_path))
+    m.commit([{"n": "f1.parquet", "lo": 1, "hi": 10}], [])
+    for bad in ({"n": "f2.parquet"}, {"n": "f2.parquet", "lo": 11, "hi": None}):
+        with pytest.raises(ValueError, match="f2.parquet"):
+            m.commit([bad], ["f1.parquet"])
+        assert (m.seq, m.names()) == (1, ["f1.parquet"])
+        assert m._store.get(f"delta-{2:020d}.json") is None
+
+
+def test_open_refuses_rangeless_delta_entry(tmp_path):
+    """A chain holding a range-less delta entry (an earlier release
+    published one when a footer had no version stats) refuses to open,
+    naming the file, instead of serving pages through a footer probe."""
+    log = EventLog.create(None, str(tmp_path / "log"))
+    log.append("a", '{"i":1}')
+    log.append("b", '{"i":2}')
+    delta = os.path.join(log.path, "_manifest", f"delta-{2:020d}.json")
+    with open(delta) as f:
+        rec = json.load(f)
+    del rec["add"][0]["lo"], rec["add"][0]["hi"]
+    with open(delta, "w") as f:
+        json.dump(rec, f)
+    with pytest.raises(RuntimeError, match=f"delta-{2:020d}.json"):
+        EventLog.open(None, log.path)
+
+
+def test_load_refuses_rangeless_checkpoint_page(tmp_path):
+    """The checkpoint shape an earlier release wrote for range-less
+    entries — one page meta with no ``lo``/``hi`` — refuses to load,
+    naming the checkpoint."""
+    m = ManifestLog(str(tmp_path))
+    m.commit([{"n": "f1.parquet", "lo": 1, "hi": 10}], [])
+    m._checkpoint()
+    ckpt = os.path.join(str(tmp_path), "_manifest", f"checkpoint-{1:020d}.json")
+    with open(ckpt) as f:
+        rec = json.load(f)
+    rec["pages"][0]["lo"] = rec["pages"][0]["hi"] = None
+    with open(ckpt, "w") as f:
+        json.dump(rec, f)
+    with pytest.raises(RuntimeError, match=f"checkpoint-{1:020d}.json"):
+        ManifestLog(str(tmp_path)).load(1)
 
 
 _STORM_WRITER = r"""

@@ -1,13 +1,12 @@
 """Model-based stateful test of the manifest chain.
 
-Hypothesis drives random sequences of commits (adds with and without
-version ranges, removes hitting both paged and tail entries) across
+Hypothesis drives random sequences of commits (ranged adds, refused
+range-less adds, removes hitting both paged and tail entries) across
 forced-small checkpoint roll-ups and page repacks, interleaved with
 cold reloads and stale-mirror replays — checking after every step that
 the mirror equals a trivially-correct model (a dict of live entries):
-``names()``/``count()`` exact, ``candidates(lo, hi)`` a conservative
-superset that never misses an overlapping entry and never keeps a
-provably-disjoint ranged one, and ``page_survey`` accounting closed.
+``names()``/``count()`` exact, ``candidates(lo, hi)`` exactly the
+entries whose range overlaps, and ``page_survey`` accounting closed.
 The example-based tests in test_manifest.py pin known shapes; this
 machine searches the repack/tombstone/reuse state space.
 """
@@ -18,6 +17,7 @@ import os
 import shutil
 import tempfile
 
+import pytest
 from hypothesis import settings
 from hypothesis import strategies as st
 from hypothesis.stateful import (
@@ -43,7 +43,7 @@ class ManifestChain(RuleBasedStateMachine):
         # repack/reuse/tombstone machinery instead of hiding in the tail
         self.m.CHECKPOINT_EVERY = 3
         self.m.PAGE_ENTRIES = 4
-        self.model: dict[str, tuple[int, int] | None] = {}
+        self.model: dict[str, tuple[int, int]] = {}
         self.next_id = 0
 
     # -- operations ------------------------------------------------------------
@@ -54,15 +54,20 @@ class ManifestChain(RuleBasedStateMachine):
         for _ in range(n):
             i = self.next_id
             self.next_id += 1
-            name = f"part-{i:06d}.parquet"
-            e: dict = {"n": name}
-            rng = None
+            e: dict = {"n": f"part-{i:06d}.parquet"}
             if ranged:
-                rng = (i * 10 + 1, i * 10 + 7)
-                e["lo"], e["hi"] = rng
+                e["lo"], e["hi"] = i * 10 + 1, i * 10 + 7
             add.append(e)
-            self.model[name] = rng
+        if not ranged:
+            # every published entry carries its range: a range-less add
+            # is refused before anything is claimed
+            seq = self.m.seq
+            with pytest.raises(ValueError):
+                self.m.commit(add, [])
+            assert self.m.seq == seq
+            return
         self.m.commit(add, [])
+        self.model.update((e["n"], (e["lo"], e["hi"])) for e in add)
 
     @rule(k=st.integers(1, 4), seed=st.integers(0, 10**6))
     def commit_remove(self, k, seed):
@@ -107,14 +112,12 @@ class ManifestChain(RuleBasedStateMachine):
             return
         assert sorted(self.m.names()) == sorted(self.model)
         assert self.m.count() == len(self.model)
-        # candidates(lo, hi): conservative — keeps every overlapping or
-        # unranged entry, drops provably-disjoint ranged ones
+        # candidates(lo, hi): keeps every overlapping entry, drops every
+        # disjoint one
         lo, hi = 25, 95
         got = {e["n"] for e in self.m.candidates(lo, hi)}
         for name, rng in self.model.items():
-            if rng is None:
-                assert name in got  # unranged: always kept
-            elif rng[1] >= lo and rng[0] <= hi:
+            if rng[1] >= lo and rng[0] <= hi:
                 assert name in got  # overlap: must never be missed
             else:
                 assert name not in got  # disjoint range: must be pruned

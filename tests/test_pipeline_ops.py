@@ -1660,3 +1660,17 @@ def test_np_router_and_lut_match_jvm(spark, sf_dir):
     ).collect()
     for r in got:
         assert r["s"] == r["r"] and str(r["s"]) == str(r["r"])
+
+
+def test_distance_kernels_accept_mixed_str_and_column(spark):
+    """ADVICE (low): the unrolled squared-L2 and dot kernels take column
+    names, Columns, or one of each — a mixed call equals the all-string
+    call."""
+    from eventlog_spark.operators.curation import _dot, _sq_l2
+
+    df = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [0.5, -1.0, 4.0])], "a array<double>, b array<double>"
+    )
+    for fn, want in ((_sq_l2, 10.25), (_dot, 10.5)):
+        for a, b in (("a", "b"), ("a", F.col("b")), (F.col("a"), "b")):
+            assert df.select(fn(a, b, 3).alias("v")).first().v == want

@@ -45,9 +45,11 @@ Design (Spark-first, not a port):
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import hashlib
 import heapq
+import itertools
 import json
 import os
 import queue
@@ -93,6 +95,12 @@ EVENT_SCHEMA = StructType(
 _STATE_FILE = "_state.json"  # leading underscore → invisible to parquet readers
 _META_FILE = "_eventlog_meta.json"
 
+# Row-group size of every driver-side write (commit fragments and minor
+# folds) and the hot-tail cache's fragment bound: a page read decodes
+# whole row groups, so this caps what a 1000-event page decodes beyond
+# its own rows, and a fragment of at most one group is cached whole.
+ROW_GROUP_ROWS = 1024
+
 
 def _version_group_stats(md) -> list[tuple[int, int]] | None:
     """Per-row-group (min, max) of the ``version`` column from a parquet
@@ -108,6 +116,25 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
             return None
         out.append((s.min, s.max))
     return out if out else None
+
+
+def _table_rows(tbl) -> list[tuple]:
+    """An event table as (version, version_prev, timestamp, label,
+    payload, checksum) tuples."""
+    cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
+    return list(zip(*[tbl.column(c).to_pylist() for c in cols]))
+
+
+def _page_mask(tbl, lo: int, hi: int, label: str | None):
+    """Arrow mask of the rows a page over [lo, hi] returns: lo <=
+    version <= hi, and label == ``label`` when given."""
+    import pyarrow.compute as pc
+
+    ver = tbl.column("version")
+    keep = pc.and_(pc.greater_equal(ver, lo), pc.less_equal(ver, hi))
+    if label is not None:
+        keep = pc.and_(keep, pc.equal(tbl.column("label"), label))
+    return keep
 
 
 def _newest_change(full: str) -> float:
@@ -1167,7 +1194,7 @@ class EventLog:
         )
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, "." + name + ".tmp")
-        pq.write_table(tbl, tmp)
+        pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
         os.rename(tmp, os.path.join(self.path, name))
         # counts interactive fragments since the last fold — the
         # minor-compaction trigger (amortized-O(1) append maintenance)
@@ -1659,19 +1686,22 @@ class EventLog:
         manifest's version-range index selects the overlapping
         fragments — O(manifest pages overlapped + matches), so a
         1000-event page over a 100k-fragment log touches a handful of
-        entries — and pyarrow reads just those. With ``label``, page
-        summaries and entry stats additionally drop fragments that
-        cannot hold the label (bounds + bloom — the same data skipping
-        scan(label=...) applies) and rows are filtered exactly. A
-        broken chain or a missing fragment raises.
+        entries — and ``_read_fragment_rows`` decodes, per fragment,
+        only the row groups and rows the page can return. With
+        ``label``, page summaries and entry stats additionally drop
+        fragments that cannot hold the label (bounds + bloom — the same
+        data skipping scan(label=...) applies) and rows are filtered
+        exactly. A broken chain or a missing fragment raises.
 
         With ``label`` AND ``limit``, fragments are read in version
         order (``reverse`` flips it) and the read STOPS once no unread
         fragment can displace the first ``limit`` matches — so a
         paginated label tail costs O(fragments holding one page), not
         O(all remaining matches to the head) per page (the r8 shape:
-        filter the full interval, then slice). May return more than
-        ``limit`` matching rows; the caller slices after sorting."""
+        filter the full interval, then slice). A fragment read from
+        disk contributes at most its own first ``limit`` matches, but
+        the result may hold more than ``limit`` rows; the caller slices
+        after sorting."""
         positions = (
             list(_label_bloom_positions(label)) if label is not None else None
         )
@@ -1707,7 +1737,7 @@ class EventLog:
             with self._lock:  # fragments are immutable under uuid names
                 rows = self._frag_row_cache.get(entry["n"])
             if rows is None:
-                rows = self._read_fragment_rows(entry, lo, hi)
+                rows = self._read_fragment_rows(entry, lo, hi, label, limit, reverse)
             out.extend(
                 r
                 for r in rows
@@ -1715,50 +1745,44 @@ class EventLog:
             )
         return out
 
-    def _read_fragment_rows(self, entry: dict, lo: int, hi: int) -> list[tuple]:
-        """One fragment's rows that may fall in [lo, hi]. The hot-tail
-        cache mutates under the engine RLock (serving threads share
+    def _read_fragment_rows(
+        self,
+        entry: dict,
+        lo: int,
+        hi: int,
+        label: str | None = None,
+        limit: int | None = None,
+        reverse: bool = False,
+    ) -> list[tuple]:
+        """One fragment's rows for a page over [lo, hi]. A fragment of at
+        most ``ROW_GROUP_ROWS`` rows is read whole and cached by name,
+        unfiltered (the hot tail: single-append fragments are immutable
+        and tiny, so repeated pages over an uncompacted tail must not
+        re-open 1000 files). Any other fragment decodes only what the
+        page can return:
+
+        * row groups whose footer version stats miss [lo, hi] are
+          skipped — driver-side writes cap groups at ``ROW_GROUP_ROWS``
+          rows, so a 1000-event page decodes at most two groups of a
+          fold;
+        * the version range (and ``label``) filter runs Arrow-side, so
+          only surviving rows become Python objects;
+        * a label page with ``limit`` first reads only the ``version``
+          and ``label`` columns, keeps the fragment's first ``limit``
+          matches by version value in read direction (file order is not
+          version order under ``compact(cluster_by="label")``), and
+          decodes every column only for the groups holding them —
+          matches past those can never be on the page.
+
+        The cache mutates under the engine RLock (serving threads share
         it); the file read stays outside it."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
         md = pf.metadata
-        if md.num_rows > 16384 and (entry["lo"] < lo or entry["hi"] > hi):
-            # big fragment, partial overlap: read ONLY the row groups
-            # whose version stats (from the footer this read already
-            # opened) overlap the page — compact() writes 8 MiB row
-            # groups for exactly this pruning unit; a direct
-            # read_row_groups beats the dataset-filter machinery ~2-4x
-            stats = _version_group_stats(md)
-            groups = [
-                g
-                for g in range(md.num_row_groups)
-                if stats is None or (stats[g][0] <= hi and stats[g][1] >= lo)
-            ]
-            tbl = pf.read_row_groups(groups)
-            # trim Arrow-side BEFORE the Python conversion: a row group
-            # holds up to ~10^6 rows and to_pylist of the untrimmed
-            # group would dwarf the read itself
-            col = tbl.column("version")
-            tbl = tbl.filter(
-                pc.and_(pc.greater_equal(col, lo), pc.less_equal(col, hi))
-            )
-        else:
-            # small or fully-covered fragment: plain footer+column read
-            # is ~4x cheaper than the dataset path
-            tbl = pf.read()
-        rows = list(zip(*[
-            tbl.column(c).to_pylist()
-            for c in (
-                "version", "version_prev", "timestamp",
-                "label", "payload", "checksum",
-            )
-        ]))
-        if md.num_rows <= 1024:
-            # hot-tail cache: single-append fragments are immutable and
-            # tiny — repeated pages over an uncompacted tail must not
-            # re-open 1000 files
+        if md.num_rows <= ROW_GROUP_ROWS:
+            rows = _table_rows(pf.read())
             with self._lock:
                 if entry["n"] not in self._frag_row_cache:
                     self._frag_rows_total += len(rows)
@@ -1766,7 +1790,37 @@ class EventLog:
                 while self._frag_rows_total > 200_000 and self._frag_row_cache:
                     _, old = self._frag_row_cache.popitem(last=False)
                     self._frag_rows_total -= len(old)
-        return rows
+            return rows
+        stats = _version_group_stats(md)
+        groups = [
+            g
+            for g in range(md.num_row_groups)
+            if stats is None or (stats[g][0] <= hi and stats[g][1] >= lo)
+        ]
+        if label is not None and limit is not None and groups:
+            keys = pf.read_row_groups(groups, columns=["version", "label"])
+            hits = pc.indices_nonzero(_page_mask(keys, lo, hi, label))
+            if len(hits) > limit:
+                order = "descending" if reverse else "ascending"
+                hits = pc.take(
+                    hits,
+                    pc.select_k_unstable(
+                        pc.take(keys.column("version"), hits), limit, [("", order)]
+                    ),
+                )
+            if len(hits):
+                # [lo, hi] narrows to the kept matches: no other match
+                # of this fragment lies between them
+                bounds = pc.min_max(pc.take(keys.column("version"), hits))
+                lo, hi = bounds["min"].as_py(), bounds["max"].as_py()
+            ends = list(itertools.accumulate(md.row_group(g).num_rows for g in groups))
+            groups = sorted(
+                {groups[bisect.bisect_right(ends, i)] for i in hits.to_pylist()}
+            )
+        if not groups:
+            return []
+        tbl = pf.read_row_groups(groups)
+        return _table_rows(tbl.filter(_page_mask(tbl, lo, hi, label)))
 
     def dataframe(self) -> DataFrame:
         """The whole committed log as a DataFrame (analysis entry point)."""
@@ -2119,7 +2173,9 @@ class EventLog:
             ).sort_by("version")
             name = f"compact-{uuid.uuid4().hex[:8]}-minor.parquet"
             landing = os.path.join(self.path, "." + name + ".tmp")
-            pq.write_table(merged, landing)
+            # bounded row groups: a page decodes only the groups it
+            # overlaps, not the whole fold (_read_fragment_rows)
+            pq.write_table(merged, landing, row_group_size=ROW_GROUP_ROWS)
             os.rename(landing, os.path.join(self.path, name))
             # merged is sorted by version: range = first/last row; the
             # fold holds the rows driver-side, so label stats are exact

@@ -1309,10 +1309,23 @@ def _sq_l2_sql(a: str, b: str, n: int, off: int = 0):
     return F.expr(e)
 
 
+def _desc_nulls_last(x: float | None) -> tuple[int, float]:
+    """Sort key of a double under Spark's ``ORDER BY x DESC`` (nulls
+    last): NaN above every double, then high to low, then NULL."""
+    if x is None:
+        return (2, 0.0)
+    if x != x:
+        return (0, 0.0)
+    return (1, -x)
+
+
 def _np_query_router(ctrl_rows, k_lists: int, query_ids, n_probe: int):
     """Coarse-quantizer routing on the driver: cosine fold in the same
     left-to-right order as the JVM `_dot`, ranked by (cos DESC, cid)
-    like the JVM window. Returns (probe pairs, [(query_id, qnv)])."""
+    like the JVM window. A zero norm gives a NULL cos, as Spark's
+    divide does with ANSI mode off (with it on, the ``nv`` projection
+    of a zero-norm row already raised), ranked after every defined
+    cos. Returns (probe pairs, [(query_id, qnv)])."""
     qset = set(query_ids)
     cents = [
         (int(r["vec_id"]), r["dvec"], r["nrm"])
@@ -1333,8 +1346,9 @@ def _np_query_router(ctrl_rows, k_lists: int, query_ids, n_probe: int):
             acc = 0.0
             for i in range(len(qv)):
                 acc = acc + qv[i] * cv[i]
-            scored.append((acc / (nq * nc), cid))
-        scored.sort(key=lambda t: (-t[0], t[1]))
+            den = nq * nc
+            scored.append((acc / den if den else None, cid))
+        scored.sort(key=lambda t: (_desc_nulls_last(t[0]), t[1]))
         probes.extend((qid, cid) for _cos, cid in scored[:n_probe])
     return probes, q_items
 

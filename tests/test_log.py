@@ -1158,6 +1158,146 @@ def test_scan_rows_label_matches_scan_dataframe(log):
         assert [tuple(r) for r in fast] == slow, kw
 
 
+def _skewed_events(n: int, seed: int) -> list[tuple[str, str]]:
+    """``n`` events over a frequent, a middling and a rare label."""
+    import random
+
+    rng = random.Random(seed)
+    labels = ["hot"] * 12 + ["warm"] * 3 + ["rare"]
+    return [(rng.choice(labels), json.dumps({"i": i})) for i in range(n)]
+
+
+def _assert_label_pages(log, events: list[tuple[str, str]], starts) -> None:
+    """Forward and reverse label pages with limit 1, 7 and 100 from each
+    start equal a pure-Python filter of the appended events."""
+    stored = [(lab, minify_json(pay)) for lab, pay in events]
+    for lab in ("hot", "rare"):
+        for limit in (1, 7, 100):
+            for start in starts:
+                fwd = [v for v in range(start, len(stored) + 1) if stored[v - 1][0] == lab]
+                rev = [v for v in range(start, 0, -1) if stored[v - 1][0] == lab]
+                for reverse, want in ((False, fwd), (True, rev)):
+                    kw = dict(version=start, label=lab, limit=limit, reverse=reverse)
+                    got = [(r.version, r.label, r.payload) for r in log.scan_rows(**kw)]
+                    assert got == [(v, *stored[v - 1]) for v in want[:limit]], kw
+
+
+@pytest.mark.parametrize("engine", ["parquet", "inmem"])
+def test_label_pages_over_multi_group_fold(tmp_path, engine):
+    """Label pages read a fold of many row groups through the key-column
+    probe (only the fragment's first ``limit`` matches by version are
+    decoded), a 1500-row fragment of two groups, and the cached tail of
+    single appends — and must equal a pure-Python filter on both
+    engines."""
+    if engine == "inmem":
+        from eventlog_spark.inmem import InMemEventLog
+
+        log = InMemEventLog.create(None)
+    else:
+        log = EventLog.create(None, str(tmp_path / "log"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    events = _skewed_events(6540, seed=3)
+    for i in range(0, 5000, 1000):
+        log.append_multi(events[i:i + 1000])
+    if engine == "parquet":
+        assert log.minor_compact() == 5
+    log.append_multi(events[5000:6500])
+    for lab, pay in events[6500:]:
+        log.append(lab, pay)
+    if engine == "parquet":
+        import pyarrow.parquet as pq
+
+        (fold,) = [f for f in log._manifest_files() if f.startswith("compact-")]
+        assert pq.ParquetFile(os.path.join(log.path, fold)).metadata.num_row_groups == 5
+    _assert_label_pages(log, events, [1, 777, 2500, 4999, 5001, 6000, 6520, 6540])
+
+
+def test_label_pages_on_label_clustered_compaction(spark, tmp_path):
+    """After ``compact(cluster_by="label")`` each file is ordered by
+    (label, version), not by version, and every file is larger than
+    the hot-tail cache bound, so label pages go through the key-column
+    probe on it; they must still equal a pure-Python filter."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import ROW_GROUP_ROWS
+
+    log = EventLog.create(spark, str(tmp_path / "zl"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    events = _skewed_events(4000, seed=5)
+    for i in range(0, 4000, 500):
+        log.append_multi(events[i:i + 500])
+    log.compact(target_partitions=2, cluster_by="label")
+    files = [f for f in log._manifest_files() if f.endswith(".parquet")]
+    assert len(files) == 2
+    for f in files:
+        assert pq.ParquetFile(os.path.join(log.path, f)).metadata.num_rows > ROW_GROUP_ROWS
+    _assert_label_pages(log, events, [1, 999, 2001, 3500, 4000])
+    # no writer orders a label's rows against version order, but the
+    # probe must not rely on that: rewrite each file (same rows, so the
+    # manifest stats still hold) in descending version order
+    for f in files:
+        full = os.path.join(log.path, f)
+        tbl = pq.read_table(full)
+        pq.write_table(tbl.sort_by([("version", "descending")]), full, row_group_size=700)
+    _assert_label_pages(log, events, [1, 999, 2001, 3500, 4000])
+
+
+def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
+    """Layout and decode-budget pin. A minor fold writes row groups of
+    at most ROW_GROUP_ROWS rows, each with version min/max stats; a
+    1000-event page over a 24k-row fold decodes at most two of them;
+    and a 100-event label page reads only ``version`` and ``label``
+    of its candidate groups, then decodes every column only for the
+    groups holding its rows."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
+
+    log = EventLog.create(None, str(tmp_path / "log"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    events = _skewed_events(24_000, seed=7)
+    for i in range(0, 24_000, 2000):
+        log.append_multi(events[i:i + 2000])
+    assert log.minor_compact() == 12
+    (fold,) = [f for f in log._manifest_files() if f.endswith(".parquet")]
+    md = pq.ParquetFile(os.path.join(log.path, fold)).metadata
+    sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+    assert sum(sizes) == 24_000 and max(sizes) <= ROW_GROUP_ROWS
+    stats = _version_group_stats(md)
+    assert stats is not None and len(stats) == md.num_row_groups
+
+    calls: list[tuple[list[int], list[str] | None]] = []
+    read_row_groups, read = pq.ParquetFile.read_row_groups, pq.ParquetFile.read
+
+    def spy_groups(self, row_groups, columns=None, **kw):
+        calls.append((list(row_groups), columns))
+        return read_row_groups(self, row_groups, columns=columns, **kw)
+
+    def spy_read(self, *a, **kw):
+        calls.append(([-1], None))
+        return read(self, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy_groups)
+    monkeypatch.setattr(pq.ParquetFile, "read", spy_read)
+
+    page = log.scan_rows(version=5000, limit=1000)
+    assert [r.version for r in page] == list(range(5000, 6000))
+    decoded = [g for groups, _cols in calls for g in groups]
+    assert len(decoded) <= 2 and sum(sizes[g] for g in decoded) <= 2 * ROW_GROUP_ROWS
+
+    calls.clear()
+    page = log.scan_rows(version=3000, label="rare", limit=100)
+    want = [v for v in range(3000, 24_001) if events[v - 1][0] == "rare"][:100]
+    assert [r.version for r in page] == want
+    probes = [cols for _groups, cols in calls if cols is not None]
+    assert probes == [["version", "label"]]
+    full = sorted(g for groups, cols in calls if cols is None for g in groups)
+    holding = sorted({g for g, (a, b) in enumerate(stats) for v in want if a <= v <= b})
+    assert full == holding
+    # the page's rows span fewer groups than its version interval does
+    assert len(holding) < sum(1 for a, b in stats if b >= 3000)
+
+
 def test_label_bloom_caps_at_high_cardinality(spark, tmp_path):
     """A fragment holding more distinct labels than the bloom can
     discriminate (LABEL_BLOOM_MAX_LABELS) stores bounds only — no

@@ -1662,6 +1662,65 @@ def test_np_router_and_lut_match_jvm(spark, sf_dir):
         assert r["s"] == r["r"] and str(r["s"]) == str(r["r"])
 
 
+def test_np_router_matches_jvm_on_zero_norm_vectors(spark):
+    """ADVICE (low): a zero-norm query or centroid made the driver-side
+    router divide by zero. Spark's divide gives NULL there (ANSI off;
+    with ANSI on the ``nv`` projection raises first), and the window's
+    ``cos DESC`` ranks NULL after every defined cos and NaN (a centroid
+    holding a NaN) above them. The driver probes must equal the JVM
+    window's, rank for rank."""
+    import random
+
+    from pyspark.sql.window import Window
+
+    from eventlog_spark.operators import curation as C
+
+    k_lists, query_ids, n_probe = 6, [100, 101, 102], 4
+    rng = random.Random(11)
+    vec = lambda: [rng.uniform(-1, 1) for _ in range(64)]  # noqa: E731
+    zero = [0.0] * 64
+    rows = [(cid, zero if cid == 2 else vec()) for cid in range(k_lists)]
+    rows[4][1][5] = float("nan")
+    rows += [(100, vec()), (101, zero), (102, vec())]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        emb = (
+            spark.createDataFrame(rows, "vec_id long, dvec array<double>")
+            .withColumn(
+                "nrm",
+                F.expr("sqrt(aggregate(transform(dvec, x -> x * x), 0.0D, (a, v) -> a + v))"),
+            )
+            .withColumn("nv", F.expr("transform(dvec, x -> x / nrm)"))
+        )
+        ctrl = C._ctrl_plane_rows(emb, k_lists, query_ids)
+        probes, _q_items = C._np_query_router(ctrl, k_lists, query_ids, n_probe)
+
+        cents = emb.where(F.col("vec_id") < k_lists).select(
+            F.col("vec_id").alias("cid"), F.col("dvec").alias("cv"), F.col("nrm").alias("nc")
+        )
+        q = emb.where(F.col("vec_id").isin(*query_ids)).select(
+            F.col("vec_id").alias("query_id"), F.col("dvec").alias("qv"), F.col("nrm").alias("nq")
+        )
+        wp = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
+        jvm = (
+            q.crossJoin(cents)
+            .withColumn("cos", C._dot("qv", "cv") / (F.col("nq") * F.col("nc")))
+            .withColumn("rn", F.row_number().over(wp))
+            .where(F.col("rn") <= n_probe)
+            .orderBy("query_id", "rn")
+            .collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert probes == [(int(r["query_id"]), int(r["cid"])) for r in jvm]
+    # the NaN centroid ranks first and the zero-norm one last for every
+    # query; the zero-norm query ranks every other centroid NULL, so
+    # cid order decides after the NaN
+    assert probes[0] == (100, 4) and (100, 2) not in probes and (102, 2) not in probes
+    assert [c for qid, c in probes if qid == 101] == [4, 0, 1, 2]
+
+
 def test_distance_kernels_accept_mixed_str_and_column(spark):
     """ADVICE (low): the unrolled squared-L2 and dot kernels take column
     names, Columns, or one of each — a mixed call equals the all-string

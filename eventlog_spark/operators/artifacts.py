@@ -22,10 +22,12 @@ once — codes bucketed by list id so probes prune files — and every
 query-serving job reads them. ``localCheckpoint`` is the single-session
 stand-in for that write; the builder functions are the part that ports.
 
-``ENABLED`` exists for plan-shape tests (tests/test_plans.py): those
-assert properties of the FULL build plan (training broadcasts, LUT
-joins), which a checkpoint would sever; they monkeypatch ``ENABLED``
-to False to force a fresh, uncached build.
+``ENABLED`` is the artifact-cache bypass and nothing else: False makes
+every helper here build fresh instead of reading or writing the cache
+(no persisted tables, no session checkpoints), so plan-shape tests
+(tests/test_plans.py) and the PLANS.md inventory see the uncached
+plan rather than a ``Scan ExistingRDD`` leaf. It selects no alternative
+operator implementation; the builders run the same code either way.
 """
 
 from __future__ import annotations
@@ -129,8 +131,8 @@ def persisted_bundle(
     a ``partition_by`` column prunes files — the plan-tested serving
     guarantee (probed IVF lists read only their own code files).
 
-    Under ``ENABLED=False`` (plan tests / plan inventory) this returns
-    ``build_all()`` directly so the full training tree stays visible."""
+    Under ``ENABLED=False`` the cache is bypassed: this returns
+    ``build_all()`` directly, with nothing read or written."""
     if not ENABLED:
         return build_all()
     fp = dataset_fingerprint(sf_dir, inputs, params)
@@ -225,7 +227,7 @@ def clear() -> None:
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """Lazy ``localCheckpoint`` that becomes a NO-OP when ``ENABLED``
     is False. Production paths use the checkpoint to compute a
-    multiply-consumed subtree once; plan-shape tests and the PLANS.md
-    inventory flip ``ENABLED`` off so the FULL tree stays visible
-    (a checkpointed DataFrame's plan is just `Scan ExistingRDD`)."""
+    multiply-consumed subtree once; with the cache bypassed the subtree
+    stays inline (a checkpointed DataFrame's plan is just
+    `Scan ExistingRDD`)."""
     return df.localCheckpoint(eager=False) if ENABLED else df

@@ -20,8 +20,6 @@ DuckDB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -696,7 +694,7 @@ WIN_MIN_SHARED = 2
 # 50k docs). Fingerprints with df above the cap are dropped — ubiquitous
 # fingerprints carry no dedup signal (the MOSS/stop-shingle rationale);
 # non-binding on uniform corpora; the oracle replays the filter.
-WIN_MAX_DF = int(os.environ.get("SPARK_GRAFT_WIN_MAX_DF", 5_000))
+WIN_MAX_DF = 5_000
 
 from .dedup import md5_int_col, md5_int_sql  # noqa: E402  (shared hash helpers)
 

@@ -1290,9 +1290,9 @@ def _pq_offline_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]
 # (Python floats and numpy float64 are IEEE binary64; the folds run
 # left-to-right, elementwise, like the JVM codegen they replace), so
 # every l value and every probe ranking is bit-identical — pinned by
-# tests/test_pipeline_ops.py::test_np_router_and_lut_match_jvm and the
-# DuckDB oracle. The ENABLED=False plan-audit path keeps the full JVM
-# tree for the plan-shape tests.
+# tests/test_pipeline_ops.py::test_np_router_and_lut_match_jvm (which
+# keeps the JVM window and LUT join as its oracle) and the DuckDB
+# oracle. This is the only routing/LUT implementation the builders run.
 
 
 def _sq_l2_sql(a: str, b: str, n: int, off: int = 0):
@@ -1390,23 +1390,103 @@ def _ctrl_plane_rows(emb: DataFrame, k_lists: int, query_ids):
 _ROUTER_GUARD = (
     "IVF-PQ query router resolved {n} probe rows — the driver-side "
     "routing/LUT path is sized for control-plane query sets (≤ ~10k "
-    "queries); shard the query set or disable artifacts.ENABLED to "
-    "take the distributed plan"
+    "queries); shard the query set"
 )
 
 
-def _ivf_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _route_queries(emb: DataFrame):
+    """The query router on the driver: ONE collect of the coarse/query
+    rows, ranked by ``_np_query_router``. Returns (control-plane rows,
+    probe pairs, [(query_id, qnv)])."""
+    from .similarity import K_LISTS, N_PROBE, QUERY_IDS
+
+    ctrl = _ctrl_plane_rows(emb, K_LISTS, QUERY_IDS)
+    probe_pairs, q_items = _np_query_router(ctrl, K_LISTS, QUERY_IDS, N_PROBE)
+    # control-plane guard (round-12 advice): fail loudly instead of
+    # OOMing the driver on a corpus-sized "query set"
+    assert len(probe_pairs) <= 100_000, _ROUTER_GUARD.format(n=len(probe_pairs))
+    return ctrl, probe_pairs, q_items
+
+
+def _adc_rerank(
+    spark: SparkSession, emb: DataFrame, codes: DataFrame, probe_rows, q_items,
+    kt: int, rerank: int,
+) -> DataFrame:
+    """The IVF-PQ serving plan both builders share. ``probe_rows`` are
+    (query_id, cid, lut): each probe carries its M·K ADC LUT as one
+    array column (the table FAISS computes per query and ships with
+    it). The probed lists become a LITERAL list_id filter — static
+    partition pruning against the partitioned codes table
+    (plan-asserted in tests/test_plans.py) — the codes join the
+    broadcast probes, the ADC score is M array lookups, and the best
+    ``rerank`` per query are re-ranked by exact distance on the
+    normalized vectors."""
     from pyspark.sql.window import Window
 
-    from . import artifacts as _art
-    from .artifacts import persisted_bundle
     from .corpus import PQ_FXP
-    from .similarity import K_LISTS, N_PROBE, QUERY_IDS, TOP_K
+    from .similarity import TOP_K
 
     PQ_M, PQ_SUB = PQ_MT, PQ_SUBT
+    lists = sorted({cid for _qid, cid, _lut in probe_rows})
+    codes = codes.where(F.col("list_id").isin(lists))
+    probes = spark.createDataFrame(
+        probe_rows, "query_id long, cid long, lut array<long>"
+    )
+    adc = (
+        codes.join(F.broadcast(probes), codes["list_id"] == probes["cid"])
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            sum(
+                F.element_at("lut", (F.lit(s * kt) + F.col(f"c{s}") + 1).cast("int"))
+                for s in range(PQ_M)
+            )
+            .cast("long")
+            .alias("adc_fp"),
+        )
+    )
 
-    def sd(a, b):
-        return _sq_l2(a, b, PQ_SUB)
+    # ---- ADC shortlist → exact re-rank on normalized vectors ----
+    ws = Window.partitionBy("query_id").orderBy("adc_fp", "vec_id")
+    short = (
+        adc.withColumn("sr", F.row_number().over(ws))
+        .where(F.col("sr") <= rerank)
+        .select("query_id", "vec_id", "adc_fp")
+    )
+    # index env/qnv at absolute offsets instead of slicing per subspace
+    # — same element sequence as slice-then-fold, no slice allocation;
+    # single-expr construction (see _sq_l2_sql): identical tree
+    exact = sum(
+        F.floor(_sq_l2_sql("env", "qnv", PQ_SUB, s * PQ_SUB) * PQ_FXP).cast("long")
+        for s in range(PQ_M)
+    )
+    qlocal = spark.createDataFrame(q_items, "query_id long, qnv array<double>")
+    wk = Window.partitionBy("query_id").orderBy("exact_fp", "neighbor_id")
+    return (
+        # the shortlist (≤ RERANK·|Q| rows) BROADCASTS against the corpus
+        # to fetch full vectors — the scale plan for "re-rank few rows"
+        # (qlocal reuses the already-collected query vectors instead of
+        # a broadcast build that re-scans the emb artifact)
+        emb.select("vec_id", F.col("nv").alias("env"))
+        .join(F.broadcast(short), "vec_id")
+        .join(F.broadcast(qlocal), "query_id")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "adc_fp",
+            exact.cast("long").alias("exact_fp"),
+        )
+        .withColumn("rk", F.row_number().over(wk))
+        .where(F.col("rk") <= TOP_K)
+        .select("query_id", "neighbor_id", "rk", "adc_fp", "exact_fp")
+    )
+
+
+def _ivf_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .artifacts import persisted_bundle
+    from .corpus import PQ_FXP
+    from .similarity import K_LISTS
 
     tabs = persisted_bundle(
         spark,
@@ -1420,153 +1500,17 @@ def _ivf_pq_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         params=f"kt{PQ_KT}-r{PQ_ROUNDS}-cap{PQ_TRAIN_CAP}-k{K_LISTS}"
         f"-m{PQ_MT}x{PQ_SUBT}",
     )
-    cent, codes = tabs["pq_codebook"], tabs["pq_codes"]
-
     emb = _emb_normalized(spark, sf_dir)
-    qlocal = None
-    if _art.ENABLED:
-        # THE QUERY ROUTER + ADC LUTs, on the driver (round 13 — see
-        # the block comment above _np_query_router): everything the
-        # old probe window, query-vector collect, and LUT job consumed
-        # is control-plane sized, so ONE collect of the coarse/query
-        # rows plus one collect of the codebook replaces three jobs
-        # (each with broadcast builds and 64-term codegen) and the
-        # thousands of py4j expression-construction round-trips. The
-        # probed lists become a LITERAL list_id filter — static
-        # partition pruning against the partitioned codes table
-        # (plan-asserted in tests/test_plans.py) — and each probe row
-        # carries its query's M·K LUT as one array column (the table
-        # FAISS computes per query and ships with it). Bit-identity of
-        # the Python/numpy folds with the JVM ones is pinned by test
-        # and by the oracle.
-        ctrl = _ctrl_plane_rows(emb, K_LISTS, QUERY_IDS)
-        probe_pairs, q_items = _np_query_router(ctrl, K_LISTS, QUERY_IDS, N_PROBE)
-        # control-plane guard (round-12 advice): fail loudly instead
-        # of OOMing the driver on a corpus-sized "query set"
-        assert len(probe_pairs) <= 100_000, _ROUTER_GUARD.format(n=len(probe_pairs))
-        lists = sorted({cid for _qid, cid in probe_pairs})
-        codes = codes.where(F.col("list_id").isin(lists))
-        qlocal = spark.createDataFrame(
-            q_items, "query_id long, qnv array<double>"
-        )
-        luts = _np_adc_luts(cent.collect(), q_items, PQ_M, PQ_SUB, PQ_KT, PQ_FXP)
-        probes = spark.createDataFrame(
-            [(qid, cid, luts[qid]) for qid, cid in probe_pairs],
-            "query_id long, cid long, lut array<long>",
-        )
-    else:
-        # plan-audit path (artifacts.ENABLED=False): the full JVM
-        # routing tree stays visible for tests/test_plans.py
-        cents = emb.where(F.col("vec_id") < K_LISTS).select(
-            F.col("vec_id").alias("cid"),
-            F.col("dvec").alias("cv"),
-            F.col("nrm").alias("nc"),
-        )
-        q = emb.where(F.col("vec_id").isin(*QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("dvec").alias("qv"),
-            F.col("nrm").alias("nq"),
-            F.col("nv").alias("qnv"),
-        )
-        wp = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .withColumn("cos", _dot("qv", "cv") / (F.col("nq") * F.col("nc")))
-            .withColumn("rn", F.row_number().over(wp))
-            .where(F.col("rn") <= N_PROBE)
-            .select("query_id", "cid")
-        )
-
-    adc = (
-        codes.join(F.broadcast(probes), codes["list_id"] == probes["cid"])
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            *[f"c{s}" for s in range(PQ_M)],
-            *(["lut"] if qlocal is not None else []),
-        )
+    # the router and the ADC LUTs run on the driver (see the block
+    # comment above _np_query_router)
+    _ctrl, probe_pairs, q_items = _route_queries(emb)
+    luts = _np_adc_luts(
+        tabs["pq_codebook"].collect(), q_items, PQ_MT, PQ_SUBT, PQ_KT, PQ_FXP
     )
-    if qlocal is not None:
-        adc = adc.select(
-            "query_id",
-            "vec_id",
-            sum(
-                F.element_at(
-                    "lut", (F.lit(s * PQ_KT) + F.col(f"c{s}") + 1).cast("int")
-                )
-                for s in range(PQ_M)
-            )
-            .cast("long")
-            .alias("adc_fp"),
-        )
-    else:
-        # plan-audit path (artifacts.ENABLED=False): keep the full
-        # M-broadcast-LUT-join tree visible for tests/test_plans.py
-        luts = []
-        for s in range(PQ_M):
-            qsv = q.select(
-                "query_id", F.slice("qnv", s * PQ_SUB + 1, PQ_SUB).alias("qsv")
-            )
-            luts.append(
-                cent.where(F.col("s") == s)
-                .crossJoin(F.broadcast(qsv))
-                .select(
-                    "query_id",
-                    F.col("cid").alias(f"c{s}"),
-                    F.floor(sd("qsv", "cv") * PQ_FXP)
-                    .cast("long")
-                    .alias(f"l{s}"),
-                )
-            )
-        for s in range(PQ_M):
-            adc = adc.join(F.broadcast(luts[s]), ["query_id", f"c{s}"])
-        adc = adc.select(
-            "query_id",
-            "vec_id",
-            sum(F.col(f"l{s}") for s in range(PQ_M)).cast("long").alias("adc_fp"),
-        )
-
-    # ---- ADC shortlist → exact re-rank on normalized vectors ----
-    ws = Window.partitionBy("query_id").orderBy("adc_fp", "vec_id")
-    short = (
-        adc.withColumn("sr", F.row_number().over(ws))
-        .where(F.col("sr") <= PQ_RERANK)
-        .select("query_id", "vec_id", "adc_fp")
-    )
-    # index env/qnv at absolute offsets instead of slicing per subspace
-    # — same element sequence as slice-then-fold, no slice allocation
-    def sd_off(a: str, b: str, off: int):
-        # single-expr construction (see _sq_l2_sql): identical tree
-        return _sq_l2_sql(a, b, PQ_SUB, off)
-
-    exact = sum(
-        F.floor(sd_off("env", "qnv", s * PQ_SUB) * PQ_FXP).cast("long")
-        for s in range(PQ_M)
-    )
-    wk = Window.partitionBy("query_id").orderBy("exact_fp", "neighbor_id")
-    return (
-        # the shortlist (≤ RERANK·|Q| rows) BROADCASTS against the corpus
-        # to fetch full vectors — the scale plan for "re-rank few rows"
-        # (qlocal reuses the already-collected query vectors instead of
-        # a broadcast build that re-scans the emb artifact)
-        emb.select("vec_id", F.col("nv").alias("env"))
-        .join(F.broadcast(short), "vec_id")
-        .join(
-            F.broadcast(
-                qlocal if qlocal is not None else q.select("query_id", "qnv")
-            ),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_fp",
-            exact.cast("long").alias("exact_fp"),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rk", "adc_fp", "exact_fp")
+    return _adc_rerank(
+        spark, emb, tabs["pq_codes"],
+        [(qid, cid, luts[qid]) for qid, cid in probe_pairs],
+        q_items, PQ_KT, PQ_RERANK,
     )
 
 
@@ -1957,17 +1901,11 @@ def _pq_residual_offline_frames(
 
 
 def _ivf_pq_residual_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
+    import numpy as np
 
-    from . import artifacts as _art
     from .artifacts import persisted_bundle
     from .corpus import PQ_FXP
-    from .similarity import K_LISTS, N_PROBE, QUERY_IDS, TOP_K
-
-    PQ_M, PQ_SUB = PQ_MT, PQ_SUBT
-
-    def sd(a, b):
-        return _sq_l2(a, b, PQ_SUB)
+    from .similarity import K_LISTS
 
     tabs = persisted_bundle(
         spark,
@@ -1978,158 +1916,26 @@ def _ivf_pq_residual_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         params=f"res-kt{PQ_KTR}-r{PQ_ROUNDS}-cap{PQ_TRAIN_CAP}-k{K_LISTS}"
         f"-m{PQ_MT}x{PQ_SUBT}",
     )
-    cent, codes = tabs["pqr_codebook"], tabs["pqr_codes"]
-
     emb = _emb_normalized(spark, sf_dir)
-    qlocal = None
-    if _art.ENABLED:
-        # query router + per-(query, probed-list) RESIDUAL LUTs on the
-        # driver (round 13 — same design as _ivf_pq_build; see the
-        # block comment above _np_query_router). The residual q − c_L
-        # is the same elementwise subtraction the JVM zip_with ran;
-        # each probe pair carries its M·K LUT as one array column.
-        ctrl = _ctrl_plane_rows(emb, K_LISTS, QUERY_IDS)
-        probe_pairs, q_items = _np_query_router(ctrl, K_LISTS, QUERY_IDS, N_PROBE)
-        assert len(probe_pairs) <= 100_000, _ROUTER_GUARD.format(n=len(probe_pairs))
-        lists = sorted({cid for _qid, cid in probe_pairs})
-        codes = codes.where(F.col("list_id").isin(lists))
-        qlocal = spark.createDataFrame(
-            q_items, "query_id long, qnv array<double>"
-        )
-        import numpy as np
-
-        cnv_map = {
-            int(r["vec_id"]): np.asarray(r["nv"], dtype=np.float64)
-            for r in ctrl
-            if int(r["vec_id"]) < K_LISTS
-        }
-        qnv_map = {qid: np.asarray(v, dtype=np.float64) for qid, v in q_items}
-        residuals = [
-            ((qid, cid), qnv_map[qid] - cnv_map[cid]) for qid, cid in probe_pairs
-        ]
-        luts = _np_adc_luts(
-            cent.collect(), residuals, PQ_M, PQ_SUB, PQ_KTR, PQ_FXP
-        )
-        probes = spark.createDataFrame(
-            [(qid, cid, luts[(qid, cid)]) for qid, cid in probe_pairs],
-            "query_id long, cid long, lut array<long>",
-        )
-        adc = (
-            codes.join(F.broadcast(probes), codes["list_id"] == probes["cid"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "vec_id",
-                sum(
-                    F.element_at(
-                        "lut", (F.lit(s * PQ_KTR) + F.col(f"c{s}") + 1).cast("int")
-                    )
-                    for s in range(PQ_M)
-                )
-                .cast("long")
-                .alias("adc_fp"),
-            )
-        )
-    else:
-        # plan-audit path (artifacts.ENABLED=False): keep the full JVM
-        # routing + M-broadcast-LUT-join tree visible for
-        # tests/test_plans.py
-        cents = emb.where(F.col("vec_id") < K_LISTS).select(
-            F.col("vec_id").alias("cid"),
-            F.col("dvec").alias("cv"),
-            F.col("nrm").alias("nc"),
-        )
-        q = emb.where(F.col("vec_id").isin(*QUERY_IDS)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("dvec").alias("qv"),
-            F.col("nrm").alias("nq"),
-            F.col("nv").alias("qnv"),
-        )
-        wp = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .withColumn("cos", _dot("qv", "cv") / (F.col("nq") * F.col("nc")))
-            .withColumn("rn", F.row_number().over(wp))
-            .where(F.col("rn") <= N_PROBE)
-            .select("query_id", "cid")
-        )
-        cnv = emb.where(F.col("vec_id") < K_LISTS).select(
-            F.col("vec_id").alias("pcid"), F.col("nv").alias("cnv")
-        )
-        qr = (
-            probes.join(F.broadcast(cnv), probes["cid"] == cnv["pcid"])
-            .join(F.broadcast(q.select("query_id", "qnv")), "query_id")
-            .select(
-                "query_id",
-                F.col("cid").alias("list_id"),
-                F.zip_with("qnv", "cnv", lambda a, b: a - b).alias("rq"),
-            )
-        )
-        luts = []
-        for s in range(PQ_M):
-            qsv = qr.select(
-                "query_id", "list_id", F.slice("rq", s * PQ_SUB + 1, PQ_SUB).alias("qsv")
-            )
-            luts.append(
-                cent.where(F.col("s") == s)
-                .crossJoin(F.broadcast(qsv))
-                .select(
-                    "query_id",
-                    "list_id",
-                    F.col("cid").alias(f"c{s}"),
-                    F.floor(sd("qsv", "cv") * PQ_FXP)
-                    .cast("long")
-                    .alias(f"l{s}"),
-                )
-            )
-        adc = (
-            codes.join(F.broadcast(probes), codes["list_id"] == probes["cid"])
-            .where(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "list_id", "vec_id", *[f"c{s}" for s in range(PQ_M)])
-        )
-        for s in range(PQ_M):
-            adc = adc.join(F.broadcast(luts[s]), ["query_id", "list_id", f"c{s}"])
-        adc = adc.select(
-            "query_id",
-            "vec_id",
-            sum(F.col(f"l{s}") for s in range(PQ_M)).cast("long").alias("adc_fp"),
-        )
-
-    # ---- ADC shortlist → exact re-rank (identical to _ivf_pq_build) ----
-    ws = Window.partitionBy("query_id").orderBy("adc_fp", "vec_id")
-    short = (
-        adc.withColumn("sr", F.row_number().over(ws))
-        .where(F.col("sr") <= PQ_RERANK_R)
-        .select("query_id", "vec_id", "adc_fp")
+    # per-(query, probed-list) RESIDUAL LUTs on the driver: the residual
+    # q − c_L is the same elementwise subtraction the JVM zip_with ran
+    ctrl, probe_pairs, q_items = _route_queries(emb)
+    cnv_map = {
+        int(r["vec_id"]): np.asarray(r["nv"], dtype=np.float64)
+        for r in ctrl
+        if int(r["vec_id"]) < K_LISTS
+    }
+    qnv_map = {qid: np.asarray(v, dtype=np.float64) for qid, v in q_items}
+    residuals = [
+        ((qid, cid), qnv_map[qid] - cnv_map[cid]) for qid, cid in probe_pairs
+    ]
+    luts = _np_adc_luts(
+        tabs["pqr_codebook"].collect(), residuals, PQ_MT, PQ_SUBT, PQ_KTR, PQ_FXP
     )
-
-    def sd_off(a: str, b: str, off: int):
-        # single-expr construction (see _sq_l2_sql): identical tree
-        return _sq_l2_sql(a, b, PQ_SUB, off)
-
-    exact = sum(
-        F.floor(sd_off("env", "qnv", s * PQ_SUB) * PQ_FXP).cast("long")
-        for s in range(PQ_M)
-    )
-    wk = Window.partitionBy("query_id").orderBy("exact_fp", "neighbor_id")
-    return (
-        emb.select("vec_id", F.col("nv").alias("env"))
-        .join(F.broadcast(short), "vec_id")
-        .join(
-            F.broadcast(
-                qlocal if qlocal is not None else q.select("query_id", "qnv")
-            ),
-            "query_id",
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_fp",
-            exact.cast("long").alias("exact_fp"),
-        )
-        .withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rk", "adc_fp", "exact_fp")
+    return _adc_rerank(
+        spark, emb, tabs["pqr_codes"],
+        [(qid, cid, luts[(qid, cid)]) for qid, cid in probe_pairs],
+        q_items, PQ_KTR, PQ_RERANK_R,
     )
 
 

@@ -24,8 +24,6 @@ every signature exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -271,7 +269,7 @@ def _minhash_signature_sql() -> str:
 # groups the whole bucket (all members reach each other through the
 # rep), so cluster-level dedup semantics are unchanged. Non-binding on
 # uniform corpora; the oracle replays the same rule.
-LSH_MAX_BUCKET = int(os.environ.get("SPARK_GRAFT_LSH_MAX_BUCKET", 256))
+LSH_MAX_BUCKET = 256
 
 _LSH_PAIRS_SQL = f"""
 WITH sig AS ({_minhash_signature_sql()}),

@@ -44,6 +44,8 @@ is bounded by batch size, not partition size.
 from __future__ import annotations
 
 import functools
+import hashlib
+import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -294,104 +296,38 @@ def parse_media_header(p: bytes):
     return None
 
 
-# hex-string builders, expressed identically in Spark and DuckDB SQL so
-# both engines synthesize bit-identical payloads
-
-
-def _hex_be_col(col, nbytes: int):
-    return F.lpad(F.lower(F.hex(col)), 2 * nbytes, "0")
-
-
-def _hex_be_sql(expr: str, nbytes: int) -> str:
-    return f"lpad(lower(to_hex({expr})), {2 * nbytes}, '0')"
-
-
-def _hex_le_col(col, nbytes: int):
-    # ROUND-12 OPTIMIZATION (guide §1.2 — per-task work): build ONE
-    # byte-swapped big-endian value and hex it once, instead of
-    # hex+lpad+lower per byte plus a concat. Output string identical
-    # (same bytes after unhex, same lowercase zero-padded hex); the
-    # expression shrinks from ~15 nodes to ~9 for the 2-byte case that
-    # runs 64×/row inside the audio sample lambda.
-    #
-    # CONTRACT (round-12 advice): the input column must be NON-NEGATIVE
-    # (callers pre-bias signed samples into [0, 2^16)). The old
-    # per-byte form and this folded form diverge for negative inputs
-    # (e.g. -1 @ 2 bytes: per-byte 'ff00' vs folded 'ffff'), so the
-    # narrowed domain is part of the helper's signature, not a bug
-    # hazard left to call-site review.
-    sw = None
-    for i in range(nbytes):
-        byte = (col % 256 if i == 0 else (col / (256**i)).cast("long") % 256).cast(
-            "long"
-        )
-        term = byte * F.lit(256 ** (nbytes - 1 - i)).cast("long") if i < nbytes - 1 else byte
-        sw = term if sw is None else sw + term
-    return F.lpad(F.lower(F.hex(sw)), 2 * nbytes, "0")
-
-
-def _hex_le_sql(expr: str, nbytes: int) -> str:
-    parts = [
-        f"lpad(lower(to_hex((({expr}) // {256 ** i}) % 256)), 2, '0')"
-        for i in range(nbytes)
-    ]
-    return " || ".join(parts)
-
-
 HEADER_SCHEMA = (
     "doc_id long, media_type string, byte_len int, format string, "
     "w int, h int, sample_rate int, channels int"
 )
 
+_PNG_SIG_IHDR = b"\x89PNG\r\n\x1a\n" + struct.pack(">I4s", 13, b"IHDR")
+_JPEG_SOF0_COMPONENTS = bytes.fromhex("03" "011100" "021101" "031101")
 
-def media_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize VALID format headers per document (image→PNG,
-    audio→WAV, video→JPEG SOF0), deterministically from doc_id — real
-    bytes for the real parser, reproducible in SQL for the oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        "text",
-        ((F.col("doc_id") % 64 + 1) * 16).cast("long").alias("width"),
-        ((F.col("doc_id") % 48 + 1) * 16).cast("long").alias("height"),
-        ((F.col("doc_id") % 6 + 1) * 8000).cast("long").alias("rate"),
-        (F.col("doc_id") % 2 + 1).cast("long").alias("ch"),
+
+def synth_media_header(doc_id: int, media_type: str, text: str | None) -> bytes:
+    """A VALID format header for one document, deterministic from
+    doc_id (image→PNG IHDR, audio→WAV RIFF fmt, video→JPEG SOF0): real
+    bytes for the real parser, restated from doc_id by the oracle.
+
+    The PNG CRC slot (which the parser ignores) holds the first 4 bytes
+    of md5(text); a NULL text yields an empty payload."""
+    width, height = (doc_id % 64 + 1) * 16, (doc_id % 48 + 1) * 16
+    if media_type == "image":
+        if text is None:
+            return b""
+        crc = hashlib.md5(text.encode("utf-8")).digest()[:4]
+        return _PNG_SIG_IHDR + struct.pack(">II", width, height) + b"\x08\x02\0\0\0" + crc
+    if media_type == "audio":
+        rate, ch = (doc_id % 6 + 1) * 8000, doc_id % 2 + 1
+        return struct.pack(
+            "<4sI8sIHHIIHH",
+            b"RIFF", 36, b"WAVEfmt ", 16, 1, ch, rate, rate * ch * 2, ch * 2, 16,
+        )
+    return (
+        struct.pack(">HHHBHH", 0xFFD8, 0xFFC0, 17, 8, height, width)
+        + _JPEG_SOF0_COMPONENTS
     )
-    png_hex = F.concat(
-        F.lit("89504e470d0a1a0a" + "0000000d" + "49484452"),
-        _hex_be_col(F.col("width"), 4),
-        _hex_be_col(F.col("height"), 4),
-        F.lit("0802000000"),
-        F.substring(F.md5("text"), 1, 8),  # CRC slot (parser ignores)
-    )
-    wav_hex = F.concat(
-        F.lit("52494646"),  # "RIFF"
-        _hex_le_col(F.lit(36), 4),
-        F.lit("57415645" + "666d7420"),  # "WAVE" + "fmt "
-        _hex_le_col(F.lit(16), 4),
-        _hex_le_col(F.lit(1), 2),
-        _hex_le_col(F.col("ch"), 2),
-        _hex_le_col(F.col("rate"), 4),
-        _hex_le_col(F.col("rate") * F.col("ch") * 2, 4),
-        _hex_le_col(F.col("ch") * 2, 2),
-        _hex_le_col(F.lit(16), 2),
-    )
-    jpeg_hex = F.concat(
-        F.lit("ffd8" + "ffc0" + "0011" + "08"),
-        _hex_be_col(F.col("height"), 2),
-        _hex_be_col(F.col("width"), 2),
-        F.lit("03" + "011100" + "021101" + "031101"),
-    )
-    mt = F.element_at(
-        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-        (F.col("doc_id") % 3 + 1).cast("int"),
-    )
-    payload_hex = (
-        F.when(mt == "image", png_hex)
-        .when(mt == "audio", wav_hex)
-        .otherwise(jpeg_hex)
-    )
-    return d.select("doc_id", mt.alias("media_type"), F.unhex(payload_hex).alias("payload"))
 
 
 @register(
@@ -416,19 +352,19 @@ FROM documents
 def multimodal_header_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end proof that the decode path reads ACTUAL format fields
     (round-3 verdict gap #5): payloads are genuine PNG IHDR / WAV fmt /
-    JPEG SOF0 byte layouts (synthesized — no media files ship in the
-    sandbox), and ``parse_media_header`` recovers width/height/sample-
-    rate/channels from the bytes alone inside the same Arrow-batched
-    ``mapInPandas`` loop production decode uses. The oracle restates the
-    ground-truth fields from doc_id, so a parser that misreads any byte
-    offset hash-mismatches. Shuffle-free map stage; the payload column
-    never leaves its partition."""
+    JPEG SOF0 byte layouts (``synth_media_header`` — no media files
+    ship in the sandbox), and ``parse_media_header`` recovers width/
+    height/sample-rate/channels from the bytes alone inside the same
+    Arrow-batched ``mapInPandas`` loop production decode uses. The
+    oracle restates the ground-truth fields from doc_id, so a parser
+    that misreads any byte offset hash-mismatches. Shuffle-free map
+    stage: each batch synthesizes and parses its own payloads."""
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, mt, p in zip(pdf["doc_id"], pdf["media_type"], pdf["payload"]):
-                b = bytes(p) if p is not None else b""
+            for doc_id, mt, text in zip(pdf["doc_id"], pdf["media_type"], pdf["text"]):
+                b = synth_media_header(int(doc_id), mt, text)
                 parsed = parse_media_header(b)
                 fmt, w, h, sr, ch = parsed if parsed else ("?", 0, 0, 0, 0)
                 rows.append((doc_id, mt, len(b), fmt, w, h, sr, ch))
@@ -445,7 +381,14 @@ def multimodal_header_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return media_blobs(spark, sf_dir).mapInPandas(probe, schema=HEADER_SCHEMA)
+    docs = load_table(spark, sf_dir, "documents")
+    mt = F.element_at(
+        F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
+        (F.col("doc_id") % 3 + 1).cast("int"),
+    )
+    return docs.select("doc_id", mt.alias("media_type"), "text").mapInPandas(
+        probe, schema=HEADER_SCHEMA
+    )
 
 
 # -- REAL full-sample decode: WAV PCM (no codec lib needed) -------------------
@@ -465,57 +408,6 @@ _AUDIO_STEP = 40503
 def _wav_sample_sql(k: str = "k") -> str:
     """Signed sample value at index k, restated in SQL for the oracle."""
     return f"((doc_id * {_AUDIO_MIX} + {k} * {_AUDIO_STEP}) % 65536 - 32768)"
-
-
-def audio_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize COMPLETE valid WAV files (44-byte canonical header +
-    a data chunk of AUDIO_N real PCM16-LE samples) deterministically
-    from doc_id, entirely in JVM codegen hex — the encoder side lives
-    in SQL expressions, the decoder side in numpy, so a byte-offset bug
-    in either cannot cancel out."""
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select(
-        "doc_id",
-        ((F.col("doc_id") % 6 + 1) * 8000).cast("long").alias("rate"),
-        (F.col("doc_id") % 2 + 1).cast("long").alias("ch"),
-    )
-    # two's-complement LE16 of the signed sample: (u + 32768) % 65536
-    # where u is the unsigned mix value. Measured alternatives at sf1
-    # (50k docs): this transform+lpad/hex form 6.2 s; unrolled 64-term
-    # concat (the PQ-kernel trick) 8.8 s COLD — the giant expression's
-    # codegen compile costs more than the interpreted lambda saves on a
-    # string-build-bound stage; a 512-char hex lookup table via
-    # substring(computed pos) 14.4 s. The synth is priced at ~6 s and
-    # exists only because the sandbox ships no media files — real
-    # deployments read payload bytes from storage.
-    samp_hex = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(AUDIO_N - 1)),
-            lambda k: _hex_le_col(
-                ((F.col("doc_id") * _AUDIO_MIX + k * _AUDIO_STEP) % 65536 - 32768 + 65536)
-                % 65536,
-                2,
-            ),
-        ),
-        "",
-    )
-    data_len = 2 * AUDIO_N
-    wav_hex = F.concat(
-        F.lit("52494646"),  # "RIFF"
-        _hex_le_col(F.lit(36 + data_len), 4),
-        F.lit("57415645" + "666d7420"),  # "WAVE" + "fmt "
-        _hex_le_col(F.lit(16), 4),
-        _hex_le_col(F.lit(1), 2),  # PCM
-        _hex_le_col(F.col("ch"), 2),
-        _hex_le_col(F.col("rate"), 4),
-        _hex_le_col(F.col("rate") * F.col("ch") * 2, 4),  # byte rate
-        _hex_le_col(F.col("ch") * 2, 2),  # block align
-        _hex_le_col(F.lit(16), 2),  # bits/sample
-        F.lit("64617461"),  # "data"
-        _hex_le_col(F.lit(data_len), 4),
-        samp_hex,
-    )
-    return d.select("doc_id", F.unhex(wav_hex).alias("payload"))
 
 
 def decode_wav_pcm(b: bytes):
@@ -577,10 +469,11 @@ def audio_features(doc_id: int, payload: bytes) -> tuple:
 # boundary. The JVM hex synth priced the query (~6 s of the ~6 s sf1
 # row — the interpreted per-sample transform lambda), and the per-row
 # Python decode loop priced the rest; both are replaced by vectorized
-# numpy over whole Arrow batches. Independence guards move from
-# "encoder in SQL / decoder in Python" to explicit pins:
-#   * synth_wav_pcm_batch is asserted BYTE-IDENTICAL to the SQL encoder
-#     (audio_blobs, kept) in tests/test_pipeline_ops.py;
+# numpy over whole Arrow batches, and the SQL encoder is deleted.
+# Independence guards are explicit pins:
+#   * synth_wav_pcm_batch is asserted BYTE-IDENTICAL to a small
+#     pure-Python reference encoder in tests/test_pipeline_ops.py,
+#     whose payloads the stdlib ``wave`` module also decodes;
 #   * the vectorized decoder validates the canonical container layout
 #     field by field and is asserted row-identical to the generic
 #     per-row RIFF walk (decode_wav_pcm), which remains the fallback
@@ -590,8 +483,8 @@ def audio_features(doc_id: int, payload: bytes) -> tuple:
 
 def synth_wav_pcm_batch(doc_ids):
     """Vectorized WAV synthesis: one (n, 44+2·AUDIO_N) uint8 matrix of
-    complete valid WAV files, byte-identical to ``audio_blobs``'s SQL
-    hex encoder (pinned by test). Header fields per row: channels,
+    complete valid WAV files, byte-identical to the pure-Python
+    reference encoder in the tests. Header fields per row: channels,
     sample rate, byte rate, block align; samples are the deterministic
     PCM16-LE mix."""
     import numpy as np
@@ -699,16 +592,16 @@ SELECT doc_id,
 FROM documents
 """,
     doc="REAL full-sample audio decode: synthesize complete PCM16 WAV "
-    "files in SQL hex, decode them with the pure-numpy RIFF/PCM "
+    "files per Arrow batch, decode them with the pure-numpy RIFF/PCM "
     "decoder, and verify peak/energy/clipping stats against ground "
     "truth restated from the sample formula.",
 )
 def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full audio decode, for real (round-5 verdict 'What's missing'
     #1, audio half): the payload is a complete, valid WAV file whose
-    PCM16 samples are synthesized by JVM hex codegen, and the feature
-    extractor actually walks the RIFF chunks and reads the samples with
-    numpy (``decode_wav_pcm``) — loudness (abs_sum), energy (sq_sum),
+    PCM16 samples are synthesized from the sample formula, and the
+    feature extractor actually walks the RIFF chunks and reads the
+    samples with numpy — loudness (abs_sum), energy (sq_sum),
     peak, and clip-rate are computed from DECODED samples, never from
     the generating formula. The oracle restates ground truth from the
     formula, so a single wrong byte offset, endianness mix-up, or
@@ -720,12 +613,11 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     by URI instead of synthesizing.
 
     Round 13 (guide §4.2): synthesis and decode are both vectorized
-    numpy over the whole Arrow batch — the JVM hex synth (interpreted
-    per-sample lambda) and the per-row Python decode loop are gone.
-    ``synth_wav_pcm_batch`` is pinned byte-identical to the kept SQL
-    encoder (``audio_blobs``), and the vectorized decoder is pinned
-    row-identical to the generic per-row RIFF walk it falls back to —
-    see the round-13 block above ``synth_wav_pcm_batch``."""
+    numpy over the whole Arrow batch. ``synth_wav_pcm_batch`` is pinned
+    byte-identical to a pure-Python reference encoder in the tests, and
+    the vectorized decoder is pinned row-identical to the generic
+    per-row RIFF walk it falls back to — see the round-13 block above
+    ``synth_wav_pcm_batch``."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -800,7 +692,6 @@ def encode_png(doc_id: int) -> bytes:
 
 @functools.lru_cache(maxsize=256)
 def _encode_png_for_residue(doc_id: int) -> bytes:
-    import struct
     import zlib
 
     side = IMG_SIDE
@@ -846,7 +737,6 @@ def decode_png(b: bytes):
     inflate, full scanline unfilter (all five filter types, Paeth
     included). Returns (width, height, flat pixel list row-major
     RGB)."""
-    import struct
     import zlib
 
     if b[:8] != b"\x89PNG\r\n\x1a\n":
@@ -1078,7 +968,6 @@ def encode_jpeg(doc_id: int) -> bytes:
 
 @functools.lru_cache(maxsize=4096)
 def _encode_jpeg_for_dcs(dcs: tuple[int, ...]) -> bytes:
-    import struct
 
     out = bytearray(b"\xff\xd8")
     out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(_JPEG_QT)
@@ -1238,7 +1127,6 @@ def decode_jpeg(b: bytes, dc_only: bool = False):
     minus the 128 level shift. This is how DC-domain video analysis
     (scene-cut detection, brightness histograms) runs over compressed
     frames without ever materializing pixels."""
-    import struct
 
     import numpy as np
 
@@ -1578,7 +1466,6 @@ def encode_avi_mjpeg(doc_id: int) -> bytes:
 
 @functools.lru_cache(maxsize=1024)
 def _encode_avi_for_frames(frames: tuple[bytes, ...]) -> bytes:
-    import struct
 
     n = len(frames)
 
@@ -1637,7 +1524,6 @@ def decode_avi(b: bytes) -> tuple[dict, list[bytes]]:
     a one-byte container corruption is caught here, and a one-bit
     frame corruption downstream in ``decode_jpeg``. Returns
     (header dict, list of frame byte strings)."""
-    import struct
 
     if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"AVI ":
         raise ValueError("not an AVI")

@@ -550,7 +550,7 @@ def _melted_kept_buckets(spark: SparkSession, sf_dir: str):
         # vector — persists once per (dataset, LSH params) and serves
         # every later session cold, partitioned by table id. The
         # column select normalizes the partition column's read-back
-        # type so the inline (plan-audit) and served paths are
+        # type so the inline (cache-bypassed) and served paths are
         # schema-identical.
         from .artifacts import persisted_bundle
 

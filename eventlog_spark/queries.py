@@ -25,6 +25,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import ship_package
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -70,6 +72,7 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
+            ship_package(spark)  # before fn builds any Python function
             return canonicalize_output(fn(spark, sf_dir))
 
         REGISTRY[name] = QuerySpec(fn=wrapped, oracle=oracle, doc=doc)

@@ -22,6 +22,27 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# the directory holding the ``eventlog_spark`` package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Put the package root on the Python workers' ``PYTHONPATH``.
+
+    Arrow/pandas operators pickle module-level helpers by reference, so
+    a worker must import ``eventlog_spark``; a worker started outside
+    the repo's cwd cannot otherwise. ``SparkContext.environment`` is
+    copied into every Python function built after this call and Spark
+    prepends its ``PYTHONPATH`` to the worker's. The value is the same
+    for every query, so the session keeps one worker daemon. Works on a
+    session this package did not build; idempotent. The path is the
+    driver's, so it serves local mode and executors sharing the
+    driver's filesystem; a cluster ships the package with --py-files."""
+    env = spark.sparkContext.environment
+    path = env.get("PYTHONPATH", "")
+    if PACKAGE_ROOT not in path.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(p for p in (PACKAGE_ROOT, path) if p)
+
 
 def get_spark(
     app_name: str = "eventlog_spark",
@@ -53,4 +74,6 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ship_package(spark)
+    return spark

@@ -242,6 +242,38 @@ def test_multimodal_header_probe_recovers_all_fields(spark, sf_dir):
             assert (r.w, r.h) == ((r.doc_id % 64 + 1) * 16, (r.doc_id % 48 + 1) * 16)
 
 
+def test_registry_runs_on_workers_outside_repo_cwd(sf_dir, tmp_path):
+    """``__spark_entry__`` on a vanilla session started from another
+    directory with no PYTHONPATH: the Python workers must still import
+    the package, or every Arrow operator's task dies with
+    ModuleNotFoundError. A subprocess, because the suite's own session
+    runs from the repo root."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import importlib.util
+from pyspark.sql import SparkSession
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__", {os.path.join(repo, "__spark_entry__.py")!r})
+mod = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(mod)
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+rows = mod.queries()["multimodal_header_probe"](spark, {sf_dir!r}).collect()
+print("ROWS", len(rows), sorted({{r.format for r in rows}}))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS" in out.stdout and "['jpeg', 'png', 'wav']" in out.stdout, out.stdout
+
+
 def test_lsh_adaptive_mask_widths():
     """The bucket-prefix mask must widen with corpus size: p=4 below
     512 vectors, +1 bit per occupancy doubling, capped at 16 bits."""
@@ -922,17 +954,90 @@ def test_mixture_reweight_matches_python_model(spark, sf_dir):
     assert fxp - len(fac) <= wsum <= fxp  # truncation loses < 1 ulp per source
 
 
-def test_wav_decoder_matches_stdlib_wave(spark, sf_dir):
-    """decode_wav_pcm vs the stdlib wave module on the synthesized
-    payloads: identical rate/channels/sample bytes — the container is
-    really a valid WAV file, and our chunk walk reads it correctly."""
+# Pure-Python reference encoders: the synthesized media layouts restated
+# byte by byte with int.to_bytes and hex literals, independent of the
+# struct/numpy encoders they pin.
+
+_REF_WAV_IDS = list(range(12)) + [97, 1001, 65537, 10**6 + 3]
+
+
+def _ref_wav(doc_id: int) -> bytes:
+    """A complete canonical PCM16 WAV file for one doc_id."""
+
+    def le(v: int, n: int) -> bytes:
+        return v.to_bytes(n, "little")
+
+    data = b"".join(
+        (
+            (doc_id * multimodal._AUDIO_MIX + k * multimodal._AUDIO_STEP) % 65536
+            - 32768
+        ).to_bytes(2, "little", signed=True)
+        for k in range(multimodal.AUDIO_N)
+    )
+    rate, ch = (doc_id % 6 + 1) * 8000, doc_id % 2 + 1
+    return (
+        b"RIFF" + le(36 + len(data), 4) + b"WAVE" + b"fmt " + le(16, 4)
+        + le(1, 2) + le(ch, 2) + le(rate, 4) + le(rate * ch * 2, 4)
+        + le(ch * 2, 2) + le(16, 2) + b"data" + le(len(data), 4) + data
+    )
+
+
+def _ref_media_header(doc_id: int, media_type: str, text) -> bytes:
+    """The PNG IHDR / WAV fmt / JPEG SOF0 header of one document as a
+    hex layout; the PNG CRC slot is the first 4 bytes of md5(text)."""
+    if media_type == "image" and text is None:
+        return b""
+
+    def be(v: int, n: int) -> str:
+        return v.to_bytes(n, "big").hex()
+
+    def le(v: int, n: int) -> str:
+        return v.to_bytes(n, "little").hex()
+
+    w, h = (doc_id % 64 + 1) * 16, (doc_id % 48 + 1) * 16
+    rate, ch = (doc_id % 6 + 1) * 8000, doc_id % 2 + 1
+    if media_type == "image":
+        hx = (
+            "89504e470d0a1a0a" "0000000d" "49484452" + be(w, 4) + be(h, 4)
+            + "0802000000" + hashlib.md5(text.encode()).hexdigest()[:8]
+        )
+    elif media_type == "audio":
+        hx = (
+            "52494646" + le(36, 4) + "57415645" "666d7420" + le(16, 4)
+            + le(1, 2) + le(ch, 2) + le(rate, 4) + le(rate * ch * 2, 4)
+            + le(ch * 2, 2) + le(16, 2)
+        )
+    else:
+        hx = "ffd8" "ffc0" "0011" "08" + be(h, 2) + be(w, 2) + "03" "011100" "021101" "031101"
+    return bytes.fromhex(hx)
+
+
+def test_media_header_synth_matches_reference_encoder(spark, sf_dir):
+    """synth_media_header (the header probe's in-batch encoder) is
+    BYTE-IDENTICAL to the reference layouts for every document, and
+    each payload has the byte length the probe's oracle restates."""
+    from eventlog_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    assert docs
+    for r in docs:
+        mt = ("image", "audio", "video")[r.doc_id % 3]
+        got = multimodal.synth_media_header(r.doc_id, mt, r.text)
+        assert got == _ref_media_header(r.doc_id, mt, r.text), r.doc_id
+        assert len(got) == {"image": 33, "audio": 36, "video": 21}[mt]
+    assert multimodal.synth_media_header(3, "image", None) == b""
+
+
+def test_wav_decoder_matches_stdlib_wave():
+    """decode_wav_pcm vs the stdlib wave module on the reference
+    encoder's payloads: identical rate/channels/sample bytes — the
+    container is really a valid WAV file, and our chunk walk reads it
+    correctly."""
     import io
     import wave
 
-    rows = multimodal.audio_blobs(spark, sf_dir).limit(12).collect()
-    assert rows
-    for r in rows:
-        b = bytes(r["payload"])
+    for doc_id in _REF_WAV_IDS:
+        b = _ref_wav(doc_id)
         rate, ch, samples = multimodal.decode_wav_pcm(b)
         with wave.open(io.BytesIO(b)) as wf:
             assert wf.getframerate() == rate
@@ -942,7 +1047,7 @@ def test_wav_decoder_matches_stdlib_wave(spark, sf_dir):
         assert frames == samples.tobytes()
         # and the samples match the generating formula (signed)
         want = [
-            (r["doc_id"] * multimodal._AUDIO_MIX + k * multimodal._AUDIO_STEP) % 65536
+            (doc_id * multimodal._AUDIO_MIX + k * multimodal._AUDIO_STEP) % 65536
             - 32768
             for k in range(multimodal.AUDIO_N)
         ]
@@ -958,20 +1063,18 @@ def test_wav_malformed_payload_yields_sentinel_row():
         assert multimodal.audio_features(7, bad) == (7, 0, 0, 0, 0, 0, 0, 0, 0)
 
 
-def test_wav_numpy_synth_matches_sql_encoder(spark, sf_dir):
-    """Round-13 independence pin: the vectorized numpy WAV synthesis
+def test_wav_numpy_synth_matches_reference_encoder():
+    """Independence pin: the vectorized numpy WAV synthesis
     (synth_wav_pcm_batch, the production encode path) is BYTE-IDENTICAL
-    to the JVM SQL hex encoder (audio_blobs, kept as the audit path) —
-    a byte-offset or endianness bug in the numpy encoder cannot hide
-    behind a matching decoder bug."""
+    to the pure-Python reference encoder — a byte-offset or endianness
+    bug in the numpy encoder cannot hide behind a matching decoder
+    bug."""
     import numpy as np
 
-    rows = multimodal.audio_blobs(spark, sf_dir).limit(24).collect()
-    assert rows
-    ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    batch = multimodal.synth_wav_pcm_batch(ids)
-    for r, row in zip(rows, batch):
-        assert bytes(r["payload"]) == row.tobytes(), r["doc_id"]
+    batch = multimodal.synth_wav_pcm_batch(np.array(_REF_WAV_IDS, dtype=np.int64))
+    assert len(batch) == len(_REF_WAV_IDS)
+    for doc_id, row in zip(_REF_WAV_IDS, batch):
+        assert row.tobytes() == _ref_wav(doc_id), doc_id
 
 
 def test_wav_batch_decoder_matches_generic_walk():

@@ -15,9 +15,10 @@ Planning only — no query executes, with one class of exceptions:
 queries whose DataFrame CONSTRUCTION is data-dependent run their
 derivation jobs while the plan is built (dedup_connected_components'
 per-round convergence probe; the real-streaming query starts its
-bounded stream). Checkpoint-using queries (graph_pagerank, ann_ivf_pq,
-dedup_lsh_verified) use lazy localCheckpoint precisely so plan
-inspection stays execution-free.
+bounded stream; the IVF-PQ queries collect their control-plane rows and
+codebook for the driver-side router and LUTs). Checkpoint-using queries
+(graph_pagerank, dedup_lsh_verified) use lazy localCheckpoint precisely
+so plan inspection stays execution-free.
 """
 
 from __future__ import annotations
@@ -46,9 +47,10 @@ def main() -> None:
     from eventlog_spark.queries import REGISTRY, _ensure_loaded
     from eventlog_spark.session import get_spark
 
-    # full trees, not `Scan ExistingRDD`: disable the session-artifact
-    # cache and its lazy checkpoints (same switch tests/test_plans.py
-    # flips) so every row reflects the real build plan
+    # full trees, not `Scan ExistingRDD`: bypass the artifact cache and
+    # its lazy checkpoints (same switch tests/test_plans.py flips). The
+    # switch only skips the cache; every query builds its production
+    # plan, e.g. the IVF-PQ rows show the driver-routed serving plan.
     artifacts.ENABLED = False
 
     _ensure_loaded()
@@ -80,7 +82,8 @@ def main() -> None:
         f"Generated by `tools/plan_inventory.py` at sf_dir={SF_DIR}; planning",
         "only — except queries whose construction is data-dependent",
         "(dedup_connected_components' convergence probe, the real-stream",
-        "run), which execute while their plan is built.",
+        "run, the IVF-PQ router and LUT collects), which execute while",
+        "their plan is built.",
         "Columns: shuffles = `Exchange` nodes",
         "(includes single-partition collects for final small outputs);",
         "bcast = `BroadcastExchange`; joins by strategy; python = Arrow",

@@ -41,7 +41,7 @@ import threading
 _POOL = None
 _POOL_LOCK = threading.Lock()
 _POOL_FAILURES = 0  # 1 = rebuild on next wide batch; 2 = disabled
-_WORKERS = int(os.environ.get("SPARK_GRAFT_HASH_POOL_WORKERS", "6"))
+_WORKERS = 6
 
 
 def _read_exact(stream, n: int) -> bytes | None:
@@ -125,8 +125,6 @@ def checksum_batch(args: list[tuple]) -> list[int] | None:
     tears the pool down and rebuilds it once on the next wide batch;
     a second failure disables it for the process."""
     global _POOL, _POOL_FAILURES
-    if os.environ.get("SPARK_GRAFT_HASH_POOL", "1") == "0":
-        return None
     with _POOL_LOCK:
         if _POOL_FAILURES >= 2:
             return None

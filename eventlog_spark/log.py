@@ -2075,7 +2075,7 @@ class EventLog:
     # exists only as a runaway stop; the starvation probe
     # (tools/fencing_probe.py --maintenance) measures attempts actually
     # needed under a writer storm (single digits).
-    COMPACT_CLAIM_RETRIES = int(os.environ.get("SPARK_GRAFT_COMPACT_RETRIES", 64))
+    COMPACT_CLAIM_RETRIES = 64
 
     def _publish_rebase_on_claim_loss(self, replaced: list[str]) -> bool:
         """Publish the staged maintenance swap (compact / minor fold),
@@ -2119,7 +2119,7 @@ class EventLog:
     # publish serializes the file list and page scans fan in over every
     # fragment — i.e. appends degrade O(n) after n commits. With it,
     # both are bounded by the threshold and the fold is amortized O(1).
-    MINOR_COMPACT_FRAGMENTS = int(os.environ.get("SPARK_GRAFT_MINOR_COMPACT", 256))
+    MINOR_COMPACT_FRAGMENTS = 256
 
     # Only fragments at or under this size are folded: bulk ingest also
     # writes ``part-*`` files (Spark's own naming) and those can be

@@ -236,8 +236,8 @@ class ManifestLog:
     on open or when incremental replay finds a gap.
     """
 
-    CHECKPOINT_EVERY = int(os.environ.get("SPARK_GRAFT_MANIFEST_CHECKPOINT", 64))
-    PAGE_ENTRIES = int(os.environ.get("SPARK_GRAFT_MANIFEST_PAGE", 4096))
+    CHECKPOINT_EVERY = 64
+    PAGE_ENTRIES = 4096
 
     def __init__(self, log_dir: str, store=None):
         self._dir = os.path.join(log_dir, "_manifest")

@@ -67,7 +67,7 @@ ARTIFACT_VERSION = "1"
 # FileNotFoundException at execution time. Age-based deferral keeps the
 # warehouse bounded (dead dirs survive at most one grace window past
 # supersession) while giving in-flight readers a full window to drain.
-GC_GRACE_SECONDS = int(os.environ.get("SPARK_GRAFT_ARTIFACT_GC_GRACE", 6 * 3600))
+GC_GRACE_SECONDS = 6 * 3600
 ARTIFACT_ROOT = os.environ.get(
     "SPARK_GRAFT_ARTIFACTS",
     os.path.join(

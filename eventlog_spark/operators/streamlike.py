@@ -460,16 +460,15 @@ def stream_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lower-core-count bench run REDUCE state partitions (faster streaming
 # at fewer cores — an inverted scaling signal). The fix is the
 # production sizing rule: state partitions ∝ state volume. Source
-# bytes are the observable proxy; the target bytes/partition is
-# env-tunable (SPARK_GRAFT_STREAM_STATE_TARGET_BYTES). The local
-# default is small because the bounded demos stream a few MB against
-# an fsync-bound HDFS-backed store; a RocksDB cluster deployment
-# raises it to 64-256 MiB — same ∝-data rule (justification in
-# OPTIMIZATION_r12.md). The small constant floor keeps the in-batch
-# compute parallel for the applyInPandasWithState operators, whose
-# per-batch pandas work serializes at 1 partition (measured 7.2 s at
-# 1 vs 2.5-2.8 s at 4); the 200k ceiling is Spark's practical
-# partition-count limit at the 100 TB end.
+# bytes are the observable proxy for a fixed target bytes/partition.
+# The target is small because the bounded demos stream a few MB
+# against an fsync-bound HDFS-backed store; a cluster deployment with
+# RocksDB state wants 64-256 MiB per partition — same ∝-data rule
+# (justification in OPTIMIZATION_r12.md). The small constant floor
+# keeps the in-batch compute parallel for the applyInPandasWithState
+# operators, whose per-batch pandas work serializes at 1 partition
+# (measured 7.2 s at 1 vs 2.5-2.8 s at 4); the 200k ceiling is Spark's
+# practical partition-count limit at the 100 TB end.
 # Default re-tuned by the round-12 sf1 rehearsal: 2 MiB/partition kept
 # the sf0.1 shape (4 partitions) but derived only ~6 at sf1, where the
 # per-batch applyInPandasWithState compute is 10× and wants the
@@ -479,9 +478,7 @@ def stream_late_arrival_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (identical driver-scale behavior) and n≈23 at sf1 — the knee of both
 # curves. The ∝-data rule and the cluster guidance (64-256 MiB with
 # RocksDB state) are unchanged.
-_STATE_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_TARGET_BYTES", str(512 << 10))
-)
+_STATE_TARGET_BYTES = 512 << 10
 _STATE_MIN_PARTITIONS = 4
 # ROUND 13 (round-12 verdict item 2 — the stream_real_restart reload
 # regression): the two applyInPandasWithState queries (stateful,
@@ -504,9 +501,7 @@ _STATE_MIN_PARTITIONS = 4
 # compute, and they all IMPROVED under it. Still data-derived: no
 # core-count constant, and the lower-core driver run derives the same
 # counts.
-_PANDAS_STATE_SQRT_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PANDAS_STATE_SQRT_BYTES", str(8 << 10))
-)
+_PANDAS_STATE_SQRT_BYTES = 8 << 10
 
 
 def _source_bytes(*paths: str) -> int:

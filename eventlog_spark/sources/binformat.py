@@ -347,7 +347,7 @@ def spark_checksum(timestamp: int, label: str, payload: str, version_prev: int) 
 # touch it (IPC would cost more than the hash), bulk ingest never
 # touches it (append_dataframe checksums via the JVM F.xxhash64
 # expression, distributed), so this is strictly the driver-side
-# serving corner. Disable with SPARK_GRAFT_HASH_POOL=0.
+# serving corner.
 _POOL_MIN_BYTES = 256 * 1024  # below this, inline is faster than IPC
 
 

@@ -180,6 +180,9 @@ repo, path, wid, n = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4]
 pace = float(sys.argv[5]) if len(sys.argv) > 5 else 0.0
 sys.path.insert(0, repo)
 from eventlog_spark.log import EventLog
+from eventlog_spark.manifest import ManifestLog
+if len(sys.argv) > 6:
+    ManifestLog.CHECKPOINT_EVERY = int(sys.argv[6])
 store = None
 sock = os.environ.get("SPARK_GRAFT_CLAIM_SOCK")
 if sock:
@@ -245,10 +248,13 @@ def test_cas_cross_process_storm_two_hosts(tmp_path, xproc_store):
     EventLog.create(None, path, claim_store=store)
     n_writers, n_each = 4, 12
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ, SPARK_GRAFT_MANIFEST_CHECKPOINT="8", **child_env)
+    env = dict(os.environ, **child_env)
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", _CAS_WRITER, repo, path, str(wid), str(n_each)],
+            [
+                sys.executable, "-c", _CAS_WRITER,
+                repo, path, str(wid), str(n_each), "0", "8",
+            ],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,

@@ -1333,7 +1333,9 @@ def test_label_scan_rows_races_compaction(spark, tmp_path):
     fragment set must ALWAYS return exactly the matching rows (the log
     is static during the race, so every correct snapshot gives the
     same answer — a torn read, a vacuumed-file crash, or a pruning
-    mistake would all show up as a wrong result)."""
+    mistake would all show up as a wrong result). Readers are live, so
+    vacuum keeps its default grace; grace 0 runs only once they have
+    joined (vacuum's contract)."""
     import threading
 
     path = str(tmp_path / "lblrace")
@@ -1349,11 +1351,14 @@ def test_label_scan_rows_races_compaction(spark, tmp_path):
     stop = threading.Event()
 
     def reader(lab: str):
-        while not stop.is_set():
-            got = [r.version for r in log.scan_rows(label=lab)]
-            if got != want[lab]:
-                errors.append(f"{lab}: {got[:5]}...{len(got)} != {len(want[lab])}")
-                return
+        try:
+            while not stop.is_set():
+                got = [r.version for r in log.scan_rows(label=lab)]
+                if got != want[lab]:
+                    errors.append(f"{lab}: {got[:5]}...{len(got)} != {len(want[lab])}")
+                    return
+        except Exception as e:  # a reader crash is a failure, not a warning
+            errors.append(f"{lab}: {e!r}")
 
     threads = [
         threading.Thread(target=reader, args=(lab,), daemon=True)
@@ -1364,15 +1369,52 @@ def test_label_scan_rows_races_compaction(spark, tmp_path):
     try:
         log.minor_compact()
         log.compact()
-        log.vacuum(grace_seconds=0)  # reap retirees while readers run
+        log.vacuum()  # default grace: retirees outlive the live readers
         log.minor_compact()
     finally:
         stop.set()
         for t in threads:
             t.join(timeout=30)
+    assert not any(t.is_alive() for t in threads)
     assert not errors, errors
+    assert log.vacuum(grace_seconds=0) > 0  # no reader is live any more
     for lab in ("red", "blue", "green"):
         assert [r.version for r in log.scan_rows(label=lab)] == want[lab]
+
+
+def test_scan_rows_snapshot_survives_compact_and_default_vacuum(
+    spark, tmp_path, monkeypatch
+):
+    """A page read whose candidate fragments were chosen before a
+    compact() and a default-grace vacuum() still returns every row:
+    the retired fragments stay on disk for the grace window, so a
+    reader holding the old snapshot never opens a reaped file. The
+    interleaving is forced (no threads, no timing): the first fragment
+    read runs both maintenance calls, and every later read opens a
+    fragment the new manifest no longer names."""
+    path = str(tmp_path / "snap")
+    log = EventLog.create(spark, path)
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    for i in range(1, 13):
+        log.append("even" if i % 2 == 0 else "odd", json.dumps({"i": i}))
+    reader = EventLog.open(spark, path)  # empty row cache: every read hits disk
+    before = set(reader._manifest_files())
+    read = reader._read_fragment_rows
+    opened: list[str] = []
+
+    def read_after_maintenance(entry, *args, **kwargs):
+        if not opened:
+            reader.compact()
+            reader.vacuum()
+            assert not before & set(reader._manifest_files())
+        opened.append(entry["n"])
+        return read(entry, *args, **kwargs)
+
+    monkeypatch.setattr(reader, "_read_fragment_rows", read_after_maintenance)
+    assert [r.version for r in reader.scan_rows()] == list(range(1, 13))
+    assert len(opened) == 12 and set(opened) <= before
+    monkeypatch.undo()
+    assert [r.version for r in reader.scan_rows(label="even")] == list(range(2, 13, 2))
 
 
 def test_compact_cluster_by_label_makes_interleaved_logs_prunable(spark, tmp_path):

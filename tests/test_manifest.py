@@ -371,7 +371,9 @@ sys.path.insert(0, repo)
 from pyspark.sql import SparkSession
 
 from eventlog_spark.log import EventLog
+from eventlog_spark.manifest import ManifestLog
 
+ManifestLog.CHECKPOINT_EVERY = 8
 spark = (
     SparkSession.builder.master("local[1]")
     .appName(f"storm_writer_{wid}")
@@ -412,14 +414,12 @@ def test_eight_process_occ_manifest_storm(spark, tmp_path):
     EventLog.create(spark, path, metadata={"test": "storm"})
     n_writers, n_each = 8, 8
     repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    env = dict(_os.environ, SPARK_GRAFT_MANIFEST_CHECKPOINT="8")
     procs = [
         subprocess.Popen(
             [sys.executable, "-c", _STORM_WRITER, repo, path, str(wid), str(n_each)],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
-            env=env,
         )
         for wid in range(n_writers)
     ]

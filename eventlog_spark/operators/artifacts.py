@@ -68,6 +68,7 @@ ARTIFACT_VERSION = "1"
 # warehouse bounded (dead dirs survive at most one grace window past
 # supersession) while giving in-flight readers a full window to drain.
 GC_GRACE_SECONDS = 6 * 3600
+_JOB_DESCRIPTION = "spark.job.description"
 ARTIFACT_ROOT = os.environ.get(
     "SPARK_GRAFT_ARTIFACTS",
     os.path.join(
@@ -153,32 +154,43 @@ def persisted_bundle(
         os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths.values()
     ):
         os.makedirs(ARTIFACT_ROOT, exist_ok=True)
-        frames = build_all()
-        for name, partition_by in tables:
-            path = paths[name]
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                continue
-            tmp = path + f".tmp-{uuid.uuid4().hex}"
-            writer = frames[name].write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)  # concurrent writer won
-            prefix = f"{name}-{dstag}-"
-            keep = os.path.basename(path)
-            now = time.time()
-            for d in os.listdir(ARTIFACT_ROOT):
-                if d.startswith(prefix) and d != keep and ".tmp-" not in d:
-                    full = os.path.join(ARTIFACT_ROOT, d)
-                    try:
-                        age = now - os.path.getmtime(full)
-                    except OSError:
-                        continue  # already being removed by another process
-                    if age > GC_GRACE_SECONDS:
-                        shutil.rmtree(full, ignore_errors=True)
+        # the build's and the writes' Spark jobs say what they make in
+        # the status store; the caller's description comes back after
+        sc = spark.sparkContext
+        caller = sc.getLocalProperty(_JOB_DESCRIPTION)
+        try:
+            sc.setLocalProperty(
+                _JOB_DESCRIPTION, f"artifact {'+'.join(n for n, _ in tables)}: build"
+            )
+            frames = build_all()
+            for name, partition_by in tables:
+                path = paths[name]
+                if os.path.exists(os.path.join(path, "_SUCCESS")):
+                    continue
+                sc.setLocalProperty(_JOB_DESCRIPTION, f"artifact {name}: write")
+                tmp = path + f".tmp-{uuid.uuid4().hex}"
+                writer = frames[name].write.mode("overwrite")
+                if partition_by:
+                    writer = writer.partitionBy(*partition_by)
+                writer.parquet(tmp)
+                try:
+                    os.rename(tmp, path)
+                except OSError:
+                    shutil.rmtree(tmp, ignore_errors=True)  # concurrent writer won
+                prefix = f"{name}-{dstag}-"
+                keep = os.path.basename(path)
+                now = time.time()
+                for d in os.listdir(ARTIFACT_ROOT):
+                    if d.startswith(prefix) and d != keep and ".tmp-" not in d:
+                        full = os.path.join(ARTIFACT_ROOT, d)
+                        try:
+                            age = now - os.path.getmtime(full)
+                        except OSError:
+                            continue  # already being removed by another process
+                        if age > GC_GRACE_SECONDS:
+                            shutil.rmtree(full, ignore_errors=True)
+        finally:
+            sc.setLocalProperty(_JOB_DESCRIPTION, caller)
     return {name: spark.read.parquet(p) for name, p in paths.items()}
 
 

@@ -99,6 +99,48 @@ def test_persisted_bundle_write_once_and_fingerprinting(
     assert {"p=0", "p=1"} <= set(os.listdir(os.path.join(tmp_path, dirs[0])))
 
 
+def test_persisted_bundle_describes_its_jobs(spark, sf_dir, tmp_path, monkeypatch):
+    """A cold bundle's Spark jobs say what they build: the build runs
+    under ``artifact <names>: build`` and each table write under
+    ``artifact <name>: write`` (its tasks record the description into
+    the written rows); the caller's description and job group come back
+    afterwards."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path))
+    key = "spark.job.description"
+    seen = {}
+
+    def described(batches):
+        for b in batches:
+            d = TaskContext.get().getLocalProperty(key)
+            yield pd.DataFrame({"id": b["id"], "d": d})
+
+    def build():
+        seen["build"] = spark.sparkContext.getLocalProperty(key)
+        return {
+            n: spark.range(2).mapInPandas(described, "id long, d string")
+            for n in ("ta", "tb")
+        }
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller")
+    try:
+        tabs = artifacts.persisted_bundle(
+            spark, sf_dir, [("ta", None), ("tb", ("id",))], build,
+            inputs=("embeddings",), params="describe",
+        )
+        assert sc.getLocalProperty(key) == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        for prop in ("spark.jobGroup.id", key):
+            sc.setLocalProperty(prop, None)
+    assert seen["build"] == "artifact ta+tb: build"
+    for n in ("ta", "tb"):
+        assert {r["d"] for r in tabs[n].collect()} == {f"artifact {n}: write"}
+
+
 def test_ivf_pq_served_cold_without_retraining(spark, sf_dir, tmp_path, monkeypatch):
     """The offline-train/online-serve split end-to-end: once the
     codebook/codes tables exist, a NEW session (empty artifact cache)

@@ -1684,6 +1684,7 @@ def test_np_router_and_lut_match_jvm(spark, sf_dir):
     from eventlog_spark.operators import curation as C
     from eventlog_spark.operators.corpus import PQ_FXP
     from eventlog_spark.operators.similarity import K_LISTS, N_PROBE, QUERY_IDS
+    from tests.jvm_kernels import dot
 
     PQ_M, PQ_SUB, PQ_K = C.PQ_MT, C.PQ_SUBT, C.PQ_KT
     emb = C._emb_normalized(spark, sf_dir)
@@ -1705,7 +1706,7 @@ def test_np_router_and_lut_match_jvm(spark, sf_dir):
     wp = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
     jvm_probes = (
         q.crossJoin(F.broadcast(cents))
-        .withColumn("cos", C._dot("qv", "cv") / (F.col("nq") * F.col("nc")))
+        .withColumn("cos", dot("qv", "cv") / (F.col("nq") * F.col("nc")))
         .withColumn("rn", F.row_number().over(wp))
         .where(F.col("rn") <= N_PROBE)
         .select("query_id", "cid")
@@ -1777,6 +1778,7 @@ def test_np_router_matches_jvm_on_zero_norm_vectors(spark):
     from pyspark.sql.window import Window
 
     from eventlog_spark.operators import curation as C
+    from tests.jvm_kernels import dot
 
     k_lists, query_ids, n_probe = 6, [100, 101, 102], 4
     rng = random.Random(11)
@@ -1808,7 +1810,7 @@ def test_np_router_matches_jvm_on_zero_norm_vectors(spark):
         wp = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("cid"))
         jvm = (
             q.crossJoin(cents)
-            .withColumn("cos", C._dot("qv", "cv") / (F.col("nq") * F.col("nc")))
+            .withColumn("cos", dot("qv", "cv") / (F.col("nq") * F.col("nc")))
             .withColumn("rn", F.row_number().over(wp))
             .where(F.col("rn") <= n_probe)
             .orderBy("query_id", "rn")
@@ -1824,15 +1826,170 @@ def test_np_router_matches_jvm_on_zero_norm_vectors(spark):
     assert [c for qid, c in probes if qid == 101] == [4, 0, 1, 2]
 
 
+def test_np_adc_luts_floor_nan_like_jvm(spark):
+    """Spark's floor of a double is the JVM's ``(long) Math.floor``:
+    NaN → 0 and ±∞ saturate, where numpy's int64 cast turns NaN into
+    Long.MinValue. A query vector with a NaN element passes
+    ``_emb_normalized`` (its norm is NaN, not 0), so its LUT entries
+    must equal the JVM floor(...) expression's, NaN subspace included."""
+    import random
+
+    from eventlog_spark.operators import curation as C
+    from eventlog_spark.operators.corpus import PQ_FXP
+
+    m, sub, k = 2, 4, 3
+    rng = random.Random(5)
+    rows = [
+        (s, cid, [rng.uniform(-1, 1) for _ in range(sub)])
+        for s in range(m)
+        for cid in range(k)
+    ]
+    q = [rng.uniform(-1, 1) for _ in range(m * sub)]
+    q[1] = float("nan")
+    luts = C._np_adc_luts(
+        [{"s": s, "cid": cid, "cv": cv} for s, cid, cv in rows], [(7, q)], m, sub, k, PQ_FXP
+    )
+    cent = spark.createDataFrame(rows, "s int, cid long, cv array<double>")
+    qdf = spark.createDataFrame([(7, q)], "query_id long, qnv array<double>")
+    acc = F.lit(0.0)
+    for i in range(sub):
+        d = F.element_at("qnv", (F.col("s") * sub + i + 1).cast("int")) - F.col("cv").getItem(i)
+        acc = acc + d * d
+    jvm = cent.crossJoin(qdf).select(
+        "s", "cid", F.floor(acc * PQ_FXP).cast("long").alias("l")
+    ).collect()
+    assert len(jvm) == m * k
+    for r in jvm:
+        assert luts[7][r["s"] * k + r["cid"]] == r["l"], r
+    assert luts[7][:k] == [0] * k  # the NaN subspace
+
+    edge = [float("nan"), float("inf"), float("-inf"), 2.5, -2.5]
+    got = spark.createDataFrame([(x,) for x in edge], "x double").select(
+        F.floor("x").cast("long").alias("f")
+    ).collect()
+    assert [r["f"] for r in got] == [int(v) for v in C._fp_floor(edge)]
+
+
+def test_ivf_assignment_and_pq_argmin_match_jvm(spark):
+    """The corpus pass's IVF assignment equals the JVM's ``max_by(cid,
+    struct(cos, -cid))`` — NaN cos above every double, NULL cos (a zero
+    norm, ANSI off) below, exact cosine ties to the smaller cid — and
+    its PQ encode equals ``MIN(floor(sd·PQ_FXP)·K + cid) % K``:
+    equal-distance centroids encode to the smaller cid, a NaN element
+    scores distance 0, a NULL element leaves a NULL code."""
+    import random
+
+    import numpy as np
+
+    from eventlog_spark.operators import curation as C
+    from eventlog_spark.operators.corpus import PQ_FXP
+    from tests.jvm_kernels import dot
+
+    rng = random.Random(3)
+    vec = lambda: [rng.uniform(-1, 1) for _ in range(64)]  # noqa: E731
+    c0, c2 = vec(), vec()
+    nan_c = vec()
+    nan_c[9] = float("nan")
+    cents = [c0, list(c0), c2, [2.0 * x for x in c2], [0.0] * 64]
+    nan_v = vec()
+    nan_v[3] = float("nan")
+    docs = [vec() for _ in range(20)] + [list(c2), [0.5 * x for x in c0], nan_v, [0.0] * 64]
+
+    def jvm_and_np(centroids):
+        k_lists = len(centroids)
+        rows = list(enumerate(centroids)) + [(100 + i, v) for i, v in enumerate(docs)]
+        emb = (
+            spark.createDataFrame(rows, "vec_id long, dvec array<double>")
+            .withColumn(
+                "nrm",
+                F.expr("sqrt(aggregate(transform(dvec, x -> x * x), 0.0D, (a, v) -> a + v))"),
+            )
+            .withColumn("nv", F.expr("transform(dvec, x -> x / nrm)"))
+        )
+        cdf = emb.where(F.col("vec_id") < k_lists).select(
+            F.col("vec_id").alias("cid"), F.col("dvec").alias("cv"), F.col("nrm").alias("nc")
+        )
+        jvm = dict(
+            emb.crossJoin(cdf)
+            .withColumn("cos", dot("dvec", "cv") / (F.col("nrm") * F.col("nc")))
+            .groupBy("vec_id")
+            .agg(F.max_by("cid", F.struct(F.col("cos"), (-F.col("cid")).alias("neg"))))
+            .collect()
+        )
+        e = C._emb_arrays(emb.toArrow())
+        by_id = np.argsort(e["ids"])
+        coarse = {n: a[by_id[e["ids"][by_id] < k_lists]] for n, a in e.items()}
+        lists, _x, _xn = C._pq_targets(e, coarse, residual=False)
+        return jvm, dict(zip(e["ids"].tolist(), lists.tolist()))
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        jvm, got = jvm_and_np(cents)
+        assert got == jvm
+        assert got[120] == 2 and got[121] == 0  # exact ties: smaller cid
+        assert got[122] == 0 and got[123] == 0  # all-NaN, all-NULL rows
+        jvm, got = jvm_and_np(cents + [nan_c])
+        # NaN above every double; rows holding a NaN tie on every cid
+        assert got == jvm and got[5] == got[122] == 0
+        assert {v for i, v in got.items() if i not in (5, 122)} == {5}
+
+        # PQ encode: duplicate centroids 0/1, a NaN and a NULL element
+        sub, k = 4, 5
+        book = [[rng.uniform(-1, 1) for _ in range(sub)] for _ in range(4)]
+        book.insert(1, list(book[0]))
+        xs = [[rng.uniform(-1, 1) for _ in range(sub)] for _ in range(30)]
+        xs += [list(book[0]), [float("nan")] * sub, [0.1, None, 0.2, 0.3]]
+        xdf = spark.createDataFrame(list(enumerate(xs)), "vec_id long, sv array<double>")
+        bdf = spark.createDataFrame(list(enumerate(book)), "cid long, cv array<double>")
+        key = F.floor(C._sq_l2_sql("sv", "cv", sub) * PQ_FXP).cast("long") * k + F.col("cid")
+        jvm = dict(
+            xdf.crossJoin(bdf).groupBy("vec_id").agg((F.min(key) % k).alias("c")).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    x = np.array(xs, dtype=np.float64)
+    xnull = np.array([[v is None for v in r] for r in xs])
+    codes = C._pq_nearest(
+        x, xnull.any(axis=1), np.array(book), np.zeros(k, bool), np.arange(k), k
+    )
+    got = {i: (None if c < 0 else int(c)) for i, c in enumerate(codes)}
+    assert got == jvm
+    assert got[30] == 0 and got[31] == 0 and got[32] is None
+
+
+def test_ivf_pq_binding_training_cap_matches_oracles(spark, sf_dir, tmp_path, monkeypatch):
+    """Every test dataset is smaller than PQ_TRAIN_CAP, so no other
+    test makes the training sample bind. With the cap at 100 the
+    driver-side training must still equal the DuckDB oracles, which
+    read the cap when built, for both IVF-PQ variants."""
+    from eventlog_spark.operators import artifacts
+    from eventlog_spark.operators import curation as C
+    from eventlog_spark.queries import REGISTRY, _ensure_loaded
+    from tests.oracle_utils import compare
+
+    _ensure_loaded()
+    monkeypatch.setattr(C, "PQ_TRAIN_CAP", 100)
+    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path))
+    monkeypatch.setattr(artifacts, "_CACHE", {})
+    assert C._emb_normalized(spark, sf_dir).count() > C.PQ_TRAIN_CAP
+    for name, oracle in (
+        ("ann_ivf_pq", C._ivf_pq_oracle()),
+        ("ann_ivf_pq_residual", C._ivf_pq_residual_oracle()),
+    ):
+        ok, msg = compare(REGISTRY[name].fn(spark, sf_dir), oracle, sf_dir)
+        assert ok, f"{name}: {msg}"
+
+
 def test_distance_kernels_accept_mixed_str_and_column(spark):
     """ADVICE (low): the unrolled squared-L2 and dot kernels take column
     names, Columns, or one of each — a mixed call equals the all-string
     call."""
-    from eventlog_spark.operators.curation import _dot, _sq_l2
+    from tests.jvm_kernels import dot, sq_l2
 
     df = spark.createDataFrame(
         [([1.0, 2.0, 3.0], [0.5, -1.0, 4.0])], "a array<double>, b array<double>"
     )
-    for fn, want in ((_sq_l2, 10.25), (_dot, 10.5)):
+    for fn, want in ((sq_l2, 10.25), (dot, 10.5)):
         for a, b in (("a", "b"), ("a", F.col("b")), (F.col("a"), "b")):
             assert df.select(fn(a, b, 3).alias("v")).first().v == want

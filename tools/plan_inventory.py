@@ -15,8 +15,9 @@ Planning only — no query executes, with one class of exceptions:
 queries whose DataFrame CONSTRUCTION is data-dependent run their
 derivation jobs while the plan is built (dedup_connected_components'
 per-round convergence probe; the real-streaming query starts its
-bounded stream; the IVF-PQ queries collect their control-plane rows and
-codebook for the driver-side router and LUTs). Checkpoint-using queries
+bounded stream; the IVF-PQ queries collect their training sample, and
+their control-plane rows and codebook for the driver-side router and
+LUTs). Checkpoint-using queries
 (graph_pagerank, dedup_lsh_verified) use lazy localCheckpoint precisely
 so plan inspection stays execution-free.
 """
@@ -37,7 +38,7 @@ JOIN_NODES = (
     "ShuffledHashJoin",
     "BroadcastNestedLoopJoin",
 )
-PY_NODES = ("MapInPandas", "ArrowEvalPython", "AggregateInPandas", "FlatMapGroupsInPandas")
+PY_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "AggregateInPandas", "FlatMapGroupsInPandas")
 MARKERS = ("TakeOrderedAndProject", "WindowGroupLimit", "Expand", "Window")
 
 
@@ -82,7 +83,7 @@ def main() -> None:
         f"Generated by `tools/plan_inventory.py` at sf_dir={SF_DIR}; planning",
         "only — except queries whose construction is data-dependent",
         "(dedup_connected_components' convergence probe, the real-stream",
-        "run, the IVF-PQ router and LUT collects), which execute while",
+        "run, the IVF-PQ training, router and LUT collects), which execute while",
         "their plan is built.",
         "Columns: shuffles = `Exchange` nodes",
         "(includes single-partition collects for final small outputs);",

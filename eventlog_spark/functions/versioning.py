@@ -58,18 +58,6 @@ class VersionedBatch:
     unpersist: Callable[[], None]
 
 
-def with_dense_versions(
-    df: DataFrame,
-    base: int = 0,
-    col_name: str = "version",
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Add a dense 1-based sequence column ``base+1 .. base+count``."""
-    batch = with_dense_versions_counted(df, base, col_name, order_cols)
-    batch.unpersist()
-    return batch.df
-
-
 def with_dense_versions_counted(
     df: DataFrame,
     base: int = 0,

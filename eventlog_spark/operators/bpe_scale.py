@@ -1,11 +1,9 @@
-"""Scalable BPE tokenizer training — the ITERATIVE per-round-materialized
-trainer (round-6 verdict item 1).
-
-``curation.text_bpe_train`` demonstrates the merge loop by UNROLLING all
-rounds into one lazy plan — oracle-replayable, but its plan grows
-linearly with merge count (126 Exchanges at 6 merges; a production 32k
-merge vocabulary would never finish planning). This module is the form
-that reaches production size:
+"""BPE tokenizer training and serving — the repo's one BPE
+implementation [Sennrich+ '16]. Every tokenizer query (the 6-merge
+``text_bpe_train`` / ``_encode`` / ``_roundtrip`` /
+``text_tokenizer_fertility`` in curation.py and the 16-merge
+``text_bpe_train_scaled`` / ``_encode_scaled`` here) serves from the
+artifact bundle ``bpe_bundle`` trains with ``bpe_train_iterative``:
 
 * **Constant plan depth.** Each round ends in an EAGER
   ``localCheckpoint`` of the two state tables (vocabulary, pair counts),
@@ -20,14 +18,11 @@ that reaches production size:
   standing pair-count table — per-round cost is ∝ affected words, not
   |vocab|, the same incremental bookkeeping an in-memory trainer
   (Sennrich's learn_bpe, HF tokenizers) does with its pair index.
-* **Exact reference merge semantics.** A merge applies as a greedy
+* **Reference merge semantics.** A merge applies as a greedy
   left-to-right FOLD over the symbol array (``F.aggregate``): in a run
-  like ``a a a a a`` the pairs merge as ``aa aa a`` — matching
-  Sennrich's tokenizer exactly. (The unrolled demo applies merges as a
-  non-overlapping string ``replace``, which under-merges repeated and
-  alternating runs — a documented deviation there; here the semantics
-  are the real thing, golden-tested against a pure-Python reference
-  trainer.)
+  like ``a a a a a`` the pairs merge as ``aa aa a`` — Sennrich's
+  tokenizer exactly, golden-tested against a pure-Python reference
+  trainer.
 * **Driver round trip = control plane only.** The one ``collect`` per
   round fetches the argmax PAIR (a single row) to drive the loop and
   parameterize the next round's expressions as literals — the same
@@ -35,12 +30,12 @@ that reaches production size:
   (curation.py); symbol data never leaves the executors.
 
 Reference parity: the reference engine has no tokenizer; this is part
-of the LLM-pipeline surface the task mandates. The registered query
-``text_bpe_train_scaled`` trains BPE_SCALED_MERGES rounds and is
-hash-checked against a generated DuckDB oracle that replays every round
-with the SAME fold semantics (``list_reduce`` over a string
-accumulator). ``tools/bpe_scale_probe.py`` measures per-round cost and
-plan size flat in round count at a few hundred merges (BASELINE.md).
+of the LLM data-pipeline surface. Every tokenizer query is
+hash-checked against a DuckDB oracle built on ``bpe_chain_sql``, a
+generated replay of every round with the SAME fold semantics
+(``list_reduce`` over a string accumulator). ``tools/bpe_scale_probe.py``
+measures per-round cost and plan size flat in round count at a few
+hundred merges (BASELINE.md).
 """
 
 from __future__ import annotations
@@ -136,15 +131,14 @@ def bpe_train_iterative(
     sf_dir: str,
     n_merges: int,
     *,
-    min_count: int = 1,
     on_round=None,
     vocab_df: DataFrame | None = None,
     snapshot_dir: str | None = None,
     snapshot_every: int = 0,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE rounds; return (merge table rows, final
-    vocabulary DataFrame). Stops early when no pair reaches
-    ``min_count``. ``on_round(k, pair, total)`` is a per-round progress
+    vocabulary DataFrame). Stops early when no pair is left.
+    ``on_round(k, pair, total)`` is a per-round progress
     hook (the scale probe uses it to time rounds).
 
     Loop shape per round — THREE bounded jobs, independent of how many
@@ -260,7 +254,7 @@ def bpe_train_iterative(
 
     for k in range(start_k + 1, n_merges + 1):
         top = pc.orderBy(F.col("total").desc(), "pair").limit(1).collect()
-        if not top or top[0]["total"] < min_count:
+        if not top:
             break
         pair, total = top[0]["pair"], int(top[0]["total"])
         left, right = pair.split(" ", 1)
@@ -301,35 +295,83 @@ def bpe_train_iterative(
     return merges, vocab
 
 
-# -- persisted artifact + registered query -------------------------------------
+# -- persisted artifact, encoder, oracles, registered queries ------------------
 
 
-def _bpe_scaled_persisted(spark: SparkSession, sf_dir: str):
-    """Offline-train/online-serve split, same shape as the ANN and demo
-    BPE artifacts: the merge table and final vocabulary persist per
-    (dataset fingerprint, params); later sessions serve from the tables
-    without re-running the loop."""
+def bpe_bundle(
+    spark: SparkSession, sf_dir: str, n_merges: int
+) -> tuple[DataFrame, DataFrame]:
+    """The tokenizer's offline-train/online-serve split: the
+    ``n_merges``-round merge table (rank, pair, merged, total) and the
+    final vocabulary (word, cnt, sym — space-joined symbols) are
+    trained ONCE per (dataset fingerprint, merge count) and persisted;
+    every later session serves from the tables without re-running the
+    loop. The merge table IS the artifact a tokenizer ships. Table
+    names carry the merge count, so bundles of different sizes never
+    supersede each other."""
     from .artifacts import persisted_bundle
 
+    merges_t, vocab_t = f"bpe_merges_m{n_merges}", f"bpe_vocab_m{n_merges}"
+
     def build_all():
-        merges, vocab = bpe_train_iterative(spark, sf_dir, BPE_SCALED_MERGES)
-        mdf = spark.createDataFrame(
-            merges, "rank int, pair string, merged string, total long"
-        )
+        merges, vocab = bpe_train_iterative(spark, sf_dir, n_merges)
         return {
-            "bpe_scaled_merges": mdf,
-            "bpe_scaled_vocab": vocab.select(
+            merges_t: spark.createDataFrame(
+                merges, "rank int, pair string, merged string, total long"
+            ),
+            vocab_t: vocab.select(
                 "word", "cnt", F.concat_ws(" ", "syms").alias("sym")
             ),
         }
 
-    return persisted_bundle(
+    tabs = persisted_bundle(
         spark,
         sf_dir,
-        [("bpe_scaled_merges", None), ("bpe_scaled_vocab", None)],
+        [(merges_t, None), (vocab_t, None)],
         build_all,
         inputs=["documents"],
-        params=f"bpe_scaled_v1_m{BPE_SCALED_MERGES}",
+        params=f"bpe_fold_v1_m{n_merges}",
+    )
+    return tabs[merges_t], tabs[vocab_t]
+
+
+def bpe_token_lengths(
+    spark: SparkSession, sf_dir: str, n_merges: int, docs: DataFrame, *keys: str
+) -> DataFrame:
+    """Encode every token of ``docs`` with the ``n_merges`` vocabulary:
+    rows (``keys``…, n_chars, n_sym). BPE merges are functions of the
+    word alone, so encoding is a VOCABULARY JOIN, not a per-token merge
+    loop: the vocabulary (KBs) broadcasts onto the token stream, and
+    out-of-vocabulary words (the length-1 words training excludes) fall
+    back to character symbols via the left-join NULL arm. Same shape
+    at 100 TB: one broadcast-joined projection over the token stream."""
+    _merges, vocab = bpe_bundle(spark, sf_dir, n_merges)
+    tok = docs.select(*keys, F.explode(F.split("text", " ")).alias("word"))
+    vsym = vocab.select(
+        "word",
+        F.size(F.split(F.trim(F.col("sym")), " ")).alias("v_n_sym"),
+    )
+    return tok.join(F.broadcast(vsym), "word", "left").select(
+        *keys,
+        F.length("word").alias("n_chars"),
+        F.coalesce("v_n_sym", F.length("word")).alias("n_sym"),
+    )
+
+
+def bpe_encode_docs(spark: SparkSession, sf_dir: str, n_merges: int) -> DataFrame:
+    """Per-document word / character-token / BPE-token counts and the
+    compression the ``n_merges`` learned merges achieve (an exact
+    integer-ratio double, identical across engines)."""
+    docs = load_table(spark, sf_dir, "documents")
+    enc = bpe_token_lengths(spark, sf_dir, n_merges, docs, "doc_id")
+    return enc.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_words"),
+        F.sum("n_chars").cast("long").alias("n_char_tokens"),
+        F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
+        (
+            (F.sum("n_chars") - F.sum("n_sym")).cast("double")
+            / F.sum("n_chars")
+        ).alias("compression"),
     )
 
 
@@ -346,16 +388,17 @@ def _fold_sql(acc: str, x: str, left: str, right: str) -> str:
     )
 
 
-def _bpe_scaled_chain(rounds: int) -> str:
-    """Generated DuckDB replay of the iterative trainer (CTE text only —
-    the train and encode oracles both build on it): per round, a
-    pair-count CTE, a 1-row argmax CTE, and a vocabulary CTE applying
-    the merge via the list_reduce fold — the same greedy left-to-right
-    semantics as the Spark trainer, so merge tables match to the hash.
+def bpe_chain_sql(rounds: int) -> str:
+    """Generated DuckDB replay of the trainer (CTE text only — every
+    tokenizer oracle builds on it): per round, a pair-count CTE, a
+    1-row argmax CTE ``b{k}``, and a vocabulary CTE ``v{k}`` (word, cnt,
+    sym = ``' s1 s2 … '``) applying the merge via the list_reduce fold —
+    the same greedy left-to-right semantics as the Spark trainer, so
+    merge tables match to the hash.
     The vocabulary CTEs are MATERIALIZED: each v{k} is referenced twice
     (p{k+1} and v{k+1}), so DuckDB's default CTE inlining would expand
     the chain to 2^rounds copies of the base scan — the planner-side
-    twin of the plan blowup this trainer exists to avoid."""
+    twin of the plan blowup the per-round checkpoints avoid."""
     parts = [
         """v0 AS MATERIALIZED (
     SELECT word, cnt,
@@ -396,47 +439,21 @@ v{k} AS MATERIALIZED (
     return ",\n".join(parts)
 
 
-def _bpe_scaled_oracle(rounds: int) -> str:
+def bpe_train_oracle(rounds: int) -> str:
     finals = "\n    UNION ALL\n".join(
         f"    SELECT CAST({k} AS INT) AS rank, pair, l || r AS merged, total FROM b{k}"
         for k in range(1, rounds + 1)
     )
     return (
         "WITH "
-        + _bpe_scaled_chain(rounds)
+        + bpe_chain_sql(rounds)
         + f"\nSELECT rank, pair, merged, total FROM (\n{finals}\n) ORDER BY rank"
     )
 
 
-@register(
-    "text_bpe_train_scaled",
-    oracle=_bpe_scaled_oracle(BPE_SCALED_MERGES),
-    doc=f"Iterative BPE trainer at {BPE_SCALED_MERGES} merges: per-round "
-    "materialized state (constant plan depth — the form that reaches a "
-    "32k-merge production vocabulary), delta-maintained pair counts, "
-    "exact Sennrich greedy-fold merge semantics.",
-)
-def text_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production-shaped tokenizer trainer (see module docstring).
-    Differences from the unrolled demo (``curation.text_bpe_train``):
-    constant plan depth per round (eager checkpoint boundaries instead
-    of one unrolled lazy plan), delta-maintained pair counts (per-round
-    cost ∝ words containing the merged pair), and EXACT greedy
-    left-to-right merge semantics (the demo's non-overlapping string
-    replace under-merges repeated/alternating runs like ``banana``).
-    The merge tables therefore legitimately diverge from the demo's
-    after the first round whose pair recurs within a word; this one is
-    the real tokenizer, golden-tested against a pure-Python reference
-    trainer and hash-checked against a fold-semantics DuckDB replay."""
-    return _bpe_scaled_persisted(spark, sf_dir)["bpe_scaled_merges"].orderBy(
-        "rank"
-    )
-
-
-@register(
-    "text_bpe_encode_scaled",
-    oracle=f"""
-WITH {_bpe_scaled_chain(BPE_SCALED_MERGES)},
+def bpe_encode_oracle(rounds: int) -> str:
+    return f"""
+WITH {bpe_chain_sql(rounds)},
 tok AS (
     SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
 ),
@@ -445,7 +462,7 @@ enc AS (
            len(t.word) AS n_chars,
            CASE WHEN v.sym IS NULL THEN len(t.word)
                 ELSE len(string_split(trim(v.sym), ' ')) END AS n_sym
-    FROM tok t LEFT JOIN v{BPE_SCALED_MERGES} v ON t.word = v.word
+    FROM tok t LEFT JOIN v{rounds} v ON t.word = v.word
 )
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_words,
@@ -454,40 +471,35 @@ SELECT doc_id,
        CAST(SUM(n_chars) - SUM(n_sym) AS DOUBLE) / SUM(n_chars)
            AS compression
 FROM enc GROUP BY doc_id
-""",
-    doc=f"Encode the corpus with the {BPE_SCALED_MERGES}-merge vocabulary "
-    "trained by the ITERATIVE trainer (exact fold semantics): per-doc "
-    "token counts and compression.",
+"""
+
+
+@register(
+    "text_bpe_train_scaled",
+    oracle=bpe_train_oracle(BPE_SCALED_MERGES),
+    doc=f"BPE tokenizer training at {BPE_SCALED_MERGES} merges: per-round "
+    "materialized state (constant plan depth — the form that reaches a "
+    "32k-merge production vocabulary), delta-maintained pair counts, "
+    "Sennrich greedy-fold merge semantics.",
+)
+def text_bpe_train_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The merge table of the ``BPE_SCALED_MERGES``-round tokenizer
+    (see module docstring): the same trainer and bundle as the
+    ``BPE_MERGES``-round ``curation.text_bpe_train``, whose table is
+    this one's first ``BPE_MERGES`` rows — greedy training is
+    prefix-consistent."""
+    merges, _vocab = bpe_bundle(spark, sf_dir, BPE_SCALED_MERGES)
+    return merges.orderBy("rank")
+
+
+@register(
+    "text_bpe_encode_scaled",
+    oracle=bpe_encode_oracle(BPE_SCALED_MERGES),
+    doc=f"Encode the corpus with the {BPE_SCALED_MERGES}-merge trained "
+    "vocabulary: per-doc token counts and compression.",
 )
 def text_bpe_encode_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The serving half of the production tokenizer: the iterative
-    trainer's persisted vocabulary broadcasts onto the token stream —
-    encoding is a vocab JOIN, never a per-token merge loop; OOV words
-    (the length-1 words training excludes) fall back to character
-    symbols via the left-join NULL arm. Because the trainer's fold
-    merges repeated/alternating runs correctly, segmentations (and so
-    token counts) legitimately differ from the demo encoder's on words
-    like ``banana`` — this pair is the one a production pipeline runs.
-    Same two-stage shape at 100 TB: one broadcast-joined projection
-    over the token stream plus the per-doc groupBy."""
-    vocab = _bpe_scaled_persisted(spark, sf_dir)["bpe_scaled_vocab"]
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    vsym = vocab.select(
-        "word",
-        F.size(F.split(F.trim(F.col("sym")), " ")).alias("v_n_sym"),
-    )
-    enc = tok.join(F.broadcast(vsym), "word", "left").select(
-        "doc_id",
-        F.length("word").alias("n_chars"),
-        F.coalesce("v_n_sym", F.length("word")).alias("n_sym"),
-    )
-    return enc.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("n_chars").cast("long").alias("n_char_tokens"),
-        F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
-        (
-            (F.sum("n_chars") - F.sum("n_sym")).cast("double")
-            / F.sum("n_chars")
-        ).alias("compression"),
-    )
+    """``curation.text_bpe_encode`` at ``BPE_SCALED_MERGES`` merges:
+    the persisted vocabulary broadcasts onto the token stream
+    (``bpe_token_lengths``), then one per-doc groupBy."""
+    return bpe_encode_docs(spark, sf_dir, BPE_SCALED_MERGES)

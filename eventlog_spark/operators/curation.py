@@ -25,6 +25,14 @@ from pyspark.sql import functions as F
 
 from ..queries import register
 from ..tables import load_table, spread
+from .bpe_scale import (
+    bpe_bundle,
+    bpe_chain_sql,
+    bpe_encode_docs,
+    bpe_encode_oracle,
+    bpe_token_lengths,
+    bpe_train_oracle,
+)
 from .dedup import (
     _LSH_PAIRS_SQL,
     _SHINGLES_SQL,
@@ -1828,131 +1836,14 @@ def _ivf_pq_residual_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -- BPE merge training (the iterative tokenizer-training loop) ----------------
+# -- BPE tokenizer: train and encode (trainer in operators/bpe_scale.py) ------
 
 BPE_MERGES = 6
 
 
 @register(
     "text_bpe_train",
-    oracle="""
-WITH v0 AS (
-    SELECT word, cnt,
-           ' ' || array_to_string(list_transform(range(1, len(word) + 1),
-                                  i -> substr(word, CAST(i AS INT), 1)), ' ')
-               || ' ' AS sym
-    FROM (
-        SELECT word, COUNT(*) AS cnt FROM (
-            SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        ) WHERE len(word) >= 2
-        GROUP BY word
-    )
-),
-p1 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v0)
-    ) GROUP BY pair
-),
-b1 AS (SELECT pair, total FROM p1 ORDER BY total DESC, pair LIMIT 1),
-v1 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v0 CROSS JOIN b1 b
-),
-p2 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v1)
-    ) GROUP BY pair
-),
-b2 AS (SELECT pair, total FROM p2 ORDER BY total DESC, pair LIMIT 1),
-v2 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v1 CROSS JOIN b2 b
-),
-p3 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v2)
-    ) GROUP BY pair
-),
-b3 AS (SELECT pair, total FROM p3 ORDER BY total DESC, pair LIMIT 1),
-v3 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v2 CROSS JOIN b3 b
-),
-p4 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v3)
-    ) GROUP BY pair
-),
-b4 AS (SELECT pair, total FROM p4 ORDER BY total DESC, pair LIMIT 1),
-v4 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v3 CROSS JOIN b4 b
-),
-p5 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v4)
-    ) GROUP BY pair
-),
-b5 AS (SELECT pair, total FROM p5 ORDER BY total DESC, pair LIMIT 1),
-v5 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v4 CROSS JOIN b5 b
-),
-p6 AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v5)
-    ) GROUP BY pair
-),
-b6 AS (SELECT pair, total FROM p6 ORDER BY total DESC, pair LIMIT 1),
-v6 AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v5 CROSS JOIN b6 b
-)
-SELECT rank, pair, merged, total FROM (
-    SELECT CAST(1 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b1
-    UNION ALL
-    SELECT CAST(2 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b2
-    UNION ALL
-    SELECT CAST(3 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b3
-    UNION ALL
-    SELECT CAST(4 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b4
-    UNION ALL
-    SELECT CAST(5 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b5
-    UNION ALL
-    SELECT CAST(6 AS INT) AS rank, pair, replace(pair, ' ', '') AS merged, total FROM b6
-)
-ORDER BY rank
-""",
+    oracle=bpe_train_oracle(BPE_MERGES),
     doc=f"BPE tokenizer training: {BPE_MERGES} greedy merge rounds over the "
     "corpus vocabulary (argmax adjacent-symbol pair, merge, repeat) - "
     "the learned merge table in rank order.",
@@ -1960,197 +1851,19 @@ ORDER BY rank
 def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LOOP that text_bpe_pair_counts is one step of — BPE tokenizer
     training [Sennrich+ '16]: greedily take the most frequent adjacent
-    symbol pair (weighted by word count), merge it, repeat. Returns the
+    symbol pair (weighted by word count, ties to the smaller pair
+    text), merge it left-to-right in every word, repeat. Returns the
     learned merge table (rank, pair, merged symbol, count at merge
-    time) — the artifact a tokenizer ships.
-
-    KNOWN DEVIATION (round-6 advice, deliberate): a merge applies as a
-    single non-overlapping string ``replace`` pass, so occurrences that
-    share a boundary under-merge — in ``a a a a a`` only ``aa a aa``
-    merges this round (real BPE folds left-to-right to ``aa aa a``),
-    and alternating runs like ``banana``'s ``n a n a`` merge one pair
-    per round instead of both. Both engines replay the identical
-    replace, so results stay deterministic and oracle-matched; this
-    query is the ORACLE-REPLAYABLE DEMO of the loop. The production
-    trainer with exact Sennrich fold semantics (and constant plan depth)
-    is ``operators/bpe_scale.py`` / ``text_bpe_train_scaled``.
-
-    Spark-first shape: the corpus collapses to its VOCABULARY first
-    (one token shuffle with map-side combine), so every training round
-    is vocab-sized — pair counting explodes ~word-length rows per
-    vocab entry, and the argmax is a 1-row TakeOrdered. The corpus is
-    never touched again: at 100 TB training cost depends on |vocab|,
-    not tokens. Each round's merge applies as a broadcast CROSS JOIN
-    of the 1-row argmax onto the vocab, entirely JVM-side.
-
-    Cross-engine determinism: words are space-joined symbol strings
-    (``' a b c '``) and a merge is a literal ``replace`` of
-    ``' L R '`` with ``' LR '`` — both engines scan non-overlapping
-    occurrences left-to-right, so merged vocabularies stay identical;
-    the argmax tie-breaks on (count DESC, pair text ASC); counts are
-    integer sums. The DuckDB oracle replays all BPE_MERGES rounds
-    stage by stage.
-
-    Each round's vocab is lazily checkpointed: round k+1's plan reads
-    round k's materialization instead of replaying the whole merge
-    chain."""
-    return _bpe_persisted(spark, sf_dir)["bpe_merges"].orderBy("rank")
-
-
-def _bpe_persisted(spark: SparkSession, sf_dir: str):
-    """The tokenizer's offline-train/online-serve split (same shape as
-    the ANN artifact tables): the merge table and the fully merged
-    vocabulary are trained ONCE per (dataset fingerprint, BPE params)
-    and persisted; every later session — including a cold new process —
-    serves ``text_bpe_train`` and ``text_bpe_encode`` from the tables
-    instead of re-running the merge loop. This is exactly what shipping
-    a tokenizer means: the merge table IS the artifact."""
-    from .artifacts import persisted_bundle
-
-    def build_all():
-        merges, vocab = _bpe_vocab_rounds(spark, sf_dir)
-        out = merges[0]
-        for m in merges[1:]:
-            out = out.unionAll(m)
-        return {"bpe_merges": out, "bpe_vocab": vocab}
-
-    return persisted_bundle(
-        spark,
-        sf_dir,
-        [("bpe_merges", None), ("bpe_vocab", None)],
-        build_all,
-        inputs=["documents"],
-        params=f"bpe_v1_m{BPE_MERGES}",
-    )
-
-
-def _bpe_vocab_rounds(spark: SparkSession, sf_dir: str):
-    """Run the BPE_MERGES greedy merge rounds over the corpus vocabulary;
-    return ``(merge_rows, final_vocab)`` — the per-round 1-row merge
-    frames (rank, pair, merged, total) and the fully merged vocabulary
-    (word, cnt, sym). Shared by ``text_bpe_train`` (ships the merge
-    table) and ``text_bpe_encode`` (applies the final vocabulary)."""
-    from .artifacts import lazy_checkpoint
-
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("word"))
-        .where(F.length("word") >= 2)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "word",
-            "cnt",
-            F.concat(
-                F.lit(" "),
-                F.trim(F.regexp_replace("word", "(.)", "$1 ")),
-                F.lit(" "),
-            ).alias("sym"),
-        )
-    )
-    vocab = lazy_checkpoint(vocab)
-    merges = []
-    for k in range(1, BPE_MERGES + 1):
-        arr = F.split(F.trim(F.col("sym")), " ")
-        pair_arr = F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 1),
-            lambda i: F.concat(
-                F.element_at(arr, i), F.lit(" "), F.element_at(arr, i + 1)
-            ),
-        )
-        pairs = (
-            vocab.select(F.explode(pair_arr).alias("pair"), "cnt")
-            .groupBy("pair")
-            .agg(F.sum("cnt").cast("long").alias("total"))
-        )
-        best = lazy_checkpoint(
-            pairs.orderBy(F.col("total").desc(), "pair").limit(1)
-        )
-        merges.append(
-            best.select(
-                F.lit(k).cast("int").alias("rank"),
-                "pair",
-                F.regexp_replace("pair", " ", "").alias("merged"),
-                "total",
-            )
-        )
-        vocab = lazy_checkpoint(
-            vocab.crossJoin(F.broadcast(best)).select(
-                "word",
-                "cnt",
-                F.expr(
-                    "replace(sym, ' ' || pair || ' ',"
-                    " ' ' || replace(pair, ' ', '') || ' ')"
-                ).alias("sym"),
-            )
-        )
-    return merges, vocab
-
-
-# -- BPE encoding (apply the trained tokenizer to the corpus) -----------------
-
-
-def _bpe_chain_sql(rounds: int) -> str:
-    """The v0..v<rounds> merge-replay CTE chain (same stages the
-    text_bpe_train oracle writes out longhand), generated so the encode
-    oracle reuses it without retyping BPE_MERGES stages."""
-    parts = [
-        """v0 AS (
-    SELECT word, cnt,
-           ' ' || array_to_string(list_transform(range(1, len(word) + 1),
-                                  i -> substr(word, CAST(i AS INT), 1)), ' ')
-               || ' ' AS sym
-    FROM (
-        SELECT word, COUNT(*) AS cnt FROM (
-            SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        ) WHERE len(word) >= 2
-        GROUP BY word
-    )
-)"""
-    ]
-    for k in range(1, rounds + 1):
-        parts.append(
-            f"""p{k} AS (
-    SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total FROM (
-        SELECT cnt,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> arr[i] || ' ' || arr[i + 1])) AS pair
-        FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM v{k - 1})
-    ) GROUP BY pair
-),
-b{k} AS (SELECT pair, total FROM p{k} ORDER BY total DESC, pair LIMIT 1),
-v{k} AS (
-    SELECT word, cnt,
-           replace(sym, ' ' || b.pair || ' ',
-                   ' ' || replace(b.pair, ' ', '') || ' ') AS sym
-    FROM v{k - 1} CROSS JOIN b{k} b
-)"""
-        )
-    return ",\n".join(parts)
+    time) — the artifact a tokenizer ships. Trained and persisted by
+    ``bpe_scale.bpe_bundle`` (vocab-sized rounds, constant plan depth);
+    the DuckDB oracle replays every round with the same fold."""
+    merges, _vocab = bpe_bundle(spark, sf_dir, BPE_MERGES)
+    return merges.orderBy("rank")
 
 
 @register(
     "text_bpe_encode",
-    oracle=f"""
-WITH {_bpe_chain_sql(BPE_MERGES)},
-tok AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-),
-enc AS (
-    SELECT t.doc_id,
-           len(t.word) AS n_chars,
-           CASE WHEN v.sym IS NULL THEN len(t.word)
-                ELSE len(string_split(trim(v.sym), ' ')) END AS n_sym
-    FROM tok t LEFT JOIN v{BPE_MERGES} v ON t.word = v.word
-)
-SELECT doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_words,
-       CAST(SUM(n_chars) AS BIGINT) AS n_char_tokens,
-       CAST(SUM(n_sym) AS BIGINT) AS n_bpe_tokens,
-       CAST(SUM(n_chars) - SUM(n_sym) AS DOUBLE) / SUM(n_chars)
-           AS compression
-FROM enc GROUP BY doc_id
-""",
+    oracle=bpe_encode_oracle(BPE_MERGES),
     doc=f"Apply the {BPE_MERGES}-merge trained BPE vocabulary to every "
     "document: per-doc word/char-token/BPE-token counts and the "
     "compression the learned merges achieve.",
@@ -2159,44 +1872,10 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serving half of the tokenizer loop — ``text_bpe_train``
     learns the merge table; this query ENCODES the corpus with it and
     reports what a tokenizer's users actually ask: tokens per document
-    and the compression vs character-level. Because BPE merges are
-    deterministic functions of the word alone, encoding is a VOCABULARY
-    JOIN, not a per-token merge loop: the final merged vocabulary
-    (word → symbol sequence, vocab-sized) broadcasts onto the token
-    stream, and out-of-vocabulary words (the length-1 words training
-    excludes) fall back to character symbols via the left-join NULL arm.
-
-    Scale: the train loop is vocab-sized (see ``text_bpe_train``); the
-    encode pass is ONE broadcast-joined projection over the token
-    stream plus the per-doc groupBy — the same two-stage shape at
-    100 TB, where real tokenizers are likewise applied as a broadcast
-    automaton (the merge table is KBs) over a corpus-partitioned map.
-    The compression column is an exact integer-ratio double, identical
-    across engines. The DuckDB oracle replays training stage-by-stage
-    (generated CTE chain) and re-encodes every document."""
-    vocab = _bpe_persisted(spark, sf_dir)["bpe_vocab"]
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
-    vsym = vocab.select(
-        "word",
-        F.size(F.split(F.trim(F.col("sym")), " ")).alias("v_n_sym"),
-    )
-    enc = tok.join(F.broadcast(vsym), "word", "left").select(
-        "doc_id",
-        F.length("word").alias("n_chars"),
-        F.coalesce("v_n_sym", F.length("word")).alias("n_sym"),
-    )
-    return enc.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_words"),
-        F.sum("n_chars").cast("long").alias("n_char_tokens"),
-        F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
-        (
-            (F.sum("n_chars") - F.sum("n_sym")).cast("double")
-            / F.sum("n_chars")
-        ).alias("compression"),
-    )
+    and the compression vs character-level. Encoding is a broadcast
+    vocabulary join (``bpe_scale.bpe_token_lengths``) plus the per-doc
+    groupBy."""
+    return bpe_encode_docs(spark, sf_dir, BPE_MERGES)
 
 
 # -- BPE round-trip integrity (decode == original) -----------------------------
@@ -2205,7 +1884,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_bpe_roundtrip",
     oracle=f"""
-WITH {_bpe_chain_sql(BPE_MERGES)},
+WITH {bpe_chain_sql(BPE_MERGES)},
 base AS (
     SELECT word, cnt, string_split(trim(sym), ' ') AS p FROM v{BPE_MERGES}
 ),
@@ -2242,7 +1921,7 @@ def text_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted table ``text_bpe_encode`` serves) — vocab-sized, corpus
     never touched; the final combine is a broadcast of two one-row
     aggregates. At 100 TB the cost is the artifact read."""
-    vocab = _bpe_persisted(spark, sf_dir)["bpe_vocab"]
+    _merges, vocab = bpe_bundle(spark, sf_dir, BPE_MERGES)
     base = vocab.select(
         "word", "cnt", F.split(F.trim(F.col("sym")), " ").alias("p")
     )
@@ -2719,7 +2398,7 @@ def _probe_feats_weights(spark: SparkSession, sf_dir: str):
 @register(
     "text_tokenizer_fertility",
     oracle=f"""
-WITH {_bpe_chain_sql(BPE_MERGES)},
+WITH {bpe_chain_sql(BPE_MERGES)},
 tok AS (
     SELECT d.lang, t.doc_id, t.word
     FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS word
@@ -2753,29 +2432,17 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens per word = higher serving cost and worse effective context
     for that language).
 
-    Reuses the PERSISTED trained tokenizer (``_bpe_persisted`` — the
-    same offline-train/online-serve artifact tables that back
+    Reuses the PERSISTED trained tokenizer (``bpe_scale.bpe_bundle`` —
+    the same offline-train/online-serve artifact tables that back
     ``text_bpe_train``/``text_bpe_encode``): this query only pays the
     ENCODE pass — a broadcast vocabulary join over the token stream —
     plus a |langs|-row rollup. Same shape at 100 TB: the merge table is
     KBs broadcast; the token stream never shuffles except into the
     final tiny aggregate (count-distinct doc_id expands to one extra
-    partial). The DuckDB oracle replays training stage-by-stage and
+    partial). The DuckDB oracle replays training round by round and
     re-encodes per language."""
-    vocab = _bpe_persisted(spark, sf_dir)["bpe_vocab"]
     docs = spread(load_table(spark, sf_dir, "documents"))
-    tok = docs.select(
-        "lang", "doc_id", F.explode(F.split("text", " ")).alias("word")
-    )
-    vsym = vocab.select(
-        "word", F.size(F.split(F.trim(F.col("sym")), " ")).alias("v_n_sym")
-    )
-    enc = tok.join(F.broadcast(vsym), "word", "left").select(
-        "lang",
-        "doc_id",
-        F.length("word").alias("n_chars"),
-        F.coalesce("v_n_sym", F.length("word")).alias("n_sym"),
-    )
+    enc = bpe_token_lengths(spark, sf_dir, BPE_MERGES, docs, "lang", "doc_id")
     return enc.groupBy("lang").agg(
         F.countDistinct("doc_id").cast("long").alias("n_docs"),
         F.count(F.lit(1)).cast("long").alias("n_words"),

@@ -130,7 +130,7 @@ SELECT user_id, event_id, ts, cum_value FROM (
 WHERE rk = 1
 """,
     doc="First event where a user's cumulative value reaches 500 "
-    "(batch twin of streams.threshold_alerts, the applyInPandasWithState op).",
+    "(batch twin of streams.threshold_alerts_cents, the applyInPandasWithState op).",
 )
 def stream_threshold_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch formulation: running decimal sum per user, keep the first

@@ -34,25 +34,23 @@ from ..log import EVENT_SCHEMA, EventLog
 # -- log tail / subscription (O13) -------------------------------------------
 
 
-def log_tail_stream(
-    log: EventLog, committed_only: bool = True, commit_wait: float = 5.0
-) -> DataFrame:
+def log_tail_stream(log: EventLog, commit_wait: float = 5.0) -> DataFrame:
     """Streaming view of the log: every committed fragment becomes part
     of a micro-batch exactly once.
 
-    ``committed_only`` (default): each micro-batch keeps only rows whose
-    fragment a commit PUBLISHED (``EventLog.published_files``, read AT
-    TASK EXECUTION TIME), so a crashed writer's fragment and a losing
-    writer's fragment — which holds a ``part-*`` name, with versions the
-    winner owns, until its writer discards it — are never delivered as
-    if committed; the same snapshot-isolation contract the batch readers
-    enforce. A fragment not yet published gets a bounded wait
-    (``commit_wait`` seconds): a live writer claims its delta
-    milliseconds after the rename, so in-flight commits pass; a crash
-    fragment never commits and is dropped, and a discarded loser's file
-    is gone, which drops it at once. The manifest lives next to the
-    data, so executors can read it wherever the log directory is
-    reachable (local FS here, shared storage on a cluster)."""
+    Each micro-batch keeps only rows whose fragment a commit PUBLISHED
+    (``EventLog.published_files``, read AT TASK EXECUTION TIME), so a
+    crashed writer's fragment and a losing writer's fragment — which
+    holds a ``part-*`` name, with versions the winner owns, until its
+    writer discards it — are never delivered as if committed; the same
+    snapshot-isolation contract the batch readers enforce. A fragment
+    not yet published gets a bounded wait (``commit_wait`` seconds): a
+    live writer claims its delta milliseconds after the rename, so
+    in-flight commits pass; a crash fragment never commits and is
+    dropped, and a discarded loser's file is gone, which drops it at
+    once. The manifest lives next to the data, so executors can read it
+    wherever the log directory is reachable (local FS here, shared
+    storage on a cluster)."""
     # pathGlobFilter pins the stream to append fragments (``part-*``):
     # a compaction rewrites history into ``compact-*`` files, and without
     # the glob the file-stream source would discover those as NEW files
@@ -69,8 +67,6 @@ def log_tail_stream(
         .option("ignoreMissingFiles", "true")
         .parquet(log.path)
     )
-    if not committed_only:
-        return raw
     log_path = log.path
     cols = [f.name for f in EVENT_SCHEMA.fields]
 
@@ -302,97 +298,31 @@ def append_stream(
 
 # -- custom stateful operator (applyInPandasWithState) ------------------------
 
-ALERT_SCHEMA = "user_id long, event_id long, ts timestamp, cum_value double"
-_ALERT_STATE_SCHEMA = "cum double, alerted boolean"
-
-
-def threshold_alerts(events: DataFrame, threshold: float = 500.0) -> DataFrame:
-    """Emit exactly one alert per user: the first event at which the
-    user's cumulative ``value`` reaches ``threshold``.
-
-    This is a genuinely custom stateful operator — built-in streaming
-    aggregates can't express "fire once on first crossing, then stay
-    silent" — so it uses ``applyInPandasWithState``: per-user state is
-    a (cumulative_sum, alerted) pair, Arrow-batched per micro-batch.
-    Batch-verifiable twin: ``stream_threshold_alert`` in
-    operators/streamlike.py (running-sum window + first crossing row).
-
-    Scale: state is two scalars per user — O(distinct users) bytes in
-    the state store (RocksDB off-heap on a real cluster), independent of
-    event volume. Rows are processed in (ts, event_id) order *within*
-    each micro-batch; cross-batch order is the stream's arrival order,
-    same as the reference log's append order.
-    """
-    import pandas as pd  # noqa: PLC0415 — worker-side import
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fire(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.exists:
-            cum, alerted = state.get
-        else:
-            cum, alerted = 0.0, False
-        out = []
-        # A micro-batch group arrives as MULTIPLE Arrow chunks (capped by
-        # arrow.maxRecordsPerBatch) in arbitrary post-shuffle order —
-        # sorting per-chunk would accumulate out of time order for large
-        # groups. Materialize the group's batch, sort once; memory is
-        # bounded by one user's events per micro-batch.
-        chunks = [pdf for pdf in pdf_iter if not alerted]
-        if chunks and not alerted:
-            batch = pd.concat(chunks).sort_values(["ts", "event_id"])
-            # vectorized running sum, SEEDED with the carried-over state:
-            # cumsum over [cum, v1, v2, ...] replays the row-at-a-time
-            # fold ((cum+v1)+v2)+... exactly. `cum + values.cumsum()`
-            # would instead compute cum+(v1+v2+...) — float addition is
-            # non-associative, so with nonzero carried state a near-tie
-            # crossing could flip across micro-batches (round-5 advice).
-            totals = (
-                pd.concat(
-                    [pd.Series([cum]), batch["value"].astype(float)],
-                    ignore_index=True,
-                )
-                .cumsum()
-                .iloc[1:]
-                .reset_index(drop=True)
-            )
-            crossed = totals >= threshold
-            if crossed.any():
-                pos = int(crossed.to_numpy().argmax())
-                row = batch.iloc[pos]
-                cum = float(totals.iloc[pos])
-                out.append((user_id, int(row["event_id"]), row["ts"], cum))
-                alerted = True
-            elif len(batch):
-                cum = float(totals.iloc[-1])
-        state.update((cum, alerted))
-        if out:
-            yield pd.DataFrame(out, columns=["user_id", "event_id", "ts", "cum_value"])
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fire,
-        outputStructType=ALERT_SCHEMA,
-        stateStructType=_ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 ALERT_CENTS_SCHEMA = "user_id long, event_id long, ts timestamp, cum_cents long"
 _ALERT_CENTS_STATE_SCHEMA = "cum_cents long, alerted boolean"
 
 
 def threshold_alerts_cents(events: DataFrame, threshold_cents: int = 50_000) -> DataFrame:
-    """``threshold_alerts`` with EXACT integer-cent state — the variant a
-    driver can hash-check: float accumulation is deterministic only in
-    arrival order, but its last-ulp drift vs the batch twin's DECIMAL
-    running sum could flip a crossing decision at the boundary; integer
-    cents make state, crossing test, and output bit-exact across
-    engines and micro-batch splits. Callers must supply a ``cents``
-    column (``value`` cast through DECIMAL(12,2)·100 JVM-side, the same
-    cast the batch twin and its DuckDB oracle agree on). State per user
-    is (long, bool) — still O(distinct users) in the state store.
+    """Emit exactly one alert per user: the first event at which the
+    user's cumulative ``cents`` reaches ``threshold_cents``.
+
+    This is a genuinely custom stateful operator — built-in streaming
+    aggregates can't express "fire once on first crossing, then stay
+    silent" — so it uses ``applyInPandasWithState``: per-user state is
+    a (cumulative cents, alerted) pair, Arrow-batched per micro-batch.
+    Batch-verifiable twin: ``stream_threshold_alert`` in
+    operators/streamlike.py (running DECIMAL sum + first crossing row).
+
+    State is EXACT integer cents: float accumulation is deterministic
+    only in arrival order, and its last-ulp drift vs the batch twin's
+    DECIMAL running sum could flip a crossing decision at the boundary;
+    integer cents make state, crossing test, and output bit-exact
+    across engines and micro-batch splits. Callers must supply a
+    ``cents`` column (``value`` cast through DECIMAL(12,2)·100
+    JVM-side, the same cast the batch twin and its DuckDB oracle agree
+    on). State per user is (long, bool) — O(distinct users) in the
+    state store (RocksDB off-heap on a real cluster), independent of
+    event volume.
 
     ORDERING CONTRACT (round-4 advice): rows are sorted by
     (ts, event_id) only WITHIN each micro-batch; across batches the
@@ -415,6 +345,11 @@ def threshold_alerts_cents(events: DataFrame, threshold_cents: int = 50_000) -> 
         else:
             cum, alerted = 0, False
         out = []
+        # A micro-batch group arrives as MULTIPLE Arrow chunks (capped by
+        # arrow.maxRecordsPerBatch) in arbitrary post-shuffle order —
+        # sorting per-chunk would accumulate out of time order for large
+        # groups. Materialize the group's batch, sort once; memory is
+        # bounded by one user's events per micro-batch.
         chunks = [pdf for pdf in pdf_iter if not alerted]
         if chunks and not alerted:
             batch = pd.concat(chunks).sort_values(["ts", "event_id"])
@@ -466,7 +401,7 @@ def last_click_attribution(events: DataFrame, horizon_s: int = 3600) -> DataFram
     discipline as the batch twin, so a same-instant click never
     attributes — then the carried click forward-fills across the batch
     seeded with the state. Cross-batch order is the stream's arrival
-    order, same contract as ``threshold_alerts``. Batch equivalence is
+    order, same contract as ``threshold_alerts_cents``. Batch equivalence is
     asserted by tests/test_streaming.py against the DuckDB-oracled
     batch query."""
     import pandas as pd  # noqa: PLC0415 — worker-side import

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from eventlog_spark.operators import artifacts
+import pytest
+
+from eventlog_spark.operators import artifacts, bpe_scale, curation
+from eventlog_spark.operators.bpe_scale import BPE_SCALED_MERGES
+from eventlog_spark.operators.curation import BPE_MERGES
 
 
 def test_cache_hits_and_keying(spark, sf_dir, monkeypatch):
@@ -161,49 +165,31 @@ def test_ivf_pq_served_cold_without_retraining(spark, sf_dir, tmp_path, monkeypa
     assert first == second and first
 
 
-def test_bpe_served_cold_without_retraining(spark, sf_dir, tmp_path, monkeypatch):
-    """The tokenizer's offline/online split: once the merge-table and
-    vocabulary tables exist, a NEW session serves text_bpe_train and
-    text_bpe_encode from them — the merge loop must not run."""
-    from eventlog_spark.operators import curation
-
+@pytest.mark.parametrize("n_merges", [BPE_MERGES, BPE_SCALED_MERGES])
+def test_bpe_served_cold_without_retraining(
+    spark, sf_dir, tmp_path, monkeypatch, n_merges
+):
+    """The tokenizer's offline/online split: once a merge count's
+    merge-table and vocabulary tables exist, a NEW session serves its
+    train and encode queries from them — the trainer must not run."""
+    train, encode = {
+        BPE_MERGES: (curation.text_bpe_train, curation.text_bpe_encode),
+        BPE_SCALED_MERGES: (
+            bpe_scale.text_bpe_train_scaled,
+            bpe_scale.text_bpe_encode_scaled,
+        ),
+    }[n_merges]
     monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path))
     monkeypatch.setattr(artifacts, "_CACHE", {})
-    first = {tuple(r) for r in curation.text_bpe_train(spark, sf_dir).collect()}
+    first = {tuple(r) for r in train(spark, sf_dir).collect()}
+    assert len(first) == n_merges
 
     monkeypatch.setattr(artifacts, "_CACHE", {})  # simulate a fresh session
 
     def boom(*a, **k):
-        raise AssertionError("BPE merge loop ran although tables exist")
-
-    monkeypatch.setattr(curation, "_bpe_vocab_rounds", boom)
-    second = {tuple(r) for r in curation.text_bpe_train(spark, sf_dir).collect()}
-    assert first == second and first
-    enc = curation.text_bpe_encode(spark, sf_dir)
-    assert enc.count() > 0  # encode also serves from the vocab table
-
-
-def test_scaled_bpe_served_cold_without_retraining(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Same offline/online split for the ITERATIVE trainer: once its
-    merge/vocab tables are persisted, a new session must serve
-    text_bpe_train_scaled without re-entering the training loop."""
-    from eventlog_spark.operators import bpe_scale
-
-    monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path))
-    monkeypatch.setattr(artifacts, "_CACHE", {})
-    first = {
-        tuple(r) for r in bpe_scale.text_bpe_train_scaled(spark, sf_dir).collect()
-    }
-
-    monkeypatch.setattr(artifacts, "_CACHE", {})  # fresh session
-
-    def boom(*a, **k):
-        raise AssertionError("iterative trainer ran although tables exist")
+        raise AssertionError("BPE trainer ran although tables exist")
 
     monkeypatch.setattr(bpe_scale, "bpe_train_iterative", boom)
-    second = {
-        tuple(r) for r in bpe_scale.text_bpe_train_scaled(spark, sf_dir).collect()
-    }
-    assert first == second and first
+    second = {tuple(r) for r in train(spark, sf_dir).collect()}
+    assert first == second
+    assert encode(spark, sf_dir).count() > 0  # encode serves from the vocab table

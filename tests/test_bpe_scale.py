@@ -1,8 +1,8 @@
-"""Iterative BPE trainer (operators/bpe_scale.py) — golden-reference and
+"""BPE trainer (operators/bpe_scale.py) — golden-reference and
 plan-shape tests.
 
-The oracle suite (test_oracle.py) already hash-checks
-``text_bpe_train_scaled`` against the generated DuckDB fold replay;
+The oracle suite (test_oracle.py) already hash-checks every tokenizer
+query against the generated DuckDB fold replay;
 these tests pin the two properties the oracle can't see: that the
 trainer implements EXACTLY the reference algorithm (pure-Python Sennrich
 trainer as golden), and that plan depth stays constant in round count
@@ -106,7 +106,7 @@ def test_final_vocab_matches_golden_segmentation(trained, sf_dir):
 
 
 def test_overlapping_runs_merge_greedily(spark):
-    """The semantics the demo's non-overlapping replace gets wrong
+    """The semantics a non-overlapping string replace gets wrong
     (ADVICE r6): in ``a a a a a`` the pair (a,a) must merge left-to-
     right into ``aa aa a``, and alternating ``L R L R`` into ``LR LR``."""
     from eventlog_spark.operators.bpe_scale import merge_fold_expr
@@ -130,7 +130,7 @@ def test_plan_depth_constant_in_rounds(spark, sf_dir):
     """The reason this trainer exists: after k rounds the state plans
     are checkpoint scans, not a k-deep unrolled tree. Train 3 vs 9
     rounds and require the final vocabulary's analyzed plan to be the
-    same (tiny) size — the unrolled demo's grows linearly."""
+    same (tiny) size — one unrolled lazy plan would grow linearly."""
     _m3, v3 = bpe_train_iterative(spark, sf_dir, 3)
     _m9, v9 = bpe_train_iterative(spark, sf_dir, 9)
     p3 = v3._jdf.queryExecution().analyzed().toString()

@@ -416,15 +416,17 @@ def test_matryoshka_overlap_matches_numpy_model(spark, sf_dir):
             assert got[(m, qid)] == len(full & trunc), (m, qid)
 
 
-def test_bpe_train_encode_match_python_model(spark, tmp_path, monkeypatch):
-    """Full tokenizer-loop check against a pure-Python BPE model (same
-    greedy (count DESC, pair ASC) argmax and left-to-right
-    non-overlapping replace semantics) on a small controlled corpus —
-    merges, per-merge counts, and every document's encoded token count
-    must agree."""
-    from collections import Counter
-
-    from eventlog_spark.operators import artifacts, curation
+def test_bpe_train_encode_match_python_model(spark, sf_dir, tmp_path, monkeypatch):
+    """Full tokenizer-loop check against the pure-Python BPE model of
+    tests/test_bpe_scale.py (greedy (count DESC, pair ASC) argmax,
+    left-to-right fold merges) on a small controlled corpus whose
+    alternating runs (``banana``, ``canal``, ``nab``) tell a fold from
+    a non-overlapping string replace: merges, per-merge counts, every
+    document's encoded token count and the round-trip audit must
+    agree. Greedy training is prefix-consistent, so on ``sf_dir`` the
+    6-merge table is the 16-merge table's first rows."""
+    from eventlog_spark.operators import artifacts, bpe_scale, curation
+    from tests.test_bpe_scale import _golden_train
 
     monkeypatch.setattr(artifacts, "ARTIFACT_ROOT", str(tmp_path / "arts"))
     monkeypatch.setattr(artifacts, "_CACHE", {})
@@ -439,22 +441,8 @@ def test_bpe_train_encode_match_python_model(spark, tmp_path, monkeypatch):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(str(tmp_path / "documents.parquet"))
 
-    vocab = Counter(
-        w for t in texts for w in t.split(" ") if len(w) >= 2
-    )
-    sym = {w: " " + " ".join(w) + " " for w in vocab}
-    model_merges = []
-    for k in range(1, curation.BPE_MERGES + 1):
-        pc = Counter()
-        for w, c in vocab.items():
-            arr = sym[w].strip().split(" ")
-            for i in range(len(arr) - 1):
-                pc[arr[i] + " " + arr[i + 1]] += c
-        pair, total = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        merged = pair.replace(" ", "")
-        model_merges.append((k, pair, merged, total))
-        for w in sym:
-            sym[w] = sym[w].replace(" " + pair + " ", " " + merged + " ")
+    model_merges, model_vocab = _golden_train(str(tmp_path), curation.BPE_MERGES)
+    seg = {"".join(syms): syms for syms in model_vocab}
 
     got_merges = [
         (r.rank, r.pair, r.merged, r.total)
@@ -465,15 +453,27 @@ def test_bpe_train_encode_match_python_model(spark, tmp_path, monkeypatch):
     expect = {}
     for i, t in enumerate(texts):
         words = t.split(" ")
-        n_bpe = sum(
-            len(sym[w].strip().split(" ")) if w in sym else len(w) for w in words
-        )
+        n_bpe = sum(len(seg[w]) if w in seg else len(w) for w in words)
         expect[i] = (len(words), sum(len(w) for w in words), n_bpe)
     got = {
         r.doc_id: (r.n_words, r.n_char_tokens, r.n_bpe_tokens)
         for r in curation.text_bpe_encode(spark, str(tmp_path)).collect()
     }
     assert got == expect
+
+    (rt,) = curation.text_bpe_roundtrip(spark, str(tmp_path)).collect()
+    assert rt.asDict() == {
+        "n_vocab_words": len(seg),
+        "n_roundtrip_exact": len(seg),
+        "total_occurrences": sum(model_vocab.values()),
+        "max_tokens_per_word": max(len(s) for s in seg.values()),
+        "n_distinct_tokens": len({t for s in seg.values() for t in s}),
+    }
+
+    scaled = bpe_scale.text_bpe_train_scaled(spark, sf_dir).collect()
+    assert curation.text_bpe_train(spark, sf_dir).collect() == scaled[
+        : curation.BPE_MERGES
+    ]
 
 
 def test_dsir_weights_match_python_model(spark, tmp_path):

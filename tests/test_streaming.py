@@ -153,9 +153,14 @@ def test_threshold_alerts_stateful_across_batches(spark, tmp_path, sf_dir):
     alerts: list = []
 
     def run():
-        stream = spark.readStream.schema(events.schema).parquet(src)
+        stream = spark.readStream.schema(events.schema).parquet(src).select(
+            "user_id",
+            "event_id",
+            "ts",
+            (F.col("value").cast("decimal(12,2)") * 100).cast("long").alias("cents"),
+        )
         q = (
-            streams.threshold_alerts(stream, threshold=500.0)
+            streams.threshold_alerts_cents(stream, threshold_cents=50_000)
             .writeStream.outputMode("append")
             .foreachBatch(lambda b, _: alerts.extend(b.collect()))
             .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -168,10 +173,10 @@ def test_threshold_alerts_stateful_across_batches(spark, tmp_path, sf_dir):
     events.where(F.unix_timestamp("ts") > cut).write.mode("append").parquet(src)
     run()
 
-    got = {(r.user_id, r.event_id) for r in alerts}
+    got = {(r.user_id, r.event_id, r.cum_cents) for r in alerts}
     assert len(got) == len(alerts), "duplicate alert for a user"
     expect = {
-        (r.user_id, r.event_id)
+        (r.user_id, r.event_id, round(r.cum_value * 100))
         for r in REGISTRY["stream_threshold_alert"].fn(spark, sf_dir).collect()
     }
     assert got == expect

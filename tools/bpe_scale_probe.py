@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Measure the iterative BPE trainer's per-round cost and plan size as
-round count grows (round-6 verdict item 1's "done" evidence).
+"""Measure the BPE trainer's per-round cost and plan size as round
+count grows (round-6 verdict item 1's "done" evidence).
 
 The claim under test: per-round wall time and per-round plan size are
-FLAT in the number of completed rounds — the property the unrolled demo
-(curation.text_bpe_train, linear plan growth) lacks and the reason
-bpe_scale.bpe_train_iterative exists. Prints one JSON line with
+FLAT in the number of completed rounds — the property
+bpe_scale.bpe_train_iterative's per-round checkpoints buy over one
+unrolled lazy plan (whose size grows linearly with merges). Prints one JSON line with
 quartile timings per round-window plus the analyzed-plan line count at
 the first and last round (must be equal).
 

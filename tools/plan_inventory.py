@@ -17,7 +17,8 @@ derivation jobs while the plan is built (dedup_connected_components'
 per-round convergence probe; the real-streaming query starts its
 bounded stream; the IVF-PQ queries collect their training sample, and
 their control-plane rows and codebook for the driver-side router and
-LUTs). Checkpoint-using queries
+LUTs; the BPE tokenizer queries run their per-round merge training).
+Checkpoint-using queries
 (graph_pagerank, dedup_lsh_verified) use lazy localCheckpoint precisely
 so plan inspection stays execution-free.
 """
@@ -83,8 +84,8 @@ def main() -> None:
         f"Generated by `tools/plan_inventory.py` at sf_dir={SF_DIR}; planning",
         "only — except queries whose construction is data-dependent",
         "(dedup_connected_components' convergence probe, the real-stream",
-        "run, the IVF-PQ training, router and LUT collects), which execute while",
-        "their plan is built.",
+        "run, the IVF-PQ training, router and LUT collects, the BPE merge",
+        "training), which execute while their plan is built.",
         "Columns: shuffles = `Exchange` nodes",
         "(includes single-partition collects for final small outputs);",
         "bcast = `BroadcastExchange`; joins by strategy; python = Arrow",

@@ -101,6 +101,13 @@ _META_FILE = "_eventlog_meta.json"
 # its own rows, and a fragment of at most one group is cached whole.
 ROW_GROUP_ROWS = 1024
 
+# Label + payload bytes (as Arrow holds them: UTF-8 data plus offsets)
+# the hot-tail row cache keeps before evicting its oldest fragments.
+# Every commit fills it, so it is bounded by bytes, not rows: 64 KiB
+# group-commit rows would otherwise pile up gigabytes. 64 MiB holds
+# ~200k rows of a ~280-byte interactive event.
+ROW_CACHE_BYTES = 64 << 20
+
 
 def _version_group_stats(md) -> list[tuple[int, int]] | None:
     """Per-row-group (min, max) of the ``version`` column from a parquet
@@ -123,6 +130,31 @@ def _table_rows(tbl) -> list[tuple]:
     payload, checksum) tuples."""
     cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
     return list(zip(*[tbl.column(c).to_pylist() for c in cols]))
+
+
+def _rows_table(rows: list[tuple]):
+    """(version, version_prev, timestamp, label, payload, checksum)
+    tuples as an Arrow table in the fragment schema — the inverse of
+    ``_table_rows``, shared by the commit write and the minor fold."""
+    import pyarrow as pa
+
+    ints = ("version", "version_prev", "timestamp")
+    cols = {c: pa.array([r[i] for r in rows], pa.int64()) for i, c in enumerate(ints)}
+    # UTF-8-encoded bytes into a string column: arrow's str ingestion
+    # re-encodes character by character (~0.85 ms per 64 KiB payload —
+    # it dominated the wide commit section), while bytes ingestion is
+    # a memcpy + SIMD UTF-8 validation (0.11 ms for six such rows);
+    # str.encode of the already-UTF-8 Python str is C-fast
+    cols["label"] = pa.array([r[3].encode("utf-8") for r in rows], pa.string())
+    cols["payload"] = pa.array([r[4].encode("utf-8") for r in rows], pa.string())
+    cols["checksum"] = pa.array([r[5] for r in rows], pa.int64())
+    return pa.table(cols)
+
+
+def _text_bytes(tbl) -> int:
+    """Label + payload bytes of an event table: the row cache's size
+    measure."""
+    return tbl.column("label").nbytes + tbl.column("payload").nbytes
 
 
 def _page_mask(tbl, lo: int, hi: int, label: str | None):
@@ -410,10 +442,19 @@ class EventLog:
         self._manifest: ManifestLog | None = None
         self._pending_add: list[dict] = []  # entries staged for the next publish
         self._pending_remove: list[str] = []
-        # scan_rows' hot-tail cache: fragment name -> rows, for small
-        # fragments only, bounded by _frag_rows_total (evicted oldest first)
-        self._frag_row_cache: OrderedDict[str, list[tuple]] = OrderedDict()
-        self._frag_rows_total = 0
+        # hot-tail row cache: fragment name -> (rows, label + payload
+        # bytes) for fragments of at most ROW_GROUP_ROWS rows, filled
+        # as this process writes a fragment or reads one whole
+        # (_cache_rows), evicted oldest first past ROW_CACHE_BYTES.
+        # Pages and minor folds take rows from it for manifest
+        # candidates only, so a written but unclaimed fragment is never
+        # served; CAS losers and retired fragments leave it
+        # (_uncache), which bumps _cache_epoch so that a page read that
+        # chose its fragments before the retirement does not put them
+        # back.
+        self._frag_row_cache: OrderedDict[str, tuple[list[tuple], int]] = OrderedDict()
+        self._frag_bytes_total = 0
+        self._cache_epoch = 0
         self._load_meta()
         self._load_state()
         # roll the mirror forward past a possibly-lagging pointer — the
@@ -1145,7 +1186,42 @@ class EventLog:
                 os.remove(os.path.join(self.path, e["n"]))
             except FileNotFoundError:  # pragma: no cover - defensive
                 pass
+        self._uncache(e["n"] for e in self._pending_add)
         self._pending_add, self._pending_remove = [], []
+
+    def _cache_rows(
+        self, name: str, rows: list[tuple], nbytes: int, epoch: int | None = None
+    ) -> None:
+        """Put one small fragment's rows in the hot-tail cache — the one
+        fill path of the write side (``_write_fragment``) and the read
+        side (``_read_fragment_rows``) — and evict the oldest entries
+        until label + payload bytes are back under ``ROW_CACHE_BYTES``.
+        A read passes the ``_cache_epoch`` it chose its fragments at;
+        if fragments were retired since, it may hold one of them, and
+        nothing is cached."""
+        with self._lock:
+            if name not in self._frag_row_cache and epoch in (None, self._cache_epoch):
+                self._frag_row_cache[name] = (rows, nbytes)
+                self._frag_bytes_total += nbytes
+            while self._frag_bytes_total > ROW_CACHE_BYTES and self._frag_row_cache:
+                _, (_, old) = self._frag_row_cache.popitem(last=False)
+                self._frag_bytes_total -= old
+
+    def _cached_rows(self, name: str) -> list[tuple] | None:
+        """A fragment's rows from the hot-tail cache, or None."""
+        with self._lock:  # fragments are immutable under uuid names
+            hit = self._frag_row_cache.get(name)
+        return None if hit is None else hit[0]
+
+    def _uncache(self, names: Iterable[str]) -> None:
+        """Drop fragments that will never be served again (a CAS
+        loser's, or retired by a fold or compaction) from the cache."""
+        with self._lock:
+            self._cache_epoch += 1
+            for n in names:
+                hit = self._frag_row_cache.pop(n, None)
+                if hit is not None:
+                    self._frag_bytes_total -= hit[1]
 
     def _write_fragment(self, rows: list[tuple[int, int, int, str, str]]) -> None:
         """Interactive-commit write seam: a DRIVER-SIDE arrow parquet
@@ -1163,39 +1239,26 @@ class EventLog:
         (``append_dataframe``) remains the fully-distributed path —
         this seam is for the interactive/serving commits where
         scheduling a cluster job per append is pure overhead."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         from .sources.binformat import checksum_rows
 
-        tbl = pa.table(
-            {
-                "version": pa.array([r[0] for r in rows], pa.int64()),
-                "version_prev": pa.array([r[1] for r in rows], pa.int64()),
-                "timestamp": pa.array([r[2] for r in rows], pa.int64()),
-                # UTF-8-encoded bytes into a string column: arrow's
-                # str ingestion re-encodes character by character
-                # (~0.85 ms per 64 KiB payload — it dominated the wide
-                # commit section), while bytes ingestion is a memcpy +
-                # SIMD UTF-8 validation (0.11 ms for six such rows);
-                # str.encode of the already-UTF-8 Python str is C-fast
-                "label": pa.array(
-                    [r[3].encode("utf-8") for r in rows], pa.string()
-                ),
-                "payload": pa.array(
-                    [r[4].encode("utf-8") for r in rows], pa.string()
-                ),
-                # checksum_rows pool-parallelizes wide batches (a group
-                # commit's coalesced 64 KiB+ rows would otherwise spend
-                # more section time in the GIL-bound parity hash than
-                # in the actual I/O); narrow rows hash inline
-                "checksum": pa.array(checksum_rows(rows), pa.int64()),
-            }
-        )
+        # checksum_rows pool-parallelizes wide batches (a group commit's
+        # coalesced 64 KiB+ rows would otherwise spend more section time
+        # in the GIL-bound parity hash than in the actual I/O); narrow
+        # rows hash inline
+        rows = [r + (ck,) for r, ck in zip(rows, checksum_rows(rows))]
+        tbl = _rows_table(rows)
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, "." + name + ".tmp")
         pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
         os.rename(tmp, os.path.join(self.path, name))
+        # write-through: pages and the next minor fold serve these rows
+        # from memory once the claim publishes them, instead of
+        # re-opening the file this process just wrote (an LSM
+        # memtable's role)
+        if len(rows) <= ROW_GROUP_ROWS:
+            self._cache_rows(name, rows, _text_bytes(tbl))
         # counts interactive fragments since the last fold — the
         # minor-compaction trigger (amortized-O(1) append maintenance)
         self._interactive_frags = getattr(self, "_interactive_frags", 0) + 1
@@ -1707,6 +1770,7 @@ class EventLog:
         )
         self._require_published_state()
         with self._lock:
+            epoch = self._cache_epoch
             if label is None:
                 cand = self._manifest.overlapping(lo, hi)
             else:
@@ -1734,10 +1798,11 @@ class EventLog:
                     bar = heapq.nsmallest(limit, (r[0] for r in out))[-1]
                     if entry["lo"] > bar:
                         break
-            with self._lock:  # fragments are immutable under uuid names
-                rows = self._frag_row_cache.get(entry["n"])
+            rows = self._cached_rows(entry["n"])
             if rows is None:
-                rows = self._read_fragment_rows(entry, lo, hi, label, limit, reverse)
+                rows = self._read_fragment_rows(
+                    entry, lo, hi, label, limit, reverse, epoch
+                )
             out.extend(
                 r
                 for r in rows
@@ -1753,13 +1818,15 @@ class EventLog:
         label: str | None = None,
         limit: int | None = None,
         reverse: bool = False,
+        epoch: int | None = None,
     ) -> list[tuple]:
         """One fragment's rows for a page over [lo, hi]. A fragment of at
         most ``ROW_GROUP_ROWS`` rows is read whole and cached by name,
         unfiltered (the hot tail: single-append fragments are immutable
         and tiny, so repeated pages over an uncompacted tail must not
-        re-open 1000 files). Any other fragment decodes only what the
-        page can return:
+        re-open 1000 files), unless fragments were retired since
+        ``epoch``, the cache epoch the page chose its fragments at. Any
+        other fragment decodes only what the page can return:
 
         * row groups whose footer version stats miss [lo, hi] are
           skipped — driver-side writes cap groups at ``ROW_GROUP_ROWS``
@@ -1782,14 +1849,9 @@ class EventLog:
         pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
         md = pf.metadata
         if md.num_rows <= ROW_GROUP_ROWS:
-            rows = _table_rows(pf.read())
-            with self._lock:
-                if entry["n"] not in self._frag_row_cache:
-                    self._frag_rows_total += len(rows)
-                    self._frag_row_cache[entry["n"]] = rows
-                while self._frag_rows_total > 200_000 and self._frag_row_cache:
-                    _, old = self._frag_row_cache.popitem(last=False)
-                    self._frag_rows_total -= len(old)
+            tbl = pf.read()
+            rows = _table_rows(tbl)
+            self._cache_rows(entry["n"], rows, _text_bytes(tbl), epoch)
             return rows
         stats = _version_group_stats(md)
         groups = [
@@ -2133,9 +2195,13 @@ class EventLog:
         parquet file with pyarrow — a driver-side merge, no Spark job —
         under the same publish-before-delete manifest swap as
         ``compact()``. This is the LSM minor compaction to
-        ``compact()``'s major one: ~0.4 ms per tiny fragment to read,
-        one file write, one atomic manifest publish, replaced fragments
-        retired into the vacuum ledger for straggler readers. The
+        ``compact()``'s major one: the fragments this process wrote are
+        folded from the hot-tail row cache, as an LSM flushes its
+        memtable, and only the others (another writer's, evicted ones,
+        a previous fold past ``ROW_GROUP_ROWS``) are read from parquet;
+        then one file write, one atomic manifest publish, replaced
+        fragments retired into the vacuum ledger (and dropped from the
+        cache) for straggler readers. The
         ``compact-`` output name keeps the rewritten history out of the
         tail stream's ``part-*`` glob (streams.py), exactly like major
         compaction. Returns the number of fragments folded."""
@@ -2164,10 +2230,17 @@ class EventLog:
             self._interactive_frags = 0  # folded (or provably few) below
             if len(small) < 2:
                 return 0
-            tables = [
-                pq.read_table(os.path.join(self.path, f)) for f in small
+            # rows this process wrote (or read whole) come from the
+            # hot-tail cache; parquet is opened only for the rest —
+            # another writer's fragments, evicted ones, a large fold
+            hits = {f: self._cached_rows(f) for f in small}
+            tables = [_rows_table([r for f in small for r in hits[f] or ()])]
+            tables += [
+                pq.read_table(os.path.join(self.path, f))
+                for f in small
+                if hits[f] is None
             ]
-            schema = tables[0].schema
+            schema = tables[0].schema  # the fragment schema
             merged = pa.concat_tables(
                 [t.cast(schema) for t in tables]
             ).sort_by("version")
@@ -2209,10 +2282,13 @@ class EventLog:
         (one JSON line per batch, O(1) — the ledger was previously a
         read-modify-rewrite JSON list, O(ledger) per retirement, which
         showed up as the commit p99 once manifest roll-ups started
-        retiring their superseded records). Caller holds the commit
+        retiring their superseded records). Retired fragments leave
+        the row cache: no page will ask for them again, and their dead
+        rows would crowd out live ones. Caller holds the commit
         section; vacuum compacts the ledger when it reaps."""
         if not files:
             return
+        self._uncache(files)
         with open(self._retired_path(), "a") as f:
             f.write(json.dumps({"ts": time.time(), "files": files}) + "\n")
 

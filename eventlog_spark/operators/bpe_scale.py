@@ -141,16 +141,19 @@ def bpe_train_iterative(
     ``on_round(k, pair, total)`` is a per-round progress
     hook (the scale probe uses it to time rounds).
 
-    Loop shape per round — THREE bounded jobs, independent of how many
-    rounds preceded:
-      1. argmax over the standing pair-count table (1-row collect);
+    Loop shape per round — FOUR bounded jobs, independent of how many
+    rounds preceded, after four initial jobs (68-69 jobs for 16
+    merges, counted at sf0.01; ``tests/test_plans.py::_BUILD_JOB_BUDGET``
+    pins the cold-build totals):
+      1. argmax over the standing pair-count table (the 1-row collect);
       2. rebuild + checkpoint the vocabulary: untouched words pass
          through, affected words (those containing the pair) get the
          fold applied;
-      3. delta-update + checkpoint the pair counts: subtract affected
+      3-4. delta-update + checkpoint the pair counts: subtract affected
          words' old pairs, add their new ones — identical by
          construction to a from-scratch recount, at the cost of the
-         affected subset only.
+         affected subset only. The regrouping shuffle makes this
+         checkpoint two jobs under AQE: its map stage, then its result.
 
     ``vocab_df`` overrides the corpus-derived vocabulary with a caller-
     supplied (word, cnt, syms) frame — tools/bpe_scale_probe.py uses it

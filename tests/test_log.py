@@ -995,6 +995,241 @@ def test_minor_compact_refolds_and_vacuums(spark, tmp_path, monkeypatch):
     assert all(v == 0 for v in audit.asDict().values()), audit
 
 
+def _spy_parquet_opens(monkeypatch) -> list[str]:
+    """Record the file name of every ``pq.ParquetFile`` open and
+    ``pq.read_table`` call from here on."""
+    import pyarrow.parquet as pq
+
+    opened: list[str] = []
+    init, read_table = pq.ParquetFile.__init__, pq.read_table
+
+    def spy_init(self, source, *a, **kw):
+        opened.append(os.path.basename(str(source)))
+        init(self, source, *a, **kw)
+
+    def spy_read_table(source, *a, **kw):
+        opened.append(os.path.basename(str(source)))
+        return read_table(source, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "__init__", spy_init)
+    monkeypatch.setattr(pq, "read_table", spy_read_table)
+    return opened
+
+
+def _manifest_parquet(log) -> list[str]:
+    return [f for f in log._manifest_files() if f.endswith(".parquet")]
+
+
+def test_pages_over_own_commits_open_no_parquet(tmp_path, monkeypatch):
+    """Write-through row cache: a commit caches the rows it writes, so
+    forward, reverse and label pages over this instance's fresh
+    fragments open no parquet file and return the committed payloads."""
+    log = EventLog.create(None, str(tmp_path / "wt"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    want = {}
+    for i in range(1, 41):
+        lab, pay = ("odd" if i % 2 else "even"), json.dumps({"i": i, "s": "é" * i})
+        want[log.append(lab, pay).version] = (lab, minify_json(pay))
+    evs = [("multi", json.dumps({"j": j})) for j in range(3)]
+    r = log.append_multi(evs)
+    for j, (lab, pay) in enumerate(evs):
+        want[r.version_first + j] = (lab, minify_json(pay))
+    opened = _spy_parquet_opens(monkeypatch)
+    assert [(r.label, r.payload) for r in log.scan_rows()] == [
+        want[v] for v in range(1, 44)
+    ]
+    assert [r.version for r in log.scan_rows(reverse=True, limit=5)] == [
+        43, 42, 41, 40, 39
+    ]
+    assert [r.version for r in log.scan_rows(label="odd", limit=3)] == [1, 3, 5]
+    assert opened == []
+
+
+def test_minor_fold_from_cache_equals_fold_from_disk(tmp_path, monkeypatch):
+    """The writer folds its own fragments from the row cache without
+    opening any of them, and the fold it writes equals, in schema and
+    rows, the fold a second instance builds from disk on a copy of the
+    directory."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    log = EventLog.create(None, str(tmp_path / "w"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    for i in range(30):
+        log.append("abc"[i % 3], json.dumps({"i": i, "s": "ü" * (i % 4)}))
+    log.append_multi([("m", json.dumps({"j": j})) for j in range(5)])
+    shutil.copytree(log.path, str(tmp_path / "copy"))
+    other = EventLog.open(None, str(tmp_path / "copy"))
+    opened = _spy_parquet_opens(monkeypatch)
+    assert log.minor_compact() == 31
+    assert opened == []
+    monkeypatch.undo()
+    assert other.minor_compact() == 31
+    ((mine,), (theirs,)) = _manifest_parquet(log), _manifest_parquet(other)
+    a = pq.read_table(os.path.join(log.path, mine))
+    b = pq.read_table(os.path.join(other.path, theirs))
+    assert a.schema.equals(b.schema, check_metadata=True)
+    assert a.num_rows == 35 and a.equals(b)
+
+
+def test_pages_and_folds_read_another_writers_fragments(tmp_path, monkeypatch):
+    """Two instances on one path: instance A serves its own commits
+    from its row cache and reads instance B's fragments from disk, in a
+    fold and in pages, with payloads byte-equal to what was appended."""
+    path = str(tmp_path / "two")
+    a = EventLog.create(None, path)
+    b = EventLog.open(None, path)
+    a.MINOR_COMPACT_FRAGMENTS = b.MINOR_COMPACT_FRAGMENTS = 0
+    want = {}
+
+    def put(log, lab, i):
+        pay = json.dumps({"w": lab, "i": i, "s": "ü" * i})
+        want[log.append(lab, pay).version] = minify_json(pay).encode()
+
+    def check(log):
+        page = log.scan_rows()
+        assert [r.version for r in page] == sorted(want)
+        assert [r.payload.encode() for r in page] == [want[v] for v in sorted(want)]
+
+    for i in range(6):
+        put(a, "a", i)
+        put(b, "b", i)
+    b_frags = set(b._frag_row_cache)
+    opened = _spy_parquet_opens(monkeypatch)
+    assert a.minor_compact() == 12
+    assert set(opened) == b_frags
+    (fold,) = _manifest_parquet(a)
+    put(b, "b", 6)
+    put(b, "b", 7)
+    put(a, "a", 6)
+    opened.clear()
+    check(a)
+    assert set(opened) == (set(b._frag_row_cache) - b_frags) | {fold}
+    put(b, "b", 8)  # B's commit section adopts A's fold and commit
+    check(b)
+
+
+def test_row_cache_drops_cas_losers_and_retired_fragments(spark, tmp_path, monkeypatch):
+    """A CAS loser's discarded fragment leaves the row cache with its
+    file, and every fragment a minor fold or a major compaction retires
+    leaves it too; the byte total stays the sum of what is held."""
+    path = str(tmp_path / "cas")
+    a = EventLog.create(spark, path)
+    b = EventLog.open(None, path)
+    a.MINOR_COMPACT_FRAGMENTS = 0
+    a.append("a", '{"i": 0}')
+    written: list[str] = []
+    write_fragment = a._write_fragment
+
+    def racing_write(rows):
+        write_fragment(rows)
+        written.append(a._pending_add[-1]["n"])
+        if len(written) == 1:
+            b.append("b", '{"race": true}')  # claims the next seq first
+
+    monkeypatch.setattr(a, "_write_fragment", racing_write)
+    assert a.append("a", '{"i": 1}').version == 3
+    loser, winner = written
+    assert loser not in a._frag_row_cache
+    assert not os.path.exists(os.path.join(path, loser))
+    assert winner in a._frag_row_cache
+    monkeypatch.undo()
+
+    folded = _manifest_parquet(a)
+    assert a.minor_compact() == 3
+    assert not set(folded) & set(a._frag_row_cache)
+    a.append("a", '{"i": 2}')
+    assert [r.version for r in a.scan_rows()] == [1, 2, 3, 4]
+    live = _manifest_parquet(a)
+    assert set(live) <= set(a._frag_row_cache)  # the fold, read whole
+    a.compact()
+    assert not set(live) & set(a._frag_row_cache)
+    assert [r.version for r in a.scan_rows()] == [1, 2, 3, 4]
+    assert a._frag_bytes_total == sum(n for _, n in a._frag_row_cache.values())
+
+
+def test_row_cache_is_bounded_by_bytes(tmp_path):
+    """Every commit fills the row cache, so it is bounded by label +
+    payload bytes: committing more than ROW_CACHE_BYTES of 64 KiB
+    payloads keeps the byte total at or under the bound, evicting the
+    oldest fragments first."""
+    from eventlog_spark.log import ROW_CACHE_BYTES
+
+    log = EventLog.create(None, str(tmp_path / "wide"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    wide = json.dumps({"pad": "x" * (64 * 1024 - 12)})
+    commits = ROW_CACHE_BYTES // (16 * len(wide)) + 4
+    for _ in range(commits):
+        log.append_multi([("w", wide)] * 16)
+        assert log._frag_bytes_total <= ROW_CACHE_BYTES
+    held = log._frag_row_cache
+    assert log._frag_bytes_total == sum(n for _, n in held.values())
+    assert log._frag_bytes_total > ROW_CACHE_BYTES - 16 * len(wide) * 2
+    frags = [e["n"] for e in sorted(log._manifest.entries(), key=lambda e: e["lo"])]
+    assert list(held) == frags[len(frags) - len(held):]  # the newest stay
+    assert len(held) < commits
+
+
+def test_row_cache_under_concurrent_commits_pages_and_folds(tmp_path, monkeypatch):
+    """Stress: eight appenders (group commit), four page readers and
+    the folds they trigger share one instance's row cache. Every page
+    is dense with the appended payloads, and the cache's byte total
+    stays the sum of what it holds."""
+    import sys
+    import threading
+
+    monkeypatch.setattr(EventLog, "MINOR_COMPACT_FRAGMENTS", 16)
+    log = EventLog.create(None, str(tmp_path / "stress"))
+    log.append("seed", '{"w": -1, "i": 0}')
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def writer(w):
+        try:
+            for i in range(40):
+                log.append(f"w{w}", json.dumps({"w": w, "i": i}))
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    def reader():
+        try:
+            while not done.is_set():
+                page = log.scan_rows(reverse=True, limit=50)
+                vs = [r.version for r in page]
+                assert vs == list(range(vs[0], vs[0] - len(vs), -1))
+                for r in page:
+                    body = json.loads(r.payload)
+                    assert r.label == ("seed" if body["w"] < 0 else f"w{body['w']}")
+        except BaseException as e:
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        writers = [threading.Thread(target=writer, args=(w,)) for w in range(8)]
+        readers = [threading.Thread(target=reader) for _ in range(4)]
+        for t in writers + readers:
+            t.start()
+        for t in writers:
+            t.join(timeout=120)
+        done.set()
+        for t in readers:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in writers + readers)
+    assert not errors, errors[0]
+    assert log.version() == 321
+    page = log.scan_rows()
+    assert sorted((json.loads(r.payload)["w"], json.loads(r.payload)["i"]) for r in page[1:]) == [
+        (w, i) for w in range(8) for i in range(40)
+    ]
+    assert log._frag_bytes_total == sum(n for _, n in log._frag_row_cache.values())
+    live = set(_manifest_parquet(log))
+    assert set(log._frag_row_cache) <= live
+
+
 def test_scan_label_matches_filtered_scan(log):
     """Label-filtered scan (extension; Iceberg-style manifest data
     skipping on the file engine) must equal the plain scan filtered
@@ -1118,6 +1353,8 @@ def test_scan_rows_label_page_stops_early(tmp_path):
     for e in log._manifest.entries():
         if e["lo"] > 20:
             os.remove(os.path.join(log.path, e["n"]))
+    # a fresh instance: the writer's row cache still holds every row
+    log = EventLog.open(None, log.path)
     rows = log.scan_rows(label="hot", limit=10)
     assert [r.version for r in rows] == list(range(1, 11))
     # reverse tail page: only the newest fragments may be touched
@@ -1128,6 +1365,7 @@ def test_scan_rows_label_page_stops_early(tmp_path):
     for e in log2._manifest.entries():
         if e["hi"] < 41:
             os.remove(os.path.join(log2.path, e["n"]))
+    log2 = EventLog.open(None, log2.path)
     rows = log2.scan_rows(label="hot", reverse=True, limit=10)
     assert [r.version for r in rows] == list(range(60, 50, -1))
     # interior resume (pagination shape): version bound + early stop
@@ -1413,6 +1651,7 @@ def test_scan_rows_snapshot_survives_compact_and_default_vacuum(
     monkeypatch.setattr(reader, "_read_fragment_rows", read_after_maintenance)
     assert [r.version for r in reader.scan_rows()] == list(range(1, 13))
     assert len(opened) == 12 and set(opened) <= before
+    assert not before & set(reader._frag_row_cache)  # retired mid-read
     monkeypatch.undo()
     assert [r.version for r in reader.scan_rows(label="even")] == list(range(2, 13, 2))
 

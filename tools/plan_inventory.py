@@ -94,7 +94,8 @@ def main() -> None:
         "| query | shuffles | bcast | joins | python | pushed / markers |",
         "|---|---|---|---|---|---|",
     ]
-    for r in rows:
+    # by query name, so a regeneration's diff shows only plan changes
+    for r in sorted(rows, key=lambda r: r[0]):
         out.append("| " + " | ".join(r) + " |")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(path, "w") as f:

@@ -51,6 +51,7 @@ import hashlib
 import heapq
 import itertools
 import json
+import operator
 import os
 import queue
 import random
@@ -125,11 +126,28 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
     return out if out else None
 
 
+def _pylist(col) -> list:
+    """An Arrow column as a list of Python values, converted in one C
+    pass: pyarrow's ``to_pylist`` builds an Arrow scalar per value
+    (~10× slower on a 1024-row group). A column with nulls keeps
+    ``to_pylist``, because numpy would turn a null int64 into a float
+    NaN; otherwise ints stay Python ``int`` and strings ``str``."""
+    if col.null_count:
+        return col.to_pylist()
+    return col.to_numpy(zero_copy_only=False).tolist()
+
+
 def _table_rows(tbl) -> list[tuple]:
     """An event table as (version, version_prev, timestamp, label,
     payload, checksum) tuples."""
     cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
-    return list(zip(*[tbl.column(c).to_pylist() for c in cols]))
+    return list(zip(*[_pylist(tbl.column(c)) for c in cols]))
+
+
+def _rows_on_page(rows: list[tuple], lo: int, hi: int, label: str | None) -> list[tuple]:
+    """The rows of one whole fragment (a cache hit or a small-fragment
+    read) that a page over [lo, hi] returns."""
+    return [r for r in rows if lo <= r[0] <= hi and (label is None or r[3] == label)]
 
 
 def _rows_table(rows: list[tuple]):
@@ -1598,7 +1616,15 @@ class EventLog:
         exactly the closed interval [lo, hi] (possibly empty, hi < lo)
         read toward the head (or tail when ``reverse``). Returns
         (lo, hi, latest); raises InvalidVersion exactly like the
-        reference (eventlog_test.go:339-390)."""
+        reference (eventlog_test.go:339-390).
+
+        A file engine first syncs to the published state (the only
+        refresh of a ``scan_rows`` page): an instance that has not
+        committed since another process did would otherwise page to its
+        cached head, and that head's row would read ``version_next ==
+        0``."""
+        if self.path is not None:
+            self._require_published_state()
         with self._lock:
             latest, initial = self._latest, self._initial
         if latest == 0:
@@ -1722,18 +1748,15 @@ class EventLog:
                 f"{hi - lo + 1}: the manifest's fragments do not cover "
                 "the interval"
             )
-        rows.sort(key=lambda r: r[0])
-        out = [
-            ScanRow(
-                ver, vp, 0 if ver == latest else ver + 1, ts, lab, payload, ck
-            )
+        rows.sort(key=operator.itemgetter(0), reverse=reverse)
+        if label is not None and limit is not None:
+            del rows[limit:]
+        # tuple.__new__ skips the namedtuple's Python-level __new__
+        new = tuple.__new__
+        return [
+            new(ScanRow, (ver, vp, 0 if ver == latest else ver + 1, ts, lab, payload, ck))
             for (ver, vp, ts, lab, payload, ck) in rows
         ]
-        if reverse:
-            out = out[::-1]
-        if label is not None and limit is not None:
-            out = out[:limit]
-        return out
 
     def _rows_in_range(
         self,
@@ -1754,7 +1777,11 @@ class EventLog:
         ``label``, page summaries and entry stats additionally drop
         fragments that cannot hold the label (bounds + bloom — the same
         data skipping scan(label=...) applies) and rows are filtered
-        exactly. A broken chain or a missing fragment raises.
+        exactly. Each row is filtered once: row groups decoded from disk
+        come back filtered Arrow-side, and only whole-fragment rows (a
+        cache hit, or a small fragment read whole) pass the Python
+        filter (``_rows_on_page``). The mirror is the one
+        ``_page_interval`` just synced; a missing fragment raises.
 
         With ``label`` AND ``limit``, fragments are read in version
         order (``reverse`` flips it) and the read STOPS once no unread
@@ -1768,7 +1795,6 @@ class EventLog:
         positions = (
             list(_label_bloom_positions(label)) if label is not None else None
         )
-        self._require_published_state()
         with self._lock:
             epoch = self._cache_epoch
             if label is None:
@@ -1803,11 +1829,9 @@ class EventLog:
                 rows = self._read_fragment_rows(
                     entry, lo, hi, label, limit, reverse, epoch
                 )
-            out.extend(
-                r
-                for r in rows
-                if lo <= r[0] <= hi and (label is None or r[3] == label)
-            )
+            else:
+                rows = _rows_on_page(rows, lo, hi, label)
+            out.extend(rows)
         return out
 
     def _read_fragment_rows(
@@ -1820,20 +1844,23 @@ class EventLog:
         reverse: bool = False,
         epoch: int | None = None,
     ) -> list[tuple]:
-        """One fragment's rows for a page over [lo, hi]. A fragment of at
-        most ``ROW_GROUP_ROWS`` rows is read whole and cached by name,
-        unfiltered (the hot tail: single-append fragments are immutable
-        and tiny, so repeated pages over an uncompacted tail must not
-        re-open 1000 files), unless fragments were retired since
-        ``epoch``, the cache epoch the page chose its fragments at. Any
-        other fragment decodes only what the page can return:
+        """The rows of one fragment that a page over [lo, hi] returns,
+        filtered. A fragment of at most ``ROW_GROUP_ROWS`` rows is read
+        whole and cached by name, unfiltered (the hot tail:
+        single-append fragments are immutable and tiny, so repeated
+        pages over an uncompacted tail must not re-open 1000 files),
+        unless fragments were retired since ``epoch``, the cache epoch
+        the page chose its fragments at; its page rows then pass the
+        same Python filter as a cache hit. Any other fragment decodes
+        only what the page can return:
 
         * row groups whose footer version stats miss [lo, hi] are
           skipped — driver-side writes cap groups at ``ROW_GROUP_ROWS``
           rows, so a 1000-event page decodes at most two groups of a
           fold;
         * the version range (and ``label``) filter runs Arrow-side, so
-          only surviving rows become Python objects;
+          only surviving rows become Python objects, one C pass per
+          column (``_pylist``), and no Python filter follows;
         * a label page with ``limit`` first reads only the ``version``
           and ``label`` columns, keeps the fragment's first ``limit``
           matches by version value in read direction (file order is not
@@ -1852,7 +1879,7 @@ class EventLog:
             tbl = pf.read()
             rows = _table_rows(tbl)
             self._cache_rows(entry["n"], rows, _text_bytes(tbl), epoch)
-            return rows
+            return _rows_on_page(rows, lo, hi, label)
         stats = _version_group_stats(md)
         groups = [
             g
@@ -1877,7 +1904,7 @@ class EventLog:
                 lo, hi = bounds["min"].as_py(), bounds["max"].as_py()
             ends = list(itertools.accumulate(md.row_group(g).num_rows for g in groups))
             groups = sorted(
-                {groups[bisect.bisect_right(ends, i)] for i in hits.to_pylist()}
+                {groups[bisect.bisect_right(ends, i)] for i in _pylist(hits)}
             )
         if not groups:
             return []

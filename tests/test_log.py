@@ -841,9 +841,53 @@ def test_scan_rows_multi_fragment_and_compaction(spark, tmp_path):
     fast = log.scan_rows(version=10, limit=10)
     assert [r.version for r in fast] == [10, 11, 12, 13]
     assert fast[-1].version_next == 0
+    # the compacted rows come from disk, filtered Arrow-side: Python
+    # ints and strs, never numpy scalars
+    types = (int, int, int, int, str, str, int)
+    assert all(type(v) is t for r in fast for v, t in zip(r, types)), fast
     assert [tuple(r) for r in fast] == [
         tuple(r) for r in log.scan(version=10, limit=10).collect()
     ]
+
+
+def test_table_rows_match_to_pylist():
+    """``_table_rows`` converts each column in one C pass; its rows equal
+    pyarrow's ``to_pylist`` rows — on an empty table, several chunks,
+    non-ASCII and astral-plane text, the int64 extremes, and nulls in
+    an int and a string column — and hold only Python ints, strs and
+    Nones."""
+    import pyarrow as pa
+
+    from eventlog_spark.log import _table_rows
+
+    cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
+    schema = pa.schema(
+        [(c, pa.string() if c in ("label", "payload") else pa.int64()) for c in cols]
+    )
+
+    def table(*chunks):
+        return pa.Table.from_batches(
+            [pa.RecordBatch.from_pylist(rows, schema) for rows in chunks], schema
+        )
+
+    def row(v, label="l", payload="{}", ck=0, ts=1):
+        return dict(version=v, version_prev=v - 1, timestamp=ts, label=label,
+                    payload=payload, checksum=ck)
+
+    lo, hi = -(2**63), 2**63 - 1
+    tables = [
+        pa.Table.from_batches([], schema),
+        table([row(1), row(2)], [row(3)], [], [row(4, label="x")]),
+        table([row(1, label="ü", payload='{"s":"日本語"}'), row(2, label="𝄞", payload='"😀"')]),
+        table([row(1, ck=lo, ts=hi), row(2, ck=hi, ts=lo)]),
+        table([row(1, ck=None), row(2, label=None), row(3, payload=None)]),
+    ]
+    assert tables[1].column("version").num_chunks == 4
+    for tbl in tables:
+        want = list(zip(*[tbl.column(c).to_pylist() for c in cols]))
+        got = _table_rows(tbl)
+        assert got == want
+        assert all(type(v) in (int, str, type(None)) for r in got for v in r), got
 
 
 def test_scan_rows_raises_when_manifest_misses_rows(spark, tmp_path):
@@ -1090,6 +1134,7 @@ def test_pages_and_folds_read_another_writers_fragments(tmp_path, monkeypatch):
     def check(log):
         page = log.scan_rows()
         assert [r.version for r in page] == sorted(want)
+        assert [r.version_next for r in page] == sorted(want)[1:] + [0]
         assert [r.payload.encode() for r in page] == [want[v] for v in sorted(want)]
 
     for i in range(6):
@@ -1106,8 +1151,33 @@ def test_pages_and_folds_read_another_writers_fragments(tmp_path, monkeypatch):
     opened.clear()
     check(a)
     assert set(opened) == (set(b._frag_row_cache) - b_frags) | {fold}
-    put(b, "b", 8)  # B's commit section adopts A's fold and commit
-    check(b)
+    check(b)  # B's page syncs to A's fold and commit first
+
+
+def test_pages_reach_another_writers_head(spark, tmp_path):
+    """A page syncs to the published state before it fixes its
+    interval: instance B, which has not committed since instance A did,
+    pages up to A's head — in ``scan_rows`` and ``scan()`` — and its
+    own old head links forward instead of reading ``version_next ==
+    0``."""
+    path = str(tmp_path / "stale")
+    a = EventLog.create(spark, path)
+    b = EventLog.open(spark, path)
+    for i in range(3):
+        b.append("b", json.dumps({"i": i}))
+    a.append("a", '{"i": 3}')
+    a.append_multi([("a", '{"i": 4}'), ("a", '{"i": 5}')])
+
+    def links(rows):
+        return [(r.version, r.version_next) for r in rows]
+
+    assert links(b.scan_rows()) == [(v, v + 1) for v in range(1, 6)] + [(6, 0)]
+    a.append("a", '{"i": 6}')
+    assert links(b.scan_rows(reverse=True, limit=2)) == [(7, 0), (6, 7)]
+    a.append("a", '{"i": 7}')
+    assert links(b.scan().collect()) == [(v, v + 1) for v in range(1, 8)] + [(8, 0)]
+    a.append("a", '{"i": 8}')
+    assert links(b.scan_rows(label="a")) == [(4, 5), (5, 6), (6, 7), (7, 8), (8, 9), (9, 0)]
 
 
 def test_row_cache_drops_cas_losers_and_retired_fragments(spark, tmp_path, monkeypatch):

@@ -103,7 +103,8 @@ _META_FILE = "_eventlog_meta.json"
 ROW_GROUP_ROWS = 1024
 
 # Label + payload bytes (as Arrow holds them: UTF-8 data plus offsets)
-# the hot-tail row cache keeps before evicting its oldest fragments.
+# the hot-tail row cache keeps before evicting its oldest fragments;
+# the footers it keeps of larger fragments count their serialized size.
 # Every commit fills it, so it is bounded by bytes, not rows: 64 KiB
 # group-commit rows would otherwise pile up gigabytes. 64 MiB holds
 # ~200k rows of a ~280-byte interactive event.
@@ -124,6 +125,17 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
             return None
         out.append((s.min, s.max))
     return out if out else None
+
+
+class _Footer(NamedTuple):
+    """A fragment's parsed parquet footer as the hot-tail cache holds
+    it: valid while the file's (size, mtime) stay those it was parsed
+    at, so a file replaced under its name is parsed again."""
+
+    size: int
+    mtime_ns: int
+    md: object  # pyarrow.parquet.FileMetaData
+    stats: list[tuple[int, int]] | None  # _version_group_stats(md)
 
 
 def _pylist(col) -> list:
@@ -167,6 +179,26 @@ def _rows_table(rows: list[tuple]):
     cols["payload"] = pa.array([r[4].encode("utf-8") for r in rows], pa.string())
     cols["checksum"] = pa.array([r[5] for r in rows], pa.int64())
     return pa.table(cols)
+
+
+def _write_driver_parquet(tbl, path: str) -> None:
+    """The one layout of every driver-side write (commit fragments and
+    minor folds), which the page path decodes: row groups of at most
+    ``ROW_GROUP_ROWS`` rows with version statistics; LZ4 (written as
+    LZ4_RAW), which decodes faster than Snappy at about the same file
+    size; and a dictionary only on ``label``, the one
+    low-cardinality column — dictionary-encoding unique versions and
+    checksums, per-batch timestamps and payloads costs decode time and
+    saves little under LZ4."""
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        tbl,
+        path,
+        row_group_size=ROW_GROUP_ROWS,
+        compression="lz4",
+        use_dictionary=["label"],
+    )
 
 
 def _text_bytes(tbl) -> int:
@@ -462,15 +494,18 @@ class EventLog:
         self._pending_remove: list[str] = []
         # hot-tail row cache: fragment name -> (rows, label + payload
         # bytes) for fragments of at most ROW_GROUP_ROWS rows, filled
-        # as this process writes a fragment or reads one whole
-        # (_cache_rows), evicted oldest first past ROW_CACHE_BYTES.
+        # as this process writes a fragment or reads one whole, and
+        # name -> (_Footer, footer bytes) for larger fragments a page
+        # read (_cache_put), evicted oldest first past ROW_CACHE_BYTES.
         # Pages and minor folds take rows from it for manifest
         # candidates only, so a written but unclaimed fragment is never
         # served; CAS losers and retired fragments leave it
         # (_uncache), which bumps _cache_epoch so that a page read that
         # chose its fragments before the retirement does not put them
         # back.
-        self._frag_row_cache: OrderedDict[str, tuple[list[tuple], int]] = OrderedDict()
+        self._frag_row_cache: OrderedDict[str, tuple[list[tuple] | _Footer, int]] = (
+            OrderedDict()
+        )
         self._frag_bytes_total = 0
         self._cache_epoch = 0
         self._load_meta()
@@ -1207,33 +1242,53 @@ class EventLog:
         self._uncache(e["n"] for e in self._pending_add)
         self._pending_add, self._pending_remove = [], []
 
-    def _cache_rows(
-        self, name: str, rows: list[tuple], nbytes: int, epoch: int | None = None
+    def _cache_put(
+        self,
+        name: str,
+        value: list[tuple] | _Footer,
+        nbytes: int,
+        epoch: int | None = None,
     ) -> None:
-        """Put one small fragment's rows in the hot-tail cache — the one
-        fill path of the write side (``_write_fragment``) and the read
-        side (``_read_fragment_rows``) — and evict the oldest entries
-        until label + payload bytes are back under ``ROW_CACHE_BYTES``.
-        A read passes the ``_cache_epoch`` it chose its fragments at;
-        if fragments were retired since, it may hold one of them, and
-        nothing is cached."""
+        """Put one small fragment's rows, or a larger one's footer, in
+        the hot-tail cache — the one fill path of the write side
+        (``_write_fragment``) and the read side
+        (``_read_fragment_rows``) — replacing what the name held, and
+        evict the oldest entries until the bytes held are back under
+        ``ROW_CACHE_BYTES``. A read passes the ``_cache_epoch`` it
+        chose its fragments at; if fragments were retired since, it may
+        hold one of them, and nothing is cached."""
         with self._lock:
-            if name not in self._frag_row_cache and epoch in (None, self._cache_epoch):
-                self._frag_row_cache[name] = (rows, nbytes)
+            if epoch in (None, self._cache_epoch):
+                old = self._frag_row_cache.pop(name, None)
+                if old is not None:
+                    self._frag_bytes_total -= old[1]
+                self._frag_row_cache[name] = (value, nbytes)
                 self._frag_bytes_total += nbytes
             while self._frag_bytes_total > ROW_CACHE_BYTES and self._frag_row_cache:
-                _, (_, old) = self._frag_row_cache.popitem(last=False)
-                self._frag_bytes_total -= old
+                _, (_, old_bytes) = self._frag_row_cache.popitem(last=False)
+                self._frag_bytes_total -= old_bytes
 
     def _cached_rows(self, name: str) -> list[tuple] | None:
         """A fragment's rows from the hot-tail cache, or None."""
         with self._lock:  # fragments are immutable under uuid names
             hit = self._frag_row_cache.get(name)
-        return None if hit is None else hit[0]
+        return hit[0] if hit is not None and type(hit[0]) is list else None
+
+    def _cached_footer(self, name: str, st: os.stat_result) -> _Footer | None:
+        """A fragment's footer from the hot-tail cache, or None when it
+        holds none or the file at ``st`` is not the one it was parsed
+        from."""
+        with self._lock:
+            hit = self._frag_row_cache.get(name)
+        if hit is None or type(hit[0]) is not _Footer:
+            return None
+        foot = hit[0]
+        return foot if (foot.size, foot.mtime_ns) == (st.st_size, st.st_mtime_ns) else None
 
     def _uncache(self, names: Iterable[str]) -> None:
         """Drop fragments that will never be served again (a CAS
-        loser's, or retired by a fold or compaction) from the cache."""
+        loser's, or retired by a fold or compaction) from the cache:
+        their rows or their footer."""
         with self._lock:
             self._cache_epoch += 1
             for n in names:
@@ -1257,8 +1312,6 @@ class EventLog:
         (``append_dataframe``) remains the fully-distributed path —
         this seam is for the interactive/serving commits where
         scheduling a cluster job per append is pure overhead."""
-        import pyarrow.parquet as pq
-
         from .sources.binformat import checksum_rows
 
         # checksum_rows pool-parallelizes wide batches (a group commit's
@@ -1269,14 +1322,14 @@ class EventLog:
         tbl = _rows_table(rows)
         name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(self.path, "." + name + ".tmp")
-        pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
+        _write_driver_parquet(tbl, tmp)
         os.rename(tmp, os.path.join(self.path, name))
         # write-through: pages and the next minor fold serve these rows
         # from memory once the claim publishes them, instead of
         # re-opening the file this process just wrote (an LSM
         # memtable's role)
         if len(rows) <= ROW_GROUP_ROWS:
-            self._cache_rows(name, rows, _text_bytes(tbl))
+            self._cache_put(name, rows, _text_bytes(tbl))
         # counts interactive fragments since the last fold — the
         # minor-compaction trigger (amortized-O(1) append maintenance)
         self._interactive_frags = getattr(self, "_interactive_frags", 0) + 1
@@ -1851,8 +1904,10 @@ class EventLog:
         pages over an uncompacted tail must not re-open 1000 files),
         unless fragments were retired since ``epoch``, the cache epoch
         the page chose its fragments at; its page rows then pass the
-        same Python filter as a cache hit. Any other fragment decodes
-        only what the page can return:
+        same Python filter as a cache hit. Any other fragment has its
+        footer and version stats cached under the same rule, checked
+        against one ``os.stat`` (a file replaced under its name is
+        parsed again), and decodes only what the page can return:
 
         * row groups whose footer version stats miss [lo, hi] are
           skipped — driver-side writes cap groups at ``ROW_GROUP_ROWS``
@@ -1868,26 +1923,44 @@ class EventLog:
           decodes every column only for the groups holding them —
           matches past those can never be on the page.
 
-        The cache mutates under the engine RLock (serving threads share
-        it); the file read stays outside it."""
+        Reads decode on the calling thread: a page decodes at most a
+        few row groups, and handing them to Arrow's thread pool costs
+        more CPU than it saves. The cache mutates under the engine
+        RLock (serving threads share it); the file read stays outside
+        it."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
-        md = pf.metadata
-        if md.num_rows <= ROW_GROUP_ROWS:
-            tbl = pf.read()
-            rows = _table_rows(tbl)
-            self._cache_rows(entry["n"], rows, _text_bytes(tbl), epoch)
-            return _rows_on_page(rows, lo, hi, label)
-        stats = _version_group_stats(md)
+        path = os.path.join(self.path, entry["n"])
+        st = os.stat(path)
+        foot = self._cached_footer(entry["n"], st)
+        if foot is not None:
+            pf = pq.ParquetFile(path, metadata=foot.md)
+            md, stats = foot.md, foot.stats
+        else:
+            pf = pq.ParquetFile(path)
+            md = pf.metadata
+            if md.num_rows <= ROW_GROUP_ROWS:
+                tbl = pf.read(use_threads=False)
+                rows = _table_rows(tbl)
+                self._cache_put(entry["n"], rows, _text_bytes(tbl), epoch)
+                return _rows_on_page(rows, lo, hi, label)
+            stats = _version_group_stats(md)
+            self._cache_put(
+                entry["n"],
+                _Footer(st.st_size, st.st_mtime_ns, md, stats),
+                md.serialized_size,
+                epoch,
+            )
         groups = [
             g
             for g in range(md.num_row_groups)
             if stats is None or (stats[g][0] <= hi and stats[g][1] >= lo)
         ]
         if label is not None and limit is not None and groups:
-            keys = pf.read_row_groups(groups, columns=["version", "label"])
+            keys = pf.read_row_groups(
+                groups, columns=["version", "label"], use_threads=False
+            )
             hits = pc.indices_nonzero(_page_mask(keys, lo, hi, label))
             if len(hits) > limit:
                 order = "descending" if reverse else "ascending"
@@ -1908,7 +1981,7 @@ class EventLog:
             )
         if not groups:
             return []
-        tbl = pf.read_row_groups(groups)
+        tbl = pf.read_row_groups(groups, use_threads=False)
         return _table_rows(tbl.filter(_page_mask(tbl, lo, hi, label)))
 
     def dataframe(self) -> DataFrame:
@@ -2275,7 +2348,7 @@ class EventLog:
             landing = os.path.join(self.path, "." + name + ".tmp")
             # bounded row groups: a page decodes only the groups it
             # overlaps, not the whole fold (_read_fragment_rows)
-            pq.write_table(merged, landing, row_group_size=ROW_GROUP_ROWS)
+            _write_driver_parquet(merged, landing)
             os.rename(landing, os.path.join(self.path, name))
             # merged is sorted by version: range = first/last row; the
             # fold holds the rows driver-side, so label stats are exact

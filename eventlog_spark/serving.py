@@ -217,13 +217,19 @@ class _Handler(BaseHTTPRequestHandler):
         except EventLogError:
             self._err("ErrBadArgument")
             return
+        # a page's events share few unix-second timestamps (a batch
+        # shares one), so each distinct one is formatted once
+        times: dict[int, str] = {}
         parts = []
         for e in rows:
+            when = times.get(e.timestamp)
+            if when is None:
+                when = times[e.timestamp] = _rfc3339(e.timestamp)
             parts.append(
                 '{"time":"%s","version":"%s","version-previous":"%s",'
                 '"version-next":"%s","label":"%s","payload":%s}'
                 % (
-                    _rfc3339(e.timestamp),
+                    when,
                     format(e.version, "x"),
                     format(e.version_prev, "x"),
                     format(e.version_next, "x"),

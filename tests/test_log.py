@@ -1556,7 +1556,8 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     1000-event page over a 24k-row fold decodes at most two of them;
     and a 100-event label page reads only ``version`` and ``label``
     of its candidate groups, then decodes every column only for the
-    groups holding its rows."""
+    groups holding its rows. Every page read decodes on the calling
+    thread (``use_threads=False``)."""
     import pyarrow.parquet as pq
 
     from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
@@ -1575,14 +1576,17 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     assert stats is not None and len(stats) == md.num_row_groups
 
     calls: list[tuple[list[int], list[str] | None]] = []
+    threaded: list[bool] = []
     read_row_groups, read = pq.ParquetFile.read_row_groups, pq.ParquetFile.read
 
     def spy_groups(self, row_groups, columns=None, **kw):
         calls.append((list(row_groups), columns))
+        threaded.append(kw.get("use_threads", True))
         return read_row_groups(self, row_groups, columns=columns, **kw)
 
     def spy_read(self, *a, **kw):
         calls.append(([-1], None))
+        threaded.append(kw.get("use_threads", True))
         return read(self, *a, **kw)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy_groups)
@@ -1604,6 +1608,249 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     assert full == holding
     # the page's rows span fewer groups than its version interval does
     assert len(holding) < sum(1 for a, b in stats if b >= 3000)
+    assert threaded and not any(threaded)
+
+    # a small fragment another instance wrote is read whole
+    log.append("hot", '{"i": -1}')
+    calls.clear()
+    threaded.clear()
+    reader = EventLog.open(None, log.path)
+    page = reader.scan_rows(version=23_990)
+    assert [r.version for r in page] == list(range(23_990, 24_002))
+    assert ([-1], None) in calls
+    assert threaded and not any(threaded)
+
+
+def _assert_driver_layout(full: str) -> None:
+    """A driver-side write's layout: every column chunk LZ4, a
+    dictionary only on ``label``, and row groups of at most
+    ROW_GROUP_ROWS rows, each with version statistics."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
+
+    md = pq.ParquetFile(full).metadata
+    assert md.num_row_groups > 1
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        assert rg.num_rows <= ROW_GROUP_ROWS
+        for c in range(rg.num_columns):
+            col = rg.column(c)
+            assert col.compression == "LZ4", (col.path_in_schema, col.compression)
+            dictionary = col.has_dictionary_page or any(
+                "DICTIONARY" in e for e in col.encodings
+            )
+            assert dictionary == (col.path_in_schema == "label"), (
+                col.path_in_schema,
+                col.encodings,
+            )
+    stats = _version_group_stats(md)
+    assert stats is not None and len(stats) == md.num_row_groups
+
+
+def test_driver_writes_lz4_with_label_only_dictionary(tmp_path):
+    """Layout pin of both driver-side writes, a commit fragment and a
+    minor fold: LZ4, a dictionary only on ``label``, bounded row groups
+    with version stats."""
+    log = EventLog.create(None, str(tmp_path / "lz4"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    events = _skewed_events(5000, seed=11)
+    log.append_multi(events[:1500])
+    (frag,) = _manifest_parquet(log)
+    _assert_driver_layout(os.path.join(log.path, frag))
+    log.append_multi(events[1500:3000])
+    for lab, pay in events[3000:3010]:
+        log.append(lab, pay)
+    assert log.minor_compact() == 12
+    (fold,) = _manifest_parquet(log)
+    _assert_driver_layout(os.path.join(log.path, fold))
+    assert [r.version for r in log.scan_rows(version=1001, limit=1000)] == list(
+        range(1001, 2001)
+    )
+
+
+def _two_fold_log(path: str, spark=None):
+    """A log of two multi-group minor folds (versions 1-3000 and
+    3001-6000) and the events appended to it."""
+    log = EventLog.create(spark, path)
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    events = _skewed_events(6000, seed=13)
+    for i in range(0, 3000, 1000):
+        log.append_multi(events[i:i + 1000])
+    assert log.minor_compact() == 3
+    # the second fold must not absorb the first: bound the fold size
+    log.MINOR_COMPACT_MAX_BYTES = os.path.getsize(
+        os.path.join(log.path, _manifest_parquet(log)[0])
+    ) - 1
+    for i in range(3000, 6000, 1000):
+        log.append_multi(events[i:i + 1000])
+    assert log.minor_compact() == 3
+    del log.MINOR_COMPACT_MAX_BYTES
+    return log, events
+
+
+def _fold_at(log, version: int) -> str:
+    (name,) = [
+        e["n"] for e in log._manifest.entries() if e["lo"] <= version <= e["hi"]
+    ]
+    return name
+
+
+def test_repeated_pages_parse_a_fold_footer_once(tmp_path, monkeypatch):
+    """The footer and version stats of a fragment larger than one row
+    group are cached: forward, reverse and label pages over one fold
+    parse its footer once, reopen it with the cached metadata, and a
+    file replaced under its name is parsed again."""
+    import pyarrow.parquet as pq
+
+    import eventlog_spark.log as log_mod
+    from eventlog_spark.log import _Footer
+
+    log, events = _two_fold_log(str(tmp_path / "foot"))
+    reader = EventLog.open(None, log.path)  # nothing cached
+    parsed: list[int] = []
+    stats = log_mod._version_group_stats
+
+    def spy_stats(md):
+        parsed.append(md.num_rows)
+        return stats(md)
+
+    monkeypatch.setattr(log_mod, "_version_group_stats", spy_stats)
+    stored = [(lab, minify_json(pay)) for lab, pay in events]
+    for _ in range(3):
+        page = reader.scan_rows(version=100, limit=1000)
+        assert [(r.version, r.label, r.payload) for r in page] == [
+            (v, *stored[v - 1]) for v in range(100, 1100)
+        ]
+        page = reader.scan_rows(version=2900, limit=50, reverse=True)
+        assert [r.version for r in page] == list(range(2900, 2850, -1))
+        page = reader.scan_rows(version=1, label="rare", limit=20)
+        want = [v for v in range(1, 3001) if stored[v - 1][0] == "rare"][:20]
+        assert [r.version for r in page] == want
+    assert parsed == [3000]
+    fold = _fold_at(reader, 1)
+    assert type(reader._frag_row_cache[fold][0]) is _Footer
+
+    # the same rows rewritten under the fold's name, in other groups
+    full = os.path.join(reader.path, fold)
+    tbl = pq.read_table(full)
+    os.remove(full)
+    pq.write_table(tbl, full, row_group_size=600)
+    page = reader.scan_rows(version=100, limit=1000)
+    assert [r.version for r in page] == list(range(100, 1100))
+    assert parsed == [3000, 3000]
+    assert reader._frag_row_cache[fold][0].md.num_row_groups == 5
+
+
+def test_footer_cache_counts_against_row_cache_bytes(tmp_path, monkeypatch):
+    """A cached footer is charged its serialized size against
+    ROW_CACHE_BYTES and is evicted oldest first like cached rows."""
+    import eventlog_spark.log as log_mod
+
+    log, _events = _two_fold_log(str(tmp_path / "bytes"))
+    reader = EventLog.open(None, log.path)
+    first, second = _fold_at(reader, 1), _fold_at(reader, 3001)
+    reader.scan_rows(version=1, limit=10)
+    held = reader._frag_row_cache
+    size = held[first][0].md.serialized_size
+    assert list(held) == [first] and held[first][1] == size
+    assert reader._frag_bytes_total == size
+    # room for one footer only: the second evicts the first
+    monkeypatch.setattr(log_mod, "ROW_CACHE_BYTES", size + size // 2)
+    reader.scan_rows(version=3001, limit=10)
+    assert list(held) == [second]
+    assert reader._frag_bytes_total == held[second][0].md.serialized_size
+
+
+def test_footer_cache_drops_retired_and_cas_losing_names(spark, tmp_path, monkeypatch):
+    """Every name a minor fold or a compact() retires leaves the
+    footer cache, as does a CAS loser's discarded fragment; the byte
+    total stays the sum of what is held."""
+    from eventlog_spark.log import _Footer
+
+    path = str(tmp_path / "retire")
+    log, _events = _two_fold_log(path, spark)
+
+    def footers():
+        return {n for n, (v, _) in log._frag_row_cache.items() if type(v) is _Footer}
+
+    log.scan_rows(version=1, limit=10)
+    log.scan_rows(version=3001, limit=10)
+    folds = set(_manifest_parquet(log))
+    assert footers() == folds
+    # a fold absorbs both folds (and one commit)
+    log.append("tail", '{"t": 1}')
+    assert log.minor_compact() == 3
+    assert not footers()
+    (fold,) = _manifest_parquet(log)
+    log.scan_rows(version=1, limit=10)
+    assert footers() == {fold}
+    log.compact()
+    assert not footers()
+    assert [r.version for r in log.scan_rows(version=5990)] == list(range(5990, 6002))
+
+    # a commit that loses its CAS claim drops the name it wrote
+    other = EventLog.open(None, path)
+    written: list[str] = []
+    write_fragment = log._write_fragment
+
+    def racing_write(rows):
+        write_fragment(rows)
+        written.append(log._pending_add[-1]["n"])
+        if len(written) == 1:
+            other.append("b", '{"race": true}')  # claims the next seq first
+
+    monkeypatch.setattr(log, "_write_fragment", racing_write)
+    log.append_multi([("big", json.dumps({"i": i})) for i in range(1500)])
+    monkeypatch.undo()
+    loser, winner = written
+    assert not os.path.exists(os.path.join(path, loser))
+    page = log.scan_rows(version=6002, limit=1000)
+    assert [r.label for r in page] == ["b"] + ["big"] * 999
+    assert loser not in log._frag_row_cache
+    assert winner in footers()
+    assert log._frag_bytes_total == sum(n for _, n in log._frag_row_cache.values())
+
+
+def test_pages_over_a_snappy_fold_written_before_lz4(spark, tmp_path):
+    """A log upgraded in place keeps its Snappy folds, dictionary-encoded
+    on every column: pages, ``scan()`` and ``check_integrity()`` read
+    them next to LZ4 folds, and the next fold rewrites them LZ4."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import ROW_GROUP_ROWS
+
+    log, events = _two_fold_log(str(tmp_path / "mixed"), spark)
+    old = os.path.join(log.path, _fold_at(log, 1))
+    pq.write_table(pq.read_table(old), old, row_group_size=ROW_GROUP_ROWS)
+    md = pq.ParquetFile(old).metadata
+    assert md.row_group(0).column(0).compression == "SNAPPY"
+    assert md.row_group(0).column(0).has_dictionary_page
+    reader = EventLog.open(spark, log.path)
+    stored = [(lab, minify_json(pay)) for lab, pay in events]
+
+    def check(page, want):
+        assert [(r.version, r.label, r.payload) for r in page] == [
+            (v, *stored[v - 1]) for v in want
+        ]
+
+    for lg in (log, reader):
+        check(lg.scan_rows(version=2500, limit=1000), range(2500, 3500))
+        check(lg.scan_rows(version=3500, limit=1000, reverse=True), range(3500, 2500, -1))
+        want = [v for v in range(1, 6001) if stored[v - 1][0] == "rare"]
+        check(lg.scan_rows(version=1, label="rare", limit=100), want[:100])
+    _assert_label_pages(reader, events, [1, 2999, 3001, 6000])
+    got = [(r.version, r.label, r.payload) for r in reader.scan().collect()]
+    assert got == [(v, *stored[v - 1]) for v in range(1, 6001)]
+    row = reader.check_integrity().collect()[0]
+    assert not any(v for k, v in row.asDict().items() if k.endswith("violations"))
+    assert row.density_violation == 0
+    # the next fold rewrites the Snappy fold in the driver-side layout
+    log.append("tail", '{"t": 1}')
+    assert log.minor_compact() == 3
+    (fold,) = _manifest_parquet(log)
+    _assert_driver_layout(os.path.join(log.path, fold))
+    check(log.scan_rows(version=1, limit=6000), range(1, 6001))
 
 
 def test_label_bloom_caps_at_high_cardinality(spark, tmp_path):

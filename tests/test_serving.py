@@ -340,3 +340,47 @@ def test_label_filtered_scan_http(server):
     got = [e.version for e in client.scan(label="blue", reverse=True)]
     assert got == [9, 7, 5, 3, 1]
     assert list(client.scan(label="absent")) == []
+
+
+def test_scan_page_formats_each_timestamp_once(tmp_path, monkeypatch):
+    """A page spanning two seconds formats each distinct timestamp once
+    and returns the same bytes as formatting every event's own."""
+    import eventlog_spark.log as log_mod
+    from eventlog_spark import serving
+
+    log = EventLog.create(None, str(tmp_path / "ts"))
+    clock = [1_700_000_000.25]
+    monkeypatch.setattr(log_mod.time, "time", lambda: clock[0])
+    log.append_multi([("a", '{"i":1}'), ("b", '{"i":2}')])
+    clock[0] += 1
+    log.append("a", '{"i":3}')
+    log.append("c", '{"s":"ü"}')
+    monkeypatch.undo()
+
+    calls: list[int] = []
+    rfc3339 = serving._rfc3339
+
+    def spy(ts):
+        calls.append(ts)
+        return rfc3339(ts)
+
+    monkeypatch.setattr(serving, "_rfc3339", spy)
+    srv = serve(log, port=0)
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        status, body = _get(f"{base}/log/1")
+    finally:
+        srv.shutdown()
+    assert status == 200
+    first, second = "2023-11-14T22:13:20Z", "2023-11-14T22:13:21Z"
+    assert body == (
+        '[{"time":"%s","version":"1","version-previous":"0","version-next":"2",'
+        '"label":"a","payload":{"i":1}},'
+        '{"time":"%s","version":"2","version-previous":"1","version-next":"3",'
+        '"label":"b","payload":{"i":2}},'
+        '{"time":"%s","version":"3","version-previous":"2","version-next":"4",'
+        '"label":"a","payload":{"i":3}},'
+        '{"time":"%s","version":"4","version-previous":"3","version-next":"0",'
+        '"label":"c","payload":{"s":"ü"}}]' % (first, first, second, second)
+    )
+    assert calls == [1_700_000_000, 1_700_000_001]

@@ -6,24 +6,23 @@ through ONE task, which is exactly the bottleneck a 100 TB ingest
 cannot afford. Even ``row_number() over (partition by pid)`` hash-
 shuffles the full dataset on pid.
 
-The shuffle-free technique used here decomposes Spark's
-``monotonically_increasing_id()`` (== partition_id * 2^33 + row index
-within the partition, a stable documented layout):
+``with_dense_versions`` is the one implementation. It builds on
+Spark's ``monotonically_increasing_id()`` (== partition_id * 2^33 +
+row index within the partition, a stable documented layout):
 
-1. narrow map: tag each row with (pid, rn) from the id — zero shuffle;
-2. ``groupBy(pid).count()`` — partial aggregation means the shuffle
-   carries ONE row per (input partition × reducer), trivially small;
-3. exclusive prefix sums on the driver (≤ #partitions values);
-4. broadcast-join offsets back: ``version = base + offset[pid] + rn + 1``.
+1. put every row in a bucket — a range of the order keys, or for
+   arrival order on a wide source, the source partition itself;
+2. ONE column-pruned job counts the rows per bucket (partial
+   aggregation: the shuffle carries one row per task × bucket);
+3. exclusive prefix sums on the driver (≤ #buckets values);
+4. ONE full pass: bucket b lands in partition b, sorted by the order
+   keys, ``version = base + offset[b] + row index + 1``.
 
-The resulting order is partition-major: stable, dense, gapless — all
-the reference's version contract requires (versions are opaque,
-SURVEY §1.1). Pass ``order_cols`` for a meaningful total order (costs
-a range-partitioning sort shuffle, still never a 1-task funnel).
-
-Determinism caveat: the ids must come from one stable scan. Within a
-single write job (our use: EventLog.append_dataframe commits) that
-holds; across separate actions, persist first.
+Versions are dense and gapless, and follow the order keys exactly —
+all the reference's version contract requires (versions are opaque,
+SURVEY §1.1). Arrival order (no ``order_cols``) is the source's
+partition-major row order. Nothing is cached: the count job and the
+write job each read the source (the determinism contract below).
 
 Also here: the hex version codec (O25, reference
 internal/hex/readUint64.go, writeUint64.go) — versions render as
@@ -41,106 +40,39 @@ from pyspark.sql import functions as F
 _PARTITION_BITS = 33  # monotonically_increasing_id: id = pid << 33 | row_idx
 
 
-@dataclass
-class VersionedBatch:
-    """Result of :func:`with_dense_versions_counted`.
-
-    ``df``: input + dense version column. ``total``: exact row count
-    (free from the per-partition count pass — the committer publishes the
-    new head without re-scanning). ``invalid``: rows failing
-    ``valid_col`` (0 when not requested) — folded into the same count
-    pass so validation costs no extra job. ``unpersist``: release the
-    cached tagged frame once the last downstream action has run."""
-
-    df: DataFrame
-    total: int
-    invalid: int
-    unpersist: Callable[[], None]
-
-
-def with_dense_versions_counted(
-    df: DataFrame,
-    base: int = 0,
-    col_name: str = "version",
-    order_cols: list[str] | None = None,
-    persist: bool = False,
-    valid_col: str | None = None,
-) -> VersionedBatch:
-    """Dense versioning with the count pass doubling as a validity audit.
-
-    With ``persist=True`` the post-shuffle tagged frame is cached, so the
-    count pass *and* every later action on the returned frame (the final
-    write) reuse one materialization instead of re-running the upstream
-    scan/shuffle. With ``valid_col`` set (a boolean column present on
-    ``df``), invalid rows are tallied inside the same per-partition
-    aggregate — no separate probe job."""
-    if order_cols:
-        df = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-
-    mask = (1 << _PARTITION_BITS) - 1
-    numbered = (
-        df.withColumn("_mid", F.monotonically_increasing_id())
-        .withColumn("_pid", F.shiftright("_mid", _PARTITION_BITS).cast("int"))
-        .withColumn("_rn", F.col("_mid").bitwiseAND(F.lit(mask)))
-        .drop("_mid")
-    )
-    if persist:
-        numbered = numbered.persist()
-
-    aggs = [F.count(F.lit(1)).alias("count")]
-    if valid_col is not None:
-        aggs.append(
-            F.sum(F.when(~F.col(valid_col), 1).otherwise(0)).alias("invalid")
-        )
-    counts = numbered.groupBy("_pid").agg(*aggs).collect()  # ≤ #partitions rows
-    offsets: list[tuple[int, int]] = []
-    acc = 0
-    bad = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["count"]
-        if valid_col is not None:
-            bad += int(row["invalid"] or 0)
-
-    spark = df.sparkSession
-    offset_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
-    out = (
-        numbered.join(F.broadcast(offset_df), "_pid", "left")
-        .withColumn(
-            col_name,
-            F.lit(base) + F.coalesce("_offset", F.lit(0)) + F.col("_rn") + F.lit(1),
-        )
-        .drop("_pid", "_rn", "_offset")
-    )
-    unpersist = (lambda: numbered.unpersist()) if persist else (lambda: None)
-    return VersionedBatch(df=out, total=acc, invalid=bad, unpersist=unpersist)
-
-
-# -- single-materialization ordered versioning (round 13) ---------------------
+# -- single-materialization versioning ----------------------------------------
 #
-# The persist-based path above materializes the batch TWICE: the count
-# job builds the columnar cache, the write job reads it back. For an
-# ORDERED bulk append (order_cols given) the cache — sized like the
-# whole batch, exactly what guide §5 warns against holding — can be
-# removed entirely:
+# A cached frame would let the count and the write share one
+# materialization, but the cache is sized like the whole batch —
+# exactly what guide §5 warns against holding. Instead:
 #
-# 1. sample the order keys (column-pruned scan) → range-bucket
-#    boundaries, our own version of the sampling pass
-#    ``repartitionByRange`` was already paying internally;
+# 1. bucket the rows. Ordered ingest samples the order keys
+#    (column-pruned scan) → range-bucket boundaries, our own version of
+#    the sampling pass ``repartitionByRange`` pays internally. Arrival
+#    order tags each row with its source row id (``_arrival``, a
+#    ``monotonically_increasing_id``) and orders by it: on a source at
+#    least ``defaultParallelism`` partitions wide the bucket IS the
+#    source partition (the id's high bits) and no shuffle is needed; a
+#    narrower source samples its row ids like any order key, so one
+#    large file is distributed over the cores while a 2-row micro-batch
+#    stays one bucket (at most one bucket per 100 keys of a sample
+#    that holds the whole source);
 # 2. ONE cheap job: per-bucket row counts via map-side partial
-#    aggregation over the ORDER COLUMNS ONLY — the scan prunes away
-#    the payload entirely and the shuffle carries one row per
-#    (task × bucket). The (expensive) validity expression does NOT run
-#    here: it is evaluated post-shuffle inside the write job and
-#    surfaced as an ``observe`` metric the committer checks before any
-#    staged file becomes visible — all-or-nothing is preserved because
-#    the staging dir is private and discarded on the raise;
+#    aggregation over the bucket expression only — the scan prunes
+#    away the payload and the shuffle carries one row per (task ×
+#    bucket). In error mode the (expensive) validity expression does
+#    NOT run here: it is evaluated inside the write job and surfaced
+#    as an ``observe`` metric the committer checks before any staged
+#    file becomes visible — all-or-nothing is preserved because the
+#    staging dir is private and discarded on the raise. Drop mode
+#    must count only valid rows, so it filters ahead of both jobs
+#    (the boundary sample skips the filter);
 # 3. driver: exclusive prefix sums over the bucket counts = version
-#    offsets, as before;
+#    offsets;
 # 4. ONE full pass: tag each row with its bucket, STEER bucket b into
 #    physical partition b (see below), sort within partition by the
 #    order cols, version = base + offset[pid] + rn + 1, write. The
-#    payload crosses the cluster exactly once and is never cached.
+#    payload crosses the cluster at most once and is never cached.
 #
 # The steering trick: ``repartition(n, col)`` places rows by
 # pmod(murmur3(col), n), which would scatter buckets across partitions
@@ -152,12 +84,18 @@ def with_dense_versions_counted(
 # partitions stay contiguous key ranges, fragment footers prune
 # exactly as with repartitionByRange.
 #
-# Determinism contract: the bucket expression, the validity filter and
-# the source must reproduce the same rows across the two jobs (the
-# bucket CASE tree and the boundaries are fixed literals; parquet
-# sources are stable). Callers with nondeterministic upstreams should
-# checkpoint first — the same caveat the persisted path documented for
-# its cache-loss window, now load-bearing for the count/write pair.
+# Determinism contract: the count job and the write job must put the
+# same rows in the same buckets. Ordered ingest needs the same key
+# values in both (the bucket CASE tree and the boundaries are fixed
+# literals); arrival order needs the same per-partition row counts
+# (a row id is its partition and its index there, so bucket
+# membership does not depend on the order of rows inside a
+# partition). Parquet sources and a ``foreachBatch`` micro-batch (a
+# replayable offset range) keep both. A nondeterministic upstream
+# (say an unordered ``limit()``) may not: the committer then finds
+# files that do not tile the counted range and aborts the commit
+# before anything is visible (``log._check_bulk_range``) — checkpoint
+# such a source first.
 
 _STEER_CACHE: dict[int, list[int]] = {}
 
@@ -250,12 +188,15 @@ def _sample_boundaries(
 ) -> list[tuple]:
     """Range-bucket boundaries from a seeded key sample (the same job
     ``repartitionByRange`` runs internally, but column-pruned and with
-    the result kept so the count job can share the buckets). The sample
-    fraction comes from the optimizer's size estimate; a wild
-    under-estimate only costs balance, never correctness, and the
-    collect is capped at twice the target. Keys holding a NULL are left
-    out of the sample (Python cannot order None against values, and
-    ``_bucket_expr`` routes them to bucket 0 anyway)."""
+    the result kept so the count job can share the buckets), aiming at
+    100 keys per bucket. The sample fraction comes from the optimizer's
+    size estimate; a wild under-estimate only costs balance, never
+    correctness, and the collect is capped at twice the target. A
+    sample that holds every key (fraction 1, under the cap) gets at
+    most one bucket per 100 keys, so a small batch is not split over
+    near-empty tasks. Keys holding a NULL are left out of the sample
+    (Python cannot order None against values, and ``_bucket_expr``
+    routes them to bucket 0 anyway)."""
     keys = src.select(*order_cols)
     try:
         est_bytes = int(
@@ -264,13 +205,16 @@ def _sample_boundaries(
     except Exception:
         est_bytes = 1 << 40
     est_rows = max(1, est_bytes // 32)
-    target = min(100 * n_target, 1_000_000)
+    per_bucket = 100
+    target = min(per_bucket * n_target, 1_000_000)
     frac = min(1.0, target / est_rows)
     sample = [
         tuple(r)
         for r in keys.where(F.rand(42) < frac).dropna().limit(2 * target).collect()
     ]
-    if len(sample) < 2:
+    if frac == 1.0 and len(sample) < 2 * target:
+        n_target = min(n_target, len(sample) // per_bucket)
+    if len(sample) < 2 or n_target < 2:
         return []
     sample.sort()
     step = len(sample) / n_target
@@ -283,41 +227,53 @@ def _sample_boundaries(
 
 
 @dataclass
-class StreamedBatch:
-    """Result of :func:`with_dense_versions_streamed`.
+class VersionedFrame:
+    """Result of :func:`with_dense_versions`.
 
     ``df``: versioned frame whose first (only) action runs the single
     full pass. ``total``: exact row count (from the pruned count job).
     ``invalid_observed``: callable returning the invalid-row tally the
     write job OBSERVED — only valid after the frame's action has run
-    (the committer calls it between the staged write and the rename)."""
+    (the committer calls it between the staged write and the rename);
+    always 0 when invalid rows were dropped."""
 
     df: DataFrame
     total: int
     invalid_observed: Callable[[], int]
 
 
-def with_dense_versions_streamed(
+def with_dense_versions(
     df: DataFrame,
     base: int,
-    order_cols: list[str],
+    order_cols: list[str] | None = None,
     col_name: str = "version",
     valid_expr: Column | None = None,
+    drop_invalid: bool = False,
     invalid_alias: str = "_invalid",
-) -> StreamedBatch:
-    """Ordered dense versioning with ONE materialization of the batch
-    (see the module comment block above). The count job is pruned to
-    the ORDER COLUMNS only — the (expensive) validity expression is
-    attached after the steered shuffle, evaluated at full parallelism
-    inside the write job, and surfaced through an ``observe`` metric
-    instead of its own pass."""
+) -> VersionedFrame:
+    """Dense versioning with ONE materialization of the batch (see the
+    comment block above): versions ``base + 1 …`` in ``order_cols``
+    order, or in arrival (partition-major source) order when
+    ``order_cols`` is None. ``valid_expr`` is tallied through an
+    ``observe`` metric on the write, or, with ``drop_invalid``, filters
+    the rows ahead of the count job and the write."""
     from pyspark.sql import Observation
 
     spark = df.sparkSession
     n_target = max(1, spark.sparkContext.defaultParallelism)
-    bounds = _sample_boundaries(df, order_cols, n_target)
-    nb = len(bounds) + 1
-    bkt = _bucket_expr(order_cols, bounds) if bounds else F.lit(0)
+    in_place = False
+    if order_cols is None:
+        in_place = df.rdd.getNumPartitions() >= n_target
+        df = df.withColumn("_arrival", F.monotonically_increasing_id())
+        order_cols = ["_arrival"]
+    if in_place:
+        bkt = F.shiftright("_arrival", _PARTITION_BITS).cast("int")
+    else:
+        bounds = _sample_boundaries(df, order_cols, n_target)
+        nb = len(bounds) + 1
+        bkt = _bucket_expr(order_cols, bounds) if bounds else F.lit(0)
+    if valid_expr is not None and drop_invalid:
+        df = df.where(valid_expr)
 
     counts = (
         df.select(bkt.alias("_bkt"))
@@ -331,20 +287,27 @@ def with_dense_versions_streamed(
         offsets.append((int(row["_bkt"]), acc))
         acc += row["count"]
 
-    steer = _steering_values(nb)
-    steer_arr = F.array(*[F.lit(s).cast("long") for s in steer])
-    shuffled = (
-        df.withColumn("_bkt", bkt)
-        .withColumn("_steer", F.element_at(steer_arr, (F.col("_bkt") + 1).cast("int")))
-        .repartition(nb, "_steer")
-        .sortWithinPartitions(*order_cols)
-    )
+    if in_place:
+        # bucket b is source partition b, already in row-id order
+        ordered = df
+    else:
+        steer = _steering_values(nb)
+        steer_arr = F.array(*[F.lit(s).cast("long") for s in steer])
+        ordered = (
+            df.withColumn("_bkt", bkt)
+            .withColumn(
+                "_steer", F.element_at(steer_arr, (F.col("_bkt") + 1).cast("int"))
+            )
+            .repartition(nb, "_steer")
+            .sortWithinPartitions(*order_cols)
+            .drop("_bkt", "_steer")
+        )
     mask = (1 << _PARTITION_BITS) - 1
     numbered = (
-        shuffled.withColumn("_mid", F.monotonically_increasing_id())
+        ordered.withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright("_mid", _PARTITION_BITS).cast("int"))
         .withColumn("_rn", F.col("_mid").bitwiseAND(F.lit(mask)))
-        .drop("_mid", "_bkt", "_steer")
+        .drop("_mid", "_arrival")
     )
     offset_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
     out = (
@@ -355,8 +318,8 @@ def with_dense_versions_streamed(
         )
         .drop("_pid", "_rn", "_offset")
     )
-    if valid_expr is None:
-        return StreamedBatch(df=out, total=acc, invalid_observed=lambda: 0)
+    if valid_expr is None or drop_invalid:
+        return VersionedFrame(df=out, total=acc, invalid_observed=lambda: 0)
     obs = Observation()
     out = out.observe(
         obs, F.sum(F.when(~valid_expr, 1).otherwise(0)).alias(invalid_alias)
@@ -365,7 +328,7 @@ def with_dense_versions_streamed(
     def invalid_observed() -> int:
         return int(obs.get.get(invalid_alias) or 0)
 
-    return StreamedBatch(df=out, total=acc, invalid_observed=invalid_observed)
+    return VersionedFrame(df=out, total=acc, invalid_observed=invalid_observed)
 
 
 # -- hex version codec (O25) -------------------------------------------------

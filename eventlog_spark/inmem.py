@@ -97,10 +97,8 @@ class InMemEventLog(EventLog):
             # the observed validity tally is available; a raise here
             # keeps the rows out of the engine (all-or-nothing)
             post_write_check()
-        versions = [r[0] for r in collected]
-        _check_bulk_range(
-            (min(versions), max(versions)) if versions else None, expect
-        )
+        # each collected row tiles as a one-row file of its version
+        _check_bulk_range([(r[0], r[0], 1) for r in collected], expect)
         self._rows.extend(collected)
 
     def _read_raw(self) -> DataFrame | None:

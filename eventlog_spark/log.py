@@ -344,18 +344,33 @@ def _label_group_range(md) -> tuple[str, str] | None:
 
 
 def _check_bulk_range(
-    got: tuple[int, int] | None, expect: tuple[int, int]
+    files: list[tuple[int, int, int]], expect: tuple[int, int]
 ) -> None:
-    """Abort a bulk commit whose written version range is not the one
-    its count pass assigned (``expect``, empty when lo > hi) — the
-    post-write head check, run before anything becomes visible."""
-    if got != (expect if expect[0] <= expect[1] else None):
-        raise RuntimeError(
-            f"bulk append aborted: written versions {got} != assigned "
-            f"{expect}; the source changed between the versioning count "
-            "and the write (nondeterministic upstream) — checkpoint it "
-            "and re-run the batch"
-        )
+    """Abort a bulk commit whose written files do not tile the version
+    range its count pass assigned (``expect``, empty when lo > hi) — the
+    post-write check, run before anything becomes visible. ``files``
+    holds each written file's (lo, hi, num_rows); sorted, they must be
+    disjoint and contiguous from ``expect[0]`` to ``expect[1]``, each
+    holding exactly ``hi - lo + 1`` rows. An envelope check alone
+    passes a middle bucket counted differently from what it wrote:
+    every later file shifts, the ends still agree, and duplicate and
+    missing versions would be published."""
+    files = sorted(files)
+    nxt = expect[0]
+    for lo, hi, n in files:
+        if lo != nxt or n != hi - lo + 1:
+            break
+        nxt = hi + 1
+    else:
+        if nxt == expect[1] + 1:
+            return
+    raise RuntimeError(
+        f"bulk append aborted: written versions (lo, hi, rows) {files[:8]}"
+        f"{' …' if len(files) > 8 else ''} do not tile assigned "
+        f"{expect}; the source changed between the versioning count "
+        "and the write (nondeterministic upstream) — checkpoint it "
+        "and re-run the batch"
+    )
 
 
 @dataclass(frozen=True)
@@ -1364,12 +1379,12 @@ class EventLog:
         win, and ``_discard_staged_fragments`` would DELETE the other
         writer's committed file if we lose). Version ranges come from
         the staged footers (``_staged_entries``), and BEFORE any rename
-        they must span exactly ``expect`` (the count and the write are
-        separate jobs; a nondeterministic upstream can make them
-        disagree, which would otherwise publish a head that misnames
-        the written rows). ``part-<tag>-…`` names keep the tail
-        stream's ``part-*`` glob (streaming/streams.py) and
-        minor-compact eligibility."""
+        the files must tile ``expect`` exactly (``_check_bulk_range``:
+        the count and the write are separate jobs; a nondeterministic
+        upstream can make them disagree, which would otherwise publish
+        a head that misnames the written rows). ``part-<tag>-…`` names
+        keep the tail stream's ``part-*`` glob (streaming/streams.py)
+        and minor-compact eligibility."""
         tmp = os.path.join(self.path, f".bulk-{uuid.uuid4().hex}.tmp")
         try:
             out.write.mode("overwrite").parquet(tmp)
@@ -1381,21 +1396,21 @@ class EventLog:
                 post_write_check()
             staged = self._staged_entries(tmp, "part")
             _check_bulk_range(
-                (min(e["lo"] for _, e in staged), max(e["hi"] for _, e in staged))
-                if staged
-                else None,
-                expect,
+                [(e["lo"], e["hi"], n) for _, e, n in staged], expect
             )
-            for src, entry in staged:
+            for src, entry, _ in staged:
                 os.rename(src, os.path.join(self.path, entry["n"]))
                 self._pending_add.append(entry)
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-    def _staged_entries(self, tmp: str, prefix: str) -> list[tuple[str, dict]]:
-        """(staged path, manifest entry) for each Spark-written file in
-        ``tmp`` that holds rows, named ``<prefix>-<tag>-<file>`` with its
-        version range and label bounds from the footer. Raises when a
+    def _staged_entries(
+        self, tmp: str, prefix: str
+    ) -> list[tuple[str, dict, int]]:
+        """(staged path, manifest entry, row count) for each
+        Spark-written file in ``tmp`` that holds rows, named
+        ``<prefix>-<tag>-<file>`` with its version range and label
+        bounds from the footer, which is parsed once. Raises when a
         footer gives no version range: every published entry carries
         one."""
         import pyarrow.parquet as pq
@@ -1409,30 +1424,23 @@ class EventLog:
             md = pq.ParquetFile(src).metadata
             if md.num_rows == 0:
                 continue
-            rng = self._parquet_version_range(src)
-            if rng is None:
+            stats = _version_group_stats(md)
+            if stats is None:
                 raise RuntimeError(
                     f"commit aborted: staged file {src} has no version "
                     "statistics in its footer, so its manifest entry would "
                     "carry no version range"
                 )
-            entry: dict = {"n": f"{prefix}-{tag}-{f}", "lo": rng[0], "hi": rng[1]}
+            entry: dict = {
+                "n": f"{prefix}-{tag}-{f}",
+                "lo": min(s[0] for s in stats),
+                "hi": max(s[1] for s in stats),
+            }
             lrng = _label_group_range(md)
             if lrng is not None:
                 entry["lmin"], entry["lmax"] = lrng
-            staged.append((src, entry))
+            staged.append((src, entry, md.num_rows))
         return staged
-
-    @staticmethod
-    def _parquet_version_range(full: str) -> tuple[int, int] | None:
-        """(min, max) of the version column from a fragment's footer
-        stats — a metadata-only read; None when stats are unavailable."""
-        import pyarrow.parquet as pq
-
-        stats = _version_group_stats(pq.ParquetFile(full).metadata)
-        if not stats:
-            return None
-        return min(s[0] for s in stats), max(s[1] for s in stats)
 
     def append_dataframe(
         self,
@@ -1441,32 +1449,41 @@ class EventLog:
         payload_col: str = "payload",
         on_invalid: str = "error",
         order_cols: list[str] | None = None,
-        spread: bool = True,
         txn: tuple[str, int] | None = None,
     ) -> AppendResult | None:
         """Bulk-ingest path: append a whole DataFrame as one atomic batch.
 
         Validation runs as JVM-side column expressions (validation.py),
-        version assignment uses the partition-offset technique (see
-        functions/versioning.py) — no single-partition shuffle, no Python
-        in the data path. This is how 100 TB enters the log; the tuple
-        API above is the interactive/serving path.
+        version assignment is ``with_dense_versions``
+        (functions/versioning.py): a column-pruned count job, prefix
+        sums on the driver, then the one pass that writes — no
+        single-partition shuffle, no cache, no Python in the data path.
+        This is how 100 TB enters the log; the tuple API above is the
+        interactive/serving path.
 
-        ``order_cols``: assign versions in this order (costs a range
-        repartition + local sort); default is partition-major arrival
-        order, which is free.
+        ``order_cols``: assign versions in this order (a range-bucket
+        shuffle plus a local sort). The default is arrival order: the
+        source's partition-major row order. A source at least
+        ``defaultParallelism`` partitions wide is versioned in place; a
+        narrower one is distributed over buckets taken from a sample of
+        its row ids, so a large single-file batch validates in parallel
+        and a 2-row micro-batch stays one bucket.
 
-        ``spread``: repartition a narrow source (fewer partitions than
-        cores) before the expensive validation expressions. Right for
-        large batches; pass ``False`` for small interactive/micro-batch
-        commits where a 32-way shuffle of a 2-row frame is pure
-        overhead (streaming.append_stream does).
+        ``on_invalid``: ``"error"`` aborts the whole batch on any
+        invalid event (counted during the write, checked before any
+        file becomes visible); ``"drop"`` versions and writes only the
+        valid events.
 
         ``txn``: an (id, sequence) idempotence marker. A commit whose
         sequence is ≤ the last recorded sequence for that id is skipped
         (returns None). The marker is published atomically with the head
         version, which makes foreachBatch replays exactly-once — pass
-        (stream_id, batch_id)."""
+        (stream_id, batch_id).
+
+        A batch with no (valid) events commits nothing: no write job,
+        no manifest delta and no ``txn`` marker; the result names the
+        unchanged head. That is safe for replays, since re-running an
+        empty batch commits nothing either."""
         from .validation import label_valid_expr, payload_valid_expr
 
         # Order columns that collide with the engine envelope (a source
@@ -1491,125 +1508,76 @@ class EventLog:
             & payload_valid_expr(F.col("payload"), self._max_payload_len),
             F.lit(False),
         )
-        # ROUND 13: the ordered error-mode path (every bulk ingest in
-        # the repo) takes the SINGLE-MATERIALIZATION versioning flow —
-        # no pre-shuffle and no _valid column here: its one shuffle
-        # lives inside with_dense_versions_streamed, and validation is
-        # evaluated post-shuffle inside the write job (full
-        # parallelism), surfaced via an observe metric that the
-        # committer checks before any staged file becomes visible.
-        if order_cols and on_invalid != "drop":
-            return self._append_dataframe_locked(
-                src, on_invalid, order_cols, txn, valid_expr=valid
-            )
-        # Legacy/persisted flow (arrival order, and drop-mode ordered
-        # appends): shuffle BEFORE computing the (expensive)
-        # JSON-validation column — a narrow source (e.g. one parquet
-        # file) would otherwise evaluate from_json for every row inside
-        # a single task.
-        if order_cols:
-            src = src.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-        elif spread and src.rdd.getNumPartitions() < (
-            min_parts := self.spark.sparkContext.defaultParallelism
-        ):
-            src = src.repartition(min_parts)
-        if on_invalid == "drop":
-            src = src.where(valid)
-        else:
-            src = src.withColumn("_valid", valid)
-
-        return self._append_dataframe_locked(src, on_invalid, order_cols, txn)
+        return self._append_dataframe_locked(src, on_invalid, order_cols, txn, valid)
 
     def _append_dataframe_locked(
         self,
         src: DataFrame,
         on_invalid: str,
-        order_cols: list[str] | None = None,
-        txn: tuple[str, int] | None = None,
-        valid_expr: Column | None = None,
+        order_cols: list[str] | None,
+        txn: tuple[str, int] | None,
+        valid_expr: Column,
     ) -> AppendResult | None:
-        from .functions.versioning import (
-            with_dense_versions_counted,
-            with_dense_versions_streamed,
-        )
+        from .functions.versioning import with_dense_versions
 
         with self._commit_section():
             if txn is not None and self._stream_commits.get(txn[0], -1) >= txn[1]:
                 return None  # replayed batch: already committed, skip
             base = self._latest
             ts = max(int(time.time()), self._last_ts)
-            post_write_check = None
-            if valid_expr is not None:
-                # ROUND 13 — ordered error-mode bulk ingest, SINGLE
-                # materialization (guide §1.2/§5; design block in
-                # functions/versioning.py): a pruned count job replaces
-                # the batch-sized persisted cache, the one full pass is
-                # the staged write itself, and the validity tally rides
-                # that write as an observe metric checked below BEFORE
-                # any staged file is renamed into the log.
-                batch = with_dense_versions_streamed(
-                    src, base=base, order_cols=order_cols, valid_expr=valid_expr
+            # one materialization of the batch (design block in
+            # functions/versioning.py): a pruned count job, then the
+            # staged write itself. Error mode tallies invalid rows as an
+            # observe metric on that write, checked below BEFORE any
+            # staged file is renamed into the log; drop mode filters
+            # them out ahead of both jobs.
+            batch = with_dense_versions(
+                src,
+                base=base,
+                order_cols=order_cols,
+                valid_expr=valid_expr,
+                drop_invalid=on_invalid == "drop",
+            )
+            total = batch.total
+            if total == 0:
+                # nothing to write or publish (see the docstring)
+                return AppendResult(
+                    version_previous=base,
+                    version_first=base + 1,
+                    version=base,
+                    timestamp=ts,
                 )
-                versioned, total = batch.df, batch.total
-                unpersist = lambda: None  # noqa: E731 - no cache to release
 
-                def post_write_check() -> None:
-                    if batch.invalid_observed():
-                        from .errors import InvalidPayload
+            def post_write_check() -> None:
+                if batch.invalid_observed():
+                    from .errors import InvalidPayload
 
-                        raise InvalidPayload(
-                            "append_dataframe: batch contains invalid events"
-                        )
-
-            else:
-                # Persisted flow (arrival order, and drop-mode ordered
-                # appends): one materialization serves everything — the
-                # versioning pass persists the post-shuffle tagged
-                # frame, so the count pass, the validity probe, and the
-                # final write all reuse it (pinning also guarantees
-                # identical partitions for nondeterministic upstreams).
-                # order_cols=None: append_dataframe already applied the
-                # ordering shuffle (pre-validation).
-                batch = with_dense_versions_counted(
-                    src,
-                    base=base,
-                    order_cols=None,
-                    persist=True,
-                    valid_col="_valid" if on_invalid != "drop" else None,
-                )
-                versioned, total, unpersist = batch.df, batch.total, batch.unpersist
-            try:
-                if valid_expr is None and on_invalid != "drop":
-                    if batch.invalid:
-                        from .errors import InvalidPayload
-
-                        raise InvalidPayload(
-                            "append_dataframe: batch contains invalid events"
-                        )
-                    versioned = versioned.drop("_valid")
-                if order_cols:
-                    versioned = versioned.drop(
-                        *[c for c in order_cols if c not in ("label", "payload")]
+                    raise InvalidPayload(
+                        "append_dataframe: batch contains invalid events"
                     )
-                out = versioned.select(
-                    F.col("version").cast("long"),
-                    (F.col("version") - 1).cast("long").alias("version_prev"),
-                    # cast matters: a plain lit(ts) is an int32 and xxhash64
-                    # of int != xxhash64 of the long read back at verify time
-                    F.lit(ts).cast("long").alias("timestamp"),
-                    "label",
-                    "payload",
-                ).withColumn("checksum", checksum_expr())
-                self._write_out(
-                    out, (base + 1, base + total), post_write_check=post_write_check
+
+            versioned = batch.df
+            if order_cols:
+                versioned = versioned.drop(
+                    *[c for c in order_cols if c not in ("label", "payload")]
                 )
-            finally:
-                unpersist()
+            out = versioned.select(
+                F.col("version").cast("long"),
+                (F.col("version") - 1).cast("long").alias("version_prev"),
+                # cast matters: a plain lit(ts) is an int32 and xxhash64
+                # of int != xxhash64 of the long read back at verify time
+                F.lit(ts).cast("long").alias("timestamp"),
+                "label",
+                "payload",
+            ).withColumn("checksum", checksum_expr())
+            self._write_out(
+                out, (base + 1, base + total), post_write_check=post_write_check
+            )
             # Head is known exactly from the versioning count pass — no
             # re-scan of the log to publish state. The count pass and
             # the write must see the same rows; _write_out checked that
-            # the written version range is exactly the counted one
-            # before anything became visible. The reference's analog is
+            # the written files tile exactly the counted range before
+            # anything became visible. The reference's analog is
             # its mid-batch rollback (file.go:343-360).
             prev_initial, prev_last_ts = self._initial, self._last_ts
             prev_marker = (
@@ -2187,7 +2155,7 @@ class EventLog:
                 import pyarrow.parquet as pq
 
                 staged = self._staged_entries(tmp, "compact")
-                for src, entry in staged:
+                for src, entry, _ in staged:
                     # exact label stats (bounds + bloom): compaction just
                     # rewrote every byte of this file, so one read-back
                     # of the dictionary-encoded label column is a
@@ -2199,7 +2167,7 @@ class EventLog:
                         pq.read_table(src, columns=["label"]).column("label")
                     ).to_pylist()
                     entry.update(_label_stats_entry(labs))
-                for src, entry in staged:
+                for src, entry, _ in staged:
                     os.rename(src, os.path.join(self.path, entry["n"]))
                     self._pending_add.append(entry)
             finally:

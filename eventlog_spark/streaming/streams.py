@@ -271,19 +271,19 @@ def append_stream(
     and the checkpoint write re-delivers the batch); exactly-once comes
     from the (stream_id, batch_id) idempotence marker the engine
     publishes atomically with the head version — a replayed batch_id is
-    a no-op. ``spread=False``: micro-batches are small; a per-commit
-    32-way shuffle would be pure overhead (log.py)."""
+    a no-op. Each micro-batch is versioned in arrival order without a
+    cache: the count job and the write job both read the batch, which
+    is a replayable offset range. An empty micro-batch finds 0 rows in
+    the count job and commits nothing, not even its marker, which is
+    safe, since replaying it commits nothing either."""
     sid = stream_id or checkpoint_dir
 
     def commit(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         log.append_dataframe(
             batch,
             label_col=label_col,
             payload_col=payload_col,
             on_invalid=on_invalid,
-            spread=False,
             txn=(sid, batch_id),
         )
 

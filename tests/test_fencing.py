@@ -633,19 +633,19 @@ def test_cas_compact_rebases_over_interleaved_commit(
         a.append("pre", json.dumps({"i": i}))
 
     fired = {}
-    orig = EventLog._parquet_version_range
+    orig = EventLog._staged_entries
 
-    def interleave(full):
+    def interleave(tmp, prefix):
         # runs while compact registers its rewritten output — after the
         # snapshot + Spark job, before the manifest publish
         if not fired:
             fired["x"] = True
             b.append("mid-rewrite", '{"landed":"during"}')
-        return orig(full)
+        return orig(a, tmp, prefix)
 
-    a._parquet_version_range = interleave
+    a._staged_entries = interleave
     a.compact(target_partitions=1)
-    del a.__dict__["_parquet_version_range"]
+    del a.__dict__["_staged_entries"]
     assert fired, "interleave hook never ran"
 
     fresh = cas_open(path)

@@ -321,11 +321,15 @@ def test_streamed_ordered_append_contract(spark, tmp_path):
     assert (audit.checksum_violations, audit.chain_violations,
             audit.density_violation) == (0, 0, 0)
     # fragment version ranges are disjoint and cover [1, 2000]
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import _version_group_stats
+
     ranges = []
     for f in glob.glob(os.path.join(path, "part-*.parquet")):
-        rng = EventLog._parquet_version_range(f)
-        if rng:
-            ranges.append(rng)
+        stats = _version_group_stats(pq.ParquetFile(f).metadata)
+        if stats:
+            ranges.append((min(s[0] for s in stats), max(s[1] for s in stats)))
     ranges.sort()
     assert ranges[0][0] == 1 and ranges[-1][1] == 2000
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
@@ -621,14 +625,14 @@ def test_bulk_append_aborts_when_count_and_write_disagree(
     from eventlog_spark.functions import versioning
 
     log.append("pre", '{"i":0}')
-    real = versioning.with_dense_versions_streamed
+    real = versioning.with_dense_versions
 
     def miscounted(*a, **kw):
         b = real(*a, **kw)
         b.total += 1  # the count pass saw one row the write will not
         return b
 
-    monkeypatch.setattr(versioning, "with_dense_versions_streamed", miscounted)
+    monkeypatch.setattr(versioning, "with_dense_versions", miscounted)
     batch = spark.range(3).select(
         F.lit("bulk").alias("label"),
         F.format_string('{"i":%d}', F.col("id")).alias("payload"),
@@ -640,6 +644,200 @@ def test_bulk_append_aborts_when_count_and_write_disagree(
     assert [r.version for r in log.scan_rows()] == [1]
     monkeypatch.undo()
     assert log.append_dataframe(batch, order_cols=["id"]).version == 4
+
+
+def test_bulk_tiling_check_rejects_overlaps_gaps_and_row_counts():
+    """The post-write check takes every written file's (lo, hi, rows):
+    sorted, the files must tile the counted range exactly. An
+    overlapping and a gapped tiling whose envelope equals the counted
+    range are both refused, and so is a file whose row count does not
+    fill its range."""
+    from eventlog_spark.log import _check_bulk_range
+
+    _check_bulk_range([(6, 10, 5), (1, 5, 5)], (1, 10))
+    _check_bulk_range([], (8, 7))  # empty batch, nothing written
+    for files, expect in (
+        ([(1, 5, 5), (5, 10, 6)], (1, 10)),  # overlap: version 5 twice
+        ([(1, 4, 4), (6, 10, 5)], (1, 10)),  # gap: version 5 missing
+        ([(1, 5, 4), (6, 10, 5)], (1, 10)),  # a version repeated in a file
+        ([(1, 5, 5)], (1, 10)),  # short of the counted head
+        ([(2, 5, 4), (6, 10, 5)], (1, 10)),  # starts past the counted base
+        ([(8, 10, 3)], (8, 7)),  # rows where none were counted
+    ):
+        with pytest.raises(RuntimeError, match="do not tile"):
+            _check_bulk_range(files, expect)
+
+
+def test_bulk_append_aborts_when_a_middle_bucket_miscounts(
+    spark, log, tmp_path
+):
+    """A source that keeps a different row in two middle partitions
+    between the count job and the write job: the total and both end
+    partitions agree, so the written envelope equals the counted range,
+    yet one version is written twice and another never. The commit
+    aborts with the head and the pages unchanged."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import BooleanType
+
+    log.append("pre", '{"i":0}')
+    marker = str(tmp_path / "write-job-started")
+    # at least as many partitions as cores: each is its own bucket
+    n, parts = 1000, max(4, spark.sparkContext.defaultParallelism)
+    a, b = n // parts + 1, 2 * (n // parts) + 1  # in partitions 1 and 2
+
+    def keep(i):
+        # count job: row a kept, row b dropped; write job: swapped
+        if i in (a, b):
+            return (i == b) == os.path.exists(marker)
+        return True
+
+    keep_udf = F.udf(keep, BooleanType()).asNondeterministic()
+    batch = (
+        spark.range(0, n, 1, numPartitions=parts)
+        .where(keep_udf("id"))
+        .select(
+            F.lit("bulk").alias("label"),
+            F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        )
+    )
+    real_write_out = log._write_out
+
+    def write_out(*a, **kw):
+        open(marker, "w").close()
+        return real_write_out(*a, **kw)
+
+    log._write_out = write_out
+    with pytest.raises(RuntimeError, match="do not tile"):
+        log.append_dataframe(batch)
+    assert log.version() == 1
+    assert [r.version for r in log.scan_rows()] == [1]
+
+
+@pytest.mark.parametrize("txn", [None, ("empty-stream", 0)])
+def test_empty_bulk_append_commits_nothing(spark, log, txn):
+    """A batch with no rows (or none valid, in drop mode) never reaches
+    the write: no staging dir, no manifest delta, no txn marker, and
+    the result names the unchanged head."""
+    log.append("pre", '{"i":0}')
+    seq = log._manifest.seq if log._manifest is not None else None
+    writes = []
+    real_write_out = log._write_out
+    log._write_out = lambda *a, **kw: writes.append(a) or real_write_out(*a, **kw)
+    empty = spark.createDataFrame([], "label string, payload string")
+    bad = spark.createDataFrame([("x", "{}")], "label string, payload string")
+    for src, mode in ((empty, "error"), (empty, "drop"), (bad, "drop")):
+        r = log.append_dataframe(src, on_invalid=mode, txn=txn)
+        assert (r.version_previous, r.version_first, r.version) == (1, 2, 1)
+    assert writes == []
+    assert log.version() == 1
+    if seq is not None:
+        assert log._manifest.seq == seq
+        assert not [f for f in os.listdir(log.path) if f.startswith(".bulk-")]
+    # no marker was recorded, so the same txn still commits real rows
+    one = spark.createDataFrame([("y", '{"y":1}')], "label string, payload string")
+    assert log.append_dataframe(one, txn=txn).version == 2
+
+
+def test_bulk_ingest_never_caches(spark, tmp_path, monkeypatch):
+    """Neither error nor drop mode, ordered or in arrival order, nor an
+    ``append_stream`` micro-batch, persists or caches the batch: the
+    count job and the write job each read the source."""
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from eventlog_spark.streaming import streams
+
+    calls = []
+
+    def spy(name, real):
+        def wrapper(self, *a, **kw):
+            calls.append(name)
+            return real(self, *a, **kw)
+
+        return wrapper
+
+    # the public class and the session's concrete one (PySpark 4 splits
+    # them, and the concrete class overrides both methods)
+    for cls in {DataFrame, type(spark.range(1))}:
+        for name in ("persist", "cache"):
+            monkeypatch.setattr(cls, name, spy(name, getattr(cls, name)))
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    src = spark.range(0, 50, 1, numPartitions=2).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    n = 0
+    for mode in ("error", "drop"):
+        for order_cols in (["id"], None):
+            n += 50
+            assert log.append_dataframe(
+                src, on_invalid=mode, order_cols=order_cols
+            ).version == n
+    feed = str(tmp_path / "feed")
+    src.drop("id").write.parquet(feed)
+    q = streams.append_stream(
+        log,
+        spark.readStream.schema("label string, payload string").parquet(feed),
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(60)
+    q.stop()
+    assert log.version() == n + 50
+    assert calls == []
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+def test_arrival_order_versions_follow_source_partition_order(
+    spark, tmp_path, parts
+):
+    """With no ``order_cols`` the versions follow the source's
+    partition-major row order, for a narrow source (spread over
+    sampled row-id buckets) and for one as wide as the cores
+    (versioned in place); each bucket stays one contiguous file."""
+    from pyspark.sql import functions as F
+
+    n = 1000
+    src = spark.range(0, n, 1, numPartitions=parts).select(
+        F.concat(F.lit("l"), (F.col("id") % 3).cast("string")).alias("label"),
+        F.format_string('{"i":%d}', (F.col("id") * 37) % n).alias("payload"),
+    )
+    path = str(tmp_path / "log")
+    log = EventLog.create(spark, path)
+    assert log.append_dataframe(src).version == n
+    assert [r.payload for r in log.scan_rows()] == [r.payload for r in src.collect()]
+    audit = log.check_integrity().collect()[0]
+    assert (audit.checksum_violations, audit.chain_violations,
+            audit.density_violation) == (0, 0, 0)
+    # a narrow 2-row batch is one bucket: one more fragment
+    before = len(log._manifest_files())
+    two = spark.createDataFrame(
+        [("a", '{"a":1}'), ("b", '{"b":2}')], "label string, payload string"
+    ).coalesce(1)
+    assert log.append_dataframe(two).version == n + 2
+    assert len(log._manifest_files()) == before + 1
+    assert [r.label for r in log.scan_rows(version=n + 1)] == ["a", "b"]
+
+
+@pytest.mark.parametrize("order_cols", [["k"], None])
+def test_drop_mode_versions_are_dense(spark, log, order_cols):
+    """Drop mode versions and writes only the valid events: dense
+    versions from the head, in key order or in arrival order."""
+    rows = [
+        ("ok", "{}" if i % 7 == 3 else f'{{"i":{i}}}', (i * 13) % 200)
+        for i in range(200)
+    ]
+    src = spark.createDataFrame(rows, "label string, payload string, k long")
+    log.append("pre", '{"i":-1}')
+    good = [r for r in rows if r[1] != "{}"]
+    r = log.append_dataframe(src, on_invalid="drop", order_cols=order_cols)
+    assert (r.version_first, r.version) == (2, 1 + len(good))
+    page = log.scan_rows(version=2)
+    assert [x.version for x in page] == list(range(2, 2 + len(good)))
+    if order_cols:
+        good.sort(key=lambda t: t[2])
+    assert [x.payload for x in page] == [t[1] for t in good]
 
 
 # -- concurrent-writer OCC stress (the reference's -race suite has no

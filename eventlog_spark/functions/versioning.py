@@ -11,12 +11,13 @@ Spark's ``monotonically_increasing_id()`` (== partition_id * 2^33 +
 row index within the partition, a stable documented layout):
 
 1. put every row in a bucket — a range of the order keys, or for
-   arrival order on a wide source, the source partition itself;
+   arrival order the source partition itself;
 2. ONE column-pruned job counts the rows per bucket (partial
    aggregation: the shuffle carries one row per task × bucket);
 3. exclusive prefix sums on the driver (≤ #buckets values);
 4. ONE full pass: bucket b lands in partition b, sorted by the order
-   keys, ``version = base + offset[b] + row index + 1``.
+   keys (in arrival order it already is partition b, in order), and
+   ``version = base + offset[b] + row index + 1``.
 
 Versions are dense and gapless, and follow the order keys exactly —
 all the reference's version contract requires (versions are opaque,
@@ -48,15 +49,14 @@ _PARTITION_BITS = 33  # monotonically_increasing_id: id = pid << 33 | row_idx
 #
 # 1. bucket the rows. Ordered ingest samples the order keys
 #    (column-pruned scan) → range-bucket boundaries, our own version of
-#    the sampling pass ``repartitionByRange`` pays internally. Arrival
-#    order tags each row with its source row id (``_arrival``, a
-#    ``monotonically_increasing_id``) and orders by it: on a source at
-#    least ``defaultParallelism`` partitions wide the bucket IS the
-#    source partition (the id's high bits) and no shuffle is needed; a
-#    narrower source samples its row ids like any order key, so one
-#    large file is distributed over the cores while a 2-row micro-batch
-#    stays one bucket (at most one bucket per 100 keys of a sample
-#    that holds the whole source);
+#    the sampling pass ``repartitionByRange`` pays internally. In
+#    arrival order the bucket IS the source partition: no sample and
+#    no shuffle. Measured on 4 cores, sampling source row ids like an
+#    order key instead (to spread a narrow source over the cores) cost
+#    a 16-partition micro-batch stream 5x its throughput and a 2M-row,
+#    4-partition parquet append 2x its time, and gained nothing on a
+#    1-partition 1M-row source (Spark's file scan already splits a
+#    large file into partitions);
 # 2. ONE cheap job: per-bucket row counts via map-side partial
 #    aggregation over the bucket expression only — the scan prunes
 #    away the payload and the shuffle carries one row per (task ×
@@ -72,7 +72,8 @@ _PARTITION_BITS = 33  # monotonically_increasing_id: id = pid << 33 | row_idx
 # 4. ONE full pass: tag each row with its bucket, STEER bucket b into
 #    physical partition b (see below), sort within partition by the
 #    order cols, version = base + offset[pid] + rn + 1, write. The
-#    payload crosses the cluster at most once and is never cached.
+#    payload crosses the cluster at most once (never in arrival
+#    order) and is never cached.
 #
 # The steering trick: ``repartition(n, col)`` places rows by
 # pmod(murmur3(col), n), which would scatter buckets across partitions
@@ -88,14 +89,17 @@ _PARTITION_BITS = 33  # monotonically_increasing_id: id = pid << 33 | row_idx
 # same rows in the same buckets. Ordered ingest needs the same key
 # values in both (the bucket CASE tree and the boundaries are fixed
 # literals); arrival order needs the same per-partition row counts
-# (a row id is its partition and its index there, so bucket
-# membership does not depend on the order of rows inside a
-# partition). Parquet sources and a ``foreachBatch`` micro-batch (a
-# replayable offset range) keep both. A nondeterministic upstream
-# (say an unordered ``limit()``) may not: the committer then finds
-# files that do not tile the counted range and aborts the commit
-# before anything is visible (``log._check_bulk_range``) — checkpoint
-# such a source first.
+# (not the order of rows inside a partition). Parquet sources and a
+# ``foreachBatch`` micro-batch (a replayable offset range) keep both.
+# A source whose shuffles adaptive execution sizes at run time does
+# not: each job would coalesce (or split) them from its own map
+# output, and the column-pruned count job moves far fewer bytes than
+# the write. Arrival order therefore pins such a source first
+# (``_pinned``). A nondeterministic upstream
+# (say an unordered ``limit()``) may still break the contract: the
+# committer then finds files that do not tile the counted range and
+# aborts the commit before anything is visible
+# (``log._check_bulk_range``).
 
 _STEER_CACHE: dict[int, list[int]] = {}
 
@@ -188,15 +192,12 @@ def _sample_boundaries(
 ) -> list[tuple]:
     """Range-bucket boundaries from a seeded key sample (the same job
     ``repartitionByRange`` runs internally, but column-pruned and with
-    the result kept so the count job can share the buckets), aiming at
-    100 keys per bucket. The sample fraction comes from the optimizer's
-    size estimate; a wild under-estimate only costs balance, never
-    correctness, and the collect is capped at twice the target. A
-    sample that holds every key (fraction 1, under the cap) gets at
-    most one bucket per 100 keys, so a small batch is not split over
-    near-empty tasks. Keys holding a NULL are left out of the sample
-    (Python cannot order None against values, and ``_bucket_expr``
-    routes them to bucket 0 anyway)."""
+    the result kept so the count job can share the buckets). The sample
+    fraction comes from the optimizer's size estimate; a wild
+    under-estimate only costs balance, never correctness, and the
+    collect is capped at twice the target. Keys holding a NULL are left
+    out of the sample (Python cannot order None against values, and
+    ``_bucket_expr`` routes them to bucket 0 anyway)."""
     keys = src.select(*order_cols)
     try:
         est_bytes = int(
@@ -205,16 +206,13 @@ def _sample_boundaries(
     except Exception:
         est_bytes = 1 << 40
     est_rows = max(1, est_bytes // 32)
-    per_bucket = 100
-    target = min(per_bucket * n_target, 1_000_000)
+    target = min(100 * n_target, 1_000_000)
     frac = min(1.0, target / est_rows)
     sample = [
         tuple(r)
         for r in keys.where(F.rand(42) < frac).dropna().limit(2 * target).collect()
     ]
-    if frac == 1.0 and len(sample) < 2 * target:
-        n_target = min(n_target, len(sample) // per_bucket)
-    if len(sample) < 2 or n_target < 2:
+    if len(sample) < 2:
         return []
     sample.sort()
     step = len(sample) / n_target
@@ -224,6 +222,23 @@ def _sample_boundaries(
         if not bounds or b > bounds[-1]:
             bounds.append(b)
     return bounds
+
+
+def _pinned(df: DataFrame) -> DataFrame:
+    """``df`` with its partitions fixed for every later job. A plan
+    that adaptive execution re-plans per job (one holding a shuffle)
+    runs its shuffle stages once, here, and the result reads that
+    run's RDD, whose map stages later jobs skip; any other plan is
+    returned as is. This is how Spark hands a ``foreachBatch``
+    micro-batch over. Nothing is cached: the shuffle files are the
+    ones Spark keeps anyway."""
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return df
+    jdf = df.sparkSession._jsparkSession.internalCreateDataFrame(
+        qe.toRdd(), df._jdf.schema(), False
+    )
+    return type(df)(jdf, df.sparkSession)
 
 
 @dataclass
@@ -260,15 +275,12 @@ def with_dense_versions(
     from pyspark.sql import Observation
 
     spark = df.sparkSession
-    n_target = max(1, spark.sparkContext.defaultParallelism)
-    in_place = False
-    if order_cols is None:
-        in_place = df.rdd.getNumPartitions() >= n_target
-        df = df.withColumn("_arrival", F.monotonically_increasing_id())
-        order_cols = ["_arrival"]
-    if in_place:
-        bkt = F.shiftright("_arrival", _PARTITION_BITS).cast("int")
+    arrival = order_cols is None
+    if arrival:
+        df = _pinned(df)
+        bkt = F.spark_partition_id()
     else:
+        n_target = max(1, spark.sparkContext.defaultParallelism)
         bounds = _sample_boundaries(df, order_cols, n_target)
         nb = len(bounds) + 1
         bkt = _bucket_expr(order_cols, bounds) if bounds else F.lit(0)
@@ -287,8 +299,8 @@ def with_dense_versions(
         offsets.append((int(row["_bkt"]), acc))
         acc += row["count"]
 
-    if in_place:
-        # bucket b is source partition b, already in row-id order
+    if arrival:
+        # bucket b is source partition b, already in arrival order
         ordered = df
     else:
         steer = _steering_values(nb)
@@ -307,7 +319,7 @@ def with_dense_versions(
         ordered.withColumn("_mid", F.monotonically_increasing_id())
         .withColumn("_pid", F.shiftright("_mid", _PARTITION_BITS).cast("int"))
         .withColumn("_rn", F.col("_mid").bitwiseAND(F.lit(mask)))
-        .drop("_mid", "_arrival")
+        .drop("_mid")
     )
     offset_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _offset long")
     out = (

@@ -367,9 +367,11 @@ def _check_bulk_range(
     raise RuntimeError(
         f"bulk append aborted: written versions (lo, hi, rows) {files[:8]}"
         f"{' …' if len(files) > 8 else ''} do not tile assigned "
-        f"{expect}; the source changed between the versioning count "
-        "and the write (nondeterministic upstream) — checkpoint it "
-        "and re-run the batch"
+        f"{expect}: the versioning count job and the write read "
+        "different rows or partitions from the source, so nothing was "
+        "published. A source that is not reproducible between two "
+        "reads (an unordered limit(), a nondeterministic UDF, input "
+        "that changed) must be written out before it is appended"
     )
 
 
@@ -1463,11 +1465,11 @@ class EventLog:
 
         ``order_cols``: assign versions in this order (a range-bucket
         shuffle plus a local sort). The default is arrival order: the
-        source's partition-major row order. A source at least
-        ``defaultParallelism`` partitions wide is versioned in place; a
-        narrower one is distributed over buckets taken from a sample of
-        its row ids, so a large single-file batch validates in parallel
-        and a 2-row micro-batch stays one bucket.
+        source's partition-major row order, versioned in place: each
+        source partition is one bucket, with no sample and no shuffle.
+        A source holding a shuffle is pinned first: its shuffle stages
+        run once, and the count job and the write read the same
+        partitions.
 
         ``on_invalid``: ``"error"`` aborts the whole batch on any
         invalid event (counted during the write, checked before any

@@ -793,9 +793,8 @@ def test_arrival_order_versions_follow_source_partition_order(
     spark, tmp_path, parts
 ):
     """With no ``order_cols`` the versions follow the source's
-    partition-major row order, for a narrow source (spread over
-    sampled row-id buckets) and for one as wide as the cores
-    (versioned in place); each bucket stays one contiguous file."""
+    partition-major row order, for a 1-partition source and for one as
+    wide as the cores: each source partition is versioned in place."""
     from pyspark.sql import functions as F
 
     n = 1000
@@ -810,14 +809,48 @@ def test_arrival_order_versions_follow_source_partition_order(
     audit = log.check_integrity().collect()[0]
     assert (audit.checksum_violations, audit.chain_violations,
             audit.density_violation) == (0, 0, 0)
-    # a narrow 2-row batch is one bucket: one more fragment
-    before = len(log._manifest_files())
-    two = spark.createDataFrame(
-        [("a", '{"a":1}'), ("b", '{"b":2}')], "label string, payload string"
-    ).coalesce(1)
-    assert log.append_dataframe(two).version == n + 2
-    assert len(log._manifest_files()) == before + 1
-    assert [r.label for r in log.scan_rows(version=n + 1)] == ["a", "b"]
+
+
+@pytest.mark.parametrize("mode", ["error", "drop"])
+def test_arrival_order_append_of_a_shuffled_source(spark, tmp_path, mode):
+    """An arrival-order append of an aggregate's output, ~20 MB through
+    its shuffle. Adaptive execution sizes that shuffle from each job's
+    map output, and the count job, which prunes the payload, moves a
+    fraction of the write's bytes: read twice, the source would give
+    the count one partition and the write several, so different row
+    ids, and the commit would abort. The source is pinned instead: the
+    commit lands with dense versions and exactly the aggregate's rows."""
+    from pyspark.sql import functions as F
+
+    n = 20_000
+    # 512 hex digits a row: the shuffle compresses them only ~2x
+    pad = F.concat(
+        *[F.sha2(F.concat(F.col("id").cast("string"), F.lit(str(i))), 512)
+          for i in range(4)]
+    )
+    payload = F.col("payload")
+    if mode == "drop":  # every 50th row invalid
+        payload = F.when(F.col("k") % 50 == 7, F.lit("{}")).otherwise(payload)
+    src = (
+        spark.range(0, 2 * n, 1, numPartitions=8)
+        .groupBy((F.col("id") % n).alias("k"))
+        .agg(
+            F.max(F.format_string('{"k":%d,"pad":"%s"}', "id", pad)).alias(
+                "payload"
+            )
+        )
+        .select(F.lit("agg").alias("label"), payload.alias("payload"))
+    )
+    want = sorted(r.payload for r in src.collect() if r.payload != "{}")
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    r = log.append_dataframe(src, on_invalid=mode)
+    assert (r.version_first, r.version) == (1, len(want))
+    page = log.scan_rows()
+    assert [x.version for x in page] == list(range(1, len(want) + 1))
+    assert sorted(x.payload for x in page) == want
+    audit = log.check_integrity().collect()[0]
+    assert (audit.checksum_violations, audit.chain_violations,
+            audit.density_violation) == (0, 0, 0)
 
 
 @pytest.mark.parametrize("order_cols", [["k"], None])

@@ -32,8 +32,11 @@ Design (Spark-first, not a port):
   paged checkpoints every K commits), and then publishes the head +
   manifest seq in ``_state.json`` (atomic rename). The delta chain is
   the commit truth; the pointer is a cache that readers roll forward
-  past. Readers never take a lock: committed fragments and manifest
-  records are immutable (snapshot isolation).
+  past. A LOST pointer recovers from the chain alone, with no Spark
+  session: the newest checkpoint carries the head of the delta it
+  rolled up, the deltas past it carry theirs, and a chain that yields
+  no head is refused. Readers never take a lock: committed fragments
+  and manifest records are immutable (snapshot isolation).
   A crash between fragment write and delta claim leaves a fragment no
   manifest names: no reader lists the directory, so it is invisible,
   and ``vacuum`` reaps it once it is older than the grace window.
@@ -591,6 +594,15 @@ class EventLog:
         return os.path.join(self.path, _STATE_FILE)
 
     def _load_state(self) -> None:
+        ledger = os.path.join(self.path, "_retired.json")
+        if os.path.exists(ledger):
+            raise RuntimeError(
+                f"{ledger} is a list-format retirement ledger, a format this "
+                "release no longer opens. With no reader or writer live, run "
+                "vacuum --grace 0 once with the previous release (it reaps "
+                "the ledger's files and removes it), then reopen; see "
+                "MIGRATION.md."
+            )
         try:
             with open(self._state_path()) as f:
                 st = json.load(f)
@@ -620,37 +632,33 @@ class EventLog:
         fragment may alias committed versions, so only the manifest
         names a consistent snapshot. The delta chain is the commit
         truth: cold-position at the newest checkpoint in the claim
-        store, roll forward to the newest complete delta, and adopt its
-        head fields (every commit rides them in its delta). Recovery —
-        unlike the hot path — may consult the store's LISTING to find
-        that checkpoint; eventual list visibility only costs recovery
-        freshness, and roll_forward walks GET probes past whatever the
-        listing knew. A non-empty log whose chain is gone entirely is
-        unrecoverable by design: raising beats silently serving an
+        store, adopt the head it carries, roll forward to the newest
+        complete delta, and adopt its head fields (every commit rides
+        them in its delta). Recovery — unlike the hot path — may
+        consult the store's LISTING, once, to find that checkpoint;
+        eventual list visibility only costs recovery freshness, and
+        roll_forward walks GET probes past whatever the listing knew.
+        A chain that yields no head, and a non-empty log whose chain is
+        gone entirely, are refused: raising beats silently serving an
         empty or doubled log."""
         m = ManifestLog(self.path, store=self._claim_store)
-        ck = m._latest_checkpoint_at(m.max_seq_on_disk()) or 0
+        ck = m._latest_checkpoint_at() or 0
         try:
             m.load(ck)
         except ManifestChainBroken:
             m = None
         if m is not None:
-            # a chain written before deltas carried heads recovers its
-            # head from the manifest-listed data below
-            head = m.roll_forward(require_head=False)
             self._manifest = m
-            if head is not None:
-                self._adopt_cas_head(head)
+            self._adopt_cas_head(m.ckpt_head)
+            self._adopt_cas_head(m.roll_forward())
             if self._latest == 0 and m.count() > 0:
-                # chain exists but no head-carrying delta survived:
-                # recover the head from the manifest-listed data —
-                # needs a session
-                if self.spark is None:
-                    raise RuntimeError(
-                        "pointer recovery needs a spark session to "
-                        "re-derive the head from the manifest-listed data"
-                    )
-                self._recover_state()
+                raise RuntimeError(
+                    "pointer lost and the manifest chain yields no head: "
+                    f"neither _manifest/checkpoint-{ck:020d}.json nor a "
+                    "later delta carries one (a flock-era chain, or a "
+                    "checkpoint written before checkpoints carried heads); "
+                    "see MIGRATION.md"
+                )
             if m.count() > 0 or not any(
                 f.endswith(".parquet") for f in self._data_files()
             ):
@@ -660,20 +668,6 @@ class EventLog:
             "the directory-listing fallback is refused (an unpublished "
             "loser's fragment may alias committed versions)"
         )
-
-    def _recover_state(self) -> None:
-        df = self._read_raw()
-        if df is None:
-            self._latest = self._initial = self._last_ts = 0
-            return
-        row = df.agg(
-            F.max("version").alias("mx"),
-            F.min("version").alias("mn"),
-            F.max("timestamp").alias("ts"),
-        ).collect()[0]
-        self._latest = row["mx"] or 0
-        self._initial = row["mn"] or 0
-        self._last_ts = row["ts"] or 0
 
     @contextlib.contextmanager
     def _commit_section(self):
@@ -2364,12 +2358,6 @@ class EventLog:
 
     def _read_retired(self) -> list[dict]:
         out: list[dict] = []
-        # legacy list-format ledger (pre round 8), adopted transparently
-        try:
-            with open(os.path.join(self.path, "_retired.json")) as f:
-                out.extend(json.load(f))
-        except (FileNotFoundError, ValueError):
-            pass
         try:
             with open(self._retired_path()) as f:
                 for line in f:
@@ -2460,9 +2448,4 @@ class EventLog:
                 for batch in kept:
                     f.write(json.dumps(batch) + "\n")
             os.replace(tmp, self._retired_path())
-            # the legacy list-format ledger (if any) is folded in above
-            try:
-                os.remove(os.path.join(self.path, "_retired.json"))
-            except FileNotFoundError:
-                pass
         return removed

@@ -40,6 +40,13 @@ table format uses instead:
   complete, immutable prefix. The pointer is a cache: a crash (or a
   lost pointer-rename race) between delta and pointer leaves a claimed
   delta past it, which ``roll_forward`` adopts.
+* **Checkpoints carry the head**: a roll-up's record carries the head
+  fields (and stream markers) of the delta it rolls up, so a LOST
+  pointer recovers from the store alone, with no Spark session: one
+  listing for the newest checkpoint, its head, then GET probes along
+  the deltas past it. A chain that yields no head — deltas of the
+  retired flock protocol, or a checkpoint written before checkpoints
+  carried heads at the tip — is refused, naming the file.
 * **Superseded manifest files retire, never die in place**: a
   checkpoint hands the files it replaced (old deltas, the previous
   checkpoint, dissolved pages) to the log's deferred-deletion ledger
@@ -252,6 +259,11 @@ class ManifestLog:
         self._store = store if store is not None else PosixClaimStore(self._dir)
         self.seq = 0  # the snapshot this mirror currently reflects
         self._ckpt_seq = 0  # seq of the checkpoint the mirror is based on
+        # head fields of the base checkpoint (those of the delta it
+        # rolled up), None for the empty chain or a checkpoint written
+        # before checkpoints carried heads — pointer-loss recovery
+        # adopts it before rolling forward
+        self.ckpt_head: dict | None = None
         # page metas from the base checkpoint: {"f", "lo", "hi", "count"}
         self._page_metas: list[dict] = []
         self._page_cache: dict[str, list[dict]] = {}  # page file -> raw entries
@@ -262,20 +274,9 @@ class ManifestLog:
 
     # -- discovery ---------------------------------------------------------------
 
-    def max_seq_on_disk(self) -> int:
-        """Highest sequence number any manifest file in the store claims
-        — where pointer-loss recovery looks for the newest checkpoint."""
-        best = 0
-        for f in self._store.names():
-            for prefix in ("delta-", "checkpoint-"):
-                if f.startswith(prefix) and f.endswith(".json"):
-                    try:
-                        best = max(best, int(f[len(prefix) : -5]))
-                    except ValueError:
-                        pass
-        return best
-
-    def _latest_checkpoint_at(self, seq: int) -> int | None:
+    def _latest_checkpoint_at(self, seq: int | None = None) -> int | None:
+        """Seq of the newest checkpoint in the store at or below ``seq``
+        (any seq when None) — one listing."""
         best = None
         for f in self._store.names():
             if f.startswith("checkpoint-") and f.endswith(".json"):
@@ -283,7 +284,7 @@ class ManifestLog:
                     s = int(f[len("checkpoint-") : -5])
                 except ValueError:
                     continue
-                if s <= seq and (best is None or s > best):
+                if (seq is None or s <= seq) and (best is None or s > best):
                     best = s
         return best
 
@@ -307,6 +308,7 @@ class ManifestLog:
         fresh = ManifestLog.__new__(ManifestLog)
         fresh._dir, fresh._store = self._dir, self._store
         fresh.seq = fresh._ckpt_seq = 0
+        fresh.ckpt_head = None
         fresh._page_metas, fresh._page_cache, fresh._tail = [], {}, []
         fresh._tombstones = set()
         ck, raw = None, None
@@ -326,6 +328,7 @@ class ManifestLog:
                     raise FileNotFoundError(_CKPT.format(ck))
                 data = json.loads(raw)
                 fresh._page_metas = list(data["pages"])
+                fresh.ckpt_head = data.get("head")
             except (FileNotFoundError, ValueError, KeyError) as e:
                 raise ManifestChainBroken(f"checkpoint {ck} unreadable") from e
             _refuse_rangeless(_CKPT.format(ck), fresh._page_metas)
@@ -337,6 +340,7 @@ class ManifestLog:
             raise ManifestChainBroken(f"delta chain broken below seq {seq}") from e
         fresh.seq = seq
         self.seq, self._ckpt_seq = fresh.seq, fresh._ckpt_seq
+        self.ckpt_head = fresh.ckpt_head
         self._page_metas, self._page_cache = fresh._page_metas, fresh._page_cache
         self._tail, self._tombstones = fresh._tail, fresh._tombstones
 
@@ -486,7 +490,9 @@ class ManifestLog:
         ManifestSeqClaimed — atomically, before the mirror mutates —
         when another writer took the seq. ``head`` (the head fields
         this commit publishes) rides in the record so a reader can roll
-        past a lagging pointer. Returns (new seq, manifest files
+        past a lagging pointer, and in the checkpoint a roll-up at this
+        seq writes, so a lost pointer recovers from the checkpoint alone
+        when no delta lies past it. Returns (new seq, manifest files
         superseded by a roll-up) — the caller retires the latter into
         the vacuum ledger once the pointer is out (publish-before-
         delete, same as data fragments). An add entry without a
@@ -507,10 +513,10 @@ class ManifestLog:
         self.seq = s
         superseded: list[str] = []
         if s - self._ckpt_seq >= self.CHECKPOINT_EVERY:
-            superseded = self._checkpoint()
+            superseded = self._checkpoint(head)
         return s, superseded
 
-    def roll_forward(self, require_head: bool = True) -> dict | None:
+    def roll_forward(self) -> dict | None:
         """The delta CHAIN, not the pointer, is the commit truth (a
         writer may die — or merely lose the pointer-publish race —
         between its claimed delta and its pointer write, and pointer
@@ -521,13 +527,12 @@ class ManifestLog:
         as the true head.
 
         Every claimed delta carries a head. One without it was written
-        by the retired flock protocol, whose crash between delta and
-        pointer left an UNPUBLISHED delta there; adopting it would
-        serve a never-acknowledged commit and re-assign its versions.
-        So a head-less delta past the mirror is refused, naming the
-        file, unless ``require_head=False`` (pointer-loss recovery of a
-        chain older than delta heads, which re-derives the head from
-        the data)."""
+        by the retired flock protocol, and is refused, naming the file:
+        past a published pointer it is an unpublished commit (its crash
+        between delta and pointer left it there), and adopting it would
+        serve a never-acknowledged commit and re-assign its versions;
+        on a pointer-lost log it belongs to a flock-era chain, whose
+        head this release cannot recover."""
         head: dict | None = None
         sc: dict = {}  # stream markers merge across ALL rolled deltas —
         # the newest head may predate an older delta's marker
@@ -544,21 +549,21 @@ class ManifestLog:
                     head["sc"] = sc
                 return head
             _refuse_rangeless(name, d.get("add", []))
-            if require_head and not d.get("head"):
+            if not d.get("head"):
                 raise RuntimeError(
-                    f"manifest delta {name} lies past the published pointer "
-                    f"(seq {self.seq}) and carries no head record: an "
-                    "unpublished commit of the retired flock protocol. Its "
-                    "commit was never acknowledged — delete the file and "
-                    "re-open the log."
+                    f"manifest delta {name} lies past seq {self.seq} and "
+                    "carries no head record, a delta of the retired flock "
+                    "protocol. Past a published pointer it is an unpublished "
+                    "commit that was never acknowledged — delete the file and "
+                    "re-open the log. On a log whose pointer is lost it is a "
+                    "flock-era chain; see MIGRATION.md."
                 )
             self._apply(d.get("add", []), d.get("remove", []))
             self.seq += 1
-            if d.get("head"):
-                head = d["head"]
-                for k, v in d["head"].get("sc", {}).items():
-                    if int(v) > sc.get(k, -1):
-                        sc[k] = int(v)
+            head = d["head"]
+            for k, v in head.get("sc", {}).items():
+                if int(v) > sc.get(k, -1):
+                    sc[k] = int(v)
 
     def _write_json(self, name: str, payload) -> None:
         self._store.put(name, json.dumps(payload).encode())
@@ -621,12 +626,13 @@ class ManifestLog:
         if not ok:
             raise ManifestSeqClaimed(name)
 
-    def _checkpoint(self) -> list[str]:
+    def _checkpoint(self, head: dict | None = None) -> list[str]:
         """Roll the live snapshot into pages. Clean pages (no entry
         tombstoned) are REUSED by reference; dirty pages dissolve and
         their survivors repack with the tail — cost O(changed), not
         O(files), in the steady state where compaction touches only
-        the recent tail of the version space."""
+        the recent tail of the version space. The record carries
+        ``head``, the head fields of the delta it rolls up."""
         # A page dissolves when an entry was tombstoned OR it never grew
         # to half capacity (each roll-up's tail would otherwise leave a
         # permanent sliver page — the growing tail page is re-absorbed
@@ -681,7 +687,10 @@ class ManifestLog:
             self._page_cache[pf] = chunk
 
         metas = kept_metas + new_metas
-        self._write_json(_CKPT.format(self.seq), {"seq": self.seq, "pages": metas})
+        rec: dict = {"seq": self.seq, "pages": metas}
+        if head is not None:
+            rec["head"] = head
+        self._write_json(_CKPT.format(self.seq), rec)
 
         referenced = {m["f"] for m in metas}
         superseded = [
@@ -700,4 +709,5 @@ class ManifestLog:
         self._tail = []
         self._tombstones = set()
         self._ckpt_seq = self.seq
+        self.ckpt_head = head
         return superseded

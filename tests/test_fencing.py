@@ -31,11 +31,11 @@ def _boom(*a, **k):  # a flock take is a test failure
 
 
 def _strip_delta_heads(path: str) -> None:
-    """Rewrite every delta without its ``head`` record — the shape the
-    retired flock protocol wrote."""
+    """Rewrite every delta and checkpoint without its ``head`` record —
+    the shape the retired flock protocol wrote."""
     mdir = os.path.join(path, "_manifest")
     for name in os.listdir(mdir):
-        if name.startswith("delta-"):
+        if name.startswith(("delta-", "checkpoint-")):
             with open(os.path.join(mdir, name)) as f:
                 rec = json.load(f)
             rec.pop("head", None)
@@ -1308,11 +1308,14 @@ def test_cas_pointer_loss_recovers_from_chain(tmp_path, monkeypatch, cas_env):
     assert again.scan_rows()[-1].label == "after-loss"
 
 
-def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch):
+@pytest.mark.parametrize("n", [11, 12])
+def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch, n):
     """Pointer loss AFTER checkpoint roll-ups (deltas partially
     retired): recovery positions at the newest checkpoint the store
-    lists and GET-probes forward past it. Run across enough commits
-    that at least two roll-ups happened."""
+    lists, adopts the head it carries and GET-probes forward past it —
+    with no Spark session. Run across enough commits that at least two
+    roll-ups happened; at 12 the tip is a checkpoint, so its head is
+    the only one recovery finds."""
     import fcntl
 
     from eventlog_spark.manifest import ManifestLog
@@ -1322,41 +1325,93 @@ def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch):
     monkeypatch.setattr(fcntl, "flock", _boom)
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
     w = EventLog.open(None, path)
-    for i in range(11):
+    for i in range(n):
         w.append("e", json.dumps({"i": i}))
     os.remove(os.path.join(path, "_state.json"))
 
     fresh = EventLog.open(None, path)
-    assert fresh.version() == 11
-    assert [r.version for r in fresh.scan_rows()] == list(range(1, 12))
-    assert fresh.append("tail", '{"ok":1}').version == 12
+    assert fresh.version() == n
+    assert fresh.version_initial() == 1
+    assert [r.version for r in fresh.scan_rows()] == list(range(1, n + 1))
+    assert fresh.append("tail", '{"ok":1}').version == n + 1
 
 
-def test_cas_pointer_loss_flock_era_chain_recovers_via_scan(
+def test_cas_pointer_loss_at_checkpoint_keeps_txn_markers(
     spark, tmp_path, monkeypatch
 ):
-    """Migration edge: a log written under the retired flock protocol
-    (its deltas carry no head fields) loses its pointer.
-    Roll-forward finds no head to adopt, so recovery re-derives the
-    head by scanning the manifest-listed data — which requires a
-    session, and never the directory listing."""
+    """Exactly-once across a lost pointer whose chain ends in a
+    checkpoint: no delta lies past it, so the stream-txn marker of an
+    earlier bulk append survives only in the checkpoint's head. The
+    reopened log must refuse the replayed batch."""
     import fcntl
 
+    from pyspark.sql import functions as F
+
+    from eventlog_spark.manifest import ManifestLog
+
+    path = str(tmp_path / "txnckpt")
+    EventLog.create(None, path)
+    monkeypatch.setattr(fcntl, "flock", _boom)
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
+    w = EventLog.open(spark, path)
+    batch = spark.range(2).select(
+        F.lit("lbl").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    assert w.append_dataframe(batch, order_cols=["id"], txn=("q1", 0)).version == 2
+    while w._manifest.seq < 4:
+        w.append("e", '{"pad":1}')
+    head = w.version()
+    mdir = os.path.join(path, "_manifest")
+    assert os.path.exists(os.path.join(mdir, f"checkpoint-{4:020d}.json"))
+    assert not os.path.exists(os.path.join(mdir, f"delta-{5:020d}.json"))
+    os.remove(os.path.join(path, "_state.json"))
+
+    fresh = EventLog.open(spark, path)
+    assert fresh.version() == head
+    assert fresh._stream_commits == {"q1": 0}
+    assert fresh.append_dataframe(batch, order_cols=["id"], txn=("q1", 0)) is None
+    assert fresh.version() == head
+    assert EventLog.open(None, path)._stream_commits == {"q1": 0}
+
+
+@pytest.mark.parametrize("n", [3, 4, 5])
+def test_cas_pointer_loss_flock_era_chain_refused(
+    spark, tmp_path, monkeypatch, n
+):
+    """Migration edge: a log written under the retired flock protocol
+    (no delta or checkpoint carries head fields) loses its pointer.
+    Its head can come from nowhere but a scan of the data, which this
+    release does not do: open refuses, with or without a session,
+    naming the head-less delta past the newest checkpoint (3 and 5
+    commits) or that checkpoint itself (4 commits, the chain's tip),
+    and leaves every file where it was."""
+    import fcntl
+
+    from eventlog_spark.manifest import ManifestLog
+
     path = str(tmp_path / "flockera")
-    log = EventLog.create(spark, path)
-    for i in range(5):
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
+    log = EventLog.create(None, path)
+    for i in range(n):
         log.append("e", json.dumps({"i": i}))
-    _strip_delta_heads(path)  # flock-era history: no delta heads
+    _strip_delta_heads(path)  # flock-era history: no heads anywhere
     os.remove(os.path.join(path, "_state.json"))
     monkeypatch.setattr(fcntl, "flock", _boom)
 
-    with pytest.raises(RuntimeError, match="spark session"):
-        EventLog.open(None, path)  # head scan needs a session
+    def tree():
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+        return sorted((f, os.path.getsize(f)) for f in files)
 
-    fresh = EventLog.open(spark, path)
-    assert fresh.version() == 5
-    assert [r.version for r in fresh.scan_rows()] == [1, 2, 3, 4, 5]
-    assert fresh.append("after", '{"ok":1}').version == 6
+    before = tree()
+    # the newest checkpoint is 4 from n = 4 on; refusal names the file
+    # recovery could not take a head from
+    named = f"checkpoint-{4:020d}" if n == 4 else f"delta-{n // 4 * 4 + 1:020d}"
+    for session in (None, spark):
+        with pytest.raises(RuntimeError, match=named):
+            EventLog.open(session, path)
+    assert tree() == before
 
 
 def test_cas_pointer_and_chain_loss_refuses_silent_truncation(

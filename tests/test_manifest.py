@@ -5,8 +5,8 @@ The round-7 design embedded the full data-file list in ``_state.json``
 replacement's contract: O(1) per-commit delta records, paged
 checkpoints that reuse clean pages, version-range page pruning for the
 scan_rows page path, recovery, and the refusals (pre-manifest state
-file, head-less delta past the pointer, range-less entries, chain
-gone).
+file, list-format retirement ledger, head-less delta past the
+pointer, range-less entries, chain gone).
 """
 
 from __future__ import annotations
@@ -209,6 +209,23 @@ def test_legacy_state_file_refused(spark, tmp_path):
         json.dump(legacy, f)
     with pytest.raises(RuntimeError, match="pre-manifest state file"):
         EventLog.open(spark, log.path)
+
+
+def test_retired_list_ledger_refused(tmp_path):
+    """The list-format retirement ledger (``_retired.json``, written
+    before the append-only ``_retired.jsonl``) is refused on open with
+    an error naming the file, which stays in place: its files are
+    neither adopted nor reaped."""
+    log = EventLog.create(None, str(tmp_path / "log"))
+    log.append("a", '{"k":0}')
+    ledger = os.path.join(log.path, "_retired.json")
+    body = json.dumps([{"ts": 0, "files": ["gone.parquet"]}])
+    with open(ledger, "w") as f:
+        f.write(body)
+    with pytest.raises(RuntimeError, match="_retired.json"):
+        EventLog.open(None, log.path)
+    with open(ledger) as f:
+        assert f.read() == body
 
 
 def test_recovery_after_pointer_loss_rebuilds_chain(spark, tmp_path):

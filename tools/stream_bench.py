@@ -11,7 +11,9 @@ bulk-ingest rehearsal (BASELINE.md): the reference's analog is its
 fsync-per-append file engine, which has no batched ingest shape at all.
 
 Usage: python tools/stream_bench.py [rows_per_second] [seconds]
-Prints ONE JSON line.
+Prints ONE JSON line. ``duration_sec`` runs until the micro-batch in
+flight when the window closes has committed, so it is the window plus
+that batch's drain, and ``events_per_sec`` is committed events over it.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -53,12 +56,32 @@ def main() -> None:
                 ),
             )
         )
+        # The query must not stop while a micro-batch's Spark jobs run:
+        # the cancelled job's Python traceback reaches Spark's
+        # interruption check, whose regex overflows the stack of the
+        # stream thread on a message that long. The source outruns the
+        # sink, so the next trigger starts at once and the query is
+        # never idle; instead, once the window is over, the batch in
+        # flight is the last one committed and later batches commit
+        # nothing, so stop() only interrupts a batch with no job.
+        window_over, drained = threading.Event(), threading.Event()
+        commit = log.append_dataframe
+
+        def append_in_window(batch, **kw):
+            if window_over.is_set():
+                drained.set()
+                return None
+            return commit(batch, **kw)
+
+        log.append_dataframe = append_in_window
         q = append_stream(log, src, checkpoint_dir=os.path.join(tmp, "ckpt"))
         t0 = time.monotonic()
         time.sleep(seconds)
+        window_over.set()
+        drained.wait(timeout=300)
+        dt = time.monotonic() - t0
         q.stop()
         q.awaitTermination()
-        dt = time.monotonic() - t0
         head = log.version()
         audit = log.check_integrity().collect()[0]
         print(

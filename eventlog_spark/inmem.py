@@ -27,7 +27,14 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .log import EVENT_SCHEMA, EventLog, _check_bulk_range, _Hub
+from .log import (
+    EVENT_SCHEMA,
+    EventLog,
+    ScanRow,
+    _check_bulk_range,
+    _Hub,
+    _rows_on_page,
+)
 from .sources.binformat import spark_checksum as _spark_checksum  # noqa: F401 — shared fast-path checksum
 from .validation import DEFAULT_MAX_PAYLOAD_LEN
 
@@ -114,20 +121,17 @@ class InMemEventLog(EventLog):
         self,
         lo: int,
         hi: int,
+        latest: int,
         label: str | None = None,
         limit: int | None = None,
         reverse: bool = False,
-    ) -> list[tuple]:
+    ) -> list[ScanRow]:
         # limit/reverse are early-stop hints for the file engine's
         # fragment walk; an in-memory list scan gains nothing from them
-        # the inmem engine IS driver-side: a list slice serves the page
+        # the inmem engine IS driver-side: a list filter serves the page
         # (rows are appended in version order, but don't assume it)
         with self._lock:
-            return [
-                r
-                for r in self._rows
-                if lo <= r[0] <= hi and (label is None or r[3] == label)
-            ]
+            return _rows_on_page(self._rows, lo, hi, label, latest)
 
     # -- lifecycle/state: nothing persists ------------------------------------
 

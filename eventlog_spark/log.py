@@ -48,7 +48,6 @@ Design (Spark-first, not a port):
 
 from __future__ import annotations
 
-import bisect
 import contextlib
 import hashlib
 import heapq
@@ -132,13 +131,24 @@ def _version_group_stats(md) -> list[tuple[int, int]] | None:
 
 class _Footer(NamedTuple):
     """A fragment's parsed parquet footer as the hot-tail cache holds
-    it: valid while the file's (size, mtime) stay those it was parsed
-    at, so a file replaced under its name is parsed again."""
+    it, with the per-row-group match counts of every label a page has
+    asked of it: valid while the file's (size, mtime) stay those it was
+    parsed at, so a file replaced under its name is parsed again and
+    its counts go with the old footer."""
 
     size: int
     mtime_ns: int
     md: object  # pyarrow.parquet.FileMetaData
     stats: list[tuple[int, int]] | None  # _version_group_stats(md)
+    counts: dict[str, list[int]]  # label -> matches per row group
+
+    def nbytes(self) -> int:
+        """What the entry is charged against ``ROW_CACHE_BYTES``: the
+        serialized footer plus, per counted label, its UTF-8 bytes and
+        8 bytes a row group."""
+        return self.md.serialized_size + sum(
+            len(lab.encode("utf-8")) + 8 * len(c) for lab, c in self.counts.items()
+        )
 
 
 def _pylist(col) -> list:
@@ -154,15 +164,60 @@ def _pylist(col) -> list:
 
 def _table_rows(tbl) -> list[tuple]:
     """An event table as (version, version_prev, timestamp, label,
-    payload, checksum) tuples."""
+    payload, checksum) tuples: the hot-tail cache's row shape, which
+    the minor fold writes back (``_rows_table``)."""
     cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
     return list(zip(*[_pylist(tbl.column(c)) for c in cols]))
 
 
-def _rows_on_page(rows: list[tuple], lo: int, hi: int, label: str | None) -> list[tuple]:
+def _rows_on_page(
+    rows: list[tuple], lo: int, hi: int, label: str | None, latest: int
+) -> list["ScanRow"]:
     """The rows of one whole fragment (a cache hit or a small-fragment
-    read) that a page over [lo, hi] returns."""
-    return [r for r in rows if lo <= r[0] <= hi and (label is None or r[3] == label)]
+    read) that a page over [lo, hi] returns, as ``ScanRow``s of a log
+    whose head is ``latest``."""
+    new = tuple.__new__  # skips the namedtuple's Python-level __new__
+    return [
+        new(ScanRow, (v, vp, 0 if v == latest else v + 1, ts, lab, pay, ck))
+        for (v, vp, ts, lab, pay, ck) in rows
+        if lo <= v <= hi and (label is None or lab == label)
+    ]
+
+
+def _scan_rows(tbl, latest: int) -> list["ScanRow"]:
+    """An event table as ``ScanRow``s of a log whose head is
+    ``latest``: each column becomes Python values in one C pass
+    (``_pylist``), ``version_next`` is computed on the version column
+    (0 on the head), and the rows are zipped straight from the columns
+    — no intermediate tuples, no Python-level call per row."""
+    ver = tbl.column("version").to_numpy()
+    nxt = ver + 1
+    nxt[ver == latest] = 0
+    prev, ts, lab, pay, ck = [
+        _pylist(tbl.column(c))
+        for c in ("version_prev", "timestamp", "label", "payload", "checksum")
+    ]
+    rows = zip(ver.tolist(), prev, nxt.tolist(), ts, lab, pay, ck)
+    return list(map(tuple.__new__, itertools.repeat(ScanRow), rows))
+
+
+def _version_slice(tbl, lo: int, hi: int):
+    """The rows of ``tbl`` with lo <= version <= hi as a zero-copy
+    slice, or None. A file written in version order holds a dense
+    version range, so the rows sit at offset ``lo - first version``;
+    the slice is kept only if its versions are exactly lo..hi, which a
+    label-clustered or re-sorted file breaks."""
+    import numpy as np
+
+    if not tbl.num_rows:
+        return None
+    start = lo - tbl.column("version")[0].as_py()
+    if start < 0 or start + hi - lo + 1 > tbl.num_rows:
+        return None
+    part = tbl.slice(start, hi - lo + 1)
+    if not np.array_equal(part.column("version").to_numpy(), np.arange(lo, hi + 1)):
+        return None
+    return part
 
 
 def _rows_table(rows: list[tuple]):
@@ -220,6 +275,20 @@ def _page_mask(tbl, lo: int, hi: int, label: str | None):
     if label is not None:
         keep = pc.and_(keep, pc.equal(tbl.column("label"), label))
     return keep
+
+
+def _label_group_counts(pf, label: str) -> list[int]:
+    """Rows per row group of the parquet file ``pf`` whose label is
+    ``label``, from one read of its ``label`` column."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    md = pf.metadata
+    col = pf.read(columns=["label"], use_threads=False).column("label")
+    hit = pc.fill_null(pc.equal(col, label), False).to_numpy(zero_copy_only=False)
+    seen = np.concatenate(([0], np.cumsum(hit)))
+    ends = np.cumsum([md.row_group(g).num_rows for g in range(md.num_row_groups)])
+    return np.diff(seen[ends], prepend=0).tolist()
 
 
 def _newest_change(full: str) -> float:
@@ -515,8 +584,9 @@ class EventLog:
         # hot-tail row cache: fragment name -> (rows, label + payload
         # bytes) for fragments of at most ROW_GROUP_ROWS rows, filled
         # as this process writes a fragment or reads one whole, and
-        # name -> (_Footer, footer bytes) for larger fragments a page
-        # read (_cache_put), evicted oldest first past ROW_CACHE_BYTES.
+        # name -> (_Footer, _Footer.nbytes()) for larger fragments a
+        # page read, with the label counts its label pages took
+        # (_cache_put), evicted oldest first past ROW_CACHE_BYTES.
         # Pages and minor folds take rows from it for manifest
         # candidates only, so a written but unclaimed fragment is never
         # served; CAS losers and retired fragments leave it
@@ -1739,7 +1809,12 @@ class EventLog:
         overlaps + the page's fragment reads; latency is ms where a
         Spark job is seconds. There is no second path: paging
         semantics come from the same ``_page_interval`` ``scan()``
-        uses, and a page the manifest cannot serve raises.
+        uses, and a page the manifest cannot serve raises. Only the
+        rows a page returns become Python objects: the storage seam
+        (``_rows_in_range``) hands back finished ``ScanRow``s, built
+        once per row straight from Arrow columns or from the hot-tail
+        cache, and this method only orders (and, for a label page,
+        cuts) them.
 
         Dense versions give the invariant check: a page of [lo, hi]
         yields exactly hi-lo+1 rows, or RuntimeError.
@@ -1754,10 +1829,10 @@ class EventLog:
             lo, hi, latest = self._page_interval(version, reverse, None, skip_first)
         else:
             lo, hi, latest = self._page_interval(version, reverse, limit, skip_first)
-        if hi < lo:
+        if hi < lo or limit == 0:
             return []
         rows = self._rows_in_range(
-            lo, hi, label=label, limit=limit, reverse=reverse
+            lo, hi, latest, label=label, limit=limit, reverse=reverse
         )
         if label is None and len(rows) != hi - lo + 1:
             raise RuntimeError(
@@ -1768,37 +1843,34 @@ class EventLog:
         rows.sort(key=operator.itemgetter(0), reverse=reverse)
         if label is not None and limit is not None:
             del rows[limit:]
-        # tuple.__new__ skips the namedtuple's Python-level __new__
-        new = tuple.__new__
-        return [
-            new(ScanRow, (ver, vp, 0 if ver == latest else ver + 1, ts, lab, payload, ck))
-            for (ver, vp, ts, lab, payload, ck) in rows
-        ]
+        return rows
 
     def _rows_in_range(
         self,
         lo: int,
         hi: int,
+        latest: int,
         label: str | None = None,
         limit: int | None = None,
         reverse: bool = False,
-    ) -> list[tuple[int, int, int, str, str, int]]:
+    ) -> list[ScanRow]:
         """Storage seam for ``scan_rows``: every committed event with
-        lo <= version <= hi, as (version, version_prev, timestamp,
-        label, payload, checksum) tuples in any order. File engine: the
-        manifest's version-range index selects the overlapping
-        fragments — O(manifest pages overlapped + matches), so a
-        1000-event page over a 100k-fragment log touches a handful of
-        entries — and ``_read_fragment_rows`` decodes, per fragment,
-        only the row groups and rows the page can return. With
-        ``label``, page summaries and entry stats additionally drop
-        fragments that cannot hold the label (bounds + bloom — the same
-        data skipping scan(label=...) applies) and rows are filtered
-        exactly. Each row is filtered once: row groups decoded from disk
-        come back filtered Arrow-side, and only whole-fragment rows (a
-        cache hit, or a small fragment read whole) pass the Python
-        filter (``_rows_on_page``). The mirror is the one
-        ``_page_interval`` just synced; a missing fragment raises.
+        lo <= version <= hi, as ``ScanRow``s of a log whose head is
+        ``latest``, in any order. File engine: the manifest's
+        version-range index selects the overlapping fragments —
+        O(manifest pages overlapped + matches), so a 1000-event page
+        over a 100k-fragment log touches a handful of entries — and
+        ``_read_fragment_rows`` decodes, per fragment, only the row
+        groups and rows the page can return. With ``label``, page
+        summaries and entry stats additionally drop fragments that
+        cannot hold the label (bounds + bloom — the same data skipping
+        scan(label=...) applies) and rows are filtered exactly. Each row
+        is filtered once and becomes a ``ScanRow`` once: rows decoded
+        from disk are sliced or filtered Arrow-side, and only
+        whole-fragment rows (a cache hit, or a small fragment read
+        whole) pass the Python filter (``_rows_on_page``). The mirror is
+        the one ``_page_interval`` just synced; a missing fragment
+        raises.
 
         With ``label`` AND ``limit``, fragments are read in version
         order (``reverse`` flips it) and the read STOPS once no unread
@@ -1827,7 +1899,7 @@ class EventLog:
         if early_stop:
             # version order, so the early-stop bar below is sound
             cand.sort(key=(lambda e: -e["hi"]) if reverse else (lambda e: e["lo"]))
-        out: list[tuple] = []
+        out: list[ScanRow] = []
         for entry in cand:
             if early_stop and len(out) >= limit:
                 # the page is full once the limit-th best match
@@ -1844,10 +1916,10 @@ class EventLog:
             rows = self._cached_rows(entry["n"])
             if rows is None:
                 rows = self._read_fragment_rows(
-                    entry, lo, hi, label, limit, reverse, epoch
+                    entry, lo, hi, latest, label, limit, reverse, epoch
                 )
             else:
-                rows = _rows_on_page(rows, lo, hi, label)
+                rows = _rows_on_page(rows, lo, hi, label, latest)
             out.extend(rows)
         return out
 
@@ -1856,36 +1928,41 @@ class EventLog:
         entry: dict,
         lo: int,
         hi: int,
+        latest: int,
         label: str | None = None,
         limit: int | None = None,
         reverse: bool = False,
         epoch: int | None = None,
-    ) -> list[tuple]:
+    ) -> list[ScanRow]:
         """The rows of one fragment that a page over [lo, hi] returns,
-        filtered. A fragment of at most ``ROW_GROUP_ROWS`` rows is read
-        whole and cached by name, unfiltered (the hot tail:
-        single-append fragments are immutable and tiny, so repeated
-        pages over an uncompacted tail must not re-open 1000 files),
-        unless fragments were retired since ``epoch``, the cache epoch
-        the page chose its fragments at; its page rows then pass the
-        same Python filter as a cache hit. Any other fragment has its
-        footer and version stats cached under the same rule, checked
-        against one ``os.stat`` (a file replaced under its name is
-        parsed again), and decodes only what the page can return:
+        as ``ScanRow``s. A fragment of at most ``ROW_GROUP_ROWS`` rows
+        is read whole and cached by name, unfiltered, in the row shape
+        the minor fold writes back (the hot tail: single-append
+        fragments are immutable and tiny, so repeated pages over an
+        uncompacted tail must not re-open 1000 files), unless fragments
+        were retired since ``epoch``, the cache epoch the page chose its
+        fragments at; its page rows then pass the same Python filter as
+        a cache hit. Any other fragment has its footer and version
+        stats cached under the same rule, checked against one
+        ``os.stat`` (a file replaced under its name is parsed again),
+        and decodes only the row groups the page can return:
 
-        * row groups whose footer version stats miss [lo, hi] are
-          skipped — driver-side writes cap groups at ``ROW_GROUP_ROWS``
-          rows, so a 1000-event page decodes at most two groups of a
-          fold;
-        * the version range (and ``label``) filter runs Arrow-side, so
-          only surviving rows become Python objects, one C pass per
-          column (``_pylist``), and no Python filter follows;
-        * a label page with ``limit`` first reads only the ``version``
-          and ``label`` columns, keeps the fragment's first ``limit``
-          matches by version value in read direction (file order is not
-          version order under ``compact(cluster_by="label")``), and
-          decodes every column only for the groups holding them —
-          matches past those can never be on the page.
+        * a version page decodes the groups whose footer version stats
+          meet [lo, hi] — driver-side writes cap groups at
+          ``ROW_GROUP_ROWS`` rows, so a 1000-event page decodes at most
+          two groups of a fold — and takes its rows as a zero-copy
+          slice at offset ``lo - first version``, kept only if the
+          slice's versions are exactly the page's (``_version_slice``);
+          a label-clustered or re-sorted file fails that check and is
+          filtered Arrow-side instead;
+        * a ``label`` page over a fragment of several groups decodes
+          only the groups ``_label_groups`` picks from the label's
+          cached per-group match counts, filters them Arrow-side and
+          keeps the fragment's first ``limit`` matches by version
+          value in read direction (file order is not version order
+          under ``compact(cluster_by="label")``);
+        * what survives becomes ``ScanRow``s straight from the Arrow
+          columns (``_scan_rows``).
 
         Reads decode on the calling thread: a page decodes at most a
         few row groups, and handing them to Arrow's thread pool costs
@@ -1900,7 +1977,6 @@ class EventLog:
         foot = self._cached_footer(entry["n"], st)
         if foot is not None:
             pf = pq.ParquetFile(path, metadata=foot.md)
-            md, stats = foot.md, foot.stats
         else:
             pf = pq.ParquetFile(path)
             md = pf.metadata
@@ -1908,45 +1984,82 @@ class EventLog:
                 tbl = pf.read(use_threads=False)
                 rows = _table_rows(tbl)
                 self._cache_put(entry["n"], rows, _text_bytes(tbl), epoch)
-                return _rows_on_page(rows, lo, hi, label)
-            stats = _version_group_stats(md)
-            self._cache_put(
-                entry["n"],
-                _Footer(st.st_size, st.st_mtime_ns, md, stats),
-                md.serialized_size,
-                epoch,
-            )
+                return _rows_on_page(rows, lo, hi, label, latest)
+            foot = _Footer(st.st_size, st.st_mtime_ns, md, _version_group_stats(md), {})
+            self._cache_put(entry["n"], foot, foot.nbytes(), epoch)
+        stats = foot.stats
         groups = [
             g
-            for g in range(md.num_row_groups)
+            for g in range(foot.md.num_row_groups)
             if stats is None or (stats[g][0] <= hi and stats[g][1] >= lo)
         ]
-        if label is not None and limit is not None and groups:
-            keys = pf.read_row_groups(
-                groups, columns=["version", "label"], use_threads=False
-            )
-            hits = pc.indices_nonzero(_page_mask(keys, lo, hi, label))
-            if len(hits) > limit:
-                order = "descending" if reverse else "ascending"
-                hits = pc.take(
-                    hits,
-                    pc.select_k_unstable(
-                        pc.take(keys.column("version"), hits), limit, [("", order)]
-                    ),
-                )
-            if len(hits):
-                # [lo, hi] narrows to the kept matches: no other match
-                # of this fragment lies between them
-                bounds = pc.min_max(pc.take(keys.column("version"), hits))
-                lo, hi = bounds["min"].as_py(), bounds["max"].as_py()
-            ends = list(itertools.accumulate(md.row_group(g).num_rows for g in groups))
-            groups = sorted(
-                {groups[bisect.bisect_right(ends, i)] for i in _pylist(hits)}
+        if label is not None and foot.md.num_row_groups > 1:
+            groups = self._label_groups(
+                entry["n"], pf, foot, groups, lo, hi, label, limit, reverse, epoch
             )
         if not groups:
             return []
         tbl = pf.read_row_groups(groups, use_threads=False)
-        return _table_rows(tbl.filter(_page_mask(tbl, lo, hi, label)))
+        if label is None:
+            part = _version_slice(tbl, max(lo, entry["lo"]), min(hi, entry["hi"]))
+            if part is not None:
+                return _scan_rows(part, latest)
+        tbl = tbl.filter(_page_mask(tbl, lo, hi, label))
+        if label is not None and limit is not None and tbl.num_rows > limit:
+            order = "descending" if reverse else "ascending"
+            tbl = tbl.take(pc.select_k_unstable(tbl, limit, [("version", order)]))
+        return _scan_rows(tbl, latest)
+
+    def _label_groups(
+        self,
+        name: str,
+        pf,
+        foot: _Footer,
+        groups: list[int],
+        lo: int,
+        hi: int,
+        label: str,
+        limit: int | None,
+        reverse: bool,
+        epoch: int | None,
+    ) -> list[int]:
+        """Which of ``groups``, the row groups of a multi-group fragment
+        whose version stats meet [lo, hi], a ``label`` page over [lo,
+        hi] decodes. The first page for a label reads the fragment's
+        ``label`` column once and caches its matches per row group in
+        the fragment's ``_Footer`` (same validity and byte budget as
+        the footer, dropped with it by ``_uncache``), so later pages
+        read no key column. Groups with no match are skipped; the rest
+        are taken in read direction (by min version, or max when
+        ``reverse``), every group only partly inside [lo, hi] among
+        them, until the groups wholly inside hold ``limit`` matches and
+        no further group can hold a version between theirs — the
+        fragment's first ``limit`` matches then lie in the groups
+        taken."""
+        counts = foot.counts.get(label)
+        if counts is None:
+            counts = _label_group_counts(pf, label)
+            foot = foot._replace(counts={**foot.counts, label: counts})
+            self._cache_put(name, foot, foot.nbytes(), epoch)
+        stats = foot.stats
+        groups = [g for g in groups if counts[g]]
+        if stats is None or limit is None:
+            return groups
+        groups.sort(key=(lambda g: -stats[g][1]) if reverse else (lambda g: stats[g][0]))
+        taken: list[int] = []
+        held, reach = 0, None
+        for g in groups:
+            g_lo, g_hi = stats[g]
+            if held >= limit and (g_hi < reach if reverse else g_lo > reach):
+                break
+            taken.append(g)
+            if lo <= g_lo and g_hi <= hi:
+                held += counts[g]
+                if reverse:
+                    reach = g_lo if reach is None else min(reach, g_lo)
+                else:
+                    reach = g_hi if reach is None else max(reach, g_hi)
+        return sorted(taken)
 
     def dataframe(self) -> DataFrame:
         """The whole committed log as a DataFrame (analysis entry point)."""

@@ -1690,6 +1690,7 @@ def test_scan_rows_label_matches_scan_dataframe(log):
         dict(label="blue", reverse=True, limit=1),
         dict(label="blue", version=4),
         dict(label="red", version=3, skip_first=True),
+        dict(label="red", limit=0),
     ]
     for kw in cases:
         fast = log.scan_rows(**kw)
@@ -1706,9 +1707,13 @@ def _skewed_events(n: int, seed: int) -> list[tuple[str, str]]:
     return [(rng.choice(labels), json.dumps({"i": i})) for i in range(n)]
 
 
-def _assert_label_pages(log, events: list[tuple[str, str]], starts) -> None:
+def _assert_label_pages(
+    log, events: list[tuple[str, str]], starts, full: dict | None = None
+) -> None:
     """Forward and reverse label pages with limit 1, 7 and 100 from each
-    start equal a pure-Python filter of the appended events."""
+    start equal a pure-Python filter of the appended events; with
+    ``full`` (version -> the 7 fields, ``_stored_rows``) every field of
+    every row is compared."""
     stored = [(lab, minify_json(pay)) for lab, pay in events]
     for lab in ("hot", "rare"):
         for limit in (1, 7, 100):
@@ -1717,17 +1722,48 @@ def _assert_label_pages(log, events: list[tuple[str, str]], starts) -> None:
                 rev = [v for v in range(start, 0, -1) if stored[v - 1][0] == lab]
                 for reverse, want in ((False, fwd), (True, rev)):
                     kw = dict(version=start, label=lab, limit=limit, reverse=reverse)
-                    got = [(r.version, r.label, r.payload) for r in log.scan_rows(**kw)]
+                    page = log.scan_rows(**kw)
+                    got = [(r.version, r.label, r.payload) for r in page]
                     assert got == [(v, *stored[v - 1]) for v in want[:limit]], kw
+                    if full is not None:
+                        assert [tuple(r) for r in page] == [full[v] for v in want[:limit]]
+
+
+def _stored_rows(log) -> dict[int, tuple]:
+    """version -> (version, version_prev, version_next, timestamp,
+    label, payload, checksum) as the engine stores them, read without
+    ``scan_rows`` (every parquet file of the manifest, or the in-memory
+    engine's rows); each stored checksum is recomputed."""
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.sources.binformat import spark_checksum
+
+    if log.path is None:
+        rows = list(log._rows)
+    else:
+        rows = []
+        for f in _manifest_parquet(log):
+            tbl = pq.read_table(os.path.join(log.path, f))
+            cols = ("version", "version_prev", "timestamp", "label", "payload", "checksum")
+            rows += zip(*[tbl.column(c).to_pylist() for c in cols])
+    head = log.version()
+    out = {}
+    for v, vp, ts, lab, pay, ck in rows:
+        assert ck == spark_checksum(ts, lab, pay, vp) and vp == v - 1
+        out[v] = (v, vp, 0 if v == head else v + 1, ts, lab, pay, ck)
+    assert sorted(out) == list(range(1, head + 1))
+    return out
 
 
 @pytest.mark.parametrize("engine", ["parquet", "inmem"])
 def test_label_pages_over_multi_group_fold(tmp_path, engine):
-    """Label pages read a fold of many row groups through the key-column
-    probe (only the fragment's first ``limit`` matches by version are
-    decoded), a 1500-row fragment of two groups, and the cached tail of
-    single appends — and must equal a pure-Python filter on both
-    engines."""
+    """Label pages read a fold of many row groups through the cached
+    per-group label counts (only the groups that can hold the
+    fragment's first ``limit`` matches are decoded), a 1500-row
+    fragment of two groups, and the cached tail of single appends; and
+    version pages slice the fold. Every field of every row — the head's
+    ``version_next == 0`` and the checksum included — must equal what
+    the engine stores, on both engines."""
     if engine == "inmem":
         from eventlog_spark.inmem import InMemEventLog
 
@@ -1748,14 +1784,22 @@ def test_label_pages_over_multi_group_fold(tmp_path, engine):
 
         (fold,) = [f for f in log._manifest_files() if f.startswith("compact-")]
         assert pq.ParquetFile(os.path.join(log.path, fold)).metadata.num_row_groups == 5
-    _assert_label_pages(log, events, [1, 777, 2500, 4999, 5001, 6000, 6520, 6540])
+    full = _stored_rows(log)
+    assert full[6540][2] == 0
+    _assert_label_pages(log, events, [1, 777, 2500, 4999, 5001, 6000, 6520, 6540], full)
+    for start in (1, 777, 4500, 5900, 6540):
+        fwd = log.scan_rows(version=start, limit=1000)
+        assert [tuple(r) for r in fwd] == [full[v] for v in range(start, min(start + 1000, 6541))]
+        rev = log.scan_rows(version=start, limit=1000, reverse=True)
+        assert [tuple(r) for r in rev] == [full[v] for v in range(start, max(start - 1000, 0), -1)]
 
 
 def test_label_pages_on_label_clustered_compaction(spark, tmp_path):
     """After ``compact(cluster_by="label")`` each file is ordered by
     (label, version), not by version, and every file is larger than
-    the hot-tail cache bound, so label pages go through the key-column
-    probe on it; they must still equal a pure-Python filter."""
+    the hot-tail cache bound, so pages decode its row groups; label
+    pages must still equal a pure-Python filter, and version pages,
+    whose rows are no slice of such a file, the stored rows."""
     import pyarrow.parquet as pq
 
     from eventlog_spark.log import ROW_GROUP_ROWS
@@ -1771,24 +1815,40 @@ def test_label_pages_on_label_clustered_compaction(spark, tmp_path):
     for f in files:
         assert pq.ParquetFile(os.path.join(log.path, f)).metadata.num_rows > ROW_GROUP_ROWS
     _assert_label_pages(log, events, [1, 999, 2001, 3500, 4000])
+    stored = [(lab, minify_json(pay)) for lab, pay in events]
+
+    def assert_version_pages():
+        for start in (1, 999, 2001, 3500):
+            page = log.scan_rows(version=start, limit=1000)
+            want = range(start, min(start + 1000, 4001))
+            assert [(r.version, r.label, r.payload) for r in page] == [
+                (v, *stored[v - 1]) for v in want
+            ]
+            page = log.scan_rows(version=start, limit=1000, reverse=True)
+            want = range(start, max(start - 1000, 0), -1)
+            assert [r.version for r in page] == list(want)
+
+    assert_version_pages()
     # no writer orders a label's rows against version order, but the
-    # probe must not rely on that: rewrite each file (same rows, so the
+    # pages must not rely on that: rewrite each file (same rows, so the
     # manifest stats still hold) in descending version order
     for f in files:
         full = os.path.join(log.path, f)
         tbl = pq.read_table(full)
         pq.write_table(tbl.sort_by([("version", "descending")]), full, row_group_size=700)
     _assert_label_pages(log, events, [1, 999, 2001, 3500, 4000])
+    assert_version_pages()
 
 
 def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     """Layout and decode-budget pin. A minor fold writes row groups of
     at most ROW_GROUP_ROWS rows, each with version min/max stats; a
     1000-event page over a 24k-row fold decodes at most two of them;
-    and a 100-event label page reads only ``version`` and ``label``
-    of its candidate groups, then decodes every column only for the
-    groups holding its rows. Every page read decodes on the calling
-    thread (``use_threads=False``)."""
+    the first 100-event label page reads the fold's ``label`` column
+    once, then decodes every column only for the groups holding its
+    rows (and the group its start cuts, which the counts cannot
+    split); a later page of that label reads no key column. Every page
+    read decodes on the calling thread (``use_threads=False``)."""
     import pyarrow.parquet as pq
 
     from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
@@ -1816,7 +1876,7 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
         return read_row_groups(self, row_groups, columns=columns, **kw)
 
     def spy_read(self, *a, **kw):
-        calls.append(([-1], None))
+        calls.append(([-1], kw.get("columns")))
         threaded.append(kw.get("use_threads", True))
         return read(self, *a, **kw)
 
@@ -1828,17 +1888,31 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     decoded = [g for groups, _cols in calls for g in groups]
     assert len(decoded) <= 2 and sum(sizes[g] for g in decoded) <= 2 * ROW_GROUP_ROWS
 
-    calls.clear()
-    page = log.scan_rows(version=3000, label="rare", limit=100)
-    want = [v for v in range(3000, 24_001) if events[v - 1][0] == "rare"][:100]
-    assert [r.version for r in page] == want
-    probes = [cols for _groups, cols in calls if cols is not None]
-    assert probes == [["version", "label"]]
-    full = sorted(g for groups, cols in calls if cols is None for g in groups)
-    holding = sorted({g for g, (a, b) in enumerate(stats) for v in want if a <= v <= b})
-    assert full == holding
-    # the page's rows span fewer groups than its version interval does
-    assert len(holding) < sum(1 for a, b in stats if b >= 3000)
+    rare = [v for v in range(1, 24_001) if events[v - 1][0] == "rare"]
+    counts = [sum(1 for v in rare if a <= v <= b) for a, b in stats]
+    for start in (3000, 9000):
+        calls.clear()
+        page = log.scan_rows(version=start, label="rare", limit=100)
+        want = [v for v in rare if v >= start][:100]
+        assert [r.version for r in page] == want
+        keys = [(groups, cols) for groups, cols in calls if cols is not None]
+        # one label-only read of the whole fold, on the first page only
+        assert keys == ([([-1], ["label"])] if start == 3000 else [])
+        full = {g for groups, cols in calls if cols is None for g in groups}
+        # the group the start cuts, if it holds the label at all, and
+        # the groups wholly past the start, in order, until their
+        # counts reach the limit
+        budget = {g for g, (a, b) in enumerate(stats) if a < start <= b and counts[g]}
+        held = 0
+        for g, (a, _b) in enumerate(stats):
+            if a >= start and counts[g] and held < 100:
+                budget.add(g)
+                held += counts[g]
+        assert full == budget
+        holding = {g for g, (a, b) in enumerate(stats) for v in want if a <= v <= b}
+        assert holding <= full and len(full - holding) <= 2
+        # the page's rows span fewer groups than its version interval does
+        assert len(full) < sum(1 for a, b in stats if b >= start)
     assert threaded and not any(threaded)
 
     # a small fragment another instance wrote is read whole
@@ -1975,7 +2049,10 @@ def test_repeated_pages_parse_a_fold_footer_once(tmp_path, monkeypatch):
 
 def test_footer_cache_counts_against_row_cache_bytes(tmp_path, monkeypatch):
     """A cached footer is charged its serialized size against
-    ROW_CACHE_BYTES and is evicted oldest first like cached rows."""
+    ROW_CACHE_BYTES, plus, for each label a page counted in it, the
+    label's bytes and 8 bytes a row group; it is evicted oldest first
+    like cached rows, and its counts leave with it when the fragment
+    retires."""
     import eventlog_spark.log as log_mod
 
     log, _events = _two_fold_log(str(tmp_path / "bytes"))
@@ -1986,11 +2063,145 @@ def test_footer_cache_counts_against_row_cache_bytes(tmp_path, monkeypatch):
     size = held[first][0].md.serialized_size
     assert list(held) == [first] and held[first][1] == size
     assert reader._frag_bytes_total == size
+    # a label page counts its label per row group in the footer entry
+    reader.scan_rows(version=1, label="rare", limit=5)
+    reader.scan_rows(version=1, label="warm", limit=5)
+    foot = held[first][0]
+    assert sorted(foot.counts) == ["rare", "warm"]
+    assert [len(c) for c in foot.counts.values()] == [foot.md.num_row_groups] * 2
+    charged = size + len("rare") + len("warm") + 2 * 8 * foot.md.num_row_groups
+    assert held[first][1] == foot.nbytes() == charged
+    assert reader._frag_bytes_total == charged
     # room for one footer only: the second evicts the first
     monkeypatch.setattr(log_mod, "ROW_CACHE_BYTES", size + size // 2)
-    reader.scan_rows(version=3001, limit=10)
-    assert list(held) == [second]
-    assert reader._frag_bytes_total == held[second][0].md.serialized_size
+    reader.scan_rows(version=3001, label="rare", limit=5)
+    assert list(held) == [second] and held[second][0].counts.keys() == {"rare"}
+    assert reader._frag_bytes_total == held[second][0].nbytes()
+    monkeypatch.undo()
+    # a fold retires both folds: their footers and counts leave the cache
+    reader.scan_rows(version=1, label="rare", limit=5)
+    assert set(held) == {first, second}
+    reader.append("tail", '{"t": 1}')
+    assert reader.minor_compact() == 3
+    assert not {first, second} & set(held)
+    assert reader._frag_bytes_total == sum(n for _, n in held.values())
+
+
+def test_label_counts_under_concurrent_label_pages(tmp_path):
+    """Stress: six readers page three labels over two multi-group folds
+    on one instance while another thread keeps dropping the folds'
+    cache entries, so footers and label counts are parsed, counted and
+    replaced concurrently. Every page equals a pure-Python filter, and
+    every entry is charged what it holds."""
+    import random
+    import sys
+    import threading
+
+    log, events = _two_fold_log(str(tmp_path / "race"))
+    reader = EventLog.open(None, log.path)
+    stored = [(lab, minify_json(pay)) for lab, pay in events]
+    folds = [_fold_at(reader, 1), _fold_at(reader, 3001)]
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def pages(seed):
+        rng = random.Random(seed)
+        try:
+            for _ in range(60):
+                lab = rng.choice(["hot", "warm", "rare"])
+                start, reverse = rng.randint(1, 6000), rng.random() < 0.5
+                page = reader.scan_rows(version=start, label=lab, limit=20, reverse=reverse)
+                span = range(start, 0, -1) if reverse else range(start, 6001)
+                want = [v for v in span if stored[v - 1][0] == lab][:20]
+                assert [(r.version, r.label, r.payload) for r in page] == [
+                    (v, *stored[v - 1]) for v in want
+                ]
+        except BaseException as e:  # surfaced below
+            errors.append(e)
+
+    def dropper():
+        while not done.is_set():
+            reader._uncache(folds)
+            time.sleep(0.002)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        readers = [threading.Thread(target=pages, args=(i,)) for i in range(6)]
+        drop = threading.Thread(target=dropper)
+        for t in readers + [drop]:
+            t.start()
+        for t in readers:
+            t.join(timeout=120)
+        done.set()
+        drop.join(timeout=30)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers + [drop])
+    assert not errors, errors[0]
+    held = reader._frag_row_cache
+    assert reader._frag_bytes_total == sum(n for _, n in held.values())
+    assert all(n == v.nbytes() for v, n in held.values())
+
+
+def test_label_counts_follow_a_fold_rewritten_in_place(tmp_path):
+    """The per-group label counts live in the footer's cache entry: a
+    fold rewritten under its own name with another row-group layout is
+    parsed again and counted again, never paged with the old counts."""
+    import pyarrow.parquet as pq
+
+    log, events = _two_fold_log(str(tmp_path / "rewrite"))
+    reader = EventLog.open(None, log.path)
+    starts = [1, 1500, 2500, 2999, 3001, 6000]
+    _assert_label_pages(reader, events, starts)
+    fold = _fold_at(reader, 1)
+    assert len(reader._frag_row_cache[fold][0].counts["rare"]) == 3
+    full = os.path.join(reader.path, fold)
+    tbl = pq.read_table(full)
+    os.remove(full)
+    pq.write_table(tbl, full, row_group_size=600)
+    _assert_label_pages(reader, events, starts)
+    assert len(reader._frag_row_cache[fold][0].counts["rare"]) == 5
+
+
+def test_version_pages_over_descending_row_groups(tmp_path):
+    """A version page slices its rows out of the decoded groups only
+    when the slice's versions are exactly the page's. A fold rewritten
+    so each row group holds a dense version range in descending order
+    puts a group's maximum at the slice offset of a page starting
+    there; forward and reverse 1000-event pages must still return the
+    stored rows, through the Arrow filter."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from eventlog_spark.log import ROW_GROUP_ROWS
+
+    log, _events = _two_fold_log(str(tmp_path / "desc"))
+    fold = _fold_at(log, 1)
+    full = os.path.join(log.path, fold)
+    tbl = pq.read_table(full)
+    parts = [
+        tbl.slice(i, ROW_GROUP_ROWS).sort_by([("version", "descending")])
+        for i in range(0, tbl.num_rows, ROW_GROUP_ROWS)
+    ]
+    os.remove(full)
+    pq.write_table(pa.concat_tables(parts), full, row_group_size=ROW_GROUP_ROWS)
+    stats = [
+        pq.ParquetFile(full).metadata.row_group(g).column(0).statistics
+        for g in range(len(parts))
+    ]
+    assert [(s.min, s.max) for s in stats] == [(1, 1024), (1025, 2048), (2049, 3000)]
+    stored = _stored_rows(log)
+    for lg in (log, EventLog.open(None, log.path)):
+        # 1024 and 2048 start the page at a group's first row
+        for start in (1, 500, 1024, 1025, 2048, 2500):
+            page = lg.scan_rows(version=start, limit=1000)
+            want = range(start, start + 1000)
+            assert [tuple(r) for r in page] == [stored[v] for v in want], start
+        for start in (2023, 3047, 2500, 1000):
+            page = lg.scan_rows(version=start, limit=1000, reverse=True)
+            want = range(start, max(start - 1000, 0), -1)
+            assert [tuple(r) for r in page] == [stored[v] for v in want], start
 
 
 def test_footer_cache_drops_retired_and_cas_losing_names(spark, tmp_path, monkeypatch):

@@ -50,6 +50,8 @@ import socketserver
 import struct
 import threading
 
+from .hashpool import _read_exact
+
 
 class ClaimServiceError(Exception):
     """The claim service answered, but not with what the contract
@@ -59,16 +61,6 @@ class ClaimServiceError(Exception):
     keeps it; but the caller must see a clear store-protocol failure,
     not a ``KeyError`` escaping outside the transport-error handling
     (round-11 advice)."""
-
-
-def _read_exact(rfile, n: int) -> bytes | None:
-    buf = b""
-    while len(buf) < n:
-        chunk = rfile.read(n - len(buf))
-        if not chunk:
-            return None
-        buf += chunk
-    return buf
 
 
 class _Handler(socketserver.StreamRequestHandler):

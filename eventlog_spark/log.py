@@ -1449,8 +1449,7 @@ class EventLog:
         the count and the write are separate jobs; a nondeterministic
         upstream can make them disagree, which would otherwise publish
         a head that misnames the written rows). ``part-<tag>-…`` names
-        keep the tail stream's ``part-*`` glob (streaming/streams.py)
-        and minor-compact eligibility."""
+        keep the files eligible for the minor fold (``minor_compact``)."""
         tmp = os.path.join(self.path, f".bulk-{uuid.uuid4().hex}.tmp")
         try:
             out.write.mode("overwrite").parquet(tmp)
@@ -2196,9 +2195,9 @@ class EventLog:
         the compacted set. No reader at any interleaving sees a partial
         or doubled log — same contract the reference buys with its scan
         RWMutex (eventlog/file/file.go:221-228), without blocking
-        readers. ``compact-`` names also keep the rewritten history out
-        of the tail stream's ``part-*`` glob (streams.py) so an active
-        subscriber is not re-delivered compacted rows as new files."""
+        readers. ``compact-`` names keep the rewritten files out of the
+        minor fold, which takes only ``part-*`` fragments and small
+        folds."""
         with self._commit_section():
             self.vacuum()  # reap files retired by PREVIOUS compactions
             # SNAPSHOT FIRST (round-9 advice): capture the file set, the
@@ -2378,10 +2377,9 @@ class EventLog:
         a previous fold past ``ROW_GROUP_ROWS``) are read from parquet;
         then one file write, one atomic manifest publish, replaced
         fragments retired into the vacuum ledger (and dropped from the
-        cache) for straggler readers. The
-        ``compact-`` output name keeps the rewritten history out of the
-        tail stream's ``part-*`` glob (streams.py), exactly like major
-        compaction. Returns the number of fragments folded."""
+        cache) for straggler readers. The fold is named
+        ``compact-…-minor`` so a later fold takes it again only while it
+        is small. Returns the number of fragments folded."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -2448,7 +2446,7 @@ class EventLog:
     # Retired-but-not-deleted files wait out this grace window so
     # straggler readers (a DataFrame built against the previous manifest,
     # another process that loaded state just before the swap, a tail
-    # stream that has not yet picked the fragments up) can drain.
+    # stream task reading a range it resolved before the swap) can drain.
     VACUUM_GRACE_SECONDS = int(os.environ.get("SPARK_GRAFT_LOG_GC_GRACE", 900))
 
     def _retired_path(self) -> str:

@@ -2,10 +2,10 @@
 
 Reference parity: O13 subscription (eventlog/eventlog.go:277-282,
 api/fasthttp/serve.go:381-463) — a subscriber learns the newest head
-version after every append. Spark rendition: ``readStream`` over the
-log directory + ``foreachBatch`` publishing ``max(version)``; multiple
-appends conflate into one micro-batch, which IS the reference's
-"drop-if-slow, latest-wins" delivery (broadcast.go:24-27).
+version after every append. Spark rendition: a source whose offset is
+the log version + ``foreachBatch`` publishing ``max(version)``;
+multiple appends conflate into one micro-batch, which IS the
+reference's "drop-if-slow, latest-wins" delivery (broadcast.go:24-27).
 
 Beyond parity, the streaming analytics surface the task mandates:
 watermarked tumbling/sliding/session windows and within-watermark
@@ -16,8 +16,7 @@ trigger (tests use availableNow + memory sink for determinism).
 Scale notes: all stateful ops key their state by (window, group key) —
 state size ∝ active windows × keys, bounded by the watermark horizon;
 ``spark.sql.streaming.statestore`` backends (RocksDB on real clusters)
-keep it off-heap. File-source streams at 100 TB use
-``maxFilesPerTrigger`` to bound micro-batch size.
+keep it off-heap.
 """
 
 from __future__ import annotations
@@ -25,77 +24,107 @@ from __future__ import annotations
 import os
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
-from ..log import EVENT_SCHEMA, EventLog
+from ..log import EVENT_SCHEMA, ROW_GROUP_ROWS, EventLog
+from ..log import _page_mask, _version_group_stats, _version_slice
+from ..session import ship_package
 
 
 # -- log tail / subscription (O13) -------------------------------------------
 
 
-def log_tail_stream(log: EventLog, commit_wait: float = 5.0) -> DataFrame:
-    """Streaming view of the log: every committed fragment becomes part
-    of a micro-batch exactly once.
+class _TailReader(DataSourceStreamReader):
+    """The log as a replayable source whose offset is ``{"version": n}``:
+    a micro-batch is the version range (start, end], which folds,
+    compactions and vacuums cannot move."""
 
-    Each micro-batch keeps only rows whose fragment a commit PUBLISHED
-    (``EventLog.published_files``, read AT TASK EXECUTION TIME), so a
-    crashed writer's fragment and a losing writer's fragment — which
-    holds a ``part-*`` name, with versions the winner owns, until its
-    writer discards it — are never delivered as if committed; the same
-    snapshot-isolation contract the batch readers enforce. A fragment
-    not yet published gets a bounded wait (``commit_wait`` seconds): a
-    live writer claims its delta milliseconds after the rename, so
-    in-flight commits pass; a crash fragment never commits and is
-    dropped, and a discarded loser's file is gone, which drops it at
-    once. The manifest lives next to the data, so executors can read it
-    wherever the log directory is reachable (local FS here, shared
-    storage on a cluster)."""
-    # pathGlobFilter pins the stream to append fragments (``part-*``):
-    # a compaction rewrites history into ``compact-*`` files, and without
-    # the glob the file-stream source would discover those as NEW files
-    # and re-deliver every compacted row. With it, compaction is
-    # invisible to a live tail (fragments it retires stay on disk for
-    # the vacuum grace window, log.py:compact, so an in-flight batch
-    # still reads them). A tail started AFTER a compaction begins at the
-    # surviving fragments — it is a tail, not a replay; use scan() for
-    # history. ignoreMissingFiles: a loser's fragment may be listed and
-    # then discarded before its task reads it.
-    raw = (
-        log.spark.readStream.schema(EVENT_SCHEMA)
-        .option("pathGlobFilter", "part-*")
-        .option("ignoreMissingFiles", "true")
-        .parquet(log.path)
+    def __init__(self, path: str):
+        self.path = path
+
+    def initialOffset(self) -> dict:
+        return {"version": 0}
+
+    def latestOffset(self) -> dict:
+        return {"version": EventLog.open(None, self.path).version()}
+
+    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        """Version ranges tiling (start, end], cut at the manifest-entry
+        boundaries seen now, with adjacent entries packed until a range
+        holds ``ROW_GROUP_ROWS`` versions. The offsets of the earlier
+        file-source tail name no version: its checkpoints cannot resume."""
+        if "version" not in start or "version" not in end:
+            raise RuntimeError(
+                f"stream offsets {start}, {end} name no log version: the checkpoint "
+                "comes from the file-source tail of an earlier release and cannot "
+                "resume; start the query on a fresh checkpoint (MIGRATION.md)"
+            )
+        lo, hi = start["version"] + 1, end["version"]
+        entries = EventLog.open(None, self.path)._manifest.overlapping(lo, hi)
+        out = []
+        for cut in sorted({min(e["hi"], hi) for e in entries} | {hi}):
+            if cut - lo + 1 >= ROW_GROUP_ROWS or cut == hi:
+                out.append(InputPartition((lo, cut)))
+                lo = cut + 1
+        return out
+
+    def read(self, partition: InputPartition):
+        """The range's events as Arrow batches, found through a manifest
+        loaded here, as a page finds its interval, so a fold or vacuum
+        since planning cannot move them. Only row groups whose version
+        stats meet the range are decoded, one at a time. Dense versions
+        give ``scan_rows``' check: exactly hi-lo+1 rows, or RuntimeError."""
+        import pyarrow.parquet as pq
+
+        lo, hi = partition.value
+        got, cols = 0, EVENT_SCHEMA.fieldNames()
+        entries = EventLog.open(None, self.path)._manifest.overlapping(lo, hi)
+        for entry in sorted(entries, key=lambda e: e["lo"]):
+            pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
+            stats = _version_group_stats(pf.metadata)
+            for g in range(pf.metadata.num_row_groups):
+                g_lo, g_hi = stats[g] if stats else (lo, hi)
+                if g_hi < lo or g_lo > hi:
+                    continue
+                tbl = pf.read_row_group(g, columns=cols, use_threads=False)
+                part = _version_slice(tbl, max(lo, g_lo), min(hi, g_hi))
+                if part is None:
+                    part = tbl.filter(_page_mask(tbl, lo, hi, None))
+                got += part.num_rows
+                yield from part.to_batches()
+        if got != hi - lo + 1:
+            raise RuntimeError(
+                f"stream range [{lo}, {hi}] read {got} rows, expected {hi - lo + 1}"
+            )
+
+
+class _TailSource(DataSource):
+    def schema(self):
+        return EVENT_SCHEMA
+
+    def streamReader(self, schema) -> _TailReader:
+        return _TailReader(self.options["path"])
+
+
+def log_tail_stream(log: EventLog) -> DataFrame:
+    """Streaming view of the log: every committed event exactly once
+    per checkpoint, a fresh one starting at version 1. The source reads
+    up to the published head through the manifest, so a crashed or
+    losing writer's fragment, which no commit names, is never
+    delivered; workers read the manifest beside the data."""
+    ship_package(log.spark)
+    log.spark.dataSource.register(_TailSource)
+    return log.spark.readStream.format(_TailSource.name()).load(log.path)
+
+
+def _start(stream: DataFrame, process, checkpoint_dir: str, available_now: bool):
+    """Run ``process`` on every micro-batch of ``stream``, checkpointed."""
+    writer = stream.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
     )
-    log_path = log.path
-    cols = [f.name for f in EVENT_SCHEMA.fields]
-
-    def _filter_published(batches):
-        import time as _time
-
-        reader = None
-        published: set[str] = set()
-        for pdf in batches:
-            names = set(pdf["_file"].unique())
-            pending = names - published
-            deadline = _time.monotonic() + commit_wait
-            while pending:
-                if reader is None:
-                    reader = EventLog.open(None, log_path)
-                published = reader.published_files()
-                pending = {
-                    n
-                    for n in pending - published
-                    if os.path.exists(os.path.join(log_path, n))
-                }
-                if not pending or _time.monotonic() >= deadline:
-                    break
-                _time.sleep(0.05)
-            yield pdf[pdf["_file"].isin(published)][cols]
-
-    return raw.select("*", F.col("_metadata.file_name").alias("_file")).mapInPandas(
-        _filter_published, EVENT_SCHEMA
-    )
+    return (writer.trigger(availableNow=True) if available_now else writer).start()
 
 
 def subscribe_stream(
@@ -113,14 +142,7 @@ def subscribe_stream(
         if row["v"] is not None:
             on_version(int(row["v"]))
 
-    writer = (
-        log_tail_stream(log)
-        .writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(log_tail_stream(log), publish, checkpoint_dir, available_now)
 
 
 def replay(log: EventLog, process: Callable[[DataFrame, int], None], checkpoint_dir: str):
@@ -128,13 +150,7 @@ def replay(log: EventLog, process: Callable[[DataFrame, int], None], checkpoint_
     (availableNow trigger): processes all existing data as micro-batches
     then stops — the reference's catch-up-scan (client/http.go:342-429)
     expressed as a stream."""
-    return (
-        log_tail_stream(log)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(log_tail_stream(log), process, checkpoint_dir, True)
 
 
 # -- stream-stream interval join -----------------------------------------------
@@ -287,13 +303,7 @@ def append_stream(
             txn=(sid, batch_id),
         )
 
-    writer = (
-        source.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(source, commit, checkpoint_dir, available_now)
 
 
 # -- custom stateful operator (applyInPandasWithState) ------------------------

@@ -4,12 +4,14 @@ oracle-checked in batch via operators/streamlike.py — same expressions.)"""
 
 from __future__ import annotations
 
+import threading
 import time
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import InputPartition
 
-from eventlog_spark.log import EventLog
+from eventlog_spark.log import EVENT_SCHEMA, EventLog
 from eventlog_spark.streaming import streams
 
 
@@ -303,7 +305,7 @@ def test_conversion_join_streaming_matches_batch(spark, tmp_path, sf_dir):
 def _tail_versions(log, ckpt: str) -> list[int]:
     got: list[int] = []
     q = (
-        streams.log_tail_stream(log, commit_wait=0.3)
+        streams.log_tail_stream(log)
         .writeStream.foreachBatch(lambda b, _: got.extend(r.version for r in b.collect()))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
@@ -429,11 +431,11 @@ def test_stream_restart_recovers_state_and_reads_only_delta(spark, sf_dir):
 
 
 def test_tail_stream_unaffected_by_compaction(spark, tmp_path):
-    """streams.py pins the file source to ``part-*`` so a compaction —
-    which rewrites all history into ``compact-*`` files and retires the
+    """The tail's offset is a log version, so a compaction — which
+    rewrites all history into ``compact-*`` files and retires the
     fragments into the vacuum ledger — neither re-delivers compacted
-    rows as new files nor breaks an in-flight tail. Sequence: tail
-    drains 1-3, compact, append 4-5, drain again → exactly 4-5, once."""
+    rows nor breaks an in-flight tail. Sequence: tail drains 1-3,
+    compact, append 4-5, drain again → exactly 4-5, once."""
     log = EventLog.create(spark, str(tmp_path / "log"))
     log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}'), ("c", '{"x":3}')])
 
@@ -441,7 +443,7 @@ def test_tail_stream_unaffected_by_compaction(spark, tmp_path):
 
     def drain():
         q = (
-            streams.log_tail_stream(log, commit_wait=0.3)
+            streams.log_tail_stream(log)
             .writeStream.foreachBatch(
                 lambda b, _: got.extend(r.version for r in b.collect())
             )
@@ -466,13 +468,12 @@ def test_tail_stream_unaffected_by_compaction(spark, tmp_path):
 
 
 def test_tail_stream_across_minor_compaction(spark, tmp_path):
-    """Minor compaction (log.py:minor_compact) folds part-* fragments
-    the tail stream may NOT have processed yet — unlike the major-
-    compaction test above, where history was drained first. The folded
-    fragments stay on disk in the vacuum ledger for the grace window,
-    so an in-flight tail still delivers them exactly once; the
-    compact-* fold output is outside the part-* glob, so nothing is
-    double-delivered."""
+    """Minor compaction (log.py:minor_compact) folds fragments the
+    tail stream may NOT have processed yet — unlike the major-
+    compaction test above, where history was drained first. The tail
+    reads the undelivered versions from the fold the manifest now
+    names, exactly once: a version range does not move when the files
+    holding it are rewritten."""
     log = EventLog.create(spark, str(tmp_path / "log"))
     log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}'), ("c", '{"x":3}')])
 
@@ -480,7 +481,7 @@ def test_tail_stream_across_minor_compaction(spark, tmp_path):
 
     def drain():
         q = (
-            streams.log_tail_stream(log, commit_wait=0.3)
+            streams.log_tail_stream(log)
             .writeStream.foreachBatch(
                 lambda b, _: got.extend(r.version for r in b.collect())
             )
@@ -506,6 +507,152 @@ def test_tail_stream_across_minor_compaction(spark, tmp_path):
     drain()
     assert sorted(got) == [1, 2, 3, 4, 5, 6]
 
+
+
+def test_tail_stream_delivers_folded_then_vacuumed_events(spark, tmp_path):
+    """Events the tail has not delivered yet, folded and then vacuumed
+    before the next drain, are read from the fold: the second drain
+    delivers exactly 4-6."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}'), ("c", '{"x":3}')])
+    ckpt = str(tmp_path / "ckpt")
+    assert _tail_versions(log, ckpt) == [1, 2, 3]
+    log.append("d", '{"x":4}')
+    log.append("e", '{"x":5}')
+    assert log.minor_compact() >= 2
+    log.vacuum(grace_seconds=0)
+    log.append("f", '{"x":6}')
+    assert _tail_versions(log, ckpt) == [4, 5, 6]
+
+
+def test_replay_reads_folded_and_vacuumed_history(spark, tmp_path):
+    """``replay`` serves the whole log, not just its unfolded tail."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    for i in range(1, 6):
+        log.append("e", f'{{"i":{i}}}')
+    assert log.minor_compact() == 5
+    log.vacuum(grace_seconds=0)
+    log.append("e", '{"i":6}')
+    got: list[int] = []
+    q = streams.replay(
+        log, lambda b, _: got.extend(r.version for r in b.collect()), str(tmp_path / "ckpt")
+    )
+    _await(q, timeout=120)
+    assert sorted(got) == [1, 2, 3, 4, 5, 6]
+
+
+def test_replay_over_label_clustered_compaction(spark, tmp_path):
+    """After ``compact(cluster_by="label")`` every file's version range
+    spans the log and no row group is a dense version run: the ranges
+    still tile the log and each read filters its rows out of every
+    file."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    log.append_multi([("xyz"[i % 3], f'{{"i":{i}}}') for i in range(3000)])
+    log.compact(target_partitions=3, cluster_by="label")
+    log.append("w", '{"i":-1}')
+    got: list[int] = []
+    q = streams.replay(
+        log, lambda b, _: got.extend(r.version for r in b.collect()), str(tmp_path / "ckpt")
+    )
+    _await(q, timeout=120)
+    assert sorted(got) == list(range(1, 3002))
+
+
+def test_tail_stream_refuses_file_source_checkpoint(spark, tmp_path):
+    """A query checkpoint of the earlier file-source tail holds file-log
+    offsets, which name no version: the tail refuses it and says why,
+    instead of failing on a missing key."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}')])
+    ckpt = str(tmp_path / "ckpt")
+    old = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .parquet(log.path)
+        .writeStream.foreachBatch(lambda b, _: None)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await(old, timeout=120)
+    log.append("c", '{"x":3}')
+    with pytest.raises(Exception) as err:
+        _tail_versions(log, ckpt)
+    assert "file-source tail" in str(err.value)
+    assert "MIGRATION.md" in str(err.value)
+
+
+def test_tail_stream_exactly_once_under_concurrent_writes(spark, tmp_path):
+    """A live tail under a short processing-time trigger, while a writer
+    thread appends and folds half way, delivers every version from 1
+    to the head exactly once."""
+    log = EventLog.create(spark, str(tmp_path / "log"))
+    got: list[int] = []
+    q = (
+        streams.log_tail_stream(log)
+        .writeStream.foreachBatch(lambda b, _: got.extend(r.version for r in b.collect()))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    n = 300
+
+    def write():
+        for i in range(n):
+            log.append("w", f'{{"i":{i}}}')
+            if i == n // 2:
+                assert log.minor_compact() >= 2
+
+    writer = threading.Thread(target=write)
+    try:
+        writer.start()
+        writer.join(timeout=120)
+        assert not writer.is_alive() and log.version() == n
+        deadline = time.monotonic() + 120
+        while len(got) < n and q.exception() is None and time.monotonic() < deadline:
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert q.exception() is None
+    assert sorted(got) == list(range(1, n + 1))
+
+
+def test_tail_partitions_cut_at_entries_pack_small_and_tile(tmp_path):
+    """The source plans version ranges that tile (start, end] exactly,
+    end only at manifest-entry boundaries, and pack adjacent small
+    entries until a range holds ROW_GROUP_ROWS versions; each range
+    reads back densely."""
+    log = EventLog.create(None, str(tmp_path / "log"))
+    for _ in range(3):
+        log.append_multi([("f", '{"x":1}')] * 1000)
+    assert log.minor_compact() == 3  # one fold over 1..3000
+    for _ in range(5):
+        log.append("s", '{"x":2}')  # 3001..3005, a fragment each
+    log.append_multi([("m", '{"x":3}')] * 1500)  # 3006..4505
+    for _ in range(3):
+        log.append("t", '{"x":4}')  # 4506..4508
+    reader = streams._TailSource({"path": log.path}).streamReader(EVENT_SCHEMA)
+    bounds = {e["hi"] for e in log._manifest.entries()}
+    assert 3000 in bounds and 4505 in bounds
+
+    def ranges(start, end):
+        parts = reader.partitions({"version": start}, {"version": end})
+        return [p.value for p in parts]
+
+    assert ranges(0, 4508) == [(1, 3000), (3001, 4505), (4506, 4508)]
+    assert ranges(1500, 3003) == [(1501, 3000), (3001, 3003)]
+    assert ranges(2990, 4508) == [(2991, 4505), (4506, 4508)]
+    for start, end in [(0, 4508), (1500, 3003), (2990, 4508), (3001, 3004), (7, 8)]:
+        got = ranges(start, end)
+        assert got[0][0] == start + 1 and got[-1][1] == end
+        assert all(a[1] + 1 == b[0] for a, b in zip(got, got[1:]))
+        assert all(hi in bounds or hi == end for _, hi in got)
+        for lo, hi in got:
+            batches = list(reader.read(InputPartition((lo, hi))))
+            versions = [v for b in batches for v in b.column("version").to_pylist()]
+            assert versions == list(range(lo, hi + 1))
+            assert all(b.schema.names == EVENT_SCHEMA.fieldNames() for b in batches)
+    with pytest.raises(RuntimeError, match="expected 2"):
+        list(reader.read(InputPartition((4508, 4509))))
 
 _INGEST_SCRIPT = """
 import sys

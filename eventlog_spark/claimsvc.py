@@ -4,7 +4,7 @@ Why this exists (round-10 verdict, "Object-store fencing is in-process
 only"): the CAS commit arbiter was proven against two substrates — the
 POSIX link store across real OS processes, and the in-memory
 object-store fake within one process — but the cross-OS-process storms
-(4 writers, SIGKILL mid-storm, pointer chaos) could only run over
+(4 writers, SIGKILL mid-storm, roll-up hint chaos) could only run over
 POSIX link, because a dict cannot span processes. This module closes
 that gap: a tiny stateful service holding the claim objects, reachable
 over a unix-domain socket, so INDEPENDENT OS processes exercise the

@@ -490,19 +490,19 @@ class LocalClient:
         label: str | None = None,
     ) -> Iterator[ClientEvent]:
         """Same pagination contract as the HTTP client (resume from
-        version-next/-previous until the 0 sentinel), batched through
-        the engine's ``scan`` so no page ever materializes more than
-        ``batch_hint`` rows on the driver."""
+        version-next/-previous until the 0 sentinel), paged through
+        the engine's driver-side ``scan_rows`` — no Spark job, and no
+        page holds more than ``batch_hint`` rows."""
         if version is None:
             version = self.version() if reverse else self.version_initial()
         while True:
-            rows = self._log.scan(
+            rows = self._log.scan_rows(
                 version=version,
                 reverse=reverse,
                 limit=batch_hint,
                 skip_first=skip_first,
                 label=label,
-            ).collect()
+            )
             skip_first = False
             if not rows:
                 return

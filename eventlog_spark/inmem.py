@@ -144,7 +144,7 @@ class InMemEventLog(EventLog):
     def _load_state(self) -> None:
         pass
 
-    def _write_state(self) -> None:
+    def _publish(self) -> None:
         pass
 
     def compact(self, target_partitions: int | None = None) -> None:

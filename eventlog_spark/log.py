@@ -27,14 +27,12 @@ Design (Spark-first, not a port):
   with no lock to leak. Inside one process a thread lock orders
   commits, the Spark rendition of the reference's writer mutex
   (file.go:57,396). OCC (O3/O4) is a compare inside that section.
-* Each commit writes one parquet fragment, claims ONE immutable delta
-  record carrying the new head fields (manifest.py — per-commit O(1),
-  paged checkpoints every K commits), and then publishes the head +
-  manifest seq in ``_state.json`` (atomic rename). The delta chain is
-  the commit truth; the pointer is a cache that readers roll forward
-  past. A LOST pointer recovers from the chain alone, with no Spark
-  session: the newest checkpoint carries the head of the delta it
-  rolled up, the deltas past it carry theirs, and a chain that yields
+* Each commit writes one parquet fragment and claims ONE immutable
+  delta record carrying the new head fields (manifest.py — per-commit
+  O(1), paged checkpoints every K commits). The delta chain is the only
+  commit record: open and every refresh roll forward along it, with no
+  Spark session; a cold open starts at the newest checkpoint, which
+  carries the head of the delta it rolled up, and a chain that yields
   no head is refused. Readers never take a lock: committed fragments
   and manifest records are immutable (snapshot isolation).
   A crash between fragment write and delta claim leaves a fragment no
@@ -95,8 +93,7 @@ EVENT_SCHEMA = StructType(
     ]
 )
 
-_STATE_FILE = "_state.json"  # leading underscore → invisible to parquet readers
-_META_FILE = "_eventlog_meta.json"
+_META_FILE = "_eventlog_meta.json"  # leading underscore → invisible to parquet readers
 
 # Row-group size of every driver-side write (commit fragments and minor
 # folds) and the hot-tail cache's fragment bound: a page read decodes
@@ -541,11 +538,10 @@ class EventLog:
     different hosts over a shared store (NFS, an object store with
     conditional PUT through ``claim_store``) stay
     exactly-one-winner-per-version with no lock to leak. The manifest
-    chain is the SOLE read truth: the pointer is a cache healed by
-    roll-forward, and the directory listing is never consulted. An
-    unpublished crash fragment is therefore invisible, never a
-    correctness hazard, and ``vacuum`` reaps it after the grace
-    window."""
+    chain is the SOLE read truth, and the directory listing is never
+    consulted. An unpublished crash fragment is therefore invisible,
+    never a correctness hazard, and ``vacuum`` reaps it after the
+    grace window."""
 
     def __init__(self, spark: SparkSession, path: str, claim_store=None):
         # Manifest I/O seam (manifest.py ClaimStore contract): None =
@@ -574,8 +570,7 @@ class EventLog:
         self._last_ts = 0
         self._stream_commits: dict[str, int] = {}  # foreachBatch idempotence
         # Committed data-file manifest: a log-structured chain of
-        # per-commit delta records + paged checkpoints (manifest.py);
-        # _state.json holds only a pointer (head fields + manifest_seq),
+        # per-commit delta records + paged checkpoints (manifest.py),
         # so a commit never rewrites the file list and a page read
         # loads only the manifest pages its version range overlaps.
         self._manifest: ManifestLog | None = None
@@ -600,10 +595,6 @@ class EventLog:
         self._cache_epoch = 0
         self._load_meta()
         self._load_state()
-        # roll the mirror forward past a possibly-lagging pointer — the
-        # delta chain is the commit truth (manifest.roll_forward)
-        with self._lock:
-            self._adopt_cas_head(self._manifest.roll_forward())
 
     # -- lifecycle (O21/O22) ------------------------------------------------
 
@@ -617,24 +608,14 @@ class EventLog:
     ) -> "EventLog":
         """O22: create a new empty log with immutable metadata
         (reference: file.go:127-161 + metadata pseudo-event header).
-        The empty log's pointer names seq 0, the empty chain, so the
-        first commit claims delta 1. ``makedirs(exist_ok=False)``
-        arbitrates create races."""
+        The empty log has an empty chain, so the first commit claims
+        delta 1. Format 2 marks a log whose delta chain is its only
+        commit record from the start: until a delta is claimed, a
+        fragment in it is an unclaimed leftover, never a lost commit.
+        ``makedirs(exist_ok=False)`` arbitrates create races."""
         os.makedirs(path, exist_ok=False)
         with open(os.path.join(path, _META_FILE), "w") as f:
-            json.dump({"metadata": metadata or {}, "format_version": 1}, f)
-        with open(os.path.join(path, _STATE_FILE), "w") as f:
-            json.dump(
-                {
-                    "latest_version": 0,
-                    "version_initial": 0,
-                    "last_timestamp": 0,
-                    "stream_commits": {},
-                    "manifest_seq": 0,
-                    "manifest_ckpt": 0,
-                },
-                f,
-            )
+            json.dump({"metadata": metadata or {}, "format_version": 2}, f)
         return cls(spark, path, claim_store=claim_store)
 
     @classmethod
@@ -644,26 +625,36 @@ class EventLog:
         path: str,
         claim_store=None,
     ) -> "EventLog":
-        """O21: open an existing log; if the pointer is missing, stale
-        or corrupt, recover the head from the delta chain (the
-        reference recovers by scanning to the last entry,
-        file.go:67-125). ``claim_store`` overrides the manifest I/O
-        substrate (default: POSIX directory store; see manifest.py
-        ClaimStore contract)."""
+        """O21: open an existing log at the head its delta chain
+        carries (``_load_state``; the reference recovers by scanning to
+        the last entry, file.go:67-125). ``claim_store`` overrides the
+        manifest I/O substrate (default: POSIX directory store; see
+        manifest.py ClaimStore contract)."""
         if not os.path.isdir(path):
             raise FileNotFoundError(path)
         return cls(spark, path, claim_store=claim_store)
 
     def _load_meta(self) -> None:
         meta_path = os.path.join(self.path, _META_FILE)
+        meta = {}
         if os.path.exists(meta_path):
             with open(meta_path) as f:
-                self._metadata = dict(json.load(f).get("metadata", {}))
-
-    def _state_path(self) -> str:
-        return os.path.join(self.path, _STATE_FILE)
+                meta = json.load(f)
+        self._metadata = dict(meta.get("metadata", {}))
+        self._format_version = int(meta.get("format_version", 1))
 
     def _load_state(self) -> None:
+        """Position on the delta chain, the only commit record: the
+        newest checkpoint (named by the claim store's roll-up hint, else
+        one listing), the head it carries, then the deltas past it and
+        their heads (manifest.py ``ManifestLog.refresh``). No directory
+        scan: an unpublished loser's fragment may alias committed
+        versions, so only the manifest names a consistent snapshot. A
+        chain that yields no head is refused, and so is an empty chain
+        beside manifest records in the claim store, or beside data
+        fragments in a log an earlier release created (format 1, which
+        kept a pointer outside the store): raising beats silently
+        serving an empty or doubled log."""
         ledger = os.path.join(self.path, "_retired.json")
         if os.path.exists(ledger):
             raise RuntimeError(
@@ -673,71 +664,34 @@ class EventLog:
                 "the ledger's files and removes it), then reopen; see "
                 "MIGRATION.md."
             )
-        try:
-            with open(self._state_path()) as f:
-                st = json.load(f)
-            if "files" in st:
+        self._manifest = m = ManifestLog(self.path, store=self._claim_store)
+        self._require_published_state()
+        if self._latest == 0 and m.count() > 0:
+            raise RuntimeError(
+                "the manifest chain yields no head: neither "
+                f"_manifest/checkpoint-{m._ckpt_seq:020d}.json nor a later "
+                "delta carries one (a checkpoint written before checkpoints "
+                "carried heads); see MIGRATION.md"
+            )
+        if m.seq == 0 and (
+            m._store.names()
+            or (
+                self._format_version < 2
+                and any(f.endswith(".parquet") for f in self._data_files())
+            )
+        ):
+            self._require_published_state()  # a first claim may have landed
+            if m.seq == 0:
                 raise RuntimeError(
-                    f"{self._state_path()} is a pre-manifest state file (it "
-                    "carries a 'files' list); this format is no longer "
-                    "opened. Re-open the log once with a release that adopts "
-                    "legacy state files, which rewrites it as a manifest "
-                    "pointer."
+                    "log unrecoverable: no manifest chain starts at a "
+                    "checkpoint or at delta 1, yet the claim store holds "
+                    "manifest records, or the log (created by an earlier "
+                    "release) holds data fragments: a chain lost from the "
+                    "claim store, or a pre-manifest log. The directory-"
+                    "listing fallback is refused, since an unpublished "
+                    "loser's fragment may alias committed versions. See "
+                    "MIGRATION.md."
                 )
-            self._latest = int(st["latest_version"])
-            self._initial = int(st["version_initial"])
-            self._last_ts = int(st["last_timestamp"])
-            self._stream_commits = {
-                str(k): int(v) for k, v in st.get("stream_commits", {}).items()
-            }
-            m = ManifestLog(self.path, store=self._claim_store)
-            m.load(int(st["manifest_seq"]), st.get("manifest_ckpt"))
-            self._manifest = m
-        except (FileNotFoundError, KeyError, ValueError, ManifestChainBroken):
-            self._recover_state_cas()
-
-    def _recover_state_cas(self) -> None:
-        """O21 recovery when the POINTER is lost, corrupt, or names a
-        vacuumed chain. No directory scan: an unpublished loser's
-        fragment may alias committed versions, so only the manifest
-        names a consistent snapshot. The delta chain is the commit
-        truth: cold-position at the newest checkpoint in the claim
-        store, adopt the head it carries, roll forward to the newest
-        complete delta, and adopt its head fields (every commit rides
-        them in its delta). Recovery — unlike the hot path — may
-        consult the store's LISTING, once, to find that checkpoint;
-        eventual list visibility only costs recovery freshness, and
-        roll_forward walks GET probes past whatever the listing knew.
-        A chain that yields no head, and a non-empty log whose chain is
-        gone entirely, are refused: raising beats silently serving an
-        empty or doubled log."""
-        m = ManifestLog(self.path, store=self._claim_store)
-        ck = m._latest_checkpoint_at() or 0
-        try:
-            m.load(ck)
-        except ManifestChainBroken:
-            m = None
-        if m is not None:
-            self._manifest = m
-            self._adopt_cas_head(m.ckpt_head)
-            self._adopt_cas_head(m.roll_forward())
-            if self._latest == 0 and m.count() > 0:
-                raise RuntimeError(
-                    "pointer lost and the manifest chain yields no head: "
-                    f"neither _manifest/checkpoint-{ck:020d}.json nor a "
-                    "later delta carries one (a flock-era chain, or a "
-                    "checkpoint written before checkpoints carried heads); "
-                    "see MIGRATION.md"
-                )
-            if m.count() > 0 or not any(
-                f.endswith(".parquet") for f in self._data_files()
-            ):
-                return
-        raise RuntimeError(
-            "log unrecoverable: pointer lost and no usable manifest chain; "
-            "the directory-listing fallback is refused (an unpublished "
-            "loser's fragment may alias committed versions)"
-        )
 
     @contextlib.contextmanager
     def _commit_section(self):
@@ -749,9 +703,10 @@ class EventLog:
         section opens by re-syncing to the published state
         (``_refresh_published_state``), so version assignment continues
         from the true head and an OCC ``assumed_version`` is validated
-        against the real latest. Order ACROSS processes and hosts is
-        decided where the commit publishes: the exclusive delta claim
-        in ``_write_state``. A loser resyncs and retries, so two
+        against the real latest. A re-sync that cannot prove its
+        position raises instead of claiming. Order ACROSS processes and
+        hosts is decided where the commit publishes: the exclusive delta
+        claim in ``_publish``. A loser resyncs and retries, so two
         processes racing on one log see exactly one winner per
         version, same as two threads.
 
@@ -759,65 +714,37 @@ class EventLog:
         In-memory engines (path=None) keep the thread lock only."""
         with self._lock:
             if self.path is not None:
-                self._refresh_published_state()
+                self._require_published_state()
             yield
 
     def _refresh_published_state(self) -> bool:
-        """Advance the manifest mirror and the head to the freshest
-        published state: replay the pointer's delta records (O(their
-        commits), never a full reparse), adopt the pointer's head
-        fields, then roll past the pointer along the delta chain. The
-        pointer is only a CACHE — racing pointer renames can land out
-        of order, and a writer may die after its claimed delta — so
-        the roll-forward runs REGARDLESS of the pointer's condition:
-        the stateful model test (tests/test_cas_model.py) found that
-        an early return on a deleted pointer froze a stale writer's
-        mirror, and its commit retry loop then lost the same
-        already-claimed seq forever.
+        """Advance the manifest mirror and the head to the tip of the
+        delta chain (manifest.py ``ManifestLog.refresh``: roll forward,
+        prove the position by delta ``seq``, else cold-position at the
+        newest roll-up). Returns False — mirror and head unchanged —
+        when the refresh cannot prove its position, or finds the chain
+        ending below the seq the mirror already reached.
 
         The mirror never advances past the head (round-10 advice): a
         sync that absorbed another writer's fragment into names()
         while self._latest still lagged would hand compact's snapshot
         an inconsistent (files, head) pair, and its ``version <=
         snap_latest`` filter would drop the absorbed commit's rows
-        while its fragment is retired. Both adoption steps are
-        monotonic (never move the head backwards), so pure readers
-        only gain freshness. Returns False when the chain below the
-        pointer is broken and the mirror cannot serve."""
-        try:
-            with open(self._state_path()) as f:
-                st = json.load(f)
-        except (FileNotFoundError, ValueError):
-            st = None
-        ok = True
+        while its fragment is retired. Both advance under the lock,
+        and adoption is monotonic (never moves the head backwards), so
+        pure readers only gain freshness."""
         with self._lock:
-            if isinstance(st, dict):
-                try:
-                    self._manifest.replay_to(int(st["manifest_seq"]))
-                except ManifestChainBroken:
-                    ok = False
-                except (KeyError, TypeError, ValueError):
-                    pass  # torn pointer: roll-forward still runs
-                try:
-                    self._adopt_cas_head(
-                        {
-                            "latest": int(st["latest_version"]),
-                            "initial": int(st["version_initial"]),
-                            "ts": int(st["last_timestamp"]),
-                            "sc": st.get("stream_commits", {}),
-                        }
-                    )
-                except (KeyError, TypeError, ValueError):
-                    pass
-            self._adopt_cas_head(self._manifest.roll_forward())
-        return ok
+            try:
+                head = self._manifest.refresh()
+            except ManifestChainBroken:
+                return False
+            self._adopt_cas_head(head)
+        return True
 
     def _adopt_cas_head(self, head: dict | None) -> None:
         """Adopt a rolled-forward CAS delta's head fields: the version
-        head (never backwards) AND the stream-sink idempotence markers
-        — a marker only in the lagging pointer cache would let a
-        replayed foreachBatch double-commit, so exactly-once rides the
-        delta chain like everything else."""
+        head (never backwards) AND the stream-sink idempotence markers,
+        so exactly-once rides the delta chain like everything else."""
         if head is None:
             return
         if head["latest"] > self._latest:
@@ -828,62 +755,36 @@ class EventLog:
             if int(v) > self._stream_commits.get(k, -1):
                 self._stream_commits[k] = int(v)
 
-    def _write_state(self) -> None:
-        """Publish: the staged manifest change goes out as ONE immutable
-        delta record (O(1), manifest.py), then the pointer — head fields
-        + manifest_seq — in one atomic rename. A reader's (seq, latest)
-        pair is always one snapshot because the chain below a published
-        seq is immutable. Manifest files a roll-up superseded retire
-        into the vacuum ledger only AFTER the pointer is out
-        (publish-before-delete, same as data fragments)."""
-        superseded: list[str] = []
-        if self._pending_add or self._pending_remove:
-            add, rm = self._pending_add, self._pending_remove
-            self._pending_add, self._pending_remove = [], []
-            # the delta claim IS the commit point; head fields ride in
-            # the record so readers can roll past the pointer —
-            # including the stream-sink idempotence markers, or a
-            # roll-forward would lose them and a replayed foreachBatch
-            # could double-commit (exactly-once must not depend on the
-            # pointer cache)
-            head = {
-                "latest": self._latest,
-                "initial": self._initial,
-                "ts": self._last_ts,
-            }
-            if self._stream_commits:
-                head["sc"] = dict(self._stream_commits)
-            try:
-                _, superseded = self._manifest.commit(add, rm, head=head)
-            except ManifestSeqClaimed:
-                # lost the race BEFORE anything published: re-stage so
-                # the caller can undo its fragment and retry
-                self._pending_add, self._pending_remove = add, rm
-                raise
-        tmp = self._state_path() + f".tmp.{uuid.uuid4().hex}"
-        st = {
-            "latest_version": self._latest,
-            "version_initial": self._initial,
-            "last_timestamp": self._last_ts,
-            "stream_commits": self._stream_commits,
-            "manifest_seq": self._manifest.seq,
-            # base-checkpoint hint: lets a cold open jump straight to
-            # its checkpoint file instead of LISTING _manifest/ (which
-            # holds every delta still inside the vacuum grace window)
-            "manifest_ckpt": self._manifest._ckpt_seq,
-        }
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._state_path())  # atomic publish
-        if superseded:
-            self._retire(superseded)
+    def _publish(self) -> None:
+        """Publish the staged manifest change as ONE immutable delta
+        record (O(1), manifest.py) carrying the head fields: the claim
+        is the commit point and the only record of the commit. Manifest
+        files a roll-up superseded retire into the vacuum ledger only
+        after it (publish-before-delete, same as data fragments)."""
+        if not (self._pending_add or self._pending_remove):
+            return
+        add, rm = self._pending_add, self._pending_remove
+        self._pending_add, self._pending_remove = [], []
+        # the stream-sink idempotence markers ride along, or a replayed
+        # foreachBatch could double-commit
+        head = {"latest": self._latest, "initial": self._initial, "ts": self._last_ts}
+        if self._stream_commits:
+            head["sc"] = dict(self._stream_commits)
+        try:
+            _, superseded = self._manifest.commit(add, rm, head=head)
+        except ManifestSeqClaimed:
+            # lost the race BEFORE anything published: re-stage so
+            # the caller can undo its fragment and retry
+            self._pending_add, self._pending_remove = add, rm
+            raise
+        self._retire(superseded)
 
     def _read_raw(self) -> DataFrame | None:
         """Snapshot read: the file set comes from the PUBLISHED manifest
-        (one atomic ``_state.json`` read), not a directory listing, so a
-        concurrent compaction — which publishes its rewritten file set
-        before deleting the fragments it replaced — can never show a
-        reader a torn half-swapped log. The reference serializes scans
+        chain, not a directory listing, so a concurrent compaction —
+        which publishes its rewritten file set before deleting the
+        fragments it replaced — can never show a reader a torn
+        half-swapped log. The reference serializes scans
         against writes with an RWMutex (eventlog/file/file.go:221-228);
         here readers stay lock-free and isolation comes from the
         manifest being immutable-once-published."""
@@ -1124,7 +1025,7 @@ class EventLog:
         # mutex batches concurrent appenders implicitly — the convoy
         # behind the lock drains one fsync at a time but each waiter's
         # write is tiny; here the commit section is the expensive part
-        # (fragment write + fsync + manifest delta + pointer publish),
+        # (fragment write + fsync + manifest delta claim),
         # so the leader/follower shape pays it ONCE for every caller
         # that arrived while the previous section ran. Single-caller
         # cost is one uncontended condition variable — the solo path
@@ -1178,7 +1079,7 @@ class EventLog:
 
     def _commit_group(self, batch: list[_PendingCommit]) -> None:
         """Leader side of the group commit: one commit section, one
-        fragment, one manifest delta, one pointer publish for every
+        fragment, one manifest delta claim for every
         op in ``batch``. Fills each op's result/exception slot; never
         raises (a leader exception must fail the whole batch, not
         strand the followers)."""
@@ -1236,7 +1137,7 @@ class EventLog:
                             self._initial = 1
                         self._last_ts = ts
                         try:
-                            self._write_state()
+                            self._publish()
                         except ManifestSeqClaimed:
                             # another writer took this seq. Nothing
                             # published — drop our fragment (it squats
@@ -1416,7 +1317,7 @@ class EventLog:
         self._interactive_frags = getattr(self, "_interactive_frags", 0) + 1
         # staged with the EXACT version range (the commit assigned it)
         # and exact label stats (the batch is driver-side, so the bloom
-        # is free); published by the caller's _write_state as one delta
+        # is free); published by the caller's _publish as one delta
         # record
         entry = {"n": name, "lo": rows[0][0], "hi": rows[-1][0]}
         entry.update(_label_stats_entry({r[3] for r in rows}))
@@ -1656,7 +1557,7 @@ class EventLog:
                 # idempotence marker rides in the same atomic publish
                 self._stream_commits[txn[0]] = txn[1]
             try:
-                self._write_state()
+                self._publish()
             except ManifestSeqClaimed:
                 # versions are baked into the Spark-written files, so a
                 # lost bulk race cannot be re-stamped in place — drop the
@@ -2186,7 +2087,7 @@ class EventLog:
 
         PUBLISH-BEFORE-DELETE (round-6 advice): the compacted files are
         moved into the log dir under ``compact-…`` names, the manifest
-        swaps to them in ONE atomic ``_state.json`` publish, and only
+        swaps to them in ONE delta claim, and only
         then are the replaced fragments retired — into the deferred-
         deletion ledger, not off the disk. A reader that pinned the old
         manifest (or a straggler executing a pre-compaction DataFrame)
@@ -2207,7 +2108,7 @@ class EventLog:
             # from other processes can land DURING the rewrite; a
             # post-rewrite _manifest_files() would roll the mirror
             # forward past them, the exclusive seq claim in
-            # _write_state would then succeed at the ADVANCED seq (the
+            # _publish would then succeed at the ADVANCED seq (the
             # abort fence never fires), and their fragments — swept
             # into `old` — would be retired while the compacted output
             # holds only pre-rewrite rows: committed events vanish.
@@ -2218,9 +2119,8 @@ class EventLog:
             #
             # ATOMIC PAIR (round-10 advice): the file set and the head
             # must come from the SAME roll-forward point. The sync
-            # inside _manifest_files now adopts the rolled-forward
-            # delta head AND the pointer's head fields (neither is
-            # discarded), and the RLock held across the pair stops an
+            # inside _manifest_files adopts the rolled-forward delta
+            # head with the mirror, and the RLock held across the pair stops an
             # in-process thread from advancing either half between the
             # two reads — so a CAS commit absorbed into `old` during
             # the sync is always covered by snap_latest and its rows
@@ -2336,7 +2236,7 @@ class EventLog:
         outputs discarded, inputs intact)."""
         for attempt in range(1, self.COMPACT_CLAIM_RETRIES + 1):
             try:
-                self._write_state()  # atomic manifest swap — the publish point
+                self._publish()  # atomic manifest swap — the publish point
                 # observability for the starvation probe: how contended
                 # was this publish? (tools/fencing_probe.py --maintenance)
                 self._last_publish_attempts = attempt

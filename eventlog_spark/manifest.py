@@ -13,8 +13,8 @@ table format uses instead:
 * **Per-commit delta records** (``_manifest/delta-<seq>.json``): each
   commit appends ONE small immutable record — the files it added (with
   their version ranges) and the files it removed. O(1) per commit, no
-  rewrite of anything, published via tmp+rename so a half-written
-  record is never visible under its final name.
+  rewrite of anything, published whole so a half-written record is
+  never visible under its final name.
 * **Paged checkpoints** (``_manifest/checkpoint-<seq>.json`` +
   ``_manifest/page-<uuid>.json``): every CHECKPOINT_EVERY commits the
   live entry set is rolled up into pages of PAGE_ENTRIES entries keyed
@@ -30,40 +30,43 @@ table format uses instead:
   refuses an entry without a range before claiming anything, and
   loading a chain that holds one (written by an earlier release)
   refuses to open, naming the file.
-* **The delta claim is the commit point**: a delta is published with
-  an atomic create-if-absent (``put_if_absent``), so of two writers
-  racing for one seq exactly one wins and the other retries at the
-  next seq. Each delta carries the head fields of its commit.
-* **The pointer stays in ``_state.json``**: the head fields plus
-  ``manifest_seq``. Write order is fragment → delta → pointer, so a
-  reader's (pointer seq → checkpoint+deltas ≤ seq) walk always sees a
-  complete, immutable prefix. The pointer is a cache: a crash (or a
-  lost pointer-rename race) between delta and pointer leaves a claimed
-  delta past it, which ``roll_forward`` adopts.
-* **Checkpoints carry the head**: a roll-up's record carries the head
-  fields (and stream markers) of the delta it rolls up, so a LOST
-  pointer recovers from the store alone, with no Spark session: one
-  listing for the newest checkpoint, its head, then GET probes along
-  the deltas past it. A chain that yields no head — deltas of the
-  retired flock protocol, or a checkpoint written before checkpoints
-  carried heads at the tip — is refused, naming the file.
-* **Superseded manifest files retire, never die in place**: a
-  checkpoint hands the files it replaced (old deltas, the previous
-  checkpoint, dissolved pages) to the log's deferred-deletion ledger
-  (log.py ``_retire``/``vacuum``), the same grace-window mechanism
-  that protects data fragments from straggler readers.
+* **The delta claim is the commit point, and the only commit
+  record**: a delta is published with an atomic create-if-absent
+  (``put_if_absent``), so of two writers racing for one seq exactly one
+  wins and the other retries at the next seq. Each delta carries the
+  head fields of its commit; nothing else is written per commit.
+* **Checkpoints carry the head, and a hint names the newest**: a
+  roll-up's record carries the head fields (and stream markers) of the
+  delta it rolls up, and ``_last_checkpoint.json`` (``{"seq": N}``,
+  put after ``checkpoint-N``) lets an open find it with one GET instead
+  of a listing. The hint only shortens open: a missing, stale or
+  rolled-back hint costs one listing, never a wrong head. A chain that
+  yields no head — deltas of the retired flock protocol, or a
+  checkpoint written before checkpoints carried heads at the tip — is
+  refused, naming the file.
+* **Superseded manifest files retire, never die in place**: a roll-up
+  at N hands its base checkpoint, then deltas [base, N-1] ascending,
+  then dissolved pages to the log's deferred-deletion ledger (log.py
+  ``_retire``/``vacuum``), the same grace-window mechanism that
+  protects data fragments from straggler readers. Delta N stays until
+  the next roll-up.
 
 Consistency model (mirrors log.py's snapshot isolation): writers are
 ordered by the delta claim, so no sequence number is ever assigned
-twice; readers are lock-free — one atomic pointer read names an
-immutable set of manifest files. A reader that finds the chain broken
-(a delta vacuumed from under a very stale pointer after a crash)
-raises ManifestChainBroken; the log then re-positions on the newest
-checkpoint in the store, never on a directory listing.
+twice; readers are lock-free — every manifest file is immutable once
+published. A mirror refreshes by rolling forward along the deltas
+(``refresh``). When none lies past it, it proves its position by
+finding delta ``seq`` itself: the reaper deletes in retirement order,
+so it never deletes delta s+1 before delta s. A mirror that cannot
+prove its position (a writer stale past a reaped roll-up) re-positions
+on the newest roll-up; one that finds the chain ending below the seq it
+already reached raises ManifestChainBroken, and the log refuses to
+serve or commit rather than re-assign acknowledged versions.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
@@ -71,6 +74,7 @@ import uuid
 
 _DELTA = "delta-{:020d}.json"
 _CKPT = "checkpoint-{:020d}.json"
+_HINT = "_last_checkpoint.json"
 
 
 class PosixClaimStore:
@@ -169,9 +173,9 @@ class MemoryClaimStore:
 
 
 class ManifestChainBroken(Exception):
-    """The checkpoint/delta chain below a pointer seq is incomplete
-    (e.g. vacuumed after a crash left an unreferenced checkpoint).
-    Callers re-position on the newest checkpoint in the store."""
+    """The checkpoint/delta chain cannot position a mirror: a
+    checkpoint or delta it needs is missing or unreadable, or the chain
+    ends below the seq the mirror already reached."""
 
 
 class ManifestSeqClaimed(Exception):
@@ -179,6 +183,28 @@ class ManifestSeqClaimed(Exception):
     exclusive create of ``delta-<seq>.json`` found the name taken). The caller lost the
     commit race — it must discard its staged fragment, resync to the
     winner's state, and retry at the next seq."""
+
+
+class _PageGone(FileNotFoundError):
+    """A page of the mirror's base checkpoint is gone from the store: a
+    newer roll-up dissolved it, and vacuum reaped it."""
+
+
+def _rebasing(method):
+    """Run a mirror method that loads pages; if one is gone, re-base
+    the mirror on the newest checkpoint at its seq (the same snapshot,
+    found by one listing) and run the method again. Pages load lazily,
+    so a long-lived mirror can outlive the pages of its base."""
+
+    @functools.wraps(method)
+    def run(self, *args, **kwargs):
+        try:
+            return method(self, *args, **kwargs)
+        except _PageGone:
+            self.load(self.seq)
+            return method(self, *args, **kwargs)
+
+    return run
 
 
 def _entry_overlaps(e: dict, lo: int, hi: int) -> bool:
@@ -240,7 +266,7 @@ class ManifestLog:
     section (thread RLock; other writers are fenced by the delta
     claim), reads under the thread lock. The mirror advances by replaying delta records —
     O(new commits) — and only cold-positions (checkpoint + tail replay)
-    on open or when incremental replay finds a gap.
+    on open or when it cannot prove its position (``refresh``).
     """
 
     CHECKPOINT_EVERY = 64
@@ -261,8 +287,8 @@ class ManifestLog:
         self._ckpt_seq = 0  # seq of the checkpoint the mirror is based on
         # head fields of the base checkpoint (those of the delta it
         # rolled up), None for the empty chain or a checkpoint written
-        # before checkpoints carried heads — pointer-loss recovery
-        # adopts it before rolling forward
+        # before checkpoints carried heads — a cold position adopts it
+        # before rolling forward
         self.ckpt_head: dict | None = None
         # page metas from the base checkpoint: {"f", "lo", "hi", "count"}
         self._page_metas: list[dict] = []
@@ -290,72 +316,97 @@ class ManifestLog:
 
     # -- positioning -------------------------------------------------------------
 
-    def load(self, seq: int, ckpt_hint: int | None = None) -> None:
-        """Cold-position at published ``seq``: newest checkpoint ≤ seq
-        (page METAS only — pages load lazily on first touch) + replay of
-        the delta records (checkpoint, seq]. Raises ManifestChainBroken
-        if any link is missing — ATOMICALLY: the mirror keeps its prior
-        state on failure.
+    def _hinted_checkpoint(self) -> int | None:
+        """Seq the roll-up hint names, None when it is absent or torn."""
+        try:
+            return int(json.loads(self._store.get(_HINT))["seq"])
+        except (TypeError, ValueError, KeyError):
+            return None
 
-        ``ckpt_hint`` (the pointer's ``manifest_ckpt`` field) names the
-        base checkpoint directly so the healthy path never LISTS
-        ``_manifest/`` — that directory holds every delta inside the
-        vacuum grace window, so the discovery scan it replaces was
-        O(commit rate × grace) on open (measured 49 ms at 100k
-        interactive commits). An unreadable/absent hint falls back to
-        the scan, which keeps every crash-window recovery exactly as
-        before."""
-        fresh = ManifestLog.__new__(ManifestLog)
-        fresh._dir, fresh._store = self._dir, self._store
-        fresh.seq = fresh._ckpt_seq = 0
-        fresh.ckpt_head = None
-        fresh._page_metas, fresh._page_cache, fresh._tail = [], {}, []
-        fresh._tombstones = set()
-        ck, raw = None, None
-        if ckpt_hint:
-            ckpt_hint = int(ckpt_hint)
-            if ckpt_hint <= seq:
-                raw = self._store.get(_CKPT.format(ckpt_hint))
-                if raw is not None:
-                    ck = ckpt_hint
-        if ck is None:
-            ck = self._latest_checkpoint_at(seq)
-            if ck is not None:
-                raw = self._store.get(_CKPT.format(ck))
-        if ck is not None:
+    def _based_at(self, ck: int) -> "ManifestLog":
+        """A new mirror positioned on checkpoint ``ck`` (0: the empty
+        chain) — page METAS only, pages load lazily on first touch.
+        Raises ManifestChainBroken when the checkpoint is unreadable."""
+        fresh = ManifestLog(os.path.dirname(self._dir), store=self._store)
+        if ck:
+            name = _CKPT.format(ck)
             try:
-                if raw is None:
-                    raise FileNotFoundError(_CKPT.format(ck))
-                data = json.loads(raw)
+                data = json.loads(self._store.get(name))
                 fresh._page_metas = list(data["pages"])
-                fresh.ckpt_head = data.get("head")
-            except (FileNotFoundError, ValueError, KeyError) as e:
+            except (TypeError, ValueError, KeyError) as e:
                 raise ManifestChainBroken(f"checkpoint {ck} unreadable") from e
-            _refuse_rangeless(_CKPT.format(ck), fresh._page_metas)
-            fresh._ckpt_seq = fresh.seq = ck
+            _refuse_rangeless(name, fresh._page_metas)
+            fresh.ckpt_head = data.get("head")
+            fresh.seq = fresh._ckpt_seq = ck
+        return fresh
+
+    def load(self, seq: int) -> None:
+        """Cold-position at seq: newest checkpoint ≤ seq (one listing)
+        + replay of the delta records (checkpoint, seq]. Raises
+        ManifestChainBroken if any link is missing — ATOMICALLY: the
+        mirror keeps its prior state on failure."""
+        fresh = self._based_at(self._latest_checkpoint_at(seq) or 0)
         try:
             for s in range(fresh.seq + 1, seq + 1):
                 fresh._apply_delta_file(s)
         except (FileNotFoundError, ValueError, KeyError) as e:
             raise ManifestChainBroken(f"delta chain broken below seq {seq}") from e
         fresh.seq = seq
-        self.seq, self._ckpt_seq = fresh.seq, fresh._ckpt_seq
-        self.ckpt_head = fresh.ckpt_head
-        self._page_metas, self._page_cache = fresh._page_metas, fresh._page_cache
-        self._tail, self._tombstones = fresh._tail, fresh._tombstones
+        self.__dict__.update(fresh.__dict__)
 
-    def replay_to(self, seq: int) -> None:
-        """Advance to published ``seq`` by applying the delta records
-        (self.seq, seq] — O(commits since last sync). Falls back to a
-        cold load when a delta was already rolled up and vacuumed."""
-        if seq <= self.seq:
-            return  # the pointer never moves backwards under the lock
-        try:
-            for s in range(self.seq + 1, seq + 1):
-                self._apply_delta_file(s)
-                self.seq = s
-        except (FileNotFoundError, ValueError, KeyError):
-            self.load(seq)
+    def refresh(self) -> dict | None:
+        """Advance the mirror to the tip of the chain and return the
+        head fields to adopt (None: no commit past the mirror). The one
+        routine behind open and every refresh:
+
+        1. Roll forward along the deltas past the mirror (GET probes,
+           no listing).
+        2. If none lay past it, prove the mirror's position by finding
+           delta ``seq``: a roll-up retires deltas in ascending order
+           and keeps its own, so the reaper never deletes delta s+1
+           before delta s.
+        3. If that proof fails (a fresh mirror, or a writer stale past
+           a reaped roll-up), cold-position at the newest roll-up —
+           named by the hint, else by one listing — and return the head
+           it carries, rolled forward along the deltas past it. A
+           hinted roll-up with no delta past it must prove itself the
+           same way: a rolled-back hint can name a checkpoint that a
+           newer roll-up's retirement passed.
+
+        Raises ManifestChainBroken, leaving the mirror unchanged, when
+        no position can be proven, or when the chain found ends below
+        the seq this mirror already reached: commits it saw are gone
+        from the store, and serving or committing on what is left would
+        re-assign acknowledged versions."""
+        reached = self.seq
+        if reached:
+            head = self.roll_forward()
+            if self.seq > reached or self._store.get(_DELTA.format(reached)):
+                return head
+        for ck, hinted in self._rollups():
+            try:
+                fresh = self._based_at(ck)
+            except ManifestChainBroken:
+                continue
+            head = fresh.roll_forward(fresh.ckpt_head)
+            if fresh.seq < reached:
+                continue
+            if hinted and fresh.seq == ck and not self._store.get(_DELTA.format(ck)):
+                continue
+            self.__dict__.update(fresh.__dict__)
+            return head
+        raise ManifestChainBroken(
+            f"no roll-up in the store positions a chain at or past seq {reached}"
+        )
+
+    def _rollups(self):
+        """The roll-ups a cold position tries, as (seq, named by the
+        hint): the hint's, then the newest one listed (0: none, the
+        empty chain)."""
+        hinted = self._hinted_checkpoint()
+        if hinted is not None:
+            yield hinted, True
+        yield self._latest_checkpoint_at() or 0, False
 
     def _apply_delta_file(self, s: int) -> None:
         raw = self._store.get(_DELTA.format(s))
@@ -386,7 +437,7 @@ class ManifestLog:
         if got is None:
             raw = self._store.get(pf)
             if raw is None:
-                raise FileNotFoundError(pf)
+                raise _PageGone(pf)
             got = json.loads(raw)
             self._page_cache[pf] = got
         return got
@@ -416,6 +467,7 @@ class ManifestLog:
         page read flat at any fragment count."""
         return self.candidates(lo, hi)
 
+    @_rebasing
     def candidates(
         self,
         lo: int | None = None,
@@ -454,6 +506,7 @@ class ManifestLog:
             out.append(e)
         return out
 
+    @_rebasing
     def page_survey(self, page_ok, entry_ok) -> dict:
         """Pruning-health survey for one predicate pair: per page,
         whether the page-level summary refuted it (page skipped — zero
@@ -489,13 +542,12 @@ class ManifestLog:
         IS the commit point: an exclusive create that raises
         ManifestSeqClaimed — atomically, before the mirror mutates —
         when another writer took the seq. ``head`` (the head fields
-        this commit publishes) rides in the record so a reader can roll
-        past a lagging pointer, and in the checkpoint a roll-up at this
-        seq writes, so a lost pointer recovers from the checkpoint alone
-        when no delta lies past it. Returns (new seq, manifest files
-        superseded by a roll-up) — the caller retires the latter into
-        the vacuum ledger once the pointer is out (publish-before-
-        delete, same as data fragments). An add entry without a
+        this commit publishes) rides in the record, which is how every
+        reader learns the head, and in the checkpoint a roll-up at this
+        seq writes, so a cold open finds it there. Returns (new seq,
+        manifest files superseded by a roll-up) — the caller retires
+        the latter into the vacuum ledger, in the order given
+        (publish-before-delete, same as data fragments). An add entry without a
         version range is refused with ValueError before anything is
         claimed: page reads select fragments by range alone."""
         missing = _rangeless(add)
@@ -516,26 +568,20 @@ class ManifestLog:
             superseded = self._checkpoint(head)
         return s, superseded
 
-    def roll_forward(self) -> dict | None:
-        """The delta CHAIN, not the pointer, is the commit truth (a
-        writer may die — or merely lose the pointer-publish race —
-        between its claimed delta and its pointer write, and pointer
-        renames from racing writers can land out of order). Advance the
-        mirror past the published pointer to the newest complete delta
-        in the store — O(gap), sequential probes, no listing — and
-        return the last ``head`` fields seen, which the caller adopts
-        as the true head.
+    def roll_forward(self, head: dict | None = None) -> dict | None:
+        """Advance the mirror to the newest complete delta in the store
+        — O(gap), sequential GET probes, no listing — and return the
+        last head fields seen (``head``, the caller's starting head,
+        when no delta lies past the mirror), with the stream markers of
+        every delta rolled merged in.
 
         Every claimed delta carries a head. One without it was written
         by the retired flock protocol, and is refused, naming the file:
-        past a published pointer it is an unpublished commit (its crash
-        between delta and pointer left it there), and adopting it would
-        serve a never-acknowledged commit and re-assign its versions;
-        on a pointer-lost log it belongs to a flock-era chain, whose
-        head this release cannot recover."""
-        head: dict | None = None
-        sc: dict = {}  # stream markers merge across ALL rolled deltas —
-        # the newest head may predate an older delta's marker
+        its head cannot be recovered, and adopting the delta headless
+        would re-assign its versions."""
+        # stream markers merge across ALL rolled deltas — the newest
+        # head may predate an older delta's marker
+        sc = {k: int(v) for k, v in (head or {}).get("sc", {}).items()}
         while True:
             name = _DELTA.format(self.seq + 1)
             raw = self._store.get(name)
@@ -553,10 +599,8 @@ class ManifestLog:
                 raise RuntimeError(
                     f"manifest delta {name} lies past seq {self.seq} and "
                     "carries no head record, a delta of the retired flock "
-                    "protocol. Past a published pointer it is an unpublished "
-                    "commit that was never acknowledged — delete the file and "
-                    "re-open the log. On a log whose pointer is lost it is a "
-                    "flock-era chain; see MIGRATION.md."
+                    "protocol; this release cannot recover its head. See "
+                    "MIGRATION.md."
                 )
             self._apply(d.get("add", []), d.get("remove", []))
             self.seq += 1
@@ -626,13 +670,15 @@ class ManifestLog:
         if not ok:
             raise ManifestSeqClaimed(name)
 
+    @_rebasing
     def _checkpoint(self, head: dict | None = None) -> list[str]:
         """Roll the live snapshot into pages. Clean pages (no entry
         tombstoned) are REUSED by reference; dirty pages dissolve and
         their survivors repack with the tail — cost O(changed), not
         O(files), in the steady state where compaction touches only
         the recent tail of the version space. The record carries
-        ``head``, the head fields of the delta it rolls up."""
+        ``head``, the head fields of the delta it rolls up; the hint is
+        put after it."""
         # A page dissolves when an entry was tombstoned OR it never grew
         # to half capacity (each roll-up's tail would otherwise leave a
         # permanent sliver page — the growing tail page is re-absorbed
@@ -691,17 +737,18 @@ class ManifestLog:
         if head is not None:
             rec["head"] = head
         self._write_json(_CKPT.format(self.seq), rec)
+        self._write_json(_HINT, {"seq": self.seq})
 
+        # retirement order: base checkpoint, deltas [base, seq-1]
+        # ascending, then dissolved pages. Delta seq stays until the
+        # next roll-up, so a mirror at seq proves its position by it,
+        # and a mirror based on a checkpoint still in the store finds
+        # every delta past it.
         referenced = {m["f"] for m in metas}
-        superseded = [
-            os.path.join("_manifest", f) for f in sorted(old_pages - referenced)
-        ]
-        superseded.extend(
-            os.path.join("_manifest", _DELTA.format(s))
-            for s in range(old_ckpt_seq + 1, self.seq + 1)
-        )
-        if had_ckpt:
-            superseded.append(os.path.join("_manifest", _CKPT.format(old_ckpt_seq)))
+        names = [_CKPT.format(old_ckpt_seq)] if had_ckpt else []
+        names += [_DELTA.format(s) for s in range(max(old_ckpt_seq, 1), self.seq)]
+        names += sorted(old_pages - referenced)
+        superseded = [os.path.join("_manifest", f) for f in names]
 
         for pf in old_pages - referenced:
             self._page_cache.pop(pf, None)

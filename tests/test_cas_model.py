@@ -6,10 +6,16 @@ instances can perform against ONE log over the object-store fake
 every step against a trivially-correct model: the Python list of events
 in commit order. This is the property the whole multi-host design
 promises — whatever the interleaving of appends, OCC appends, minor
-folds, vacuums, pointer crashes, and reopens, the log IS the model:
-dense versions 1..N, every acked event present exactly once, in ack
-order. The example-based fencing tests pin known-dangerous schedules;
-this machine searches for unknown ones.
+folds, vacuums, lost or rolled-back open-time records, and reopens,
+the log IS the model: dense versions 1..N, every acked event present
+exactly once, in ack order. The example-based fencing tests pin
+known-dangerous schedules; this machine searches for unknown ones.
+
+Every machine rolls up every 3 commits (``CHECKPOINT_EVERY = 3``), so
+short runs reach roll-ups, reaped deltas, and writers stale past them.
+The open-time records a log keeps — the roll-up hint in the claim store,
+and ``_state.json`` where a release writes one — are what the crash
+rules delete or roll back.
 """
 
 from __future__ import annotations
@@ -31,7 +37,8 @@ from hypothesis.stateful import (
 
 from eventlog_spark.errors import MismatchingVersions
 from eventlog_spark.log import EventLog
-from eventlog_spark.manifest import MemoryClaimStore
+from eventlog_spark.manifest import ManifestLog, MemoryClaimStore
+from tests import open_records
 
 
 def _boom(*a, **k):  # pragma: no cover - trips only on a protocol bug
@@ -53,6 +60,7 @@ class CasProtocol(RuleBasedStateMachine):
         self.store = self._make_store()
         EventLog.create(None, self.path, claim_store=self.store)
         self._fcntl_patch.setattr(fcntl, "flock", _boom)
+        self._fcntl_patch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
         self.writers = [self._open(), self._open()]
         self.model: list[tuple[str, str]] = []  # (label, payload) by version
 
@@ -107,30 +115,22 @@ class CasProtocol(RuleBasedStateMachine):
 
     @rule(w=st.integers(0, 1), i=st.integers(0, 999))
     def append_with_pointer_rollback(self, w, i):
-        """A commit whose pointer rename is lost (crash, or a racing
-        rename landing out of order): the claimed DELTA is the commit —
-        the model keeps the event, and every later view must too."""
-        state = os.path.join(self.path, "_state.json")
-        saved = None
-        if os.path.exists(state):
-            with open(state) as f:
-                saved = f.read()
+        """A commit whose open-time records roll back (a crash, or a
+        racing write landing out of order): the claimed DELTA is the
+        commit — the model keeps the event, and every later view must
+        too."""
+        saved = open_records.save(self.path, self.store)
         payload = json.dumps({"w": w, "i": i, "rb": 1}, separators=(",", ":"))
         r = self.writers[w].append(f"w{w}", payload)
         self.model.append((f"w{w}", payload))
         assert r.version == len(self.model)
-        if saved is not None:
-            with open(state, "w") as f:
-                f.write(saved)  # the pointer rolls back; the delta stands
+        open_records.restore(self.path, self.store, saved)  # the delta stands
 
     @rule()
     def crash_pointer(self):
-        # the pointer file is a CACHE under CAS: losing it entirely must
-        # cost nothing once a fresh open re-positions on the chain
-        try:
-            os.remove(os.path.join(self.path, "_state.json"))
-        except FileNotFoundError:
-            pass
+        # the open-time records only shorten open: losing them must cost
+        # nothing once a fresh open re-positions on the chain
+        open_records.lose(self.path, self.store)
         self.writers[0] = self._open()
 
     # -- the property ------------------------------------------------------------
@@ -199,7 +199,7 @@ class CasProtocolWithSpark(RuleBasedStateMachine):
     """The Spark-path extension of the machine above: bulk appends
     (with and without stream-txn idempotence markers, including forced
     replays), major compactions (both layouts), folds, vacuums, and
-    pointer crashes interleaved by two writers over the object-store
+    lost open-time records interleaved by two writers over the object-store
     fake. Small example counts — every step is a real Spark job — but
     the space it walks (bulk staging + re-base publishes + txn unwind
     + compaction tombstones) is exactly where round-9's data-loss bugs
@@ -222,6 +222,7 @@ class CasProtocolWithSpark(RuleBasedStateMachine):
         self.store = MemoryClaimStore()
         EventLog.create(None, self.path, claim_store=self.store)
         self._fcntl_patch.setattr(fcntl, "flock", _boom)
+        self._fcntl_patch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
         self.writers = [self._open(), self._open()]
         self.model: list[tuple[str, str]] = []
         self.txn_epoch = 0
@@ -293,10 +294,7 @@ class CasProtocolWithSpark(RuleBasedStateMachine):
 
     @rule()
     def crash_pointer(self):
-        try:
-            os.remove(os.path.join(self.path, "_state.json"))
-        except FileNotFoundError:
-            pass
+        open_records.lose(self.path, self.store)
         self.writers[0] = self._open()
 
     # -- the property ------------------------------------------------------------

@@ -550,3 +550,41 @@ def test_follow_label_filtered(clamped):
     # resumed from ≥ v9, not from the last match (v5)
     assert any(v is not None and v >= 9 for v in scan_versions), scan_versions
     t.join(timeout=10)
+
+
+def test_local_client_pages_a_sessionless_parquet_log(tmp_path):
+    """LocalClient pages through the engine's driver-side ``scan_rows``:
+    over a parquet log opened without a Spark session, ``scan`` with a
+    tiny batch hint and ``follow`` (label-filtered too) serve every
+    event, with no Spark job per page."""
+    import time
+
+    from eventlog_spark.client import LocalClient
+    from eventlog_spark.log import EventLog
+
+    path = str(tmp_path / "log")
+    EventLog.create(None, path)
+    c = LocalClient(EventLog.open(None, path))
+    for i in range(1, 6):
+        c.append("red" if i % 2 else "blue", '{"i":%d}' % i)
+    assert [e.version for e in c.scan(batch_hint=2)] == [1, 2, 3, 4, 5]
+    assert [e.version for e in c.scan(reverse=True, batch_hint=2)] == [5, 4, 3, 2, 1]
+    assert [e.version for e in c.scan(label="red", batch_hint=2)] == [1, 3, 5]
+    assert [e.payload for e in c.scan(version=4, batch_hint=2)] == ['{"i":4}', '{"i":5}']
+
+    got: list[int] = []
+    done = threading.Event()
+
+    def run():
+        for ev in c.follow(version=3, timeout=20, batch_hint=2):
+            got.append(ev.version)
+            if len(got) >= 3:
+                break
+        done.set()
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    time.sleep(0.3)
+    c.append("red", '{"i":6}')
+    assert done.wait(30), f"follow never completed; got={got}"
+    assert got == [4, 5, 6]

@@ -24,6 +24,8 @@ import pytest
 
 from eventlog_spark.errors import MismatchingVersions
 from eventlog_spark.log import EventLog
+from eventlog_spark.manifest import ManifestLog, MemoryClaimStore
+from tests import open_records
 
 
 def _boom(*a, **k):  # a flock take is a test failure
@@ -145,33 +147,33 @@ def test_cas_occ_semantics_survive_the_race(tmp_path, monkeypatch, cas_env):
 
 
 def test_cas_pointer_lag_rolls_forward(tmp_path, monkeypatch, cas_env):
-    """Crash window unique to CAS: a writer dies (or merely loses the
-    pointer-publish race) AFTER its claimed delta, BEFORE its pointer
-    rename. The delta chain is the commit truth — a fresh CAS open
-    rolls past the stale pointer and serves the committed event; the
-    claimed seq is never reused."""
+    """A lagging roll-up hint (its put lost in a crash, or landing out
+    of order behind a newer one) costs a longer roll-forward, never an
+    event: a fresh open starts at the roll-up the stale hint names,
+    rolls along the deltas past it and adopts their heads; the claimed
+    seqs are never reused."""
     import fcntl
 
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 2)
     create, cas_open = cas_env
     path = str(tmp_path / "lag")
     create(path)
     monkeypatch.setattr(fcntl, "flock", _boom)
     w = cas_open(path)
     w.append("published", '{"n":1}')
-    state = os.path.join(path, "_state.json")
-    saved = str(tmp_path / "state_at_1.json")
-    shutil.copy(state, saved)
-    w.append("claimed-not-pointed", '{"n":2}')
-    shutil.copy(saved, state)  # "crash": pointer rolled back to seq 1
+    w.append("published", '{"n":2}')  # roll-up at 2
+    saved = open_records.save(path, w._manifest._store)
+    w.append("past-the-hint", '{"n":3}')
+    w.append("past-the-hint", '{"n":4}')  # roll-up at 4
+    open_records.restore(path, w._manifest._store, saved)  # hint back to 2
 
     fresh = cas_open(path)
-    assert fresh.version() == 2  # recovered from the delta's head fields
-    assert [r.label for r in fresh.scan_rows()] == [
-        "published",
-        "claimed-not-pointed",
-    ]
-    r = fresh.append("next", '{"n":3}')
-    assert r.version == 3  # no seq/version reuse after roll-forward
+    assert fresh.version() == 4  # recovered from the deltas' head fields
+    assert [r.label for r in fresh.scan_rows()] == ["published"] * 2 + [
+        "past-the-hint"
+    ] * 2
+    r = fresh.append("next", '{"n":5}')
+    assert r.version == 5  # no seq/version reuse after roll-forward
 
 
 _CAS_WRITER = r"""
@@ -297,16 +299,16 @@ def test_cas_cross_process_storm_two_hosts(tmp_path, xproc_store):
 def test_cas_txn_markers_ride_the_delta_chain(
     spark, tmp_path, monkeypatch, cas_env
 ):
-    """Exactly-once under CAS must not depend on the pointer cache: a
-    bulk append's stream-txn idempotence marker whose POINTER publish
-    is lost (crash / out-of-order rename) still refuses the replayed
-    batch — the marker rides the claimed delta's head fields and is
-    re-adopted by roll-forward."""
+    """Exactly-once rides the delta chain: a bulk append's stream-txn
+    idempotence marker still refuses the replayed batch after the
+    roll-up hint its commit put is lost — the marker rides the claimed
+    delta's head fields (and the checkpoint rolling it up) and is
+    re-adopted on open."""
     import fcntl
-    import shutil
 
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 1)
     create, cas_open = cas_env
     path = str(tmp_path / "txn")
     create(path)
@@ -317,12 +319,10 @@ def test_cas_txn_markers_ride_the_delta_chain(
         F.format_string('{"i":%d}', F.col("id")).alias("payload"),
         "id",
     )
-    state = os.path.join(path, "_state.json")
-    saved = str(tmp_path / "state_at_0.json")
-    shutil.copy(state, saved)
+    saved = open_records.save(path, w._manifest._store)
     r = w.append_dataframe(batch, order_cols=["id"], txn=("ckpt-a", 5))
     assert r is not None and r.version == 3
-    shutil.copy(saved, state)  # pointer lost — the delta chain survives
+    open_records.restore(path, w._manifest._store, saved)  # hint lost
 
     fresh = cas_open(path, spark)
     assert fresh.version() == 3  # rolled forward
@@ -587,7 +587,7 @@ def test_cas_bulk_loser_restores_txn_marker_and_interloper_survives(
 
     def sabotaged(out, *args, **kw):
         # lands a whole commit inside w's write window: claims the seq
-        # w's _write_state is about to take
+        # w's _publish is about to take
         b.append("interloper", '{"landed":"mid-bulk"}')
         return orig(w, out, *args, **kw)
 
@@ -672,11 +672,8 @@ def test_cas_compact_covers_commit_absorbed_into_snapshot(
     while the fragment itself was retired: permanent loss, and the
     seq claim succeeded first try so the re-base fence never fired.
     Post-fix the sync adopts the head at the same roll-forward point
-    (pointer head fields for replayed deltas + rolled-forward delta
-    head for unpointed ones), so the absorbed commit is covered by the
-    filter and its rows ride the compacted output. Exercises BOTH
-    absorption paths: a fully published commit and a
-    claimed-but-not-yet-pointed one (pointer rolled back)."""
+    as the mirror, so the absorbed commits are covered by the filter
+    and their rows ride the compacted output."""
     import fcntl
 
     create, cas_open = cas_env
@@ -688,7 +685,6 @@ def test_cas_compact_covers_commit_absorbed_into_snapshot(
     for i in range(4):
         a.append("pre", json.dumps({"i": i}))
 
-    state = os.path.join(path, "_state.json")
     fired = {}
     orig_vacuum = EventLog.vacuum
 
@@ -698,12 +694,8 @@ def test_cas_compact_covers_commit_absorbed_into_snapshot(
         r = orig_vacuum(self_, *args, **kw)
         if not fired:
             fired["x"] = True
-            b.append("mid-published", '{"landed":"pointed"}')  # v5
-            saved = state + ".save"
-            shutil.copy(state, saved)
-            b.append("mid-unpointed", '{"landed":"unpointed"}')  # v6
-            shutil.copy(saved, state)  # pointer rolled back: v6's
-            # delta is claimed-but-not-pointed — roll-forward territory
+            b.append("mid-published", '{"landed":1}')  # v5
+            b.append("mid-unpointed", '{"landed":2}')  # v6
         return r
 
     monkeypatch.setattr(EventLog, "vacuum", vacuum_then_commit)
@@ -723,12 +715,10 @@ def test_cas_compact_covers_commit_absorbed_into_snapshot(
 
 
 def test_cas_sync_pairs_names_with_adopted_head(tmp_path, monkeypatch, cas_env):
-    """Round-10 advice (medium, root cause): _sync_manifest_to_pointer
-    must never leave self._latest lagging a mirror that already names
-    newer fragments — any caller pairing names() with the head
-    (maintenance snapshots) needs a consistent pair. Covers both lag
-    sources: deltas consumed by replay_to (pointer head fields) and
-    deltas past the pointer (rolled-forward delta head)."""
+    """Round-10 advice (medium, root cause): a refresh must never leave
+    self._latest lagging a mirror that already names newer fragments —
+    any caller pairing names() with the head (maintenance snapshots)
+    needs a consistent pair."""
     import fcntl
 
     create, cas_open = cas_env
@@ -738,18 +728,13 @@ def test_cas_sync_pairs_names_with_adopted_head(tmp_path, monkeypatch, cas_env):
     a = cas_open(path)
     b = cas_open(path)
     a.append("one", '{"i":1}')
-    b.append("two", '{"i":2}')  # published; a's mirror lags the pointer
+    b.append("two", '{"i":2}')  # published; a's mirror lags the chain
     with a._lock:
         names = a._manifest_files()
         latest = a._latest
     assert len([f for f in names if f.endswith(".parquet")]) == 2
     assert latest == 2  # pre-fix: 1 — names ahead of the head
-    # claimed-but-not-yet-pointed: pointer rolled back below the delta
-    state = os.path.join(path, "_state.json")
-    saved = state + ".sv"
-    shutil.copy(state, saved)
     b.append("three", '{"i":3}')
-    shutil.copy(saved, state)
     with a._lock:
         names = a._manifest_files()
         latest = a._latest
@@ -757,12 +742,14 @@ def test_cas_sync_pairs_names_with_adopted_head(tmp_path, monkeypatch, cas_env):
     assert latest == 3
 
 
-def test_flock_era_log_opens_under_the_claim_protocol(tmp_path, monkeypatch):
-    """A log the retired flock protocol wrote opens and commits through
-    the delta claim: its meta file's ``arbiter`` field, the ``.arbiter``
-    claim sidecar, ``_commit.lock`` and ``_intent.json`` are ignored
-    leftovers, and no flock is taken. Its deltas carry no head records;
-    those at or below the pointer replay like any other."""
+def test_flock_era_log_refused_naming_its_headless_delta(tmp_path, monkeypatch):
+    """A log the retired flock protocol wrote is refused on open: its
+    deltas carry no head records, and with the delta chain the only
+    commit record, its head cannot be recovered. The error names the
+    first head-less delta; no flock is taken, the leftovers (the meta
+    file's ``arbiter`` field, the ``.arbiter`` claim sidecar,
+    ``_commit.lock``, ``_intent.json``) are not the cause, and every
+    file stays where it was."""
     import fcntl
 
     path = str(tmp_path / "flocklog")
@@ -784,13 +771,15 @@ def test_flock_era_log_opens_under_the_claim_protocol(tmp_path, monkeypatch):
         with open(os.path.join(path, leftover), "w") as f:
             f.write(body)
     monkeypatch.setattr(fcntl, "flock", _boom)
-    a = EventLog.open(None, path)
-    b = EventLog.open(None, path)
-    assert a.version() == 3
-    assert a.append("new", '{"by":"a"}').version == 4
-    assert b.append("new", '{"by":"b"}').version == 5
-    fresh = EventLog.open(None, path)
-    assert [r.version for r in fresh.scan_rows()] == [1, 2, 3, 4, 5]
+
+    def tree():
+        files = [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs]
+        return sorted((f, os.path.getsize(f)) for f in files)
+
+    before = tree()
+    with pytest.raises(RuntimeError, match=f"delta-{1:020d}.json.*no head record"):
+        EventLog.open(None, path)
+    assert tree() == before
 
 
 def test_memory_store_thread_storm_exactly_one_winner(tmp_path, monkeypatch):
@@ -1160,14 +1149,14 @@ def test_vacuum_grace_protects_lagging_reader_plan(spark, tmp_path, monkeypatch)
 
 def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     """The manifest-chain side of the same guarantee: a reader that
-    pinned an OLD manifest snapshot (pointer read just before a
+    pinned an OLD manifest snapshot (the writer's mirror just before a
     roll-up) can still lazily load that snapshot's checkpoint PAGES and
     data files for the whole grace window, because roll-ups retire
     superseded manifest records into the same ledger. After the window
     expires (grace=0) the pinned chain is genuinely gone."""
     import fcntl
 
-    from eventlog_spark.manifest import ManifestChainBroken, ManifestLog
+    from eventlog_spark.manifest import ManifestChainBroken
 
     path = str(tmp_path / "pin")
     EventLog.create(None, path)
@@ -1176,13 +1165,11 @@ def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     w = EventLog.open(None, path)
     for i in range(6):
         w.append("e", json.dumps({"i": i}))
-    with open(os.path.join(path, "_state.json")) as f:
-        st = json.load(f)
-    pinned_seq, pinned_ckpt = int(st["manifest_seq"]), st.get("manifest_ckpt")
+    pinned_seq = w._manifest.seq
 
     # pin the snapshot NOW (page metas only — pages load lazily later)
     pinned = ManifestLog(path)
-    pinned.load(pinned_seq, pinned_ckpt)
+    pinned.load(pinned_seq)
 
     # the writer compacts (tombstones every pre-file) and keeps
     # committing across a checkpoint roll-up, retiring the pinned
@@ -1204,7 +1191,7 @@ def test_vacuum_grace_protects_pinned_manifest_snapshot(tmp_path, monkeypatch):
     assert w2.vacuum(grace_seconds=0) > 0  # window expired
     stale = ManifestLog(path)
     with pytest.raises(ManifestChainBroken):
-        stale.load(pinned_seq, pinned_ckpt)  # the old chain is gone
+        stale.load(pinned_seq)  # the old chain is gone
     # the CURRENT snapshot is intact
     fresh = EventLog.open(None, path)
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 13))
@@ -1215,13 +1202,10 @@ def test_cas_correct_under_eventual_list_visibility(tmp_path, monkeypatch):
     classic S3 caveat), while GET/conditional-PUT are strong. The CAS
     hot path must never depend on listing — commits claim by name
     (put_if_absent), readers roll forward by sequential GET probes, and
-    cold opens position via the pointer's checkpoint HINT. This store
-    serves names() as of 8 puts AGO; everything must still be
-    exactly-one-winner and dense, including a fresh open and a
-    pointer-lag recovery."""
+    cold opens position via the roll-up hint. This store serves names()
+    as of 8 puts AGO; everything must still be exactly-one-winner and
+    dense, including a fresh open and one behind a rolled-back hint."""
     import fcntl
-
-    from eventlog_spark.manifest import MemoryClaimStore
 
     class EventualListStore(MemoryClaimStore):
         LAG = 8
@@ -1247,6 +1231,7 @@ def test_cas_correct_under_eventual_list_visibility(tmp_path, monkeypatch):
             idx = max(0, len(self._history) - 1 - self.LAG)
             return list(self._history[idx])
 
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
     path = str(tmp_path / "eventual")
     store = EventualListStore()
     EventLog.create(None, path, claim_store=store)
@@ -1263,28 +1248,26 @@ def test_cas_correct_under_eventual_list_visibility(tmp_path, monkeypatch):
     assert fresh.version() == 20
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 21))
 
-    # pointer-lag recovery is GET-probe-based too: roll past a stale
-    # pointer with the listing still lagging
-    state = os.path.join(path, "_state.json")
-    saved = str(tmp_path / "state.json")
-    shutil.copy(state, saved)
-    fresh.append("claimed-not-pointed", '{"n":21}')
-    shutil.copy(saved, state)
+    # a rolled-back hint is GET-probe-based too: roll past it with the
+    # listing still lagging
+    saved = open_records.save(path, store)
+    for n in (21, 22, 23, 24):  # a roll-up at 24
+        fresh.append("past-the-hint", json.dumps({"n": n}))
+    open_records.restore(path, store, saved)
     again = EventLog.open(None, path, claim_store=store)
-    assert again.version() == 21
-    assert again.append("next", '{"n":22}').version == 22
+    assert again.version() == 24
+    assert again.append("next", '{"n":25}').version == 25
 
 
 def test_cas_pointer_loss_recovers_from_chain(tmp_path, monkeypatch, cas_env):
-    """O21 under CAS with the POINTER FILE GONE (not just lagging):
-    the flock engine answers this crash with a directory scan, which
-    CAS refuses — recovery must instead re-position on the delta chain
-    (newest checkpoint + roll-forward) and adopt the newest delta's
-    head fields. Committed events, stream markers, and subsequent
-    appends must all survive; a corrupt pointer recovers the same
-    way."""
+    """O21 with the roll-up hint GONE (not just lagging): a directory
+    scan is refused — open instead re-positions on the delta chain
+    (the newest checkpoint one listing finds + roll-forward) and adopts
+    the newest delta's head fields. Committed events and subsequent
+    appends must all survive; a corrupt hint recovers the same way."""
     import fcntl
 
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
     create, cas_open = cas_env
     path = str(tmp_path / "ptrloss")
     create(path)
@@ -1293,16 +1276,16 @@ def test_cas_pointer_loss_recovers_from_chain(tmp_path, monkeypatch, cas_env):
     for i in range(7):
         w.append("e", json.dumps({"i": i}))
 
-    state = os.path.join(path, "_state.json")
-    os.remove(state)  # the pointer is GONE, not merely stale
+    store = w._manifest._store
+    assert store.get(open_records.HINT) is not None
+    open_records.lose(path, store)  # the hint is GONE, not merely stale
     fresh = cas_open(path)
     assert fresh.version() == 7
     assert [r.version for r in fresh.scan_rows()] == list(range(1, 8))
     assert fresh.append("after-loss", '{"ok":1}').version == 8
 
-    # corrupt pointer: same recovery
-    with open(state, "w") as f:
-        f.write("{not json")
+    # corrupt hint: same recovery
+    store.put(open_records.HINT, b"{not json")
     again = cas_open(path)
     assert again.version() == 8
     assert again.scan_rows()[-1].label == "after-loss"
@@ -1310,15 +1293,13 @@ def test_cas_pointer_loss_recovers_from_chain(tmp_path, monkeypatch, cas_env):
 
 @pytest.mark.parametrize("n", [11, 12])
 def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch, n):
-    """Pointer loss AFTER checkpoint roll-ups (deltas partially
-    retired): recovery positions at the newest checkpoint the store
-    lists, adopts the head it carries and GET-probes forward past it —
-    with no Spark session. Run across enough commits that at least two
-    roll-ups happened; at 12 the tip is a checkpoint, so its head is
-    the only one recovery finds."""
+    """Hint loss AFTER checkpoint roll-ups whose deltas were reaped:
+    open positions at the newest checkpoint the store lists, adopts the
+    head it carries and GET-probes forward past it — with no Spark
+    session. Run across enough commits that at least two roll-ups
+    happened; at 12 the tip is a checkpoint, so its head and its own
+    delta's are the only ones open finds."""
     import fcntl
-
-    from eventlog_spark.manifest import ManifestLog
 
     path = str(tmp_path / "ptrckpt")
     EventLog.create(None, path)
@@ -1327,7 +1308,8 @@ def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch, n):
     w = EventLog.open(None, path)
     for i in range(n):
         w.append("e", json.dumps({"i": i}))
-    os.remove(os.path.join(path, "_state.json"))
+    w.vacuum(grace_seconds=0)
+    open_records.lose(path)
 
     fresh = EventLog.open(None, path)
     assert fresh.version() == n
@@ -1339,15 +1321,14 @@ def test_cas_pointer_loss_across_checkpoint_rollup(tmp_path, monkeypatch, n):
 def test_cas_pointer_loss_at_checkpoint_keeps_txn_markers(
     spark, tmp_path, monkeypatch
 ):
-    """Exactly-once across a lost pointer whose chain ends in a
+    """Exactly-once across a lost hint whose chain ends in a
     checkpoint: no delta lies past it, so the stream-txn marker of an
-    earlier bulk append survives only in the checkpoint's head. The
-    reopened log must refuse the replayed batch."""
+    earlier bulk append survives only in the checkpoint's head (and in
+    the delta it rolled up). The reopened log must refuse the replayed
+    batch."""
     import fcntl
 
     from pyspark.sql import functions as F
-
-    from eventlog_spark.manifest import ManifestLog
 
     path = str(tmp_path / "txnckpt")
     EventLog.create(None, path)
@@ -1366,7 +1347,7 @@ def test_cas_pointer_loss_at_checkpoint_keeps_txn_markers(
     mdir = os.path.join(path, "_manifest")
     assert os.path.exists(os.path.join(mdir, f"checkpoint-{4:020d}.json"))
     assert not os.path.exists(os.path.join(mdir, f"delta-{5:020d}.json"))
-    os.remove(os.path.join(path, "_state.json"))
+    open_records.lose(path)
 
     fresh = EventLog.open(spark, path)
     assert fresh.version() == head
@@ -1381,15 +1362,13 @@ def test_cas_pointer_loss_flock_era_chain_refused(
     spark, tmp_path, monkeypatch, n
 ):
     """Migration edge: a log written under the retired flock protocol
-    (no delta or checkpoint carries head fields) loses its pointer.
-    Its head can come from nowhere but a scan of the data, which this
-    release does not do: open refuses, with or without a session,
+    (no delta or checkpoint carries head fields). Its head can come
+    from nowhere but a scan of the data, which this release does not
+    do: open refuses, with or without a session,
     naming the head-less delta past the newest checkpoint (3 and 5
     commits) or that checkpoint itself (4 commits, the chain's tip),
     and leaves every file where it was."""
     import fcntl
-
-    from eventlog_spark.manifest import ManifestLog
 
     path = str(tmp_path / "flockera")
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
@@ -1397,7 +1376,6 @@ def test_cas_pointer_loss_flock_era_chain_refused(
     for i in range(n):
         log.append("e", json.dumps({"i": i}))
     _strip_delta_heads(path)  # flock-era history: no heads anywhere
-    os.remove(os.path.join(path, "_state.json"))
     monkeypatch.setattr(fcntl, "flock", _boom)
 
     def tree():
@@ -1417,36 +1395,150 @@ def test_cas_pointer_loss_flock_era_chain_refused(
 def test_cas_pointer_and_chain_loss_refuses_silent_truncation(
     tmp_path, monkeypatch
 ):
-    """A non-empty CAS log whose pointer AND manifest chain are both
-    gone is unrecoverable BY DESIGN: the flock engine's directory-scan
-    answer is unsafe here (an unpublished loser's fragment may alias
-    committed versions), so the open must raise loudly rather than
-    serve an empty or doubled log."""
+    """Fail closed: a live writer whose refresh cannot prove its
+    position must raise rather than claim. Here the roll-up hint, every
+    checkpoint and the deltas at and past the writer's seq are gone
+    from the store, so neither delta ``seq``, the hint nor a listing
+    positions it, and the chain left ends below what it already
+    reached. Its append raises and claims nothing (committing on the
+    remains would re-assign acknowledged versions), and a fresh open
+    refuses too: the directory listing is never a fallback, since an
+    unpublished loser's fragment may alias committed versions."""
     import fcntl
 
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
     path = str(tmp_path / "gone")
     EventLog.create(None, path)
     monkeypatch.setattr(fcntl, "flock", _boom)
     w = EventLog.open(None, path)
-    for i in range(3):
+    for i in range(7):  # roll-ups at 3 and 6
         w.append("e", json.dumps({"i": i}))
-    os.remove(os.path.join(path, "_state.json"))
-    shutil.rmtree(os.path.join(path, "_manifest"))
+    w.vacuum(grace_seconds=0)
+    store, seq = w._manifest._store, w._manifest.seq
+    for name in store.names():
+        if name == open_records.HINT or name.startswith("checkpoint-") or (
+            name.startswith("delta-") and int(name[6:-5]) >= seq
+        ):
+            store.delete(name)
+    assert [n for n in store.names() if n.startswith("delta-")]  # some remain
+    before = (sorted(store.names()), sorted(os.listdir(path)))
+
+    with pytest.raises(RuntimeError, match="unusable"):
+        w.append("e", '{"i":7}')
+    assert (sorted(store.names()), sorted(os.listdir(path))) == before
     with pytest.raises(RuntimeError, match="unrecoverable"):
         EventLog.open(None, path)
 
 
+def test_rolled_back_open_records_keep_acked_event(tmp_path, monkeypatch):
+    """Regression: an acknowledged event must survive its commit's
+    open-time records rolling back (a crash, or an out-of-order rename)
+    once vacuum reaps the roll-up it sits behind. Two writers over one
+    claim store: w1's fold rolls up at seq 3, w0's next append (event 3)
+    rolls up at seq 4, then every open-time record the log keeps is put
+    back to its bytes from before that append, and vacuum reaps the
+    retired deltas. Through a pointer, the reopened log served [1, 2]
+    and acked the next append as version 3, overwriting event 3."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    store = MemoryClaimStore()
+    path = str(tmp_path / "rb")
+    EventLog.create(None, path, claim_store=store)
+    w0 = EventLog.open(None, path, claim_store=store)
+    w1 = EventLog.open(None, path, claim_store=store)
+    w0.append("e", '{"i":1}')
+    w0.append("e", '{"i":2}')
+    assert w1.minor_compact() == 2  # rolls up at seq 3
+    saved = open_records.save(path, store)
+    assert w0.append("e", '{"i":3}').version == 3  # rolls up at seq 4
+    open_records.restore(path, store, saved)
+    w0.vacuum(grace_seconds=0)
+
+    back = EventLog.open(None, path, claim_store=store)
+    assert [json.loads(r.payload)["i"] for r in back.scan_rows()] == [1, 2, 3]
+    assert back.append("e", '{"i":4}').version == 4
+    assert [json.loads(r.payload)["i"] for r in back.scan_rows()] == [1, 2, 3, 4]
+
+
+def test_rolled_back_hint_naming_a_passed_rollup_is_not_adopted(tmp_path, monkeypatch):
+    """A rolled-back hint can name a checkpoint that no retirement
+    covers (written by a writer whose peer, based on an older
+    checkpoint, rolled up past it) while newer roll-ups retired and
+    vacuum reaped every delta around it. The chain from that checkpoint
+    ends on it with its own delta gone, so it cannot prove itself, and
+    open falls back to the listing's newest roll-up instead of serving
+    a truncated log."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    store = MemoryClaimStore()
+    path = str(tmp_path / "passed")
+    EventLog.create(None, path, claim_store=store)
+    w0 = EventLog.open(None, path, claim_store=store)
+    w1 = EventLog.open(None, path, claim_store=store)
+    w0.append("e", '{"i":1}')
+    w0.append("e", '{"i":2}')
+    assert w1.minor_compact() == 2  # w1 rolls up at 3
+    saved = open_records.save(path, store)  # the hint names 3
+    for i in range(3, 7):  # w0 (based at 0) rolls up at 4, then at 7
+        w0.append("e", json.dumps({"i": i}))
+    open_records.restore(path, store, saved)
+    w0.vacuum(grace_seconds=0)
+    assert store.get(f"checkpoint-{3:020d}.json") is not None
+    assert store.get(f"delta-{3:020d}.json") is None
+    assert store.get(f"delta-{4:020d}.json") is None
+
+    back = EventLog.open(None, path, claim_store=store)
+    assert [json.loads(r.payload)["i"] for r in back.scan_rows()] == list(range(1, 7))
+    assert back.append("e", '{"i":7}').version == 7
+
+
+@pytest.mark.parametrize("on_rollup", [True, False], ids=["on-rollup", "mid-chain"])
+@pytest.mark.parametrize("hint", ["kept", "lost", "rolled-back"])
+def test_stale_writer_behind_reaped_rollup(tmp_path, monkeypatch, hint, on_rollup):
+    """A writer whose mirror fell behind roll-ups that vacuum then
+    reaped finds neither the delta past it nor delta ``seq`` itself, so
+    it cannot prove its position by its own delta. It re-positions on
+    the newest roll-up — through the hint when the hint still names
+    it, else through one listing, also when a rolled-back hint names a
+    checkpoint that a newer roll-up's retirement passed — and its next
+    append takes the true next version. Its mirror stops on a roll-up
+    seq (its own roll-up at 3) or mid-chain (at 2)."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    store = MemoryClaimStore()
+    path = str(tmp_path / "stale")
+    EventLog.create(None, path, claim_store=store)
+    stale = EventLog.open(None, path, claim_store=store)
+    live = EventLog.open(None, path, claim_store=store)
+    n_stale = 3 if on_rollup else 2
+    for i in range(n_stale):
+        stale.append("stale", json.dumps({"i": i}))
+    saved = open_records.save(path, store)
+    for i in range(n_stale, 9):  # two more roll-ups
+        live.append("live", json.dumps({"i": i}))
+    live.vacuum(grace_seconds=0)
+    seq = stale._manifest.seq
+    assert store.get(f"delta-{seq:020d}.json") is None
+    assert store.get(f"delta-{seq + 1:020d}.json") is None
+    if hint == "lost":
+        open_records.lose(path, store)
+    elif hint == "rolled-back":
+        open_records.restore(path, store, saved)
+
+    assert stale.append("stale", '{"i":9}').version == 10
+    for log in (stale, EventLog.open(None, path, claim_store=store)):
+        rows = log.scan_rows()
+        assert [json.loads(r.payload)["i"] for r in rows] == list(range(10))
+        assert log.version() == 10
+
+
 def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
     """Chaos-monkey regression for the model-found resync bug: while
-    four CAS writer processes storm the log, this process repeatedly
-    DELETES the pointer file and rolls it back to a stale snapshot.
-    Under CAS the pointer is only a cache, so the storm must finish
-    with every fencing property intact — pre-fix, a writer whose resync
-    hit a missing pointer froze its mirror and lost the same claimed
-    seq forever (commit failure after ~4096 retries). Runs over both
-    cross-process substrates: pointer chaos + served claim store is
-    the full object-store deployment shape (pointer cache on the
-    store, claims through conditional PUT)."""
+    four writer processes storm the log, rolling up every 4 commits,
+    this process repeatedly DELETES the roll-up hint and puts it back
+    ARBITRARILY STALE. The hint only shortens open, so the storm must
+    finish with every fencing property intact — the pre-fix shape was a
+    writer whose resync hit a missing open-time record, froze its
+    mirror and lost the same claimed seq forever (commit failure after
+    ~4096 retries). Runs over both cross-process substrates: hint chaos
+    + served claim store is the full object-store deployment shape."""
     import time as _t
 
     store, child_env, _names = xproc_store
@@ -1459,7 +1551,7 @@ def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
         subprocess.Popen(
             [
                 sys.executable, "-c", _CAS_WRITER,
-                repo, path, str(wid), str(n_each), "0.01",
+                repo, path, str(wid), str(n_each), "0.01", "4",
             ],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
@@ -1468,21 +1560,15 @@ def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
         )
         for wid in range(n_writers)
     ]
-    state = os.path.join(path, "_state.json")
     stale = None
     while any(p.poll() is None for p in procs):
-        try:
-            with open(state) as f:
-                snap = f.read()
-            if stale is None:
-                stale = snap
-            os.remove(state)  # the pointer vanishes mid-commit
-            _t.sleep(0.02)
-            with open(state + ".tmp", "w") as f:
-                f.write(stale)  # ...and comes back ARBITRARILY STALE
-            os.replace(state + ".tmp", state)
-        except FileNotFoundError:
-            pass
+        snap = open_records.save(path, store)
+        if stale is None and snap[1] is not None:
+            stale = snap
+        open_records.lose(path, store)  # the hint vanishes mid-commit
+        _t.sleep(0.02)
+        if stale is not None:
+            open_records.restore(path, store, stale)  # ...and comes back stale
         _t.sleep(0.02)
 
     wins: list[int] = []
@@ -1493,9 +1579,39 @@ def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
         wins.extend(int(v) for v in line[5:].split(","))
     total = n_writers * n_each
     assert sorted(wins) == list(range(1, total + 1))  # exactly-one-winner held
+    assert stale is not None  # the chaos had a hint to roll back
 
     fresh = EventLog.open(None, path, claim_store=store)
     assert fresh.version() == total  # roll-forward past whatever chaos left
     rows = fresh.scan_rows()
     assert [r.version for r in rows] == list(range(1, total + 1))
     assert fresh.append("after-chaos", '{"ok":1}').version == total + 1
+
+
+def test_writer_rebases_when_its_base_pages_are_reaped(tmp_path, monkeypatch):
+    """Pages load lazily, so a long-lived writer can outlive the pages
+    of the checkpoint it is based on: another writer's fold tombstones
+    their entries, its next roll-up dissolves them, and vacuum reaps
+    them. The stale-based writer re-bases on the newest checkpoint at
+    its seq, and serves, folds and commits as before."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    store = MemoryClaimStore()
+    path = str(tmp_path / "pages")
+    EventLog.create(None, path, claim_store=store)
+    w0 = EventLog.open(None, path, claim_store=store)
+    for i in range(3):  # roll-up at 3: one page
+        w0.append("e", json.dumps({"i": i}))
+    w1 = EventLog.open(None, path, claim_store=store)  # based at 3, page lazy
+    assert w1._manifest._page_metas and not w1._manifest._page_cache
+    assert w0.minor_compact() == 3  # tombstones the page's entries
+    w0.append("e", '{"i":3}')
+    w0.append("e", '{"i":4}')  # roll-up at 6 dissolves the page
+    # w1 rolls forward to 6 without touching the page, then it is reaped
+    assert [r.version for r in w1.scan_rows(version=5)] == [5]
+    assert w1._manifest.seq == 6 and not w1._manifest._page_cache
+    w0.vacuum(grace_seconds=0)
+
+    assert [json.loads(r.payload)["i"] for r in w1.scan_rows()] == list(range(5))
+    assert w1.minor_compact() == 3  # w0's fold and the two fragments
+    assert w1.append("e", '{"i":5}').version == 6
+    assert [json.loads(r.payload)["i"] for r in w0.scan_rows()] == list(range(6))

@@ -1,7 +1,7 @@
 """Group commit (round-11 verdict item 4): concurrent interactive
 append()/append_check() callers coalesce into ONE commit section —
-one fragment, one manifest delta, one pointer publish for the whole
-group — the analog of the reference mutex's implicit convoy batching
+one fragment and one manifest delta claim for the whole group — the
+analog of the reference mutex's implicit convoy batching
 (eventlog/eventlog.go:173-197 AppendMulti is the atomicity model).
 OCC semantics must be EXACT under coalescing, and a leader failure
 must fail the whole batch rather than strand followers."""

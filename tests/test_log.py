@@ -169,16 +169,25 @@ def test_metadata(spark, tmp_path):
     assert reopened.metadata() == {"k1": "v1", "k2": "v2"}
 
 
-def test_open_recovery(spark, tmp_path):
-    """O21: head recovered from data when state file is lost (file.go:67-125)."""
+def test_open_recovery(spark, tmp_path, monkeypatch):
+    """O21: the head is recovered from the manifest chain alone
+    (file.go:67-125 scans to the last entry) — here after a roll-up
+    whose deltas were reaped, with the roll-up hint lost, so open finds
+    the checkpoint by one listing."""
+    from eventlog_spark.manifest import ManifestLog
+    from tests import open_records
+
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 2)
     path = str(tmp_path / "rec")
     log = EventLog.create(spark, path)
     log.append_multi([("a", '{"x":1}'), ("b", '{"x":2}')])
-    os.remove(os.path.join(path, "_state.json"))
+    log.append("c", '{"x":3}')  # roll-up at seq 2
+    log.vacuum(grace_seconds=0)
+    open_records.lose(path)
     reopened = EventLog.open(spark, path)
-    assert reopened.version() == 2
+    assert reopened.version() == 3
     assert reopened.version_initial() == 1
-    assert [r.version for r in reopened.scan().collect()] == [1, 2]
+    assert [r.version for r in reopened.scan().collect()] == [1, 2, 3]
 
 
 def test_check_integrity_clean(log):
@@ -531,8 +540,27 @@ def _crash_before_claim(log):
     def die():
         raise Crash("simulated crash before the delta claim")
 
-    log._write_state = die
+    log._publish = die
     return Crash
+
+
+def test_first_commit_crash_leaves_an_empty_openable_log(tmp_path):
+    """A new log whose first commit dies between its fragment and its
+    delta claim committed nothing: it reopens empty (the fragment is an
+    unclaimed leftover no reader sees), the next append takes version 1,
+    and vacuum reaps the leftover."""
+    path = str(tmp_path / "first")
+    log = EventLog.create(None, path)
+    crash = _crash_before_claim(log)
+    with pytest.raises(crash):
+        log.append("lost", '{"i":0}')
+    (orphan,) = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    reopened = EventLog.open(None, path)
+    assert reopened.version() == 0
+    assert reopened.append("first", '{"i":1}').version == 1
+    assert [r.label for r in reopened.scan_rows()] == ["first"]
+    reopened.vacuum(grace_seconds=0)
+    assert not os.path.exists(os.path.join(path, orphan))
 
 
 def test_open_truncates_crash_orphans(spark, tmp_path):
@@ -1134,7 +1162,7 @@ def test_scan_rows_raises_when_manifest_misses_rows(spark, tmp_path):
     (v3,) = [e["n"] for e in log._manifest.overlapping(3, 3)]
     with log._lock:  # a delta that drops v3's fragment, head unchanged
         log._pending_remove.append(v3)
-        log._write_state()
+        log._publish()
     assert [r.version for r in log.scan_rows(version=1, limit=2)] == [1, 2]
     with pytest.raises(RuntimeError, match=r"page \[2, 4\] read 2 rows, expected 3"):
         log.scan_rows(version=2, limit=3)

@@ -2,11 +2,11 @@
 
 The round-7 design embedded the full data-file list in ``_state.json``
 — O(total files) per commit and per snapshot read. These tests pin the
-replacement's contract: O(1) per-commit delta records, paged
-checkpoints that reuse clean pages, version-range page pruning for the
-scan_rows page path, recovery, and the refusals (pre-manifest state
-file, list-format retirement ledger, head-less delta past the
-pointer, range-less entries, chain gone).
+replacement's contract: O(1) per-commit delta records (the only commit
+record), paged checkpoints that reuse clean pages, version-range page
+pruning for the scan_rows page path, recovery through the roll-up hint
+or one listing, and the refusals (pre-manifest log, list-format
+retirement ledger, head-less delta, range-less entries, chain gone).
 """
 
 from __future__ import annotations
@@ -25,11 +25,6 @@ def _mk(spark, tmp_path, name="log"):
     return EventLog.create(spark, str(tmp_path / name))
 
 
-def _state(log) -> dict:
-    with open(os.path.join(log.path, "_state.json")) as f:
-        return json.load(f)
-
-
 def _manifest_listing(log) -> list[str]:
     try:
         return sorted(os.listdir(os.path.join(log.path, "_manifest")))
@@ -37,20 +32,34 @@ def _manifest_listing(log) -> list[str]:
         return []
 
 
-def test_pointer_has_no_file_list(spark, tmp_path):
-    """The per-commit publish is a POINTER (head + manifest_seq), never
-    the file list — the O(1)-per-commit property, directly."""
-    log = _mk(spark, tmp_path)
-    for i in range(5):
+def _tree(root: str) -> set[str]:
+    return {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, fs in os.walk(root)
+        for f in fs
+    }
+
+
+def test_commit_adds_one_fragment_and_one_delta(tmp_path):
+    """A one-row commit without a roll-up adds exactly two files — its
+    fragment and its delta — and rewrites none: the delta is the only
+    commit record, O(1) per commit, and ``create`` writes only the
+    metadata file."""
+    log = EventLog.create(None, str(tmp_path / "log"))
+    assert _tree(log.path) == {"_eventlog_meta.json"}
+    log.append("l0", '{"i":0}')
+    for i in range(1, 5):
+        before = {f: os.stat(os.path.join(log.path, f)).st_mtime_ns for f in _tree(log.path)}
         log.append(f"l{i}", f'{{"i":{i}}}')
-    st = _state(log)
-    assert "files" not in st
-    assert st["manifest_seq"] == 5
-    # one immutable delta record per commit
-    deltas = [f for f in _manifest_listing(log) if f.startswith("delta-")]
-    assert len(deltas) == 5
-    # pointer stays tiny regardless of commit count
-    assert os.path.getsize(os.path.join(log.path, "_state.json")) < 512
+        after = _tree(log.path)
+        added = sorted(after - set(before))
+        assert len(added) == 2, added
+        assert added[0] == os.path.join("_manifest", f"delta-{i + 1:020d}.json")
+        assert added[1].startswith("part-") and added[1].endswith(".parquet")
+        assert all(
+            os.stat(os.path.join(log.path, f)).st_mtime_ns == t for f, t in before.items()
+        )
+    assert not os.path.exists(os.path.join(log.path, "_state.json"))
 
 
 def test_delta_records_carry_version_ranges(spark, tmp_path):
@@ -80,13 +89,60 @@ def test_checkpoint_rolls_up_and_retires_deltas(spark, tmp_path, monkeypatch):
     left = _manifest_listing(log)
     assert "delta-00000000000000000001.json" not in left
     assert "checkpoint-00000000000000000004.json" not in left  # superseded
-    # delta 9 (after the last checkpoint) must survive — the chain below
-    # the pointer stays complete
+    # a roll-up keeps its own delta until the next one (a mirror at 8
+    # proves its position by it), and delta 9 past it must survive
+    assert "delta-00000000000000000004.json" not in left
+    assert "delta-00000000000000000008.json" in left
     assert "delta-00000000000000000009.json" in left
+    # the hint in the claim store names the newest roll-up
+    with open(os.path.join(log.path, "_manifest", "_last_checkpoint.json")) as f:
+        assert json.load(f) == {"seq": 8}
     # a cold open reads the full log through checkpoint + tail deltas
     reopened = EventLog.open(spark, log.path)
     assert reopened.version() == 9
     assert [r.version for r in reopened.scan_rows()] == list(range(1, 10))
+
+
+def test_cold_open_of_rolled_up_log_lists_nothing(tmp_path, monkeypatch):
+    """Open is listing-free on a rolled-up log: the roll-up hint names
+    the newest checkpoint, GETs roll forward past it, and a GET of the
+    last delta proves the position. Only a missing hint costs a
+    listing — one."""
+    from eventlog_spark.manifest import PosixClaimStore
+
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
+    log = EventLog.create(None, str(tmp_path / "log"))
+    for i in range(10):
+        log.append("e", f'{{"i":{i}}}')
+    listings = []
+    names = PosixClaimStore.names
+    monkeypatch.setattr(
+        PosixClaimStore, "names", lambda self: listings.append(1) or names(self)
+    )
+    assert EventLog.open(None, log.path).version() == 10
+    assert listings == []
+    os.remove(os.path.join(log.path, "_manifest", "_last_checkpoint.json"))
+    assert EventLog.open(None, log.path).version() == 10
+    assert listings == [1]
+
+
+def test_open_at_listed_checkpoint_without_its_delta(tmp_path, monkeypatch):
+    """A log whose tip is a roll-up that retired its own delta (the
+    retirement order of earlier releases), reaped, with no roll-up
+    hint: the listing's newest checkpoint is the newest roll-up, so
+    open adopts the head it carries and the next commit follows it."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    log = EventLog.create(None, str(tmp_path / "log"))
+    for i in range(6):
+        log.append("e", f'{{"i":{i}}}')
+    log.vacuum(grace_seconds=0)
+    mdir = os.path.join(log.path, "_manifest")
+    os.remove(os.path.join(mdir, f"delta-{6:020d}.json"))
+    os.remove(os.path.join(mdir, "_last_checkpoint.json"))
+    reopened = EventLog.open(None, log.path)
+    assert reopened.version() == 6
+    assert reopened.append("e", '{"i":6}').version == 7
+    assert [r.version for r in reopened.scan_rows()] == list(range(1, 8))
 
 
 def test_checkpoint_reuses_clean_pages(spark, tmp_path, monkeypatch):
@@ -177,7 +233,7 @@ def test_label_candidates_prune_pages_before_loading(tmp_path, monkeypatch):
 
 def test_cross_instance_visibility_by_delta_replay(spark, tmp_path):
     """A second EventLog instance on the same path advances by replaying
-    the writer's delta records off the published pointer — no reopen."""
+    the writer's delta records — no reopen."""
     a = _mk(spark, tmp_path)
     b = EventLog.open(spark, a.path)
     a.append("x", '{"v":1}')
@@ -192,22 +248,24 @@ def test_cross_instance_visibility_by_delta_replay(spark, tmp_path):
 
 
 def test_legacy_state_file_refused(spark, tmp_path):
-    """A round-7 log (file list embedded in _state.json) is refused on
-    open with an error naming the format, never adopted from a list
-    nothing else vouches for."""
+    """A round-7 log (file list embedded in _state.json, no manifest
+    chain, format 1) is refused on open by the no-chain check, never
+    adopted from a list nothing else vouches for."""
     log = _mk(spark, tmp_path)
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
-    st = _state(log)
+    with open(os.path.join(log.path, "_eventlog_meta.json"), "w") as f:
+        json.dump({"metadata": {}, "format_version": 1}, f)
     legacy = {
-        "latest_version": st["latest_version"],
-        "version_initial": st["version_initial"],
-        "last_timestamp": st["last_timestamp"],
+        "latest_version": 2,
+        "version_initial": 1,
+        "last_timestamp": 0,
         "stream_commits": {},
         "files": log._manifest_files(),
     }
+    shutil.rmtree(os.path.join(log.path, "_manifest"))
     with open(os.path.join(log.path, "_state.json"), "w") as f:
         json.dump(legacy, f)
-    with pytest.raises(RuntimeError, match="pre-manifest state file"):
+    with pytest.raises(RuntimeError, match="unrecoverable.*pre-manifest log"):
         EventLog.open(spark, log.path)
 
 
@@ -228,40 +286,37 @@ def test_retired_list_ledger_refused(tmp_path):
         assert f.read() == body
 
 
-def test_recovery_after_pointer_loss_rebuilds_chain(spark, tmp_path):
-    """Pointer lost entirely: head recovers from the delta chain and
-    the next commit claims the seq PAST everything on disk, so a stale
-    pointer can never name it."""
+def test_recovery_after_pointer_loss_rebuilds_chain(spark, tmp_path, monkeypatch):
+    """Roll-up hint lost entirely (after a roll-up whose deltas were
+    reaped): one listing finds the newest checkpoint, the head
+    recovers from it and the delta past it, and the next commit claims
+    the seq PAST everything in the store."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 2)
     log = _mk(spark, tmp_path)
     for i in range(3):
         log.append(f"l{i}", '{"k":0}')
-    old_seq = _state(log)["manifest_seq"]
-    os.remove(os.path.join(log.path, "_state.json"))
+    log.vacuum(grace_seconds=0)
+    old_seq = log._manifest.seq
+    os.remove(os.path.join(log.path, "_manifest", "_last_checkpoint.json"))
     reopened = EventLog.open(spark, log.path)
     assert reopened.version() == 3
     reopened.append("after", '{"k":0}')
-    assert _state(reopened)["manifest_seq"] > old_seq
+    assert reopened._manifest.seq == old_seq + 1
     assert [r.version for r in reopened.scan_rows()] == [1, 2, 3, 4]
     audit = reopened.check_integrity().collect()[0]
     assert audit.density_violation == 0 and audit.chain_violations == 0
 
 
 def test_headless_delta_past_pointer_refused(spark, tmp_path):
-    """A crash of the retired flock protocol between its delta write and
-    its pointer publish left a delta past the pointer with no head
-    record — a commit that was never acknowledged. Adopting it would
-    serve it and hand its versions out a second time, so open refuses,
-    naming the file; once the operator deletes it, the log opens and
-    the next append takes the version the crashed commit never got."""
-    import shutil
-
+    """A delta with no head record (the retired flock protocol's shape,
+    e.g. one its crash left at the tip, never acknowledged) cannot be
+    adopted: its head is unknown, and adopting it headless would hand
+    its versions out a second time. Open refuses, naming the file; once
+    the operator deletes it, the log opens and the next append takes
+    the version the crashed commit never got."""
     log = _mk(spark, tmp_path)
     log.append("committed", '{"ok":1}')
-    state = os.path.join(log.path, "_state.json")
-    saved = str(tmp_path / "saved_state.json")
-    shutil.copy(state, saved)
-    log.append("orphan", '{"crash":1}')  # delta 2 + pointer 2
-    shutil.copy(saved, state)  # "crash": pointer rolls back to seq 1
+    log.append("orphan", '{"crash":1}')  # delta 2
     orphan = os.path.join(log.path, "_manifest", f"delta-{2:020d}.json")
     with open(orphan) as f:
         rec = json.load(f)
@@ -279,15 +334,15 @@ def test_headless_delta_past_pointer_refused(spark, tmp_path):
 
 
 def test_broken_chain_refuses_listing_fallback(spark, tmp_path):
-    """A pointer whose manifest chain is gone from the store is
-    refused loudly: the directory listing may hold an unpublished
-    loser's fragment aliasing committed versions, so it is never a
-    fallback — raising beats serving an empty or doubled log."""
+    """A log whose manifest chain is broken in the store (its start is
+    gone, later deltas remain) is refused loudly: the directory listing
+    may hold an unpublished loser's fragment aliasing committed
+    versions, so it is never a fallback — raising beats serving an
+    empty or doubled log."""
     log = _mk(spark, tmp_path)
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
-    mdir = os.path.join(log.path, "_manifest")
-    for f in os.listdir(mdir):
-        os.remove(os.path.join(mdir, f))
+    log.append("c", '{"k":0}')
+    os.remove(os.path.join(log.path, "_manifest", f"delta-{1:020d}.json"))
     with pytest.raises(RuntimeError, match="unrecoverable"):
         EventLog.open(spark, log.path)
 
@@ -415,14 +470,14 @@ spark.stop()
 def test_eight_process_occ_manifest_storm(spark, tmp_path):
     """EIGHT OS processes hammer one log through the OCC path while the
     log-structured manifest checkpoints every 8 commits — so ~8 paged
-    roll-ups (page rewrites + delta retirement + pointer swaps) race
+    roll-ups (page rewrites + delta retirement + hint puts) race
     64 interleaved commits from 8 independent claim contenders. This is
     the multi-writer shape a shared object-store prefix sees: every
     writer advances its mirror by replaying the OTHERS' delta records.
     Must hold: exactly-one-winner per version (union of acked versions
     is a permutation of 1..64), dense scan, clean audit, and a fresh
     process adopts the final chain (manifest count == live fragment
-    reality, no stale-pointer fallback)."""
+    reality)."""
     import os as _os
     import subprocess
     import sys

@@ -63,10 +63,10 @@ class ManifestChain(RuleBasedStateMachine):
             # is refused before anything is claimed
             seq = self.m.seq
             with pytest.raises(ValueError):
-                self.m.commit(add, [])
+                self.m.commit(add, [], head=self._head())
             assert self.m.seq == seq
             return
-        self.m.commit(add, [])
+        self.m.commit(add, [], head=self._head())
         self.model.update((e["n"], (e["lo"], e["hi"])) for e in add)
 
     @rule(k=st.integers(1, 4), seed=st.integers(0, 10**6))
@@ -78,7 +78,12 @@ class ManifestChain(RuleBasedStateMachine):
         victims = sorted(set(victims))
         for v in victims:
             del self.model[v]
-        self.m.commit([], victims)
+        self.m.commit([], victims, head=self._head())
+
+    def _head(self) -> dict:
+        """Every claimed delta carries head fields (the chain's only
+        commit record); this model tracks files, not versions."""
+        return {"latest": self.m.seq + 1, "initial": 1, "ts": 0}
 
     @rule()
     def cold_reload(self):
@@ -90,8 +95,8 @@ class ManifestChain(RuleBasedStateMachine):
 
     @rule(back=st.integers(1, 3))
     def stale_mirror_replays_forward(self, back):
-        """A reader that loaded an OLDER pointer replays the delta
-        records forward and must land on exactly the current model."""
+        """A reader positioned at an OLDER seq rolls the delta records
+        forward and must land on exactly the current model."""
         target = self.m.seq
         old_seq = max(0, target - back)
         stale = ManifestLog(self._root)
@@ -101,7 +106,8 @@ class ManifestChain(RuleBasedStateMachine):
             stale.load(old_seq)
         except Exception:
             return  # old_seq predates the first checkpoint's coverage
-        stale.replay_to(target)
+        stale.roll_forward()
+        assert stale.seq == target
         assert sorted(stale.names()) == sorted(self.model)
 
     # -- the property ------------------------------------------------------------

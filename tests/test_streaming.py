@@ -325,10 +325,10 @@ def test_tail_stream_skips_uncommitted_orphans(spark, tmp_path):
     def crash():
         raise RuntimeError("simulated crash before the delta claim")
 
-    log._write_state = crash  # versions 3-4 written, never claimed
+    log._publish = crash  # versions 3-4 written, never claimed
     with pytest.raises(RuntimeError, match="simulated crash"):
         log.append_multi([("c", '{"x":3}'), ("d", '{"x":4}')])
-    del log.__dict__["_write_state"]
+    del log.__dict__["_publish"]
     assert _tail_versions(log, str(tmp_path / "ckpt")) == [1, 2]  # 3-4 withheld
 
 
@@ -719,15 +719,10 @@ def test_append_stream_kill9_mid_batch_recovers_exactly_once(spark, tmp_path):
         args, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,
     )
-    state = _os.path.join(path, "_state.json")
     deadline = time.time() + 240
     killed = False
     while time.time() < deadline:
-        try:
-            with open(state) as f:
-                head = int(_json.load(f).get("latest_version", 0))
-        except (FileNotFoundError, ValueError):
-            head = 0
+        head = EventLog.open(None, path).version()
         if head >= total // 3:
             _os.killpg(p.pid, signal.SIGKILL)  # no goodbye: JVM + driver
             killed = True

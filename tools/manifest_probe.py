@@ -6,19 +6,19 @@ Drives REAL interactive appends (minor compaction disabled so every
 commit leaves its fragment — the adversarial shape) to 1k / 10k / 100k
 fragments and records, at each decade:
 
-* per-commit latency percentiles over the last window (the commit now
-  publishes ONE delta record + a pointer — O(1) — plus an amortized
-  paged checkpoint every K commits),
+* per-commit latency percentiles over the last window (the commit
+  claims ONE delta record — O(1) — plus an amortized paged checkpoint
+  every K commits),
 * what the round-7 design would have paid at the same file count
   (measured: serializing the full N-entry file list per commit),
 * scan_rows 1000-event page latency, warm (live mirror) and cold
-  (fresh open: pointer → checkpoint page metas → only overlapped pages
-  load),
-* cold-open positioning cost and pointer size.
+  (fresh open: roll-up hint → checkpoint page metas → only overlapped
+  pages load),
+* cold-open positioning cost.
 
 No Spark session: the probe exercises exactly the driver-side commit
-and serving paths (pyarrow fragment write, manifest chain, pointer,
-footer-free page pruning). Usage:
+and serving paths (pyarrow fragment write, manifest chain, footer-free
+page pruning). Usage:
 
     python tools/manifest_probe.py [--frags 100000] [--out BASELINE_row]
 """
@@ -91,7 +91,7 @@ def probe(total_frags: int) -> list[dict]:
             warm_mid_ms = 1e3 * (time.perf_counter() - t0)
             assert len(rows) == min(1000, head - head // 2 + 1)
 
-            # cold: a fresh open (pointer → checkpoint metas; pages lazy)
+            # cold: a fresh open (hint → checkpoint metas; pages lazy)
             t0 = time.perf_counter()
             cold = EventLog.open(None, path)
             cold_open_ms = 1e3 * (time.perf_counter() - t0)
@@ -111,9 +111,6 @@ def probe(total_frags: int) -> list[dict]:
                     "cold_open_ms": round(cold_open_ms, 2),
                     "scan_rows_1000_cold_head_ms": round(cold_head_ms, 2),
                     "cold_pages_touched": pages_touched,
-                    "pointer_bytes": os.path.getsize(
-                        os.path.join(path, "_state.json")
-                    ),
                 }
             )
             print(json.dumps(results[-1]), flush=True)
@@ -374,8 +371,8 @@ def probe_open(total_frags: int) -> dict:
     """Round-9 done-criterion: cold open flat to 10^6 fragments.
 
     Synthesizes the on-disk shape of a clean log at ``total_frags``
-    fragments — real manifest chain (batched commits + forced roll-up),
-    pointer, clean commit-intent, and ``total_frags`` dummy fragment
+    fragments — real manifest chain (batched commits + a forced roll-up
+    carrying the head, named by the roll-up hint) and ``total_frags`` dummy fragment
     files (open never reads fragment BYTES on the clean path, so empty
     files measure exactly the control-plane cost) — then measures
     EventLog.open plus the r8 shape it replaced (one os.listdir +
@@ -398,9 +395,7 @@ def probe_open(total_frags: int) -> dict:
                 batch = []
         if batch:
             m.commit(batch, [])
-        m._checkpoint()
-        log._latest, log._initial, log._last_ts = total_frags, 1, 1
-        log._write_state()
+        m._checkpoint({"latest": total_frags, "initial": 1, "ts": 1})
 
         t0 = time.perf_counter()
         cold = EventLog.open(None, path)
@@ -418,7 +413,6 @@ def probe_open(total_frags: int) -> dict:
             "fragments": total_frags,
             "open_ms": round(open_ms, 2),
             "r8_listing_ms": round(listdir_ms, 2),
-            "pointer_bytes": os.path.getsize(os.path.join(path, "_state.json")),
         }
         print(json.dumps(row), flush=True)
         return row

@@ -74,7 +74,7 @@ from pyspark.sql.types import (
 )
 
 from .errors import InvalidVersion, MismatchingVersions
-from .manifest import ManifestChainBroken, ManifestLog, ManifestSeqClaimed
+from .manifest import ManifestChainBroken, ManifestLog, ManifestSeqClaimed, _delta_seq
 from .validation import (
     DEFAULT_MAX_PAYLOAD_LEN,
     minify_json,
@@ -608,14 +608,13 @@ class EventLog:
     ) -> "EventLog":
         """O22: create a new empty log with immutable metadata
         (reference: file.go:127-161 + metadata pseudo-event header).
-        The empty log has an empty chain, so the first commit claims
-        delta 1. Format 2 marks a log whose delta chain is its only
-        commit record from the start: until a delta is claimed, a
-        fragment in it is an unclaimed leftover, never a lost commit.
+        The first commit claims delta 1; the roll-up hint put here names
+        seq 0, so an open tells this empty chain from a lost one.
         ``makedirs(exist_ok=False)`` arbitrates create races."""
         os.makedirs(path, exist_ok=False)
         with open(os.path.join(path, _META_FILE), "w") as f:
-            json.dump({"metadata": metadata or {}, "format_version": 2}, f)
+            json.dump({"metadata": metadata or {}, "format_version": 1}, f)
+        ManifestLog(path, store=claim_store).mark_created()
         return cls(spark, path, claim_store=claim_store)
 
     @classmethod
@@ -636,12 +635,9 @@ class EventLog:
 
     def _load_meta(self) -> None:
         meta_path = os.path.join(self.path, _META_FILE)
-        meta = {}
         if os.path.exists(meta_path):
             with open(meta_path) as f:
-                meta = json.load(f)
-        self._metadata = dict(meta.get("metadata", {}))
-        self._format_version = int(meta.get("format_version", 1))
+                self._metadata = dict(json.load(f).get("metadata", {}))
 
     def _load_state(self) -> None:
         """Position on the delta chain, the only commit record: the
@@ -651,10 +647,10 @@ class EventLog:
         scan: an unpublished loser's fragment may alias committed
         versions, so only the manifest names a consistent snapshot. A
         chain that yields no head is refused, and so is an empty chain
-        beside manifest records in the claim store, or beside data
-        fragments in a log an earlier release created (format 1, which
-        kept a pointer outside the store): raising beats silently
-        serving an empty or doubled log."""
+        beside other manifest records, or beside data fragments without
+        the hint ``create`` put (a lost store, or a pre-manifest log):
+        raising beats serving an empty or doubled log whose fragments
+        vacuum would then reap as unclaimed leftovers."""
         ledger = os.path.join(self.path, "_retired.json")
         if os.path.exists(ledger):
             raise RuntimeError(
@@ -673,24 +669,20 @@ class EventLog:
                 "delta carries one (a checkpoint written before checkpoints "
                 "carried heads); see MIGRATION.md"
             )
-        if m.seq == 0 and (
-            m._store.names()
-            or (
-                self._format_version < 2
-                and any(f.endswith(".parquet") for f in self._data_files())
-            )
+        if m.seq == 0 and m.chain_lost(
+            lambda: any(f.endswith(".parquet") for f in self._data_files())
         ):
             self._require_published_state()  # a first claim may have landed
             if m.seq == 0:
                 raise RuntimeError(
                     "log unrecoverable: no manifest chain starts at a "
                     "checkpoint or at delta 1, yet the claim store holds "
-                    "manifest records, or the log (created by an earlier "
-                    "release) holds data fragments: a chain lost from the "
-                    "claim store, or a pre-manifest log. The directory-"
-                    "listing fallback is refused, since an unpublished "
-                    "loser's fragment may alias committed versions. See "
-                    "MIGRATION.md."
+                    "manifest records, or the log holds data fragments "
+                    "and the claim store lacks the record its create put: "
+                    "a chain lost from the claim store, or a pre-manifest "
+                    "log. The directory-listing fallback is refused, since "
+                    "an unpublished loser's fragment may alias committed "
+                    "versions. See MIGRATION.md."
                 )
 
     @contextlib.contextmanager
@@ -2432,27 +2424,45 @@ class EventLog:
         return removed
 
     def _reap_retired(self, now: float, grace: float) -> int:
-        ledger, kept, removed = self._read_retired(), [], 0
-        for batch in ledger:
-            if now - float(batch.get("ts", 0)) < grace:
+        """Delete the files of the ledger's batches past the grace
+        window; manifest records delete through the claim store (on an
+        object store, the DELETE call). Retired deltas go last, as a
+        prefix of the chain: ascending, with any delta the store still
+        holds below the highest due one (its roll-up's retirement never
+        reached the ledger), and none at or above the lowest delta of a
+        batch still waiting. Batches fall due on their writers' clocks,
+        and delta s kept while delta s+1 is gone would let a mirror at
+        s take itself for the tip (manifest.py ``ManifestLog.refresh``)."""
+        ledger, kept, removed, top = self._read_retired(), [], 0, 0
+        waits = [now - float(b.get("ts", 0)) < grace for b in ledger]
+        floor = min(
+            (s for b, w in zip(ledger, waits) if w for s in map(_delta_seq, b["files"]) if s),
+            default=float("inf"),
+        )
+        for batch, w in zip(ledger, waits):
+            if w:
                 kept.append(batch)
                 continue
-            for f in batch.get("files", []):
-                # superseded MANIFEST records delete through the claim
-                # store (the seam that wrote them — on an object store
-                # this is the DELETE call, not a filesystem unlink);
-                # data fragments are plain files either way
-                if (
-                    f.startswith("_manifest" + os.sep) or f.startswith("_manifest/")
-                ) and self._manifest is not None:
-                    if self._manifest._store.delete(os.path.basename(f)):
+            left = []
+            for f in batch["files"]:
+                s = _delta_seq(f)
+                if s:
+                    if s < floor:
+                        top = max(top, s)
+                    else:
+                        left.append(f)  # once the lower batch falls due
+                elif f.startswith(("_manifest" + os.sep, "_manifest/")):
+                    removed += self._manifest._store.delete(os.path.basename(f))
+                else:
+                    try:
+                        os.remove(os.path.join(self.path, f))
                         removed += 1
-                    continue
-                try:
-                    os.remove(os.path.join(self.path, f))
-                    removed += 1
-                except FileNotFoundError:
-                    pass
+                    except FileNotFoundError:
+                        pass
+            if left:
+                kept.append(dict(batch, files=left))
+        if top:
+            removed += self._manifest.reap_deltas(top)
         if kept != ledger:
             tmp = self._retired_path() + f".tmp.{uuid.uuid4().hex}"
             with open(tmp, "w") as f:

@@ -39,29 +39,33 @@ table format uses instead:
   roll-up's record carries the head fields (and stream markers) of the
   delta it rolls up, and ``_last_checkpoint.json`` (``{"seq": N}``,
   put after ``checkpoint-N``) lets an open find it with one GET instead
-  of a listing. The hint only shortens open: a missing, stale or
-  rolled-back hint costs one listing, never a wrong head. A chain that
-  yields no head — deltas of the retired flock protocol, or a
-  checkpoint written before checkpoints carried heads at the tip — is
-  refused, naming the file.
+  of a listing; ``create`` puts it as ``{"seq": 0}``, so an empty
+  chain without it beside data fragments reads as lost, not new. The
+  hint only shortens open: a missing, stale or rolled-back hint costs
+  one listing, never a wrong head. A chain that yields no head — deltas
+  of the retired flock protocol, or a checkpoint written before
+  checkpoints carried heads at the tip — is refused, naming the file.
 * **Superseded manifest files retire, never die in place**: a roll-up
   at N hands its base checkpoint, then deltas [base, N-1] ascending,
   then dissolved pages to the log's deferred-deletion ledger (log.py
   ``_retire``/``vacuum``), the same grace-window mechanism that
   protects data fragments from straggler readers. Delta N stays until
-  the next roll-up.
+  the next roll-up. The reaper deletes retired deltas in ascending seq
+  order across all ledger batches, and none at or above the lowest
+  delta of a batch still inside the grace window, so the deltas gone
+  from the store are always a prefix of the chain.
 
 Consistency model (mirrors log.py's snapshot isolation): writers are
 ordered by the delta claim, so no sequence number is ever assigned
 twice; readers are lock-free — every manifest file is immutable once
 published. A mirror refreshes by rolling forward along the deltas
 (``refresh``). When none lies past it, it proves its position by
-finding delta ``seq`` itself: the reaper deletes in retirement order,
-so it never deletes delta s+1 before delta s. A mirror that cannot
-prove its position (a writer stale past a reaped roll-up) re-positions
-on the newest roll-up; one that finds the chain ending below the seq it
-already reached raises ManifestChainBroken, and the log refuses to
-serve or commit rather than re-assign acknowledged versions.
+finding delta ``seq`` itself: the reaper never deletes delta s+1
+before delta s. A mirror that cannot prove its position (a writer
+stale past a reaped roll-up) re-positions on the newest roll-up; one
+that finds the chain ending below the seq it already reached raises
+ManifestChainBroken, and the log refuses to serve or commit rather
+than re-assign acknowledged versions.
 """
 
 from __future__ import annotations
@@ -75,6 +79,14 @@ import uuid
 _DELTA = "delta-{:020d}.json"
 _CKPT = "checkpoint-{:020d}.json"
 _HINT = "_last_checkpoint.json"
+
+
+def _delta_seq(name: str) -> int | None:
+    """Seq of a delta record named ``name`` (under any directory), None
+    for any other name."""
+    base = os.path.basename(name)
+    ok = base.startswith("delta-") and base.endswith(".json") and base[6:-5].isdigit()
+    return int(base[6:-5]) if ok else None
 
 
 class PosixClaimStore:
@@ -316,6 +328,27 @@ class ManifestLog:
 
     # -- positioning -------------------------------------------------------------
 
+    def mark_created(self) -> None:
+        """Put the hint of a new, empty chain (``{"seq": 0}``): an open
+        that finds the chain empty and this hint in place knows nothing
+        was claimed yet; without it, beside data fragments, the chain
+        was lost."""
+        self._write_json(_HINT, {"seq": 0})
+
+    def chain_lost(self, has_fragments) -> bool:
+        """Whether an empty chain was lost rather than never claimed:
+        the store holds manifest records besides the hint, or
+        ``has_fragments()`` while the hint ``mark_created`` put is gone."""
+        return bool(set(self._store.names()) - {_HINT}) or (
+            self._hinted_checkpoint() != 0 and has_fragments()
+        )
+
+    def reap_deltas(self, top: int) -> int:
+        """Delete every delta at or below ``top`` in the store, in
+        ascending seq order; returns how many went."""
+        seqs = sorted(s for s in map(_delta_seq, self._store.names()) if s and s <= top)
+        return sum(self._store.delete(_DELTA.format(s)) for s in seqs)
+
     def _hinted_checkpoint(self) -> int | None:
         """Seq the roll-up hint names, None when it is absent or torn."""
         try:
@@ -362,9 +395,9 @@ class ManifestLog:
         1. Roll forward along the deltas past the mirror (GET probes,
            no listing).
         2. If none lay past it, prove the mirror's position by finding
-           delta ``seq``: a roll-up retires deltas in ascending order
-           and keeps its own, so the reaper never deletes delta s+1
-           before delta s.
+           delta ``seq``: a roll-up keeps its own delta, and the
+           reaper deletes retired deltas as a prefix of the chain
+           (log.py ``_reap_retired``), never delta s+1 before delta s.
         3. If that proof fails (a fresh mirror, or a writer stale past
            a reaped roll-up), cold-position at the newest roll-up —
            named by the hint, else by one listing — and return the head
@@ -393,7 +426,10 @@ class ManifestLog:
                 continue
             if hinted and fresh.seq == ck and not self._store.get(_DELTA.format(ck)):
                 continue
-            self.__dict__.update(fresh.__dict__)
+            # landing where the mirror already stands (a tip roll-up
+            # without its own delta) keeps its loaded pages
+            if (fresh._ckpt_seq, fresh.seq) != (self._ckpt_seq, self.seq):
+                self.__dict__.update(fresh.__dict__)
             return head
         raise ManifestChainBroken(
             f"no roll-up in the store positions a chain at or past seq {reached}"

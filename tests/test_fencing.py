@@ -1529,6 +1529,63 @@ def test_stale_writer_behind_reaped_rollup(tmp_path, monkeypatch, hint, on_rollu
         assert log.version() == 10
 
 
+@pytest.mark.parametrize("ledger", ["skewed", "leaked"])
+def test_reaper_never_strands_a_writer_on_a_kept_delta(tmp_path, monkeypatch, ledger):
+    """Writers based on checkpoints 3 and 4 roll up at 6 and 7, and each
+    roll-up retires its own run of deltas in its own ledger batch. A
+    writer idle at seq 3 must not find delta 3 kept while delta 4 is
+    reaped, or it takes 3 for the tip and re-claims version 4. Two ways
+    to get there: ``skewed``, the batch naming delta 3 is still inside
+    the grace window (its writer's clock runs ahead, or its line landed
+    later) while the roll-up at 7's batch is due; ``leaked``, delta 3
+    was never retired (its roll-ups' retirements never reached the
+    ledger). The reaper deletes deltas only as a prefix of the chain,
+    so the idle writer rolls forward and claims seq 8 (the minor fold
+    at 3 holds no event, so that is version 7)."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
+    store = MemoryClaimStore()
+    path = str(tmp_path / "reap")
+    EventLog.create(None, path, claim_store=store)
+    w0 = EventLog.open(None, path, claim_store=store)
+    w1 = EventLog.open(None, path, claim_store=store)
+    w0.append("e", '{"i":1}')
+    w0.append("e", '{"i":2}')
+    assert w1.minor_compact() == 2  # w1 rolls up at 3
+    idle = EventLog.open(None, path, claim_store=store)
+    p = EventLog.open(None, path, claim_store=store)
+    assert idle._manifest.seq == p._manifest._ckpt_seq == 3
+    w0.append("e", '{"i":3}')  # w0, based at 0, rolls up at 4
+    q = EventLog.open(None, path, claim_store=store)
+    assert q._manifest._ckpt_seq == 4
+    p.append("e", '{"i":4}')
+    p.append("e", '{"i":5}')  # p rolls up at 6: checkpoint 3, deltas 3-5
+    q.append("e", '{"i":6}')  # q rolls up at 7: checkpoint 4, deltas 4-6
+    ledger_path = os.path.join(path, "_retired.jsonl")
+    with open(ledger_path) as f:
+        batches = [json.loads(line) for line in f]
+    d3 = os.path.join("_manifest", f"delta-{3:020d}.json")
+    ck4 = os.path.join("_manifest", f"checkpoint-{4:020d}.json")
+    if ledger == "skewed":
+        for b in batches:  # only the roll-up at 7's batch is due
+            b["ts"] = 0 if ck4 in b["files"] else 4e9
+        grace = 3600
+    else:
+        batches = [b for b in batches if d3 not in b["files"]]
+        grace = 0
+    with open(ledger_path, "w") as f:
+        f.writelines(json.dumps(b) + "\n" for b in batches)
+    w0.vacuum(grace_seconds=grace)
+    kept = [s for s in range(1, 8) if store.get(f"delta-{s:020d}.json") is not None]
+
+    assert idle.append("e", '{"i":7}').version == 7  # seq 8
+    assert idle._manifest.seq == 8
+    assert kept == (list(range(1, 8)) if ledger == "skewed" else [7])
+    for log in (idle, EventLog.open(None, path, claim_store=store)):
+        rows = log.scan_rows()
+        assert [json.loads(r.payload)["i"] for r in rows] == list(range(1, 8))
+        assert [r.version for r in rows] == list(range(1, 8))
+
+
 def test_cas_storm_survives_pointer_chaos(tmp_path, xproc_store):
     """Chaos-monkey regression for the model-found resync bug: while
     four writer processes storm the log, rolling up every 4 commits,

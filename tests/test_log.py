@@ -563,6 +563,23 @@ def test_first_commit_crash_leaves_an_empty_openable_log(tmp_path):
     assert not os.path.exists(os.path.join(path, orphan))
 
 
+def test_empty_chain_without_its_create_record(tmp_path):
+    """An empty chain whose claim store lacks the hint ``create`` put
+    (a log an earlier release created, or a store lost whole) opens
+    empty while the log holds no data fragment, and is refused once it
+    holds one: the fragment may be a lost commit, and serving the log
+    empty would let vacuum reap it."""
+    path = str(tmp_path / "hintless")
+    log = EventLog.create(None, path)
+    os.remove(os.path.join(path, "_manifest", "_last_checkpoint.json"))
+    assert EventLog.open(None, path).version() == 0
+    crash = _crash_before_claim(log)
+    with pytest.raises(crash):
+        log.append("lost", '{"i":0}')
+    with pytest.raises(RuntimeError, match="unrecoverable"):
+        EventLog.open(None, path)
+
+
 def test_open_truncates_crash_orphans(spark, tmp_path):
     """file.go:67-125 — a crash between fragment write and commit must
     not leave rows that a later append would duplicate. No manifest

@@ -44,9 +44,12 @@ def test_commit_adds_one_fragment_and_one_delta(tmp_path):
     """A one-row commit without a roll-up adds exactly two files — its
     fragment and its delta — and rewrites none: the delta is the only
     commit record, O(1) per commit, and ``create`` writes only the
-    metadata file."""
+    metadata file and the empty chain's roll-up hint."""
     log = EventLog.create(None, str(tmp_path / "log"))
-    assert _tree(log.path) == {"_eventlog_meta.json"}
+    hint = os.path.join("_manifest", "_last_checkpoint.json")
+    assert _tree(log.path) == {"_eventlog_meta.json", hint}
+    with open(os.path.join(log.path, hint)) as f:
+        assert json.load(f) == {"seq": 0}
     log.append("l0", '{"i":0}')
     for i in range(1, 5):
         before = {f: os.stat(os.path.join(log.path, f)).st_mtime_ns for f in _tree(log.path)}
@@ -130,7 +133,8 @@ def test_open_at_listed_checkpoint_without_its_delta(tmp_path, monkeypatch):
     """A log whose tip is a roll-up that retired its own delta (the
     retirement order of earlier releases), reaped, with no roll-up
     hint: the listing's newest checkpoint is the newest roll-up, so
-    open adopts the head it carries and the next commit follows it."""
+    open adopts the head it carries, a refresh that lands there again
+    keeps the pages the mirror loaded, and the next commit follows it."""
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 3)
     log = EventLog.create(None, str(tmp_path / "log"))
     for i in range(6):
@@ -141,6 +145,12 @@ def test_open_at_listed_checkpoint_without_its_delta(tmp_path, monkeypatch):
     os.remove(os.path.join(mdir, "_last_checkpoint.json"))
     reopened = EventLog.open(None, log.path)
     assert reopened.version() == 6
+    # each refresh lands where the mirror stands, and keeps its pages
+    assert [r.version for r in reopened.scan_rows()] == list(range(1, 7))
+    pages = reopened._manifest._page_cache
+    assert pages
+    assert reopened._refresh_published_state()
+    assert reopened._manifest._page_cache is pages
     assert reopened.append("e", '{"i":6}').version == 7
     assert [r.version for r in reopened.scan_rows()] == list(range(1, 8))
 
@@ -249,12 +259,10 @@ def test_cross_instance_visibility_by_delta_replay(spark, tmp_path):
 
 def test_legacy_state_file_refused(spark, tmp_path):
     """A round-7 log (file list embedded in _state.json, no manifest
-    chain, format 1) is refused on open by the no-chain check, never
-    adopted from a list nothing else vouches for."""
+    chain) is refused on open by the no-chain check, never adopted from
+    a list nothing else vouches for."""
     log = _mk(spark, tmp_path)
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
-    with open(os.path.join(log.path, "_eventlog_meta.json"), "w") as f:
-        json.dump({"metadata": {}, "format_version": 1}, f)
     legacy = {
         "latest_version": 2,
         "version_initial": 1,
@@ -334,17 +342,29 @@ def test_headless_delta_past_pointer_refused(spark, tmp_path):
 
 
 def test_broken_chain_refuses_listing_fallback(spark, tmp_path):
-    """A log whose manifest chain is broken in the store (its start is
-    gone, later deltas remain) is refused loudly: the directory listing
-    may hold an unpublished loser's fragment aliasing committed
-    versions, so it is never a fallback — raising beats serving an
-    empty or doubled log."""
+    """A log whose manifest chain is gone from the store is refused
+    loudly: the directory listing may hold an unpublished loser's
+    fragment aliasing committed versions, so it is never a fallback —
+    raising beats serving an empty or doubled log, and beats a vacuum
+    reaping every fragment as an unclaimed leftover."""
     log = _mk(spark, tmp_path)
+    log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
+    mdir = os.path.join(log.path, "_manifest")
+    for f in os.listdir(mdir):
+        os.remove(os.path.join(mdir, f))
+    with pytest.raises(RuntimeError, match="unrecoverable"):
+        EventLog.open(spark, log.path)
+
+
+def test_chain_missing_its_start_refuses_listing_fallback(tmp_path):
+    """A chain whose start is gone from the store while later deltas
+    remain is refused the same way."""
+    log = EventLog.create(None, str(tmp_path / "log"))
     log.append_multi([("a", '{"k":0}'), ("b", '{"k":0}')])
     log.append("c", '{"k":0}')
     os.remove(os.path.join(log.path, "_manifest", f"delta-{1:020d}.json"))
     with pytest.raises(RuntimeError, match="unrecoverable"):
-        EventLog.open(spark, log.path)
+        EventLog.open(None, log.path)
 
 
 def test_minor_compact_folds_show_as_one_delta(spark, tmp_path):

@@ -23,8 +23,6 @@ contract-suite second config, not for 100 TB data paths.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 
 from .log import (
@@ -32,41 +30,20 @@ from .log import (
     EventLog,
     ScanRow,
     _check_bulk_range,
-    _Hub,
     _rows_on_page,
 )
 from .sources.binformat import spark_checksum as _spark_checksum  # noqa: F401 — shared fast-path checksum
-from .validation import DEFAULT_MAX_PAYLOAD_LEN
 
 
 class InMemEventLog(EventLog):
     """Same contract as EventLog, storage = a driver-side row list."""
 
     def __init__(self, spark: SparkSession, metadata: dict[str, str] | None = None):
-        # deliberately NOT calling super().__init__: no path, no files
-        self.spark = spark
-        self.path = None
-        self._lock = threading.RLock()
-        self._hub = _Hub()
-        # group-commit state (mirrors EventLog.__init__ — this class
-        # deliberately skips super().__init__)
-        self._gc_cv = threading.Condition()
-        self._gc_queue = []
-        self._gc_leader = False
-        self._gc_commits = 0
-        self._gc_ops = 0
-        self._gc_last_batch = 0
-        self._max_payload_len = DEFAULT_MAX_PAYLOAD_LEN
+        # path None: the file engine's state stays empty, and the
+        # _load_meta/_load_state overrides below read nothing
+        super().__init__(spark, None)
         self._metadata = dict(metadata or {})
-        self._latest = 0
-        self._initial = 0
-        self._last_ts = 0
-        self._stream_commits: dict[str, int] = {}
         self._rows: list[tuple] = []
-        # manifest plumbing (unused: nothing on disk to track)
-        self._manifest = None
-        self._pending_add: list[dict] = []
-        self._pending_remove: list[str] = []
 
     @classmethod
     def create(

@@ -47,7 +47,6 @@ Design (Spark-first, not a port):
 from __future__ import annotations
 
 import contextlib
-import hashlib
 import heapq
 import itertools
 import json
@@ -110,13 +109,12 @@ ROW_GROUP_ROWS = 1024
 ROW_CACHE_BYTES = 64 << 20
 
 
-def _version_group_stats(md) -> list[tuple[int, int]] | None:
-    """Per-row-group (min, max) of the ``version`` column from a parquet
-    footer, or None when any group lacks min/max stats — the probe
-    behind a staged file's manifest range and ``scan_rows``' row-group
-    pruning."""
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    ci = names.index("version")
+def _group_stats(md, column: str) -> list[tuple] | None:
+    """Per-row-group (min, max) of ``column`` from a parquet footer, or
+    None when any group lacks min/max stats — the one footer-statistics
+    reader: a staged file's manifest version range and label bounds,
+    and ``scan_rows``' row-group pruning by version."""
+    ci = md.schema.names.index(column)
     out = []
     for g in range(md.num_row_groups):
         s = md.row_group(g).column(ci).statistics
@@ -136,7 +134,7 @@ class _Footer(NamedTuple):
     size: int
     mtime_ns: int
     md: object  # pyarrow.parquet.FileMetaData
-    stats: list[tuple[int, int]] | None  # _version_group_stats(md)
+    stats: list[tuple[int, int]] | None  # _group_stats(md, "version")
     counts: dict[str, list[int]]  # label -> matches per row group
 
     def nbytes(self) -> int:
@@ -307,109 +305,31 @@ def checksum_expr() -> Column:
     return F.xxhash64("timestamp", "label", "payload", "version_prev")
 
 
-# -- label data-skipping stats (Iceberg-style per-column manifest bounds) ------
+# -- label data skipping (per-column manifest bounds) -------------------------
 #
-# Manifest entries optionally carry label column stats so a
-# label-filtered scan prunes FRAGMENTS before touching any file:
-# ``lmin``/``lmax`` — the label lower/upper bounds (what Iceberg stores
-# per column per data file) — and, where the writer knows the exact
-# label set (interactive commits, minor-compaction folds), ``lb``, a
-# 256-bit / 4-hash bloom filter that prunes even when the bounds span
-# (a fragment holding labels {a, z} still skips a scan for "m").
-# Entries without stats are conservatively kept; pruning is therefore
-# purely an optimization and can never lose rows.
-
-LABEL_BLOOM_BITS = 256
-LABEL_BLOOM_K = 4
-# beyond this many distinct labels a 256-bit/4-hash bloom stops
-# discriminating (fp rate ≈ (1 − e^(−4·64/256))⁴ ≈ 16% at 64 labels,
-# ≈ 39% near 128 and climbing) — store bounds only instead of 64 dead
-# hex chars per entry
-LABEL_BLOOM_MAX_LABELS = 64
+# Manifest entries carry the label bounds of their fragment, ``lmin``/
+# ``lmax`` (the per-file column min/max Iceberg and Delta Lake skip
+# with), so a label-filtered scan prunes FRAGMENTS before touching any
+# file. Driver-side writers take them from the rows they hold, Spark
+# writes from the footer (``_staged_entries``). Entries without bounds
+# are conservatively kept; pruning is purely an optimization and can
+# never lose rows. Entries and page metas an earlier release wrote may
+# also carry a label bloom; it is ignored.
 
 
-def _label_bloom_positions(label: str):
-    for i in range(LABEL_BLOOM_K):
-        h = int.from_bytes(
-            hashlib.md5(f"{i}:{label}".encode()).digest()[:8], "big"
-        )
-        yield h % LABEL_BLOOM_BITS
+def _may_contain_label(lmin: str | None, lmax: str | None, label: str) -> bool:
+    """Whether bounds (an entry's ``lmin``/``lmax`` or a page meta's
+    ``plmin``/``plmax``) admit ``label``; absent bounds always do."""
+    return lmin is None or lmin <= label <= lmax
 
 
-def _label_stats_entry(labels) -> dict:
-    """Manifest-entry stats for a fragment whose exact label set is
-    known driver-side: bounds always; bloom only while it still
-    discriminates (≤ LABEL_BLOOM_MAX_LABELS distinct labels)."""
-    labs = sorted(labels)
-    out = {"lmin": labs[0], "lmax": labs[-1]}
-    if len(labs) <= LABEL_BLOOM_MAX_LABELS:
-        bits = 0
-        for lab in labs:
-            for pos in _label_bloom_positions(lab):
-                bits |= 1 << pos
-        out["lb"] = f"{bits:064x}"
-    return out
-
-
-def _entry_may_contain_label(
-    e: dict, label: str, positions: list[int] | None = None
-) -> bool:
-    """Whether a manifest entry's fragment MAY hold ``label``. Entries
-    without label stats always may (bulk fragments predating stats,
-    legacy adoption). Callers probing MANY entries for one label hoist
-    the bloom bit positions (4 MD5 digests) once and pass them in — at
-    100k fragments the per-entry recompute would be ~400k digests per
-    lookup, dominating the candidate pass."""
-    lmin = e.get("lmin")
-    if lmin is not None and (label < lmin or label > e["lmax"]):
-        return False
-    lb = e.get("lb")
-    if lb is not None:
-        bits = int(lb, 16)
-        if positions is None:
-            positions = list(_label_bloom_positions(label))
-        for pos in positions:
-            if not (bits >> pos) & 1:
-                return False
-    return True
-
-
-def _page_may_contain_label(
-    m: dict, label: str, positions: list[int]
-) -> bool:
-    """Whether ANY entry in a manifest page may hold ``label``, from
-    the page meta's rolled-up summaries (manifest._page_label_meta):
-    bounds when every entry had bounds, bloom union when every entry
-    had a bloom. Pages without summaries (pre-summary checkpoints, a
-    stat-less entry in the page) are conservatively kept — pruning can
-    only skip pages that provably lack the label."""
-    plmin = m.get("plmin")
-    if plmin is not None and (label < plmin or label > m["plmax"]):
-        return False
-    plb = m.get("plb")
-    if plb is not None:
-        bits = int(plb, 16)
-        for pos in positions:
-            if not (bits >> pos) & 1:
-                return False
-    return True
-
-
-def _label_group_range(md) -> tuple[str, str] | None:
-    """(min, max) of the ``label`` column across a parquet footer's row
-    groups — metadata-only, None when any group lacks string stats."""
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    ci = names.index("label")
-    mins, maxs = [], []
-    for g in range(md.num_row_groups):
-        s = md.row_group(g).column(ci).statistics
-        if s is None or not s.has_min_max:
-            return None
-        mins.append(s.min)
-        maxs.append(s.max)
-    if not mins or not all(isinstance(v, str) for v in mins + maxs):
-        return None
-    return min(mins), max(maxs)
+def _label_probes(label: str) -> dict:
+    """The page and entry predicates of a label probe, for
+    ``ManifestLog.candidates`` and ``page_survey``."""
+    return {
+        "page_ok": lambda m: _may_contain_label(m.get("plmin"), m.get("plmax"), label),
+        "entry_ok": lambda e: _may_contain_label(e.get("lmin"), e.get("lmax"), label),
+    }
 
 
 def _check_bulk_range(
@@ -563,6 +483,9 @@ class EventLog:
         self._gc_commits = 0  # commit sections executed (groups)
         self._gc_ops = 0  # caller ops carried by those sections
         self._gc_last_batch = 0  # convoy detector for the batching window
+        # interactive fragments since the last fold: the minor-compaction
+        # trigger (amortized-O(1) append maintenance)
+        self._interactive_frags = 0
         self._max_payload_len = DEFAULT_MAX_PAYLOAD_LEN
         self._metadata: dict[str, str] = {}
         self._latest = 0
@@ -791,26 +714,19 @@ class EventLog:
         self, label: str, lo: int | None = None, hi: int | None = None
     ) -> list[str] | None:
         """Fragments that MAY contain ``label`` (and overlap versions
-        [lo, hi] when given) per the manifest's per-column stats —
-        bounds always, bloom where the writer knew the exact label set.
-        None on the in-memory engine, which has no manifest; raises when
-        the chain is unusable. This is the data-skipping probe
+        [lo, hi] when given) per the manifest's label bounds. None on
+        the in-memory engine, which has no manifest; raises when the
+        chain is unusable. This is the data-skipping probe
         ``scan(label=...)`` prunes with and tests assert on."""
         if self.path is None:
             return None
         self._require_published_state()
-        positions = list(_label_bloom_positions(label))
         with self._lock:
-            # page summaries refute whole pages before any page load —
+            # page bounds refute whole pages before any page load —
             # the candidate pass is O(pages matched + tail), not
             # O(manifest entries); an absent label answers from the
             # page metas alone
-            entries = self._manifest.candidates(
-                lo,
-                hi,
-                page_ok=lambda m: _page_may_contain_label(m, label, positions),
-                entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
-            )
+            entries = self._manifest.candidates(lo, hi, **_label_probes(label))
         return [e["n"] for e in entries]
 
     # A kept page counts as DEGRADED for a label when its rolled-up
@@ -830,8 +746,8 @@ class EventLog:
 
         ``labels`` defaults to a sample drawn from the page/entry label
         BOUNDS (real labels by construction, no data scan). A page is
-        DEGRADED for a label when its summary keeps it but under half
-        its live entries match (see LAYOUT_DEGRADED_PAGE_RATE). When
+        DEGRADED for a label when its label bounds keep it but under
+        half its live entries match (see LAYOUT_DEGRADED_PAGE_RATE). When
         the mean degraded-page rate across probed labels exceeds the
         threshold, the report recommends ``compact(cluster_by=
         "label")`` — the OPTIMIZE-ZORDER-style repair — surfaced by the
@@ -858,11 +774,7 @@ class EventLog:
             rates: list[float] = []
             page_cap = max(1, int(self._manifest.PAGE_ENTRIES))
             for label in labels:
-                positions = list(_label_bloom_positions(label))
-                survey = self._manifest.page_survey(
-                    page_ok=lambda m: _page_may_contain_label(m, label, positions),
-                    entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
-                )
+                survey = self._manifest.page_survey(**_label_probes(label))
                 kept = [p for p in survey["pages"] if p["kept"]]
                 degraded = sum(
                     1 for p in kept if p["count"] and p["hits"] * 2 < p["count"]
@@ -913,9 +825,9 @@ class EventLog:
 
     def _read_label_pruned(self, label: str, lo: int, hi: int) -> DataFrame | None:
         """Snapshot read restricted to the fragments whose manifest
-        stats may hold ``label`` in [lo, hi] — Iceberg-style column
-        data skipping; the exact filters downstream make the pruning
-        purely an optimization."""
+        label bounds may hold ``label`` in [lo, hi] — Iceberg-style
+        column data skipping; the exact filters downstream make the
+        pruning purely an optimization."""
         names = self.label_candidate_files(label, lo, hi)
         files = [f for f in names if f.endswith(".parquet")]
         if not files:
@@ -1189,8 +1101,7 @@ class EventLog:
         if (
             self.path is not None
             and self.MINOR_COMPACT_FRAGMENTS
-            and getattr(self, "_interactive_frags", 0)
-            >= self.MINOR_COMPACT_FRAGMENTS
+            and self._interactive_frags >= self.MINOR_COMPACT_FRAGMENTS
         ):
             # the group above is already durably committed and
             # published — a failure in this opportunistic maintenance
@@ -1304,16 +1215,20 @@ class EventLog:
         # memtable's role)
         if len(rows) <= ROW_GROUP_ROWS:
             self._cache_put(name, rows, _text_bytes(tbl))
-        # counts interactive fragments since the last fold — the
-        # minor-compaction trigger (amortized-O(1) append maintenance)
-        self._interactive_frags = getattr(self, "_interactive_frags", 0) + 1
+        self._interactive_frags += 1
         # staged with the EXACT version range (the commit assigned it)
-        # and exact label stats (the batch is driver-side, so the bloom
-        # is free); published by the caller's _publish as one delta
-        # record
-        entry = {"n": name, "lo": rows[0][0], "hi": rows[-1][0]}
-        entry.update(_label_stats_entry({r[3] for r in rows}))
-        self._pending_add.append(entry)
+        # and the label bounds of its rows; published by the caller's
+        # _publish as one delta record
+        labels = [r[3] for r in rows]
+        self._pending_add.append(
+            {
+                "n": name,
+                "lo": rows[0][0],
+                "hi": rows[-1][0],
+                "lmin": min(labels),
+                "lmax": max(labels),
+            }
+        )
 
     def _write_out(
         self,
@@ -1382,7 +1297,7 @@ class EventLog:
             md = pq.ParquetFile(src).metadata
             if md.num_rows == 0:
                 continue
-            stats = _version_group_stats(md)
+            stats = _group_stats(md, "version")
             if stats is None:
                 raise RuntimeError(
                     f"commit aborted: staged file {src} has no version "
@@ -1394,9 +1309,10 @@ class EventLog:
                 "lo": min(s[0] for s in stats),
                 "hi": max(s[1] for s in stats),
             }
-            lrng = _label_group_range(md)
-            if lrng is not None:
-                entry["lmin"], entry["lmax"] = lrng
+            labs = _group_stats(md, "label")
+            if labs and all(isinstance(v, str) for g in labs for v in g):
+                entry["lmin"] = min(g[0] for g in labs)
+                entry["lmax"] = max(g[1] for g in labs)
             staged.append((src, entry, md.num_rows))
         return staged
 
@@ -1643,11 +1559,10 @@ class EventLog:
 
         ``label`` (extension beyond the reference's scan, which is
         version-only): restrict the scan to events with exactly that
-        label. The read then prunes FRAGMENTS by the manifest's
-        per-column label stats (bounds + bloom — see
-        ``_label_stats_entry``) before any file is opened, and the
-        exact ``label == X`` filter in the plan keeps pruning purely an
-        optimization. With a label filter ``limit`` counts MATCHING
+        label. The read then prunes FRAGMENTS by the manifest's label
+        bounds (``label_candidate_files``) before any file is opened,
+        and the exact ``label == X`` filter in the plan keeps pruning
+        purely an optimization. With a label filter ``limit`` counts MATCHING
         rows, so it cannot tighten the version interval — the interval
         uses only the version bound and ``limit`` applies in-plan."""
         if label is not None:
@@ -1712,11 +1627,11 @@ class EventLog:
         yields exactly hi-lo+1 rows, or RuntimeError.
 
         ``label`` (extension, mirrors ``scan(label=...)``): serve a
-        label-filtered page driver-side — the manifest's per-column
-        stats skip fragments that cannot hold the label, matching rows
+        label-filtered page driver-side — the manifest's label bounds
+        skip fragments that cannot hold the label, matching rows
         filter exactly, and ``limit`` counts MATCHING rows (so the
         density check does not apply; pruning is sound by construction
-        — entries without label stats are always read)."""
+        — entries without label bounds are always read)."""
         if label is not None:
             lo, hi, latest = self._page_interval(version, reverse, None, skip_first)
         else:
@@ -1753,16 +1668,15 @@ class EventLog:
         O(manifest pages overlapped + matches), so a 1000-event page
         over a 100k-fragment log touches a handful of entries — and
         ``_read_fragment_rows`` decodes, per fragment, only the row
-        groups and rows the page can return. With ``label``, page
-        summaries and entry stats additionally drop fragments that
-        cannot hold the label (bounds + bloom — the same data skipping
-        scan(label=...) applies) and rows are filtered exactly. Each row
-        is filtered once and becomes a ``ScanRow`` once: rows decoded
-        from disk are sliced or filtered Arrow-side, and only
-        whole-fragment rows (a cache hit, or a small fragment read
-        whole) pass the Python filter (``_rows_on_page``). The mirror is
-        the one ``_page_interval`` just synced; a missing fragment
-        raises.
+        groups and rows the page can return. With ``label``, page and
+        entry label bounds additionally drop fragments that cannot hold
+        the label (the same data skipping scan(label=...) applies) and
+        rows are filtered exactly. Each row is filtered once and
+        becomes a ``ScanRow`` once: rows decoded from disk are sliced
+        or filtered Arrow-side, and only whole-fragment rows (a cache
+        hit, or a small fragment read whole) pass the Python filter
+        (``_rows_on_page``). The mirror is the one ``_page_interval``
+        just synced; a missing fragment raises.
 
         With ``label`` AND ``limit``, fragments are read in version
         order (``reverse`` flips it) and the read STOPS once no unread
@@ -1773,20 +1687,12 @@ class EventLog:
         disk contributes at most its own first ``limit`` matches, but
         the result may hold more than ``limit`` rows; the caller slices
         after sorting."""
-        positions = (
-            list(_label_bloom_positions(label)) if label is not None else None
-        )
         with self._lock:
             epoch = self._cache_epoch
             if label is None:
                 cand = self._manifest.overlapping(lo, hi)
             else:
-                cand = self._manifest.candidates(
-                    lo,
-                    hi,
-                    page_ok=lambda m: _page_may_contain_label(m, label, positions),
-                    entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
-                )
+                cand = self._manifest.candidates(lo, hi, **_label_probes(label))
         early_stop = label is not None and limit is not None
         if early_stop:
             # version order, so the early-stop bar below is sound
@@ -1877,7 +1783,7 @@ class EventLog:
                 rows = _table_rows(tbl)
                 self._cache_put(entry["n"], rows, _text_bytes(tbl), epoch)
                 return _rows_on_page(rows, lo, hi, label, latest)
-            foot = _Footer(st.st_size, st.st_mtime_ns, md, _version_group_stats(md), {})
+            foot = _Footer(st.st_size, st.st_mtime_ns, md, _group_stats(md, "version"), {})
             self._cache_put(entry["n"], foot, foot.nbytes(), epoch)
         stats = foot.stats
         groups = [
@@ -2066,16 +1972,20 @@ class EventLog:
         ``cluster_by="label"`` orders the rewrite by (label, version)
         instead of version — the Z-ORDER-style layout choice for
         label-heavy read patterns: each output file then holds a
-        contiguous LABEL range (manifest bounds + bloom prune label
-        scans to exactly the matching files, even when ingest
-        interleaved labels arbitrarily) and row groups inside a file
-        are label-tight (the pushed-down ``label == X`` predicate
-        prunes row groups JVM-side too). The documented trade: each
+        contiguous LABEL range (its manifest label bounds prune label
+        scans to the matching files, even when ingest interleaved
+        labels arbitrarily) and row groups inside a file are
+        label-tight (the pushed-down ``label == X`` predicate prunes
+        row groups JVM-side too). The documented trade: each
         file's VERSION range then spans the whole log, so version-keyed
         page reads consider every compacted file and lean on row-group
         version stats instead of file-level pruning — pick the layout
         that matches the dominant read, exactly as a table format's
         OPTIMIZE ZORDER does.
+
+        Each output's manifest entry takes its version range and label
+        bounds from the output's footer (``_staged_entries``), as bulk
+        ingest's do: the driver reads no output beyond its footer.
 
         PUBLISH-BEFORE-DELETE (round-6 advice): the compacted files are
         moved into the log dir under ``compact-…`` names, the manifest
@@ -2151,23 +2061,7 @@ class EventLog:
                     .mode("overwrite")
                     .parquet(tmp)
                 )
-                import pyarrow.compute as pc
-                import pyarrow.parquet as pq
-
-                staged = self._staged_entries(tmp, "compact")
-                for src, entry, _ in staged:
-                    # exact label stats (bounds + bloom): compaction just
-                    # rewrote every byte of this file, so one read-back
-                    # of the dictionary-encoded label column is a
-                    # rounding error on the OPTIMIZE job — and it keeps
-                    # label scans prunable on compacted logs, where
-                    # range-partitioned files mix labels and footer
-                    # bounds alone would span
-                    labs = pc.unique(
-                        pq.read_table(src, columns=["label"]).column("label")
-                    ).to_pylist()
-                    entry.update(_label_stats_entry(labs))
-                for src, entry, _ in staged:
+                for src, entry, _ in self._staged_entries(tmp, "compact"):
                     os.rename(src, os.path.join(self.path, entry["n"]))
                     self._pending_add.append(entry)
             finally:
@@ -2273,6 +2167,7 @@ class EventLog:
         ``compact-…-minor`` so a later fold takes it again only while it
         is small. Returns the number of fragments folded."""
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         if self.path is None:  # inmem engine: nothing on disk to fold
@@ -2318,17 +2213,19 @@ class EventLog:
             _write_driver_parquet(merged, landing)
             os.rename(landing, os.path.join(self.path, name))
             # merged is sorted by version: range = first/last row; the
-            # fold holds the rows driver-side, so label stats are exact
-            # (bounds + bloom) — a fold of single-label commits stays
-            # perfectly label-prunable
+            # fold holds the rows driver-side, so its label bounds are
+            # exact
             vcol = merged.column("version")
-            entry = {"n": name, "lo": vcol[0].as_py(), "hi": vcol[-1].as_py()}
-            import pyarrow.compute as pc
-
-            entry.update(
-                _label_stats_entry(pc.unique(merged.column("label")).to_pylist())
+            labels = pc.min_max(merged.column("label"))
+            self._pending_add.append(
+                {
+                    "n": name,
+                    "lo": vcol[0].as_py(),
+                    "hi": vcol[-1].as_py(),
+                    "lmin": labels["min"].as_py(),
+                    "lmax": labels["max"].as_py(),
+                }
             )
-            self._pending_add.append(entry)
             self._pending_remove.extend(small)
             if not self._publish_rebase_on_claim_loss(small):
                 return 0

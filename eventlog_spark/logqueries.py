@@ -376,17 +376,18 @@ ORDER BY version
 """,
     doc="OPTIMIZE-ZORDER analog: arrival-order (maximally label-"
     "interleaved) ingest, then compact(cluster_by='label') rewrites "
-    "the log into contiguous label ranges so a label scan opens only "
-    "the matching files.",
+    "the log into contiguous label ranges whose footer label bounds "
+    "let a label scan open only the matching files.",
 )
 def log_compact_label_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-clustered compaction end-to-end (r9; the layout repair for
-    ingest that interleaves labels arbitrarily — the one shape page-
-    level label summaries cannot prune). Events ingest in ARRIVAL order
-    (event_id), so every fragment holds every label; then
+    ingest that interleaves labels arbitrarily — the one shape label
+    bounds cannot prune). Events ingest in ARRIVAL order (event_id), so
+    every fragment holds every label; then
     ``compact(cluster_by="label")`` — the OPTIMIZE ZORDER analog —
-    rewrites the log in (label, version) order and the label scan's
-    manifest bounds+bloom prune to exactly the files holding the label
+    rewrites the log in (label, version) order, each output's manifest
+    entry takes the label bounds of its footer, and the label scan
+    prunes to the files whose contiguous label range holds the label
     (binding asserted in tests/test_log.py; correctness never depends
     on it — the exact filter stays in the plan). Bounded to the first
     5000 events so the demo costs the same at every SF; the oracle
@@ -430,19 +431,19 @@ SELECT version, label, payload FROM (
 ORDER BY version
 """,
     doc="Label-filtered scan with manifest data skipping: label-batched "
-    "ingest, then scan(label=...) prunes fragments via per-column "
-    "manifest stats (bounds + bloom) before any file is read.",
+    "ingest, then scan(label=...) prunes fragments via the manifest's "
+    "per-fragment label bounds before any file is read.",
 )
 def log_scan_label_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extension beyond the reference's version-only scan (an Iceberg-
     style per-column data-skipping read over the log-structured
-    manifest, log.py ``_label_stats_entry``/``label_candidate_files``):
+    manifest, log.py ``label_candidate_files``):
     events are bulk-ingested as ONE (label, event_id)-range-ordered
     batch — ``append_dataframe(order_cols=["label","event_id"])``
     range-partitions the batch, so every written fragment holds a
     contiguous label range and carries tight label bounds from its
     footer (``_staged_entries``) — then ``scan(label='purchase')``
-    consults the manifest stats and opens ONLY the fragments whose
+    consults the manifest bounds and opens ONLY the fragments whose
     bounds may hold the label (correctness never depends on the
     pruning — the exact label filter stays in the plan).
 

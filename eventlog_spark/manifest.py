@@ -248,27 +248,22 @@ def _refuse_rangeless(name: str, entries: list[dict]) -> None:
 
 
 def _page_label_meta(chunk: list[dict]) -> dict:
-    """Page-level label summaries rolled up from the entries a page
-    holds — the same Iceberg shape one level up (manifest-file column
-    bounds over its data-file entries): ``plmin``/``plmax`` when EVERY
-    entry carries label bounds, and ``plb`` (the union of the entries'
-    256-bit label blooms) when every entry carries a bloom. A page with
-    one stat-less entry gets no summary for that stat — the page is
-    then conservatively kept by any label probe, so summaries can only
-    SKIP pages that provably lack the label. This is what keeps the
-    per-label candidate pass O(pages matched), not O(manifest entries):
-    at 10^6 fragments / 4096-entry pages a label probe touches ~250
-    page metas instead of walking a million entry dicts."""
-    out: dict = {}
+    """Page-level label bounds rolled up from the entries a page holds
+    — the same Iceberg shape one level up (manifest-file column bounds
+    over its data-file entries): ``plmin``/``plmax`` when EVERY entry
+    carries label bounds. A page with one bound-less entry gets none —
+    the page is then conservatively kept by any label probe, so page
+    bounds can only SKIP pages that provably lack the label. This is
+    what keeps the per-label candidate pass O(pages matched), not
+    O(manifest entries): at 10^6 fragments / 4096-entry pages a label
+    probe touches ~250 page metas instead of walking a million entry
+    dicts."""
     if chunk and all("lmin" in e for e in chunk):
-        out["plmin"] = min(e["lmin"] for e in chunk)
-        out["plmax"] = max(e["lmax"] for e in chunk)
-    if chunk and all("lb" in e for e in chunk):
-        bits = 0
-        for e in chunk:
-            bits |= int(e["lb"], 16)
-        out["plb"] = f"{bits:064x}"
-    return out
+        return {
+            "plmin": min(e["lmin"] for e in chunk),
+            "plmax": max(e["lmax"] for e in chunk),
+        }
+    return {}
 
 
 class ManifestLog:
@@ -515,7 +510,7 @@ class ManifestLog:
         when no range is given) and that pass the caller's predicates
         — with ``page_ok(meta)`` consulted BEFORE a page is loaded, so
         a predicate that can refute a whole page from its rolled-up
-        summaries (label bounds / bloom union, ``_page_label_meta``)
+        summaries (label bounds, ``_page_label_meta``)
         skips the page file and every entry in it. Both predicates
         must be conservative (True when the page/entry lacks the stats
         to refute); the tail is in-memory and gets only the entry

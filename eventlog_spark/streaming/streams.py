@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPartition
 
 from ..log import EVENT_SCHEMA, ROW_GROUP_ROWS, EventLog
-from ..log import _page_mask, _version_group_stats, _version_slice
+from ..log import _group_stats, _page_mask, _version_slice
 from ..session import ship_package
 
 
@@ -83,7 +83,7 @@ class _TailReader(DataSourceStreamReader):
         entries = EventLog.open(None, self.path)._manifest.overlapping(lo, hi)
         for entry in sorted(entries, key=lambda e: e["lo"]):
             pf = pq.ParquetFile(os.path.join(self.path, entry["n"]))
-            stats = _version_group_stats(pf.metadata)
+            stats = _group_stats(pf.metadata, "version")
             for g in range(pf.metadata.num_row_groups):
                 g_lo, g_hi = stats[g] if stats else (lo, hi)
                 if g_hi < lo or g_lo > hi:

@@ -1036,7 +1036,7 @@ def test_layout_autopilot_repairs_under_writer_storm(
     spark, tmp_path, monkeypatch
 ):
     """Round-10 verdict item 5, the autopilot proof: a degraded
-    round-robin corpus (every page's label-bloom union holds every
+    round-robin corpus (every page's label bounds span every
     label, so present-label passes walk every page) + a live no-pause
     writer storm -> maintain() must DETECT the degradation, land the
     label-clustered compaction through the re-base publish, flip the

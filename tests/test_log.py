@@ -332,11 +332,11 @@ def test_streamed_ordered_append_contract(spark, tmp_path):
     # fragment version ranges are disjoint and cover [1, 2000]
     import pyarrow.parquet as pq
 
-    from eventlog_spark.log import _version_group_stats
+    from eventlog_spark.log import _group_stats
 
     ranges = []
     for f in glob.glob(os.path.join(path, "part-*.parquet")):
-        stats = _version_group_stats(pq.ParquetFile(f).metadata)
+        stats = _group_stats(pq.ParquetFile(f).metadata, "version")
         if stats:
             ranges.append((min(s[0] for s in stats), max(s[1] for s in stats)))
     ranges.sort()
@@ -1204,7 +1204,7 @@ def test_compact_aborts_when_footer_has_no_version_range(
     for i in range(1, 4):
         log.append(f"e{i}", json.dumps({"ix": i}))
     names, listing = log._manifest_files(), sorted(os.listdir(log.path))
-    monkeypatch.setattr(log_mod, "_version_group_stats", lambda md: None)
+    monkeypatch.setattr(log_mod, "_group_stats", lambda md, column: None)
     with pytest.raises(RuntimeError, match="no version statistics"):
         log.compact(target_partitions=1)
     monkeypatch.undo()
@@ -1600,12 +1600,11 @@ def test_scan_label_matches_filtered_scan(log):
 
 def test_label_pruning_binds_and_survives_compaction(spark, tmp_path):
     """The file engine's label scan must actually SKIP fragments:
-    single-label interactive commits carry exact stats (bounds +
-    bloom), so candidates for one label exclude every other label's
-    fragments; an absent label prunes ALL fragments; a minor-compaction
-    fold keeps exact stats (bloom of the union); bulk label-batched
-    appends prune via footer bounds. Correctness is re-checked after
-    every mutation."""
+    single-label interactive commits carry exact label bounds, so
+    candidates for one label exclude every other label's fragments; an
+    absent label prunes ALL fragments; a minor-compaction fold carries
+    the bounds of its rows; bulk label-batched appends prune via footer
+    bounds. Correctness is re-checked after every mutation."""
     path = str(tmp_path / "lblprune")
     log = EventLog.create(spark, path)
     log.MINOR_COMPACT_FRAGMENTS = 0  # manual folds only
@@ -1615,8 +1614,8 @@ def test_label_pruning_binds_and_survives_compaction(spark, tmp_path):
     total = log._manifest.count()
     cand = log.label_candidate_files("alpha")
     assert len(cand) == 4, (len(cand), total)  # exactly alpha's commits
-    assert log.label_candidate_files("absent") == []  # bloom prunes all
-    # fold: exact stats survive as the union bloom
+    assert log.label_candidate_files("absent") == []  # bounds prune all
+    # fold: the bounds of its rows, [alpha, gamma]
     assert log.minor_compact() == 12
     assert len(log.label_candidate_files("alpha")) == 1
     assert log.label_candidate_files("absent") == []
@@ -1628,16 +1627,18 @@ def test_label_pruning_binds_and_survives_compaction(spark, tmp_path):
             "label string, payload string, event_id long",
         )
         log.append_dataframe(src, on_invalid="error", order_cols=["event_id"])
+    # the fold's bounds [alpha, gamma] hold delta and epsilon, so it is
+    # a candidate for both; each bulk batch is a candidate for its own
+    # label only, and the scan stays exact
     cand = log.label_candidate_files("delta")
-    assert cand and all("minor" not in f for f in cand)
-    assert not any(
-        f in cand for f in log.label_candidate_files("epsilon")
-    )
-    # absent label: the fold's bloom and the bulk bounds both prune
+    (fold,) = [f for f in cand if "minor" in f]
+    eps = log.label_candidate_files("epsilon")
+    assert fold in eps and set(cand) & set(eps) == {fold}
+    assert [r.label for r in log.scan_rows(label="delta")] == ["delta"] * 5
+    # absent label: the fold's and the bulk batches' bounds all prune
     assert log.label_candidate_files("zeta") == []
-    # major compaction mixes labels into range-partitioned files, but
-    # the OPTIMIZE job reads back each output's label column for EXACT
-    # stats — an absent label still prunes every compacted fragment
+    # major compaction mixes labels into range-partitioned files whose
+    # footer bounds still lie below an absent label past them all
     log.compact()
     assert [r.label for r in log.scan(label="delta").collect()] == ["delta"] * 5
     assert log.scan(label="zeta").count() == 0
@@ -1896,7 +1897,7 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     read decodes on the calling thread (``use_threads=False``)."""
     import pyarrow.parquet as pq
 
-    from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
+    from eventlog_spark.log import ROW_GROUP_ROWS, _group_stats
 
     log = EventLog.create(None, str(tmp_path / "log"))
     log.MINOR_COMPACT_FRAGMENTS = 0
@@ -1908,7 +1909,7 @@ def test_page_reads_decode_only_their_row_groups(tmp_path, monkeypatch):
     md = pq.ParquetFile(os.path.join(log.path, fold)).metadata
     sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
     assert sum(sizes) == 24_000 and max(sizes) <= ROW_GROUP_ROWS
-    stats = _version_group_stats(md)
+    stats = _group_stats(md, "version")
     assert stats is not None and len(stats) == md.num_row_groups
 
     calls: list[tuple[list[int], list[str] | None]] = []
@@ -1977,7 +1978,7 @@ def _assert_driver_layout(full: str) -> None:
     ROW_GROUP_ROWS rows, each with version statistics."""
     import pyarrow.parquet as pq
 
-    from eventlog_spark.log import ROW_GROUP_ROWS, _version_group_stats
+    from eventlog_spark.log import ROW_GROUP_ROWS, _group_stats
 
     md = pq.ParquetFile(full).metadata
     assert md.num_row_groups > 1
@@ -1994,7 +1995,7 @@ def _assert_driver_layout(full: str) -> None:
                 col.path_in_schema,
                 col.encodings,
             )
-    stats = _version_group_stats(md)
+    stats = _group_stats(md, "version")
     assert stats is not None and len(stats) == md.num_row_groups
 
 
@@ -2059,13 +2060,13 @@ def test_repeated_pages_parse_a_fold_footer_once(tmp_path, monkeypatch):
     log, events = _two_fold_log(str(tmp_path / "foot"))
     reader = EventLog.open(None, log.path)  # nothing cached
     parsed: list[int] = []
-    stats = log_mod._version_group_stats
+    stats = log_mod._group_stats
 
-    def spy_stats(md):
+    def spy_stats(md, column):
         parsed.append(md.num_rows)
-        return stats(md)
+        return stats(md, column)
 
-    monkeypatch.setattr(log_mod, "_version_group_stats", spy_stats)
+    monkeypatch.setattr(log_mod, "_group_stats", spy_stats)
     stored = [(lab, minify_json(pay)) for lab, pay in events]
     for _ in range(3):
         page = reader.scan_rows(version=100, limit=1000)
@@ -2340,32 +2341,52 @@ def test_pages_over_a_snappy_fold_written_before_lz4(spark, tmp_path):
     check(log.scan_rows(version=1, limit=6000), range(1, 6001))
 
 
-def test_label_bloom_caps_at_high_cardinality(spark, tmp_path):
-    """A fragment holding more distinct labels than the bloom can
-    discriminate (LABEL_BLOOM_MAX_LABELS) stores bounds only — no
-    saturated dead bytes — and pruning still works through the bounds
-    while never losing rows."""
-    from eventlog_spark.log import LABEL_BLOOM_MAX_LABELS, _label_stats_entry
+def test_compact_takes_label_bounds_from_footers(spark, tmp_path, monkeypatch):
+    """``compact()`` reads no output back on the driver: each compacted
+    file's entry takes its label bounds from the footer, as bulk
+    ingest's do. A label past every bound still prunes all compacted
+    files, and after ``compact(cluster_by="label")`` each present label
+    is a candidate in a strict subset of them, with exact label pages."""
+    import pyarrow.parquet as pq
 
-    few = _label_stats_entry({f"l{i:03d}" for i in range(5)})
-    assert "lb" in few and few["lmin"] == "l000"
-    many = _label_stats_entry({f"l{i:03d}" for i in range(LABEL_BLOOM_MAX_LABELS + 1)})
-    assert "lb" not in many
-    assert many["lmin"] == "l000" and many["lmax"] == f"l{LABEL_BLOOM_MAX_LABELS:03d}"
-    # end to end: a fold of >MAX distinct labels keeps exact bounds,
-    # drops the bloom, and label scans stay exact
+    log = EventLog.create(spark, str(tmp_path / "cb"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    labels = ["alpha", "beta", "delta", "gamma"]
+    for i in range(64):
+        log.append(labels[i % 4], json.dumps({"i": i}))
+    reads = []
+    read_table = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda *a, **k: reads.append(a) or read_table(*a, **k)
+    )
+    log.compact(target_partitions=2)
+    assert log.label_candidate_files("zeta") == []
+    log.compact(target_partitions=4, cluster_by="label")
+    assert reads == []
+    monkeypatch.undo()
+    files = {f for f in log._manifest_files() if f.endswith(".parquet")}
+    assert log.label_candidate_files("zeta") == []
+    for lab in labels:
+        cand = log.label_candidate_files(lab)
+        assert cand and set(cand) < files, (lab, cand, files)
+        assert [r.label for r in log.scan_rows(label=lab)] == [lab] * 16
+
+
+def test_label_bounds_stay_exact_at_high_cardinality(spark, tmp_path):
+    """A fold of 66 distinct labels carries the exact bounds of its
+    rows; a label scan over it stays exact and a label past its bounds
+    prunes it."""
     path = str(tmp_path / "hc")
     log = EventLog.create(spark, path)
     log.MINOR_COMPACT_FRAGMENTS = 0
-    for i in range(LABEL_BLOOM_MAX_LABELS + 2):
+    for i in range(66):
         log.append(f"m{i:03d}", json.dumps({"i": i}))
-    assert log.minor_compact() == LABEL_BLOOM_MAX_LABELS + 2
+    assert log.minor_compact() == 66
     (entry,) = [
         e for e in log._manifest.entries() if e["n"].endswith("-minor.parquet")
     ]
-    assert "lb" not in entry and entry["lmin"] == "m000"
+    assert (entry["lmin"], entry["lmax"]) == ("m000", "m065")
     assert [r.label for r in log.scan(label="m005").collect()] == ["m005"]
-    # out-of-bounds label still prunes via lmin/lmax
     assert log.label_candidate_files("zzz") == []
 
 
@@ -2499,8 +2520,8 @@ def test_label_layout_report_detects_interleave_and_repair(
     spark, tmp_path, monkeypatch
 ):
     """Round-9 verdict item 4: the layout report must DETECT an
-    adversarially interleaved ingest (every page's label-bloom union
-    holds every label, so present-label passes degrade to entry-level
+    adversarially interleaved ingest (every page's label bounds span
+    every label, so present-label passes degrade to entry-level
     walks on every page) and recommend the label-clustered rewrite —
     and must report healthy after `compact(cluster_by="label")`
     repairs the layout."""
@@ -2521,7 +2542,7 @@ def test_label_layout_report_detects_interleave_and_repair(
     assert report["mean_degraded_page_rate"] > 0.9
     assert report["recommend_cluster_by_label"] is True
     for stats in report["labels"].values():
-        assert stats["pages_refuted"] == 0  # blooms can refute nothing
+        assert stats["pages_refuted"] == 0  # page bounds refute nothing
 
     log.compact(target_partitions=4, cluster_by="label")
     repaired = log.label_layout_report(labels=labels)
@@ -2591,9 +2612,9 @@ def test_bulk_crash_truncates_named_orphans_without_listing(
 def test_label_layout_report_bulk_and_empty_edges(spark, tmp_path, monkeypatch):
     """Edges of the layout diagnostic: (a) an EMPTY log reports usable
     with nothing to recommend; (b) a log holding only BULK fragments —
-    whose entries carry footer-derived label BOUNDS but no exact bloom
-    — still produces a report with default-sampled labels drawn from
-    those bounds, and never crashes on the stat shape."""
+    whose entries carry footer-derived label BOUNDS — still produces a
+    report with default-sampled labels drawn from those bounds, and
+    never crashes on the stat shape."""
     from pyspark.sql import functions as F
 
     from eventlog_spark.manifest import ManifestLog

@@ -198,11 +198,10 @@ def test_scan_rows_loads_only_overlapping_pages(spark, tmp_path, monkeypatch):
 
 def test_label_candidates_prune_pages_before_loading(tmp_path, monkeypatch):
     """Per-label candidate enumeration is O(pages matched), not
-    O(manifest entries): checkpoint pages carry rolled-up label
-    summaries (bounds + bloom union), so a label probe refutes whole
-    pages from their metas — an absent label answers without making a
-    single page resident, and a clustered label loads exactly the
-    pages that may hold it."""
+    O(manifest entries): checkpoint pages carry rolled-up label bounds,
+    so a label probe refutes whole pages from their metas — an absent
+    label answers without making a single page resident, and a
+    clustered label loads exactly the pages that may hold it."""
     monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 32)
     monkeypatch.setattr(ManifestLog, "PAGE_ENTRIES", 8)
     log = EventLog.create(None, str(tmp_path / "lp"))
@@ -212,10 +211,10 @@ def test_label_candidates_prune_pages_before_loading(tmp_path, monkeypatch):
     for i in range(32):
         log.append("aaa" if i < 16 else "zzz", f'{{"i":{i}}}')
     metas = log._manifest._page_metas
-    assert len(metas) == 4 and all("plmin" in m and "plb" in m for m in metas)
+    assert len(metas) == 4 and all("plmin" in m for m in metas)
     reader = EventLog.open(None, log.path)
     assert not reader._manifest._page_cache  # metas only, cold
-    # absent label: refuted by every page's bloom union — zero loads
+    # absent label: refuted by every page's bounds — zero loads
     assert reader.label_candidate_files("mmm") == []
     assert not reader._manifest._page_cache
     # clustered label: exactly its two pages load, the other two don't
@@ -239,6 +238,71 @@ def test_label_candidates_prune_pages_before_loading(tmp_path, monkeypatch):
     # the driver-side label page path prunes pages too
     rows = reader.scan_rows(label="zzz", limit=3)
     assert [r.version for r in rows] == [17, 18, 19]
+
+
+def _dict_keys(x):
+    """Every dict key anywhere inside a decoded JSON record."""
+    if isinstance(x, dict):
+        for k, v in x.items():
+            yield k
+            yield from _dict_keys(v)
+    elif isinstance(x, list):
+        for v in x:
+            yield from _dict_keys(v)
+
+
+def test_label_bounds_are_the_only_label_stat(tmp_path, monkeypatch):
+    """Commits, folds and roll-ups record label bounds and no label
+    bloom (``lb`` on entries, ``plb`` on page metas). A chain an
+    earlier release wrote, with blooms on its delta entries and page
+    metas, opens, and readers ignore them: its label pages are exact.
+    The blooms written here are all-zero, so a reader that consulted
+    them would refute every label."""
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 4)
+    monkeypatch.setattr(ManifestLog, "PAGE_ENTRIES", 2)
+    log = EventLog.create(None, str(tmp_path / "lb"))
+    log.MINOR_COMPACT_FRAGMENTS = 0
+    for i in range(6):  # versions 1-6, a roll-up at seq 4
+        log.append("zzz" if i % 2 == 0 else "aaa", f'{{"i":{i}}}')
+    assert log.minor_compact() == 6  # seq 7
+    for i in range(3):  # versions 7-9, a roll-up at seq 8
+        log.append("mmm", f'{{"j":{i}}}')
+    (fold,) = [e for e in log._manifest.entries() if "minor" in e["n"]]
+    assert (fold["lmin"], fold["lmax"]) == ("aaa", "zzz")
+    mdir = os.path.join(log.path, "_manifest")
+    records = {}
+    for f in sorted(os.listdir(mdir)):
+        with open(os.path.join(mdir, f)) as fh:
+            records[f] = json.load(fh)
+    assert any(f.startswith("checkpoint-") for f in records)
+    assert any(f.startswith("page-") for f in records)
+    keys = set(_dict_keys(list(records.values())))
+    assert {"lmin", "lmax", "plmin", "plmax"} <= keys
+    assert not keys & {"lb", "plb"}, keys
+
+    # the same chain as an earlier release wrote it: a bloom on every
+    # delta and page entry, a bloom union on every page meta
+    zero = "0" * 64
+    for f, rec in records.items():
+        if f.startswith("delta-"):
+            for e in rec["add"]:
+                e["lb"] = zero
+        elif f.startswith("page-"):
+            for e in rec:
+                e["lb"] = zero
+        elif f.startswith("checkpoint-"):
+            for m in rec["pages"]:
+                m["plb"] = zero
+        with open(os.path.join(mdir, f), "w") as fh:
+            json.dump(rec, fh)
+    reader = EventLog.open(None, log.path)
+    assert reader.version() == 9
+    want = {"zzz": [1, 3, 5], "aaa": [2, 4, 6], "mmm": [7, 8, 9]}
+    for label, versions in want.items():
+        assert [r.version for r in reader.scan_rows(label=label)] == versions
+        assert reader.label_candidate_files(label)
+    assert reader.label_candidate_files("zzzz") == []  # past every bound
+    assert [r.version for r in reader.scan_rows()] == list(range(1, 10))
 
 
 def test_cross_instance_visibility_by_delta_replay(spark, tmp_path):

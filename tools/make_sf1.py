@@ -62,9 +62,9 @@ ZIPF = "--zipf" in sys.argv
 # domain (events.event_type) stays uniform — real topic logs are
 # Zipfian in label too. The flag remaps event_type so ONE label
 # ("type-hot") carries ~90% of all events and the remaining 10% spread
-# uniformly over a 200-label tail — past the 64-label bloom cap, so
-# minor-compaction folds of mixed batches exercise the bounds-only
-# path while single-label batches keep exact blooms.
+# uniformly over a 200-label tail, so minor-compaction folds of mixed
+# batches carry label bounds spanning most of the tail while
+# single-label batches keep exact bounds.
 ZIPF_LABELS = "--zipf-labels" in sys.argv
 DST = os.path.join(
     _BENCH,

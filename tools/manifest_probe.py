@@ -124,8 +124,8 @@ def probe_labels(total_frags: int, n_labels: int) -> dict:
     commits, then measure how many fragments a label scan would open
     (``label_candidate_files`` — the exact pruning ``scan(label=...)``
     applies) and what the candidate computation costs. Expected: each
-    label's candidates == total/n_labels (bounds+bloom are exact for
-    interactive commits), an absent label prunes to 0."""
+    label's candidates == total/n_labels (label bounds are exact for
+    single-label interactive commits), an absent label prunes to 0."""
     root = tempfile.mkdtemp(prefix="manifest_lbl_probe_")
     path = os.path.join(root, "log")
     try:
@@ -173,13 +173,13 @@ def _build_label_chain(root, total_entries: int, n_labels: int, interleave: bool
     """Synthetic manifest chain of ranged, label-stat-carrying entries
     (the exact dict shape interactive commits stage), rolled up so a
     cold mirror sees pages only. Returns (mirror, seq, entries/label)."""
-    from eventlog_spark.log import _label_stats_entry
     from eventlog_spark.manifest import ManifestLog
 
     m = ManifestLog(root)
     per = -(-total_entries // n_labels)
     stats = {
-        k: _label_stats_entry({f"label-{k:06d}"}) for k in range(n_labels)
+        k: {"lmin": f"label-{k:06d}", "lmax": f"label-{k:06d}"}
+        for k in range(n_labels)
     }
     batch: list[dict] = []
     for i in range(total_entries):
@@ -207,12 +207,7 @@ def probe_layout_report(total_entries: int, n_labels: int) -> list[dict]:
     (nothing refutable) pays one full page sweep for the first label
     and cache-resident walks after. Reports wall time, pages loaded,
     and the recommendation each layout earns."""
-    from eventlog_spark.log import (
-        EventLog,
-        _entry_may_contain_label,
-        _label_bloom_positions,
-        _page_may_contain_label,
-    )
+    from eventlog_spark.log import EventLog, _label_probes
     from eventlog_spark.manifest import ManifestLog
 
     rows = []
@@ -230,15 +225,7 @@ def probe_layout_report(total_entries: int, n_labels: int) -> list[dict]:
             rates = []
             page_cap = max(1, int(mirror.PAGE_ENTRIES))
             for label in probe:
-                positions = list(_label_bloom_positions(label))
-                sv = mirror.page_survey(
-                    page_ok=lambda pm: _page_may_contain_label(
-                        pm, label, positions
-                    ),
-                    entry_ok=lambda e: _entry_may_contain_label(
-                        e, label, positions
-                    ),
-                )
+                sv = mirror.page_survey(**_label_probes(label))
                 kept = [p for p in sv["pages"] if p["kept"]]
                 degraded = sum(
                     1 for p in kept if p["count"] and p["hits"] * 2 < p["count"]
@@ -292,23 +279,17 @@ def probe_label_pages(
     * a present label's candidate pass — expect time ∝ its pages, with
       exactly those pages made resident,
     * an absent label — expect sub-ms, ZERO pages resident (refuted by
-      every page meta's bloom union),
+      every page meta's label bounds),
     * the r8 entry-level walk over the same snapshot, for scale.
 
     ``interleave=True`` is the adversarial layout: labels round-robin
     across entries, so EVERY page holds every label — page summaries
     cannot refute a present label (the pass degrades gracefully to the
-    entry-level cost) and an absent label survives only the page bloom
-    UNION's false-positive rate (~16% of pages load at 64 labels/page).
-    Real topic logs cluster labels in commit time (the clustered case);
-    this row bounds the worst case.
+    entry-level cost); an absent label outside every page's bounds
+    still loads no page. Real topic logs cluster labels in commit time
+    (the clustered case); this row bounds the worst case.
     """
-    from eventlog_spark.log import (
-        _entry_may_contain_label,
-        _label_bloom_positions,
-        _label_stats_entry,
-        _page_may_contain_label,
-    )
+    from eventlog_spark.log import _label_probes
     from eventlog_spark.manifest import ManifestLog
 
     root = tempfile.mkdtemp(prefix="manifest_pages_probe_")
@@ -318,12 +299,8 @@ def probe_label_pages(
         def cold_candidates(label: str):
             mirror = ManifestLog(root)
             mirror.load(seq)
-            positions = list(_label_bloom_positions(label))
             t0 = time.perf_counter()
-            got = mirror.candidates(
-                page_ok=lambda pm: _page_may_contain_label(pm, label, positions),
-                entry_ok=lambda e: _entry_may_contain_label(e, label, positions),
-            )
+            got = mirror.candidates(**_label_probes(label))
             ms = 1e3 * (time.perf_counter() - t0)
             return got, ms, len(mirror._page_cache)
 
@@ -336,14 +313,10 @@ def probe_label_pages(
         assert absent == [] and absent_pages == 0
 
         # the r8 shape at the same scale: walk every entry
-        positions = list(_label_bloom_positions("label-000000"))
+        entry_ok = _label_probes("label-000000")["entry_ok"]
         ents = m.entries()
         t0 = time.perf_counter()
-        flat = [
-            e
-            for e in ents
-            if _entry_may_contain_label(e, "label-000000", positions)
-        ]
+        flat = [e for e in ents if entry_ok(e)]
         entry_walk_ms = 1e3 * (time.perf_counter() - t0)
         assert len(flat) == len(present)
 
@@ -422,8 +395,8 @@ def probe_open(total_frags: int) -> dict:
 
 def _zipf_label(i: int, n_labels: int) -> str:
     """~90% of commits take the hot label, the rest spread uniformly
-    over a tail of n_labels-1 — past the 64-label bloom cap when
-    n_labels > 65, so mixed folds exercise the bounds-only path."""
+    over a tail of n_labels-1, so mixed folds carry label bounds that
+    span most of the tail."""
     if i % 10 < 9:
         return "label-000"
     return f"label-{1 + (i // 10) % (n_labels - 1):03d}"
@@ -433,7 +406,7 @@ def probe_label_tail(total_frags: int, n_labels: int) -> list[dict]:
     """Round-9 verdict item 7: a label-filtered FOLLOW (topic-consumer
     tail) over a big log during an append burst must cost ∝ NEW MATCHES
     per poll, never ∝ log age. Builds a Zipf-labeled log (~90% one hot
-    label, tail past the 64-label bloom cap) with default minor
+    label, a uniform tail over the rest) with default minor
     compaction ON (the realistic mixed-fold shape), and at each decade
     measures the exact driver-side calls the HTTP follow route serves:
 

@@ -64,15 +64,15 @@ class InMemEventLog(EventLog):
 
     # -- storage seam overrides ---------------------------------------------
 
-    def _write_fragment(self, rows: list[tuple[int, int, int, str, str]]) -> None:
-        self._rows.extend(
+    def _write_fragment(self, rows: list[tuple[int, int, int, str, str]]) -> list[tuple]:
+        return [
             (v, vp, ts, label, payload, _spark_checksum(ts, label, payload, vp))
             for (v, vp, ts, label, payload) in rows
-        )
+        ]
 
     def _write_out(
         self, out: DataFrame, expect: tuple[int, int], post_write_check=None
-    ) -> None:
+    ) -> list[tuple]:
         # an inmem log is driver-bound by definition (inmem.go holds a
         # slice); collect() here is the engine's storage, not a data path
         collected = [tuple(r) for r in out.collect()]
@@ -83,7 +83,7 @@ class InMemEventLog(EventLog):
             post_write_check()
         # each collected row tiles as a one-row file of its version
         _check_bulk_range([(r[0], r[0], 1) for r in collected], expect)
-        self._rows.extend(collected)
+        return collected
 
     def _read_raw(self) -> DataFrame | None:
         if not self._rows:
@@ -121,8 +121,11 @@ class InMemEventLog(EventLog):
     def _load_state(self) -> None:
         pass
 
-    def _publish(self) -> None:
-        pass
+    def _publish(self, add: list[tuple], remove: list[str], head: dict) -> None:
+        # this engine's entries are the checksummed rows themselves: they
+        # join the log here, where the file engine's commit lands
+        self._rows.extend(add)
+        self._adopt_cas_head(head)
 
     def compact(self, target_partitions: int | None = None) -> None:
         pass

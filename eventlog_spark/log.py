@@ -453,15 +453,18 @@ class EventLog:
     Writers serialize through the storage itself (SCALE.md "Multi-writer
     commits"): each commit CLAIMS its manifest delta seq with an atomic
     create-if-absent (put-if-absent, the primitive Delta-style log
-    stores require). Losers discard their staged fragment and retry on
-    the winner's state, so writers in different processes or on
-    different hosts over a shared store (NFS, an object store with
-    conditional PUT through ``claim_store``) stay
-    exactly-one-winner-per-version with no lock to leak. The manifest
-    chain is the SOLE read truth, and the directory listing is never
-    consulted. An unpublished crash fragment is therefore invisible,
-    never a correctness hazard, and ``vacuum`` reaps it after the
-    grace window."""
+    stores require). A commit hands its entries and its head to the
+    claim as values, and the handle adopts the head only once the claim
+    lands. Only a definitive loser (the seq found taken) discards its
+    staged fragment, then retries on the winner's state, so writers in
+    different processes or on different hosts over a shared store (NFS,
+    an object store with conditional PUT through ``claim_store``) stay
+    exactly-one-winner-per-version with no lock to leak. A claim that
+    fails otherwise may have landed: the fragment stays, and the next
+    resync adopts the commit if it did. The manifest chain is the SOLE
+    read truth, and the directory listing is never consulted. An
+    unpublished fragment is therefore invisible, never a correctness
+    hazard, and ``vacuum`` reaps it after the grace window."""
 
     def __init__(self, spark: SparkSession, path: str, claim_store=None):
         # Manifest I/O seam (manifest.py ClaimStore contract): None =
@@ -489,7 +492,6 @@ class EventLog:
         self._max_payload_len = DEFAULT_MAX_PAYLOAD_LEN
         self._metadata: dict[str, str] = {}
         self._latest = 0
-        self._initial = 0
         self._last_ts = 0
         self._stream_commits: dict[str, int] = {}  # foreachBatch idempotence
         # Committed data-file manifest: a log-structured chain of
@@ -497,8 +499,6 @@ class EventLog:
         # so a commit never rewrites the file list and a page read
         # loads only the manifest pages its version range overlaps.
         self._manifest: ManifestLog | None = None
-        self._pending_add: list[dict] = []  # entries staged for the next publish
-        self._pending_remove: list[str] = []
         # hot-tail row cache: fragment name -> (rows, label + payload
         # bytes) for fragments of at most ROW_GROUP_ROWS rows, filled
         # as this process writes a fragment or reads one whole, and
@@ -664,34 +664,43 @@ class EventLog:
             return
         if head["latest"] > self._latest:
             self._latest = head["latest"]
-            self._initial = head["initial"]
             self._last_ts = head["ts"]
         for k, v in head.get("sc", {}).items():
             if int(v) > self._stream_commits.get(k, -1):
                 self._stream_commits[k] = int(v)
 
-    def _publish(self) -> None:
-        """Publish the staged manifest change as ONE immutable delta
-        record (O(1), manifest.py) carrying the head fields: the claim
-        is the commit point and the only record of the commit. Manifest
-        files a roll-up superseded retire into the vacuum ledger only
-        after it (publish-before-delete, same as data fragments)."""
-        if not (self._pending_add or self._pending_remove):
-            return
-        add, rm = self._pending_add, self._pending_remove
-        self._pending_add, self._pending_remove = [], []
-        # the stream-sink idempotence markers ride along, or a replayed
-        # foreachBatch could double-commit
-        head = {"latest": self._latest, "initial": self._initial, "ts": self._last_ts}
-        if self._stream_commits:
-            head["sc"] = dict(self._stream_commits)
+    def _head(self, latest: int, ts: int, txn: tuple[str, int] | None = None) -> dict:
+        """The head fields a commit publishes: the version head, its
+        timestamp and the stream-sink idempotence markers, with ``txn``
+        recorded (without them a replayed foreachBatch could
+        double-commit). ``initial`` is derived, versions being dense
+        from 1, and written for releases that read it."""
+        head = {"latest": latest, "initial": 1 if latest else 0, "ts": ts}
+        sc = dict(self._stream_commits)
+        if txn is not None:
+            sc[txn[0]] = txn[1]
+        if sc:
+            head["sc"] = sc
+        return head
+
+    def _publish(self, add: list, remove: list[str], head: dict) -> None:
+        """Claim ONE immutable delta record (O(1), manifest.py) that
+        adds the entries ``add``, removes the files ``remove`` and
+        carries ``head``: the claim is the commit point and the only
+        record of the commit, so this handle adopts ``head`` only once
+        the claim lands (even when the roll-up after it fails), and
+        manifest files a roll-up superseded retire into the vacuum
+        ledger after it (publish-before-delete, same as data
+        fragments). A lost claim raises ManifestSeqClaimed with nothing
+        adopted, and the caller discards its entries. Any other failure
+        changes nothing here either: the claim may have landed, and the
+        next resync adopts it if it did."""
+        seq = self._manifest.seq + 1
         try:
-            _, superseded = self._manifest.commit(add, rm, head=head)
-        except ManifestSeqClaimed:
-            # lost the race BEFORE anything published: re-stage so
-            # the caller can undo its fragment and retry
-            self._pending_add, self._pending_remove = add, rm
-            raise
+            _, superseded = self._manifest.commit(add, remove, head=head)
+        finally:
+            if self._manifest.seq == seq:
+                self._adopt_cas_head(head)
         self._retire(superseded)
 
     def _read_raw(self) -> DataFrame | None:
@@ -879,9 +888,9 @@ class EventLog:
             return self._latest
 
     def version_initial(self) -> int:
-        """O11: first version; 0 if empty (eventlog.go:136-140)."""
-        with self._lock:
-            return self._initial if self._latest else 0
+        """O11: first version; 0 if empty (eventlog.go:136-140).
+        Versions are dense from 1."""
+        return 1 if self.version() else 0
 
     def metadata(self) -> dict[str, str]:
         """O12: immutable creation-time metadata (eventlog.go:142-151)."""
@@ -1005,7 +1014,6 @@ class EventLog:
                             batch.extend(self._gc_queue)
                             self._gc_queue.clear()
                     base = self._latest
-                    prior_initial = self._initial
                     # server-assigned, non-decreasing, whole seconds;
                     # one shared timestamp per group (inmem.go:27,
                     # file.go:419-420 share per batch — a group IS one
@@ -1035,36 +1043,24 @@ class EventLog:
                         cur += len(op.prepared)
                         live.append(op)
                     if rows:
-                        self._write_fragment(rows)
-                        self._latest = cur
-                        if self._initial == 0:
-                            self._initial = 1
-                        self._last_ts = ts
+                        entries = self._write_fragment(rows)
                         try:
-                            self._publish()
+                            self._publish(entries, [], self._head(cur, ts))
                         except ManifestSeqClaimed:
                             # another writer took this seq. Nothing
-                            # published — drop our fragment (it squats
-                            # on versions the winner owns), roll back
-                            # the in-memory head, resync, retry. Every
-                            # op's OCC assumed_version is re-validated
+                            # published and nothing adopted — drop our
+                            # fragment (it squats on versions the
+                            # winner owns), resync, retry. Every op's
+                            # OCC assumed_version is re-validated
                             # against the WINNER's head at the top of
                             # the loop, so two hosts racing see
                             # exactly-one-winner, same as two threads.
-                            self._discard_staged_fragments()
-                            self._latest, self._initial = (
-                                base,
-                                prior_initial,
-                            )
+                            self._discard_staged_fragments(entries)
                             retry = True
                         else:
                             retry = False
-                            # captured INSIDE the lock: after release
-                            # another commit may advance self._latest,
-                            # and broadcasting/returning that head
-                            # would break version == version_previous
-                            # + len(events)
-                            new_head = self._latest
+                            self._interactive_frags += 1
+                            new_head = cur
                     else:
                         retry = False  # every op OCC-failed: no write
                 if not retry:
@@ -1115,17 +1111,17 @@ class EventLog:
                 self._interactive_frags = 0
                 warnings.warn(f"minor_compact failed (deferred): {e!r}")
 
-    def _discard_staged_fragments(self) -> None:
-        """CAS-loser cleanup: fragments staged for a failed delta claim
-        are unpublished and owned solely by this writer — unlink them
-        so the retried commit leaves no version-squatting garbage."""
-        for e in self._pending_add:
+    def _discard_staged_fragments(self, entries: list[dict]) -> None:
+        """CAS-loser cleanup: the fragments of ``entries`` lost their
+        delta claim (ManifestSeqClaimed, a definitive loss), so they are
+        unpublished and owned solely by this writer — unlink them so
+        the retried commit leaves no version-squatting garbage."""
+        for e in entries:
             try:
                 os.remove(os.path.join(self.path, e["n"]))
             except FileNotFoundError:  # pragma: no cover - defensive
                 pass
-        self._uncache(e["n"] for e in self._pending_add)
-        self._pending_add, self._pending_remove = [], []
+        self._uncache(e["n"] for e in entries)
 
     def _cache_put(
         self,
@@ -1181,7 +1177,7 @@ class EventLog:
                 if hit is not None:
                     self._frag_bytes_total -= hit[1]
 
-    def _write_fragment(self, rows: list[tuple[int, int, int, str, str]]) -> None:
+    def _write_fragment(self, rows: list[tuple[int, int, int, str, str]]) -> list[dict]:
         """Interactive-commit write seam: a DRIVER-SIDE arrow parquet
         write, not a distributed job. The reference appends an entry by
         writing bytes to its file (file.go:383-463) — microseconds, no
@@ -1196,7 +1192,8 @@ class EventLog:
         concurrent reader never sees a torn footer. Bulk ingest
         (``append_dataframe``) remains the fully-distributed path —
         this seam is for the interactive/serving commits where
-        scheduling a cluster job per append is pure overhead."""
+        scheduling a cluster job per append is pure overhead. Returns
+        the commit's manifest entries for the caller's ``_publish``."""
         from .sources.binformat import checksum_rows
 
         # checksum_rows pool-parallelizes wide batches (a group commit's
@@ -1215,12 +1212,10 @@ class EventLog:
         # memtable's role)
         if len(rows) <= ROW_GROUP_ROWS:
             self._cache_put(name, rows, _text_bytes(tbl))
-        self._interactive_frags += 1
-        # staged with the EXACT version range (the commit assigned it)
-        # and the label bounds of its rows; published by the caller's
-        # _publish as one delta record
+        # the EXACT version range (the commit assigned it) and the
+        # label bounds of its rows
         labels = [r[3] for r in rows]
-        self._pending_add.append(
+        return [
             {
                 "n": name,
                 "lo": rows[0][0],
@@ -1228,17 +1223,18 @@ class EventLog:
                 "lmin": min(labels),
                 "lmax": max(labels),
             }
-        )
+        ]
 
     def _write_out(
         self,
         out: DataFrame,
         expect: tuple[int, int],
         post_write_check=None,
-    ) -> None:
+    ) -> list[dict]:
         """Bulk-commit seam: persist an already-versioned, checksummed
         frame whose versions the count pass assigned as the closed range
-        ``expect``. The storage engines differ only here and in
+        ``expect``, and return its manifest entries. The storage engines
+        differ only here, in ``_write_fragment``, ``_publish`` and
         ``_read_raw`` + the state/lifecycle hooks (the reference's
         engine seam, eventlog/eventlog.go EventLogger interface).
 
@@ -1256,8 +1252,10 @@ class EventLog:
         the files must tile ``expect`` exactly (``_check_bulk_range``:
         the count and the write are separate jobs; a nondeterministic
         upstream can make them disagree, which would otherwise publish
-        a head that misnames the written rows). ``part-<tag>-…`` names
-        keep the files eligible for the minor fold (``minor_compact``)."""
+        a head that misnames the written rows). A rename that fails
+        publishes nothing: the files renamed before it are unclaimed
+        leftovers ``vacuum`` reaps. ``part-<tag>-…`` names keep the
+        files eligible for the minor fold (``minor_compact``)."""
         tmp = os.path.join(self.path, f".bulk-{uuid.uuid4().hex}.tmp")
         try:
             out.write.mode("overwrite").parquet(tmp)
@@ -1273,7 +1271,7 @@ class EventLog:
             )
             for src, entry, _ in staged:
                 os.rename(src, os.path.join(self.path, entry["n"]))
-                self._pending_add.append(entry)
+            return [entry for _, entry, _ in staged]
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
@@ -1444,55 +1442,33 @@ class EventLog:
                 "label",
                 "payload",
             ).withColumn("checksum", checksum_expr())
-            self._write_out(
+            entries = self._write_out(
                 out, (base + 1, base + total), post_write_check=post_write_check
             )
             # Head is known exactly from the versioning count pass — no
             # re-scan of the log to publish state. The count pass and
             # the write must see the same rows; _write_out checked that
             # the written files tile exactly the counted range before
-            # anything became visible. The reference's analog is
-            # its mid-batch rollback (file.go:343-360).
-            prev_initial, prev_last_ts = self._initial, self._last_ts
-            prev_marker = (
-                self._stream_commits.get(txn[0], None) if txn is not None else None
-            )
-            self._latest = base + total
-            if self._initial == 0 and self._latest > 0:
-                self._initial = 1
-            self._last_ts = ts
-            if txn is not None:
-                # idempotence marker rides in the same atomic publish
-                self._stream_commits[txn[0]] = txn[1]
+            # anything became visible. The idempotence marker rides in
+            # the same claim, and the handle adopts head and marker only
+            # once it lands, so a failure leaves nothing to roll back
+            # (the reference rolls back its offsets, file.go:343-360).
             try:
-                self._publish()
+                self._publish(entries, [], self._head(base + total, ts, txn))
             except ManifestSeqClaimed:
                 # versions are baked into the Spark-written files, so a
                 # lost bulk race cannot be re-stamped in place — drop the
-                # staged files and surface the retry to the caller.
-                # EVERY in-memory mutation above must unwind, the txn
-                # marker most of all: _refresh_published_state never
-                # lowers a marker, so a stale one would make the
-                # advertised re-run hit the replay check and silently
-                # drop the acked batch.
-                self._discard_staged_fragments()
-                self._latest = base
-                self._initial, self._last_ts = prev_initial, prev_last_ts
-                if txn is not None:
-                    if prev_marker is None:
-                        self._stream_commits.pop(txn[0], None)
-                    else:
-                        self._stream_commits[txn[0]] = prev_marker
+                # staged files and surface the retry to the caller
+                self._discard_staged_fragments(entries)
                 raise MismatchingVersions(
                     "bulk append lost the commit race to a concurrent "
                     "writer; re-run the batch"
                 )
-            new_head = self._latest  # see _commit: capture under the lock
-        self._hub.broadcast(new_head)
+        self._hub.broadcast(base + total)
         return AppendResult(
             version_previous=base,
             version_first=base + 1,
-            version=new_head,
+            version=base + total,
             timestamp=ts,
         )
 
@@ -1520,10 +1496,10 @@ class EventLog:
         0``."""
         if self.path is not None:
             self._require_published_state()
-        with self._lock:
-            latest, initial = self._latest, self._initial
+        latest = self.version()
         if latest == 0:
             raise InvalidVersion("scan on empty log")
+        initial = 1  # versions are dense from 1
         v = version if version is not None else (latest if reverse else initial)
         if v < initial or v > latest:
             raise InvalidVersion(f"version {v} out of bounds [{initial}, {latest}]")
@@ -1885,8 +1861,7 @@ class EventLog:
         from .validation import label_valid_expr, payload_valid_expr
 
         df = self.dataframe()
-        with self._lock:
-            latest, initial = self._latest, self._initial
+        latest = self.version()
         if latest:
             df = with_adjacent(
                 df, "version", running_max_cols=["timestamp"]
@@ -1921,7 +1896,8 @@ class EventLog:
                 ),
                 F.lit(0),
             ).alias("label_violations"),
-            (F.count(F.lit(1)) != F.lit(latest - initial + 1 if latest else 0))
+            # versions are dense from 1: the head is the row count
+            (F.count(F.lit(1)) != F.lit(latest))
             .cast("int")
             .alias("density_violation"),
             F.coalesce(
@@ -2061,14 +2037,15 @@ class EventLog:
                     .mode("overwrite")
                     .parquet(tmp)
                 )
-                for src, entry, _ in self._staged_entries(tmp, "compact"):
+                staged = self._staged_entries(tmp, "compact")
+                for src, entry, _ in staged:
                     os.rename(src, os.path.join(self.path, entry["n"]))
-                    self._pending_add.append(entry)
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
-            self._pending_remove.extend(old)
             self._interactive_frags = 0
-            if not self._publish_rebase_on_claim_loss(old):
+            if not self._publish_rebase_on_claim_loss(
+                [entry for _, entry, _ in staged], old
+            ):
                 return
             self._retire(old)
 
@@ -2101,8 +2078,9 @@ class EventLog:
     # needed under a writer storm (single digits).
     COMPACT_CLAIM_RETRIES = 64
 
-    def _publish_rebase_on_claim_loss(self, replaced: list[str]) -> bool:
-        """Publish the staged maintenance swap (compact / minor fold),
+    def _publish_rebase_on_claim_loss(self, add: list[dict], replaced: list[str]) -> bool:
+        """Publish a maintenance swap (compact / minor fold) of the
+        rewritten ``add`` for ``replaced``, at the current head,
         RE-BASING across concurrent commits instead of aborting — the
         starvation-freedom answer the round-9 verdict asked for (under
         sustained writer traffic, any abort-on-conflict maintenance
@@ -2118,11 +2096,12 @@ class EventLog:
         The ONE case that still aborts: some ``replaced`` file left the
         manifest, i.e. a concurrent compaction/fold owns part of the
         snapshot — two rewrites of the same fragment cannot both win.
-        Returns True when published; False after an abort (staged
-        outputs discarded, inputs intact)."""
+        Returns True when published; False after an abort (``add``
+        discarded, inputs intact)."""
         for attempt in range(1, self.COMPACT_CLAIM_RETRIES + 1):
             try:
-                self._publish()  # atomic manifest swap — the publish point
+                # atomic manifest swap — the publish point
+                self._publish(add, replaced, self._head(self._latest, self._last_ts))
                 # observability for the starvation probe: how contended
                 # was this publish? (tools/fencing_probe.py --maintenance)
                 self._last_publish_attempts = attempt
@@ -2133,7 +2112,7 @@ class EventLog:
                     live = set(self._manifest.names())
                 if not set(replaced) <= live:
                     break  # overlap with a concurrent rewrite: abort
-        self._discard_staged_fragments()
+        self._discard_staged_fragments(add)
         return False
 
     # LSM-style minor-compaction trigger: once this many single-commit
@@ -2217,17 +2196,14 @@ class EventLog:
             # exact
             vcol = merged.column("version")
             labels = pc.min_max(merged.column("label"))
-            self._pending_add.append(
-                {
-                    "n": name,
-                    "lo": vcol[0].as_py(),
-                    "hi": vcol[-1].as_py(),
-                    "lmin": labels["min"].as_py(),
-                    "lmax": labels["max"].as_py(),
-                }
-            )
-            self._pending_remove.extend(small)
-            if not self._publish_rebase_on_claim_loss(small):
+            entry = {
+                "n": name,
+                "lo": vcol[0].as_py(),
+                "hi": vcol[-1].as_py(),
+                "lmin": labels["min"].as_py(),
+                "lmax": labels["max"].as_py(),
+            }
+            if not self._publish_rebase_on_claim_loss([entry], small):
                 return 0
             self._retire(small)
             return len(small)

@@ -663,7 +663,10 @@ class ManifestLog:
         loss; absent → the PUT never applied, retry it once (a second
         failure propagates — the store is unhealthy, crashing is safe
         because an unpublished fragment is invisible garbage while a
-        published delta is found by roll_forward on recovery). Claim
+        published delta is found by roll_forward on recovery). Only
+        ManifestSeqClaimed is definitive, and only it sends the caller
+        off to discard its fragment: any other exception leaves the
+        fragment in place, since the claim may have landed. Claim
         records are byte-deterministic per call, so the comparison is
         exact. POSIX link cannot fail ambiguously (local syscall), so
         this path never triggers there.

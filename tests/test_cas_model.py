@@ -6,7 +6,8 @@ instances can perform against ONE log over the object-store fake
 every step against a trivially-correct model: the Python list of events
 in commit order. This is the property the whole multi-host design
 promises — whatever the interleaving of appends, OCC appends, minor
-folds, vacuums, lost or rolled-back open-time records, and reopens,
+folds, vacuums, lost or rolled-back open-time records, claims failed
+by a store outage, and reopens,
 the log IS the model: dense versions 1..N, every acked event present
 exactly once, in ack order. The example-based fencing tests pin
 known-dangerous schedules; this machine searches for unknown ones.
@@ -45,6 +46,39 @@ def _boom(*a, **k):  # pragma: no cover - trips only on a protocol bug
     raise AssertionError("the commit protocol must never take a flock")
 
 
+class _FailingClaims:
+    """A writer handle's view of the claim store. `arm(lands)` makes
+    the next claim raise, after applying it (`lands`) or before, and
+    the GET that would disambiguate it raise too: an outage the writer
+    cannot see through."""
+
+    def __init__(self, inner):
+        self._inner = inner
+        self._armed: bool | None = None
+        self._failing = None
+
+    def arm(self, lands: bool) -> None:
+        self._armed = lands
+
+    def put_if_absent(self, name, data):
+        if self._armed is None:
+            return self._inner.put_if_absent(name, data)
+        lands, self._armed = self._armed, None
+        if lands:
+            assert self._inner.put_if_absent(name, data)
+        self._failing = name
+        raise ConnectionError("claim store unreachable")
+
+    def get(self, name):
+        if name == self._failing:
+            self._failing = None
+            raise ConnectionError("claim store unreachable")
+        return self._inner.get(name)
+
+    def __getattr__(self, attr):
+        return getattr(self._inner, attr)
+
+
 class CasProtocol(RuleBasedStateMachine):
     def __init__(self):
         super().__init__()
@@ -75,7 +109,7 @@ class CasProtocol(RuleBasedStateMachine):
 
     def _open(self) -> EventLog:
         return EventLog.open(
-            None, self.path, claim_store=self._open_store()
+            None, self.path, claim_store=_FailingClaims(self._open_store())
         )
 
     # -- operations ------------------------------------------------------------
@@ -125,6 +159,24 @@ class CasProtocol(RuleBasedStateMachine):
         self.model.append((f"w{w}", payload))
         assert r.version == len(self.model)
         open_records.restore(self.path, self.store, saved)  # the delta stands
+
+    @rule(w=st.integers(0, 1), i=st.integers(0, 999), lands=st.booleans())
+    def append_with_failed_claim(self, w, i, lands):
+        """A commit whose claim and its disambiguating GET fail, with
+        the claim applied (`lands`) or not: the writer keeps its
+        handle, the model gains the event only if the claim landed, and
+        the handle's next append takes the next version."""
+        writer = self.writers[w]
+        payload = json.dumps({"w": w, "i": i, "fc": 1}, separators=(",", ":"))
+        writer._claim_store.arm(lands)
+        with pytest.raises(ConnectionError):
+            writer.append(f"w{w}", payload)
+        if lands:
+            self.model.append((f"w{w}", payload))
+        payload = json.dumps({"w": w, "i": i, "fc": 2}, separators=(",", ":"))
+        r = writer.append(f"w{w}", payload)
+        self.model.append((f"w{w}", payload))
+        assert r.version == len(self.model)
 
     @rule()
     def crash_pointer(self):

@@ -1032,6 +1032,125 @@ def test_cas_ambiguous_failure_with_interloper_is_true_loss(
     ]
 
 
+class _OutageStore(MemoryClaimStore):
+    """A claim store through an outage: `arm(lands)` makes the next
+    claim raise, after applying it (`lands`) or before, and the GET
+    that would disambiguate it raise too, so the writer cannot tell
+    whether its claim landed."""
+
+    def __init__(self):
+        super().__init__()
+        self._armed: bool | None = None
+        self._failing = None
+
+    def arm(self, lands: bool) -> None:
+        self._armed = lands
+
+    def put_if_absent(self, name, data):
+        if self._armed is None:
+            return super().put_if_absent(name, data)
+        lands, self._armed = self._armed, None
+        if lands:
+            super().put_if_absent(name, data)
+        self._failing = name
+        raise ConnectionError("claim store unreachable")
+
+    def get(self, name):
+        if name == self._failing:
+            self._failing = None
+            raise ConnectionError("claim store unreachable")
+        return super().get(name)
+
+
+@pytest.mark.parametrize("lands", [False, True])
+def test_failed_claim_leaves_no_phantom_head(tmp_path, monkeypatch, lands):
+    """A claim that fails with a store error, its disambiguating GET
+    too, may or may not have landed, so the handle adopts nothing and
+    deletes nothing. Not landed: the head stays 2, the next append
+    acks 3 and a fresh open pages 1..3 densely. Landed: the next
+    append's resync adopts the commit and acks 4. No reopen either way."""
+    import fcntl
+
+    store = _OutageStore()
+    path = str(tmp_path / f"outage-{lands}")
+    log = EventLog.create(None, path, claim_store=store)
+    monkeypatch.setattr(fcntl, "flock", _boom)
+    log.append("a", '{"i":1}')
+    log.append("a", '{"i":2}')
+    store.arm(lands)
+    with pytest.raises(ConnectionError):
+        log.append("maybe", '{"i":3}')
+    assert log.version() == 2
+    labels = ["a", "a", "maybe", "b"] if lands else ["a", "a", "b"]
+    assert log.append("b", '{"i":4}').version == len(labels)
+    fresh = EventLog.open(None, path, claim_store=store)
+    assert [(r.version, r.label) for r in fresh.scan_rows()] == list(
+        enumerate(labels, 1)
+    )
+
+
+@pytest.mark.parametrize("lands", [False, True])
+def test_bulk_txn_replay_after_failed_claim(spark, tmp_path, monkeypatch, lands):
+    """A bulk append whose claim fails with a store error adopts
+    neither its head nor its ``txn`` marker. The foreachBatch replay of
+    the same (id, seq) then commits the batch when the claim did not
+    land, and is skipped when it did: exactly once either way."""
+    import fcntl
+
+    from pyspark.sql import functions as F
+
+    store = _OutageStore()
+    path = str(tmp_path / f"bulk-outage-{lands}")
+    EventLog.create(None, path, claim_store=store)
+    monkeypatch.setattr(fcntl, "flock", _boom)
+    w = EventLog.open(spark, path, claim_store=store)
+    batch = spark.range(3).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+        "id",
+    )
+    store.arm(lands)
+    with pytest.raises(ConnectionError):
+        w.append_dataframe(batch, order_cols=["id"], txn=("s", 7))
+    assert w.version() == 0
+    r = w.append_dataframe(batch, order_cols=["id"], txn=("s", 7))
+    assert (r is None) == lands
+    assert w.version() == 3
+    fresh = EventLog.open(None, path, claim_store=store)
+    assert [x.version for x in fresh.scan_rows()] == [1, 2, 3]
+    assert fresh._stream_commits == {"s": 7}
+
+
+def test_claim_adopted_when_its_rollup_fails(tmp_path, monkeypatch):
+    """The claim is the commit point: when the roll-up after it fails,
+    the commit stands, and the handle adopts its head before the error
+    surfaces, so the next append takes the next version."""
+    import fcntl
+
+    class _RollupFails(MemoryClaimStore):
+        armed = False
+
+        def put(self, name, data):
+            if self.armed and name.startswith("page-"):
+                self.armed = False
+                raise ConnectionError("page write failed")
+            super().put(name, data)
+
+    monkeypatch.setattr(ManifestLog, "CHECKPOINT_EVERY", 2)
+    store = _RollupFails()
+    path = str(tmp_path / "rollup-fails")
+    log = EventLog.create(None, path, claim_store=store)
+    monkeypatch.setattr(fcntl, "flock", _boom)
+    log.append("a", '{"i":1}')
+    store.armed = True
+    with pytest.raises(ConnectionError):
+        log.append("a", '{"i":2}')  # claims delta 2, then rolls up
+    assert log.version() == 2
+    assert log.append("a", '{"i":3}').version == 3
+    fresh = EventLog.open(None, path, claim_store=store)
+    assert [r.version for r in fresh.scan_rows()] == [1, 2, 3]
+
+
 def test_layout_autopilot_repairs_under_writer_storm(
     spark, tmp_path, monkeypatch
 ):

@@ -537,7 +537,7 @@ def _crash_before_claim(log):
     class Crash(RuntimeError):
         pass
 
-    def die():
+    def die(*_):
         raise Crash("simulated crash before the delta claim")
 
     log._publish = die
@@ -1178,8 +1178,7 @@ def test_scan_rows_raises_when_manifest_misses_rows(spark, tmp_path):
         log.append(f"e{i}", json.dumps({"ix": i}))
     (v3,) = [e["n"] for e in log._manifest.overlapping(3, 3)]
     with log._lock:  # a delta that drops v3's fragment, head unchanged
-        log._pending_remove.append(v3)
-        log._publish()
+        log._publish([], [v3], log._head(4, log._last_ts))
     assert [r.version for r in log.scan_rows(version=1, limit=2)] == [1, 2]
     with pytest.raises(RuntimeError, match=r"page \[2, 4\] read 2 rows, expected 3"):
         log.scan_rows(version=2, limit=3)
@@ -1469,10 +1468,11 @@ def test_row_cache_drops_cas_losers_and_retired_fragments(spark, tmp_path, monke
     write_fragment = a._write_fragment
 
     def racing_write(rows):
-        write_fragment(rows)
-        written.append(a._pending_add[-1]["n"])
+        entries = write_fragment(rows)
+        written.append(entries[-1]["n"])
         if len(written) == 1:
             b.append("b", '{"race": true}')  # claims the next seq first
+        return entries
 
     monkeypatch.setattr(a, "_write_fragment", racing_write)
     assert a.append("a", '{"i": 1}').version == 3
@@ -2283,10 +2283,11 @@ def test_footer_cache_drops_retired_and_cas_losing_names(spark, tmp_path, monkey
     write_fragment = log._write_fragment
 
     def racing_write(rows):
-        write_fragment(rows)
-        written.append(log._pending_add[-1]["n"])
+        entries = write_fragment(rows)
+        written.append(entries[-1]["n"])
         if len(written) == 1:
             other.append("b", '{"race": true}')  # claims the next seq first
+        return entries
 
     monkeypatch.setattr(log, "_write_fragment", racing_write)
     log.append_multi([("big", json.dumps({"i": i})) for i in range(1500)])
@@ -2607,6 +2608,41 @@ def test_bulk_crash_truncates_named_orphans_without_listing(
     for f in orphans:
         assert not os.path.exists(os.path.join(path, f))
     assert [x.version for x in fresh.scan_rows()] == [1, 2, 3, 4, 5]
+
+
+def test_half_renamed_bulk_write_publishes_nothing(spark, tmp_path, monkeypatch):
+    """A bulk write whose second rename into the log fails publishes
+    nothing: the file renamed before it stays an unclaimed leftover for
+    vacuum, and the next append's delta names only its own fragment,
+    so pages stay dense."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "halfrename")
+    log = EventLog.create(spark, path)
+    log.append("pre", '{"i":0}')
+    batch = spark.range(0, 4, 1, numPartitions=2).select(
+        F.lit("bulk").alias("label"),
+        F.format_string('{"i":%d}', F.col("id")).alias("payload"),
+    )
+    real_rename, into_log = os.rename, []
+
+    def failing_rename(src, dst):
+        if os.path.dirname(src) != path and os.path.dirname(dst) == path:
+            into_log.append(dst)
+            if len(into_log) == 2:
+                raise OSError("rename failed")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="rename failed"):
+        log.append_dataframe(batch)
+    monkeypatch.undo()
+    assert os.path.exists(into_log[0])
+    assert log.version() == 1
+    assert log.append("next", '{"i":5}').version == 2
+    assert [(r.version, r.label) for r in log.scan_rows()] == [(1, "pre"), (2, "next")]
+    assert len(_manifest_parquet(log)) == 2
+    assert log.vacuum(grace_seconds=0) == 1
 
 
 def test_label_layout_report_bulk_and_empty_edges(spark, tmp_path, monkeypatch):
